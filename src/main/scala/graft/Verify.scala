@@ -14,13 +14,14 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // opt-in fast-gate profile (2-chunk live replays, results
+      // identical by the chunking-invariance contract): lets this same
+      // oracle gate PROVE the profile result-identical — default stays
+      // full replay
+      .config("graft.live.fastGates",
+        sys.env.get("SPARK_GRAFT_FAST_GATES").contains("1").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // opt-in fast-gate profile (2-chunk live replays, results identical
-    // by the chunking-invariance contract): lets this same oracle gate
-    // PROVE the profile result-identical — default stays full replay
-    if (sys.env.get("SPARK_GRAFT_FAST_GATES").contains("1"))
-      spark.conf.set("graft.live.fastGates", "true")
     new java.io.File(outDir).mkdirs()
     // Zero-row tripwire: an oracle gate whose Spark side returns ZERO rows
     // hash-matches empty-vs-empty — formally green, evidentially vacuous

@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import graft.engine.{Cep, Tables}
@@ -196,29 +196,17 @@ private[api] trait SiddhiQlLive extends Serializable {
     * prune evaluates nothing); above it the read keeps the original
     * relation and only bucket ids cross the driver. A trigger's
     * distinct keys are bounded by its batch size, so at harness SF the
-    * fast path always hits; the cap is a driver-memory bound, not a
-    * correctness switch. */
+    * fast path always hits. The cap is per partition of the key
+    * collect, not a correctness switch: the driver receives up to
+    * partitions × (cap + 1) rows before it decides. */
   private[api] val keyLocalCap = 20000
 
-  /** Profiling probe: when set, [[deployApp]] records (phase, ms) for
-    * its harness phases — compile, query start, each trigger round,
-    * flush sentinels, stop, finish — so the suite-cost work can see
-    * which fixed cost dominates a gate instead of guessing. */
-  private[graft] var deployPhaseProbe
-      : Option[scala.collection.mutable.Buffer[(String, Long)]] = None
-  @inline private[api] def phased[A](tag: String)(body: => A): A =
-    deployPhaseProbe match {
-      case None => body
-      case Some(buf) =>
-        val t0 = System.nanoTime()
-        val r = body
-        buf += ((tag, (System.nanoTime() - t0) / 1000000L)); r
-    }
-
   /** Label the Spark jobs `body` runs (thread-local `callSite.short`)
-    * so a job-census listener (ProfGate) can attribute a trigger's
-    * jobs to the fold runner's sections instead of one opaque start
-    * site. Zero-cost beyond two local-property writes. */
+    * so a job-census listener can attribute a trigger's jobs to the
+    * fold runner's sections instead of one opaque start site —
+    * `python3 perfbench/run.py --workload <w> --seed 1 --seconds 8
+    * --trace 1` reports them as its `fold.*` metrics. Zero-cost beyond
+    * two local-property writes. */
   @inline private[api] def tagged[A](sp: SparkSession, tag: String)
       (body: => A): A = {
     val k = "callSite.short"
@@ -4371,7 +4359,13 @@ private[api] trait SiddhiQlLive extends Serializable {
     * generations) halves — the suite-cost lever the r11 verdict asked
     * for, with zero correctness surface change. Two chunks, not one,
     * so every cross-trigger state merge stays exercised even in the
-    * fast profile. */
+    * fast profile.
+    *
+    * Each replay query starts under the harness conf below, set on
+    * `spark` around its `start()` only
+    * ([[graft.engine.Streaming.startScoped]]); everything else here —
+    * compile, `finish`, the final reads — runs under the caller's own
+    * conf. */
   def deployApp(spark: SparkSession, dir: String, app: String, out: String,
                 chunks: Int = 4): DataFrame = {
     import spark.implicits._
@@ -4388,50 +4382,7 @@ private[api] trait SiddhiQlLive extends Serializable {
         col("userId").as("user_id"), col("eventType").as("event_type"),
         col("value"))
       .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-    val (stages, dmlOpt) = phased("compile")(deployStages(src, app, out))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    // replay-harness shuffle width: 4 keeps per-trigger checkpoint-file
-    // overhead low for the (majority) light topologies; a validated
-    // knob so state-heavy topologies can widen it — state-store work
-    // parallelizes per shuffle partition, so a stream-stream join's
-    // per-trigger job time scales down with width (r14 A/B in
-    // PLANS.md). A real deployment sizes this to its cluster.
-    val livePartitions = spark.conf
-      .getOption("graft.live.shufflePartitions").getOrElse("4")
-    require(scala.util.Try(livePartitions.toInt).toOption
-        .exists(_ > 0), "graft.live.shufflePartitions must be a " +
-        s"positive integer; got '$livePartitions'")
-    spark.conf.set("spark.sql.shuffle.partitions", livePartitions)
-    // Replay-loop AQE default: OFF (r17). Every per-trigger job here
-    // (probe collects, keyed-state reads, fold writes) runs over a few
-    // KB-to-MB of state/batch data, where AQE's one-job-per-query-stage
-    // materialization only multiplies driver scheduling round trips —
-    // re-measured after the r17 batch-persist change: interleaved A/B
-    // over 8 fold gates, AQE-off won 7/8 by 5-30% (the r14 A/B that
-    // called it neutral predates the persist, when re-executed feed
-    // plans dominated). `graft.live.aqe=true` restores adaptive
-    // planning — a REAL deployment with non-toy per-trigger volumes
-    // wants it for adaptive broadcast/skew handling on the fold joins.
-    val prevAqe = spark.conf
-      .getOption("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled",
-      spark.conf.getOption("graft.live.aqe").getOrElse("false"))
-    // the flush design is DATA-batch driven (sentinels advance the
-    // watermark, the batch after them emits under it), so Spark's
-    // extra no-data micro-batch per watermark advance only doubles the
-    // per-trigger checkpoint cost of a finite replay — a long-running
-    // deployment would leave it on for idle-stream timer progress
-    val prevNd = spark.conf
-      .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      "false")
-    // NOTE (r18): an attempt to pack tiny state-generation files into
-    // fewer scan tasks via scoped openCostInBytes=0 + minPartitionNum=1
-    // was MEASURED AND REVERTED — it also collapses the event-log
-    // table loads (loadTable parquet scans inside enrich folds) into
-    // one serial task, regressing the elog gates 2-3× (A/B in
-    // OPTIMIZATION_r18.md). The tiny-file fan-out is addressed by the
-    // stateBuckets default below instead.
+    val (stages, dmlOpt) = deployStages(src, app, out)
     // HARNESS scratch: streaming checkpoints (offsets/commits/state
     // deltas, fsync'd once per trigger) go to RAM-backed storage when
     // the platform offers it — the replay loop's bottleneck is the
@@ -4440,8 +4391,36 @@ private[api] trait SiddhiQlLive extends Serializable {
     val ckptRoot = java.nio.file.Paths.get(
       graft.engine.Streaming.scratchDir("graft_ckpt"))
     def ckpt(tag: String): String = s"$ckptRoot/$tag"
+    // a real deployment (deployAppOn) starts under its own conf
+    def start(q: => StreamingQuery): StreamingQuery =
+      graft.engine.Streaming.startScoped(spark,
+        // replay-harness shuffle width: 4 keeps per-trigger
+        // checkpoint-file overhead low for the (majority) light
+        // topologies. A real deployment sizes this to its cluster.
+        "spark.sql.shuffle.partitions" -> "4",
+        // AQE OFF (r17). Every per-trigger job here (probe collects,
+        // keyed-state reads, fold writes) runs over a few KB-to-MB of
+        // state/batch data, where AQE's one-job-per-query-stage
+        // materialization only multiplies driver scheduling round
+        // trips — re-measured after the r17 batch-persist change:
+        // interleaved A/B over 8 fold gates, AQE-off won 7/8 by 5-30%
+        // (the r14 A/B that called it neutral predates the persist,
+        // when re-executed feed plans dominated). A real deployment
+        // with non-toy per-trigger volumes wants AQE for adaptive
+        // broadcast/skew handling on the fold joins.
+        "spark.sql.adaptive.enabled" -> "false",
+        graft.engine.Streaming.NoDataOff)(q)
+    // NOTE (r18): an attempt to pack tiny state-generation files into
+    // fewer scan tasks via scoped openCostInBytes=0 + minPartitionNum=1
+    // was MEASURED AND REVERTED — it also collapses the event-log
+    // table loads (loadTable parquet scans inside enrich folds) into
+    // one serial task, regressing the elog gates 2-3× (A/B in
+    // OPTIMIZATION_r18.md). The tiny-file fan-out is addressed by the
+    // stateBuckets default below instead.
+    def replay(q: StreamingQuery, flush: Boolean): Unit =
+      graft.engine.Streaming.replay(ms, q, rows, chunksEff,
+        if (flush) graft.engine.Streaming.flushSentinels else Nil)
     try {
-      val per = math.max(rows.length / chunksEff, 1)
       dmlOpt match {
         case Some(lf) =>
           // folded stage LIVE (table DML / unique:last / sort /
@@ -4519,7 +4498,7 @@ private[api] trait SiddhiQlLive extends Serializable {
               case _: Window => (); case _: FlatMapGroupsWithState => ()
             }.nonEmpty
           }
-          val q = phased("start")(lf.feed.writeStream.outputMode("append")
+          val q = start(lf.feed.writeStream.outputMode("append")
             .option("checkpointLocation", ckpt("fold"))
             .foreachBatch { (batch: DataFrame, _: Long) =>
               val sp = batch.sparkSession
@@ -4529,10 +4508,12 @@ private[api] trait SiddhiQlLive extends Serializable {
               // state's write — otherwise RE-EXECUTES the whole
               // micro-batch plan per action, the documented foreachBatch
               // hazard the kind-4 update sink already guards against
-              // (ProfGate r17: probe:state ≈ write:state ≈ 0.6 s EACH on
-              // the stream-stream-join topologies = one full plan
-              // execution per job). Feeds that are a bare projection of
-              // the MemoryStream batch are cheaper to re-run than to
+              // (r17 per-site job census: probe:state ≈ write:state ≈
+              // 0.6 s EACH on the stream-stream-join topologies = one
+              // full plan execution per job; a `perfbench/run.py
+              // --trace 1` run reports this census as its fold.*
+              // metrics). Feeds that are a bare projection of the
+              // MemoryStream batch are cheaper to re-run than to
               // cache, so only stateful/join/window feeds persist.
               if (cacheFeed) batch.persist()
               try {
@@ -4620,12 +4601,14 @@ private[api] trait SiddhiQlLive extends Serializable {
                         (readPaths(sp, n, Nil), kdf)
                       } else {
                         // ONE job: distinct keys + their bucket. Small
-                        // key sets (every harness batch; bounded by
-                        // keyLocalCap at scale) come back as a
+                        // key sets (every harness batch) come back as a
                         // LocalRelation so the caller's semi-join
                         // re-evaluates nothing; bigger batches fall
                         // back to bucket ids only + the original
-                        // relation (driver stays O(cap)).
+                        // relation. The collect is O(partitions × cap),
+                        // not O(cap): the driver receives up to
+                        // partitions × (keyLocalCap + 1) rows before
+                        // the over-cap decision.
                         // r18: partition-LOCAL distinct (capped per
                         // partition at keyLocalCap+1) + driver distinct
                         // — drops the `.distinct()` Exchange, making
@@ -4747,23 +4730,9 @@ private[api] trait SiddhiQlLive extends Serializable {
               gen = g1
               } finally { if (cacheFeed) batch.unpersist(); () }
             }.start())
-          rows.grouped(per).foreach { g =>
-            phased("trigger") {
-              ms.addData(g.toSeq); q.processAllAvailable()
-            }
-          }
-          if (lf.needsFlush) (0 to 1).foreach { k =>
-            // outer-join feeds: two watermark-flush sentinel batches
-            // (the stages channel's exact rule) so the tail's
-            // null-padded rows materialize before finish
-            phased("flush") {
-              ms.addData(Seq(Cep.Ev(Long.MaxValue - 2 + k,
-                graft.engine.Streaming.FlushNs + k * 3600000000000L,
-                -1L, "__flush", 0.0)))
-              q.processAllAvailable()
-            }
-          }
-          phased("stop")(q.stop())
+          // outer-join feeds flush (the stages channel's exact rule)
+          // so the tail's null-padded rows materialize before finish
+          replay(q, lf.needsFlush)
           val fin = lf.finish(spark, allStates(spark))
           val ord =
             if (lf.ordCols.nonEmpty) fin.orderBy(lf.ordCols: _*) else fin
@@ -4793,7 +4762,7 @@ private[api] trait SiddhiQlLive extends Serializable {
             def pathU(g: Int, b: Int) = s"$tmpU/gen$g/__b=$b"
             def bCol: Column =
               (hash(col("__ukey")) % nB + lit(nB)) % nB
-            val q = df.writeStream.outputMode("update")
+            val q = start(df.writeStream.outputMode("update")
               .option("checkpointLocation", ckpt("update"))
               .foreachBatch { (batch: DataFrame, _: Long) =>
                 val sp = batch.sparkSession
@@ -4823,13 +4792,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                 bt.unpersist()
                 touched.foreach(b => latestU(b) = g1)
                 genU = g1
-              }.start()
-            rows.grouped(per).foreach { g =>
-              phased("trigger") {
-                ms.addData(g.toSeq); q.processAllAvailable()
-              }
-            }
-            phased("stop")(q.stop())
+              }.start())
+            replay(q, flush = false)
             val live = latestU.toSeq.map { case (b, g) => pathU(g, b) }
               .filter(p => new java.io.File(p).exists)
             val t =
@@ -4841,46 +4805,17 @@ private[api] trait SiddhiQlLive extends Serializable {
           val mode = if (kind == 1) OutputMode.Complete()
                      else OutputMode.Append()
           val sinkName = s"graft_deploy_$out"
-          val q = phased("start")(
+          val q = start(
             df.writeStream.format("memory").queryName(sinkName)
               .option("checkpointLocation", ckpt("sink"))
               .outputMode(mode).start())
-          rows.grouped(per).foreach { g =>
-            phased("trigger") {
-              ms.addData(g.toSeq); q.processAllAvailable()
-            }
-          }
-          if (kind == 2) (0 to 1).foreach { k =>
-            // two watermark-flush sentinel batches (engine twin:
-            // Streaming.runStream): the first advances the watermark
-            // past every real window, the second runs a batch UNDER
-            // that advanced watermark so all remaining state emits and
-            // evicts
-            phased("flush") {
-              ms.addData(Seq(Cep.Ev(Long.MaxValue - 2 + k,
-                graft.engine.Streaming.FlushNs + k * 3600000000000L,
-                -1L, "__flush", 0.0)))
-              q.processAllAvailable()
-            }
-          }
-          phased("stop")(q.stop())
+          // windowed Append stages close their last windows on the
+          // flush sentinels (engine twin: Streaming.runStream)
+          replay(q, flush = kind == 2)
           val t = spark.table(sinkName)
           if (ordCols.nonEmpty) t.orderBy(ordCols: _*) else t
       }
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevAqe match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.adaptive.enabled", v)
-        case None =>
-          spark.conf.unset("spark.sql.adaptive.enabled")
-      }
-      prevNd match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-      }
       scala.util.Try {
         import scala.reflect.io.Directory
         new Directory(ckptRoot.toFile).deleteRecursively()

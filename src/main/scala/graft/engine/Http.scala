@@ -137,7 +137,6 @@ object Http {
     implicit val sq = s.sqlContext
     val rows = Streaming.feedRows(s, d)
     val collector = new Collector()
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
     try {
       val uri = s"http://127.0.0.1:${collector.port}/ingest"
       val posted = s.createDataset(rows.toSeq)
@@ -153,28 +152,22 @@ object Http {
       val received = get(s"http://127.0.0.1:${collector.port}/scrape")
         .split("\n").iterator.filter(_.nonEmpty).toArray
       val ms = MemoryStream[String]
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = ms.toDS()
-        .map { ln =>
-          val f = ln.split(",", -1)
-          (f(0).toLong, f(3), f(4).toDouble)
-        }
-        .toDF("event_id", "event_type", "value")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"),
-          max("event_id").as("max_id"))
-        .writeStream.format("memory").queryName("stream_http_roundtrip")
-        .option("checkpointLocation",
-          Streaming.ckpt("http_roundtrip"))
-        .outputMode(OutputMode.Complete()).start()
-      received.grouped(math.max(received.length / 3, 1)).foreach { g =>
-        ms.addData(g); q.processAllAvailable()
-      }
-      q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      collector.stop()
-    }
+      val q = Streaming.startScoped(s, Streaming.Width8)(
+        ms.toDS()
+          .map { ln =>
+            val f = ln.split(",", -1)
+            (f(0).toLong, f(3), f(4).toDouble)
+          }
+          .toDF("event_id", "event_type", "value")
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"),
+            max("event_id").as("max_id"))
+          .writeStream.format("memory").queryName("stream_http_roundtrip")
+          .option("checkpointLocation",
+            Streaming.ckpt("http_roundtrip"))
+          .outputMode(OutputMode.Complete()).start())
+      Streaming.replay(ms, q, received, 3)
+    } finally collector.stop()
     s.table("stream_http_roundtrip").orderBy("event_type")
   }
 

@@ -3,7 +3,8 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 
 /** Structured Streaming execution of the engine's operators (SURVEY.md
   * §2.3, §2.7, §2.6 streaming side).
@@ -145,57 +146,93 @@ object Streaming {
   def flushGuard(df: DataFrame): DataFrame =
     df.withWatermark("ts", "1 minute").filter(col("ts") < flushCutoff)
 
+  /** The two watermark-flush sentinels (see [[FlushNs]]), fed as their
+    * own micro-batches after the real rows: the first advances the
+    * watermark past every real window, the second runs a batch UNDER
+    * that advanced watermark so all remaining state emits and evicts.
+    * Event ids MaxValue−2 and MaxValue−1 sit above every fixture id. */
+  val flushSentinels: Seq[Ev] = (0 to 1).map(k => Ev(Long.MaxValue - 2 + k,
+    FlushNs + k * 3600000000000L, -1L, "__flush", 0.0))
+
+  // state-store partition count is fixed at query start from
+  // spark.sql.shuffle.partitions; 8 is plenty for the harness feed and
+  // cuts per-batch checkpoint-file overhead 4× vs the batch setting
+  // (a real deployment sizes this to the cluster, not per query)
+  private[graft] val Width8 = "spark.sql.shuffle.partitions" -> "8"
+  // sentinel and timer flushing is DATA-batch driven (the sentinels
+  // advance the watermark, the batch after them emits and fires the
+  // expired timers under it), so the extra no-data micro-batch Spark
+  // schedules per watermark advance only repeats a finite replay's
+  // per-trigger state-store commit and checkpoint for zero rows — ~2×
+  // its trigger count. Expiry is condition-based, so the emitted rows
+  // are identical either way. A long-running deployment keeps it on
+  // for idle-stream timer progress.
+  private[graft] val NoDataOff =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+  // transformWithState (per-family state, timers) requires RocksDB
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Serializes every [[startScoped]]: two replays starting at once on
+    * one session would otherwise each save the other's scoped values as
+    * their own "previous" values and leave them behind. */
+  private val confLock = new Object
+
+  /** Start a streaming query with `conf` set on `spark` around `start`
+    * only. A query clones its session when it is constructed, inside
+    * `start()`; its shuffle width, no-data batch flag and `foreachBatch`
+    * batch session all read that clone, so the scoped values need not
+    * outlive the start. Each key then gets its old value back, or is
+    * unset if it had none. Replays start on the caller's own session,
+    * not a new one: only its `StreamingQueryListener`s see the queries
+    * it starts, and memory-sink views must land where the caller reads
+    * them. */
+  def startScoped(spark: SparkSession, conf: (String, String)*)
+                 (start: => StreamingQuery): StreamingQuery =
+    confLock.synchronized {
+      val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        conf.foreach { case (k, v) => spark.conf.set(k, v) }
+        start
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+
+  /** Finite replay of a started query: feed `rows` in `chunks`
+    * micro-batches, then each sentinel as its own micro-batch, waiting
+    * for every batch; stop the query. */
+  def replay[T](ms: MemoryStream[T], q: StreamingQuery,
+                rows: scala.collection.Seq[T], chunks: Int,
+                sentinels: Seq[T] = Nil): Unit =
+    try {
+      rows.grouped(math.max(rows.length / chunks, 1)).foreach { g =>
+        ms.addData(g); q.processAllAvailable()
+      }
+      sentinels.foreach { e => ms.addData(e); q.processAllAvailable() }
+    } finally q.stop()
+
   /** Feed the events table through a MemoryStream in `chunks` micro-batches
     * (time-ordered), apply `build`, run to completion, return the sink.
-    * `flush = true` appends two watermark-flush sentinels (each its own
-    * micro-batch) after the real rows so Append-mode windows close — the
-    * builder must wrap its watermark in [[flushGuard]] so the sentinels
-    * never reach the aggregation itself. */
+    * `flush = true` appends the [[flushSentinels]] after the real rows
+    * so Append-mode windows close — the builder must wrap its watermark
+    * in [[flushGuard]] so the sentinels never reach the aggregation
+    * itself. `conf` adds to the replay's own scoped conf. */
   def runStream(spark: SparkSession, dir: String, name: String,
-                mode: OutputMode, chunks: Int = 2, flush: Boolean = false)
+                mode: OutputMode, chunks: Int = 2, flush: Boolean = false,
+                conf: Seq[(String, String)] = Nil)
                (build: Dataset[Ev] => DataFrame): DataFrame = {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val rows = feedRows(spark, dir)
     val ms = MemoryStream[Ev]
-    // state-store partition count is fixed at query start from
-    // spark.sql.shuffle.partitions; 8 is plenty for the harness feed and
-    // cuts per-batch checkpoint-file overhead 4× vs the batch setting
-    // (a real deployment sizes this to the cluster, not per query)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // sentinel flushing is DATA-batch driven, so the extra no-data
-    // micro-batch Spark schedules per watermark advance only doubles a
-    // finite replay's per-trigger checkpoint cost (see deployApp)
-    val prevNd = spark.conf
-      .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      "false")
-    try {
-      val q = build(ms.toDS())
+    val q = startScoped(spark, Seq(Width8, NoDataOff) ++ conf: _*)(
+      build(ms.toDS())
         .writeStream.format("memory").queryName(name).outputMode(mode)
         .option("checkpointLocation", ckpt(name))
-        .start()
-      val per = math.max(rows.length / chunks, 1)
-      rows.grouped(per).foreach { g => ms.addData(g); q.processAllAvailable() }
-      if (flush) (0 to 1).foreach { k =>
-        // two sentinel batches: the first advances the watermark past
-        // every real window, the second runs a batch UNDER that advanced
-        // watermark so all remaining state emits and evicts
-        ms.addData(Seq(Ev(Long.MaxValue - 1 + k,
-          FlushNs + k * 3600000000000L, -1L, "__flush", 0.0)))
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevNd match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-    }
+        .start())
+    replay(ms, q, rows, chunks, if (flush) flushSentinels else Nil)
     spark.table(name)
   }
 
@@ -448,24 +485,9 @@ object Streaming {
     implicit val sq = s.sqlContext
     val MIN5NS = 5L * 60 * 1000 * 1000 * 1000
     val rows = feedRows(s, d)
-    val maxTs = rows.map(_.tsNs).max
     val ms = MemoryStream[Ev]
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    // r18: timer flushing here is DATA-batch driven (the two sentinel
-    // batches advance the watermark, then fire the expired timers), so
-    // the extra no-data micro-batch Spark schedules after every
-    // watermark advance only repeats the full per-trigger state-store
-    // commit for zero rows — ~2× the trigger count of this finite
-    // replay. Expiry is condition-based (deadline < watermark), so the
-    // emitted row set is identical either way; same rationale as
-    // runStream's existing disable. A long-running deployment keeps it
-    // on for idle-stream timer progress.
-    val prevNd = s.conf
-      .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val q = ms.toDS()
+    val q = startScoped(s, Width8, NoDataOff)(
+      ms.toDS()
         .withColumn("ts", timestamp_micros(expr("tsNs div 1000")))
         .withWatermark("ts", "0 seconds")
         .as[EvT]
@@ -503,26 +525,19 @@ object Streaming {
         .filter(col("user_id") =!= -1L)
         .writeStream.format("memory").queryName("stream_cep_absence")
         .option("checkpointLocation", ckpt("cep_absence"))
-        .outputMode("append").start()
-      val per = math.max(rows.length / 3, 1)
-      rows.grouped(per).foreach { g => ms.addData(g); q.processAllAvailable() }
-      // two sentinels: the first advances the watermark past every
-      // deadline, the second triggers a batch that fires the timers
-      ms.addData(Ev(-1, maxTs + 2 * MIN5NS, -1, "sentinel", 0))
-      q.processAllAvailable()
-      ms.addData(Ev(-2, maxTs + 3 * MIN5NS, -1, "sentinel", 0))
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      prevNd match {
-        case Some(v) => s.conf.set(
-          "spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => s.conf.unset(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-    }
+        .outputMode("append").start())
+    replay(ms, q, rows, 3, absenceSentinels(rows))
     s.table("stream_cep_absence").orderBy("event_id")
+  }
+
+  /** The absence replays' two sentinels (userId -1, filtered out): the
+    * first advances the watermark past every deadline, the second
+    * triggers a batch that fires the timers. */
+  private def absenceSentinels(rows: Array[Ev]): Seq[Ev] = {
+    val maxTs = rows.map(_.tsNs).max
+    val min5Ns = 5L * 60 * 1000 * 1000 * 1000
+    Seq(Ev(-1, maxTs + 2 * min5Ns, -1, "sentinel", 0),
+      Ev(-2, maxTs + 3 * min5Ns, -1, "sentinel", 0))
   }
 
   /** stream_length_sliding: count-based sliding window (`#window.length
@@ -671,33 +686,16 @@ object Streaming {
   def cepAbsenceTws(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     implicit val sq = s.sqlContext
-    val MIN5NS = 5L * 60 * 1000 * 1000 * 1000
     val rows = feedRows(s, d)
-    val maxTs = rows.map(_.tsNs).max
     val ms = MemoryStream[Ev]
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    // timers use per-family state — transformWithState requires RocksDB
-    val prevProvider =
-      s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    // changelog checkpointing: per-commit cost = the delta, not a full
-    // RocksDB snapshot upload — the per-trigger fixed cost that
-    // dominates this finite replay (and any low-latency deployment)
-    val prevClog = s.conf.getOption("spark.sql.streaming.stateStore." +
-      "rocksdb.changelogCheckpointing.enabled")
-    s.conf.set("spark.sql.streaming.stateStore." +
-      "rocksdb.changelogCheckpointing.enabled", "true")
-    // r18: same no-data micro-batch disable as cepAbsence — timer
-    // flushing is sentinel-(data-)batch driven; the per-watermark-advance
-    // no-data batch repeats the full RocksDB commit for zero rows.
-    val prevNd = s.conf
-      .getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val q = ms.toDS()
+    val q = startScoped(s, Width8, RocksDb,
+      // changelog checkpointing: per-commit cost = the delta, not a full
+      // RocksDB snapshot upload — the per-trigger fixed cost that
+      // dominates this finite replay (and any low-latency deployment)
+      "spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled" -> "true",
+      NoDataOff)(
+      ms.toDS()
         .withColumn("ts", timestamp_micros(expr("tsNs div 1000")))
         .withWatermark("ts", "0 seconds")
         .as[EvT]
@@ -708,61 +706,22 @@ object Streaming {
         .filter(col("user_id") =!= -1L)
         .writeStream.format("memory").queryName("stream_cep_absence_tws")
         .option("checkpointLocation", ckpt("cep_absence_tws"))
-        .outputMode("append").start()
-      val per = math.max(rows.length / 3, 1)
-      rows.grouped(per).foreach { g => ms.addData(g); q.processAllAvailable() }
-      ms.addData(Ev(-1, maxTs + 2 * MIN5NS, -1, "sentinel", 0))
-      q.processAllAvailable()
-      ms.addData(Ev(-2, maxTs + 3 * MIN5NS, -1, "sentinel", 0))
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      prevProvider match {
-        case Some(p) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      prevClog match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore." +
-          "rocksdb.changelogCheckpointing.enabled", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore." +
-          "rocksdb.changelogCheckpointing.enabled")
-      }
-      prevNd match {
-        case Some(v) => s.conf.set(
-          "spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => s.conf.unset(
-          "spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-    }
+        .outputMode("append").start())
+    replay(ms, q, rows, 3, absenceSentinels(rows))
     s.table("stream_cep_absence_tws").orderBy("event_id")
   }
 
   /** stream_length_tws: transformWithState execution of the count window. */
-  def lengthSlidingTws(s: SparkSession, d: String): DataFrame = {
-    val prevProvider =
-      s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      runStream(s, d, "stream_length_tws", OutputMode.Append()) { ds =>
-        import ds.sparkSession.implicits._
-        ds.groupByKey(_.userId)
-          .transformWithState(new RingProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Append())
-          .toDF("event_id", "user_id", "sum_last20", "n_last20")
-      }.orderBy("event_id")
-    } finally prevProvider match {
-      case Some(p) =>
-        s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None =>
-        s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
+  def lengthSlidingTws(s: SparkSession, d: String): DataFrame =
+    runStream(s, d, "stream_length_tws", OutputMode.Append(),
+        conf = Seq(RocksDb)) { ds =>
+      import ds.sparkSession.implicits._
+      ds.groupByKey(_.userId)
+        .transformWithState(new RingProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Append())
+        .toDF("event_id", "user_id", "sum_last20", "n_last20")
+    }.orderBy("event_id")
 
   /** stream_file_source: the FILE streaming source end-to-end — Siddhi's
     * `@source(type='file', mode='line'/'regex')` dir-watching analog is
@@ -785,10 +744,8 @@ object Streaming {
       staged
     })
     ramCheckpoints(s)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream
+    val q = startScoped(s, Width8)(
+      s.readStream
         .schema(s.read.parquet(dir).schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(dir)
@@ -796,10 +753,8 @@ object Streaming {
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
         .writeStream.format("memory").queryName("stream_file_source")
         .option("checkpointLocation", ckpt("file_source"))
-        .outputMode(OutputMode.Complete()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        .outputMode(OutputMode.Complete()).start())
+    try q.processAllAvailable() finally q.stop()
     s.table("stream_file_source").orderBy("event_type")
   }
 
@@ -874,10 +829,8 @@ object Streaming {
     val path = stagedEventLog(s, d)
     val nRows = feedRows(s, d).length
     ramCheckpoints(s)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = s.readStream.format("graft")
+    val q = startScoped(s, Width8)(
+      s.readStream.format("graft")
         .option("path", path)
         .option("rowsPerBatch", math.max(nRows / 4, 1).toString)
         .load()
@@ -886,10 +839,8 @@ object Streaming {
           max("event_id").as("max_id"))
         .writeStream.format("memory").queryName("stream_custom_source")
         .option("checkpointLocation", ckpt("custom_source"))
-        .outputMode(OutputMode.Complete()).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        .outputMode(OutputMode.Complete()).start())
+    try q.processAllAvailable() finally q.stop()
     s.table("stream_custom_source").orderBy("event_type")
   }
 
