@@ -10,7 +10,8 @@ import graft.engine.{Cep, Tables}
 /** [[SiddhiQL]]'s live deployment: the Structured Streaming topology
   * builder (deployApp), the LiveFold channel (keyed/bucketed state,
   * windowed flush folds, enrichment joins, rate folds), and the
-  * parquet-generation fold runner. Mixed into `object SiddhiQL`. */
+  * fold runner over in-memory state generations. Mixed into
+  * `object SiddhiQL`. */
 private[api] trait SiddhiQlLive extends Serializable {
   self: SiddhiQlFrontend with SiddhiQlCompiler =>
   // ---------- live deployment ----------
@@ -46,6 +47,17 @@ private[api] trait SiddhiQlLive extends Serializable {
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newFixedThreadPool(4,
         r => { val t = new Thread(r, "graft-fold"); t.setDaemon(true); t }))
+
+  /** Run `tasks` concurrently on [[foldEc]] and wait until every one
+    * has settled — bounded, so a wedged job fails the trigger instead
+    * of hanging it (generous: harness jobs take seconds). */
+  private def settleAll[A](tasks: Seq[() => A]): Seq[scala.util.Try[A]] =
+    scala.concurrent.Await.result(
+      scala.concurrent.Future.traverse(tasks)(t => scala.concurrent
+        .Future(t())(foldEc).transform(scala.util.Success(_))(foldEc))(
+        scala.collection.BuildFrom.buildFromIterableOps, foldEc),
+      scala.concurrent.duration.Duration(30,
+        java.util.concurrent.TimeUnit.MINUTES))
 
   /** `graft.live.compactEvery`, validated: a malformed or
     * non-positive value fails at deploy time with the key named
@@ -143,24 +155,26 @@ private[api] trait SiddhiQlLive extends Serializable {
     }
   }
 
-  /** How a [[LiveFold]] state is materialized between triggers.
+  /** How a [[LiveFold]] state is materialized between triggers, as
+    * in-memory generations ([[Generations]]).
     *
     *  - [[FullState]]: the fold rewrites the WHOLE state every
     *    micro-batch. Reserved for states tiny by contract (sort(N)'s
     *    N rows) where rewrite cost is O(N), not O(data).
     *  - [[AppendState]]: the state only ever grows; the fold returns
-    *    the batch's DELTA rows and the runner appends them as a new
-    *    generation file. Per-trigger write cost is O(batch) by
-    *    construction; reading the state unions the generation files.
-    *  - [[KeyedState]]: the fold is a per-key merge on `keys`. The
-    *    state parquet is hash-bucketed on those keys; each trigger the
+    *    the batch's DELTA rows and the runner keeps them as a new
+    *    generation. Per-trigger write cost is O(batch) by
+    *    construction; reading the state unions the generations.
+    *  - [[KeyedState]]: the fold is a per-key merge on `keys`. State
+    *    rows carry a hash bucket of those keys; each trigger the
     *    runner computes the buckets the batch touches (`batchKeys`
     *    projects the batch's key values, cast to the state key types
     *    so both sides hash identically), hands the fold ONLY those
-    *    buckets' rows, and rewrites only those buckets. Per-trigger
-    *    write cost is O(batch-touched buckets), not O(state) — the
-    *    form that survives a keyed table with millions of keys at
-    *    100 TB scale (bucket count rises with the key domain via
+    *    buckets' rows, and writes only those buckets as the new
+    *    generation. Per-trigger write cost is O(batch-touched
+    *    buckets), not O(state); a bucket read scans the in-memory rows
+    *    of the generation holding that bucket and filters on the
+    *    bucket (bucket count rises with the key domain via
     *    `graft.live.stateBuckets`). */
   private[api] sealed trait StateMode
   private[api] case object FullState extends StateMode
@@ -196,9 +210,10 @@ private[api] trait SiddhiQlLive extends Serializable {
     * prune evaluates nothing); above it the read keeps the original
     * relation and only bucket ids cross the driver. A trigger's
     * distinct keys are bounded by its batch size, so at harness SF the
-    * fast path always hits. The cap is per partition of the key
-    * collect, not a correctness switch: the driver receives up to
-    * partitions × (cap + 1) rows before it decides. */
+    * fast path always hits. Not a correctness switch: a partition of
+    * the key collect past the cap ships one truncation marker instead
+    * of its rows, so the driver receives at most partitions × cap rows
+    * before it decides. */
   private[api] val keyLocalCap = 20000
 
   /** Label the Spark jobs `body` runs (thread-local `callSite.short`)
@@ -221,10 +236,110 @@ private[api] trait SiddhiQlLive extends Serializable {
     * handful of ints. Partition-local sets + a driver-side union remove
     * the exchange; the sets are bounded by the bucket-id domain
     * (nBuckets), so driver volume is O(partitions × nBuckets) ints.
-    * Sorted so downstream path lists stay deterministic. */
+    * Sorted so downstream bucket lists stay deterministic. */
   private[api] def distinctIntsLocal(df: DataFrame): Seq[Int] =
     df.rdd.mapPartitions(it =>
       it.map(_.getInt(0)).toSet.iterator).collect().toSet.toSeq.sorted
+
+  /** A collected key row's identity as Spark's key equality sees it:
+    * −0.0 equals 0.0 and a `byte[]` compares by content — neither holds
+    * for `Row`'s own equals/hashCode, so a hash-set dedup of raw rows
+    * would keep both. */
+  private[graft] def keyOf(r: org.apache.spark.sql.Row): Seq[Any] =
+    r.toSeq.map {
+      case d: Double if d == 0.0d => 0.0d
+      case f: Float if f == 0.0f => 0.0f
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }
+
+  /** The first `cap` distinct rows of `rows` by [[keyOf]], in arrival
+    * order, or None once more than `cap` distinct rows appear. */
+  private[graft] def distinctKeys(rows: Iterator[org.apache.spark.sql.Row],
+      cap: Int): Option[Vector[org.apache.spark.sql.Row]] = {
+    val seen = scala.collection.mutable.LinkedHashMap
+      .empty[Seq[Any], org.apache.spark.sql.Row]
+    while (rows.hasNext && seen.size <= cap) {
+      val r = rows.next(); seen.getOrElseUpdate(keyOf(r), r)
+    }
+    if (seen.size > cap) None else Some(seen.values.toVector)
+  }
+
+  /** [[deployApp]]'s state generations in executor memory: each write
+    * is an eager `localCheckpoint` (MEMORY_AND_DISK: it spills rather
+    * than failing, and is lost with its executor, failing the job that
+    * reads it by name) under (state, generation). KEYED generations
+    * carry the `__b` bucket column; `latest` maps (state, bucket) to
+    * the generation holding that bucket's rows, -1 for a FullState.
+    * Reads re-wrap a generation's plan into the reading session with
+    * fresh attribute ids, as a file scan would. */
+  private final class Generations(nBuckets: Int,
+      schemaOf: Map[String, StructType]) {
+    private val gens = scala.collection.mutable.Map
+      .empty[(String, Int), DataFrame]
+    val latest = scala.collection.mutable.Map.empty[(String, Int), Int]
+    def bucketCol(keys: Seq[String]): Column = {
+      val h = hash(keys.map(col): _*)
+      (h % nBuckets + lit(nBuckets)) % nBuckets
+    }
+    def has(n: String): Boolean = latest.keysIterator.exists(_._1 == n)
+    /** Checkpoint `df`, projected to state `n`'s schema (plus `__b`
+      * when `keys` are given), as generation `g`. Only a column whose
+      * type differs beyond nullability is cast (a cast cannot make a
+      * nested field non-null). Thread-safe, so sibling states write
+      * concurrently. */
+    def put(n: String, g: Int, df: DataFrame, keys: Seq[String] = Nil)
+        : DataFrame = {
+      val have = df.schema.map(f => f.name -> f.dataType.catalogString).toMap
+      val c = df.select(schemaOf(n).fields.toSeq.map(f =>
+          if (have.get(f.name).contains(f.dataType.catalogString)) col(f.name)
+          else col(f.name).cast(f.dataType).as(f.name)) ++
+          (if (keys.isEmpty) Nil else Seq(bucketCol(keys).as("__b"))): _*)
+        .localCheckpoint(eager = true)
+      synchronized { gens((n, g)) = c }
+      c
+    }
+    /** State `n`'s rows from generations `gs`, each restricted to its
+      * listed buckets (none listed = the whole generation). */
+    private def read(sp: SparkSession, n: String,
+        gs: Seq[(Int, Seq[Int])]): DataFrame =
+      gs.map { case (g, bs) =>
+        val d = org.apache.spark.sql.GraftSqlBridge.ofRows(sp,
+          org.apache.spark.sql.GraftSqlBridge.analyzed(
+            synchronized(gens((n, g)))) match {
+            case m: org.apache.spark.sql.catalyst.analysis
+                .MultiInstanceRelation => m.newInstance()
+            case p => p
+          })
+        (if (bs.isEmpty) d else d.where(col("__b").isin(bs: _*)))
+          .drop("__b")
+      }.reduceOption(_ unionByName _).getOrElse(emptyOf(sp, schemaOf(n)))
+    def keyed(sp: SparkSession, n: String, bs: Seq[Int]): DataFrame =
+      read(sp, n, bs.flatMap(b => latest.get((n, b)).map(_ -> b))
+        .groupMap(_._1)(_._2).toSeq.sortBy(_._1))
+    /** State `n`'s whole accumulated rows under mode `m`. */
+    def full(sp: SparkSession, n: String, m: StateMode): DataFrame =
+      m match {
+        case FullState => read(sp, n, latest.get((n, -1)).map(_ -> Nil).toSeq)
+        case AppendState => read(sp, n, synchronized(gens.keys.collect {
+          case (`n`, g) => g }).toSeq.sorted.map(_ -> Nil))
+        case _: KeyedState => keyed(sp, n, 0 until nBuckets)
+      }
+    /** Unpersist state `n`'s generations that no bucket points at. */
+    def release(n: String): Unit = {
+      val live = latest.collect { case ((`n`, _), g) => g }.toSet
+      synchronized(gens.keys.filter(k => k._1 == n && !live(k._2)).toList)
+        .foreach(unpersist)
+    }
+    /** Unpersist every state's generation `g` (a failed trigger). */
+    def drop(g: Int): Unit =
+      synchronized(gens.keys.filter(_._2 == g).toList).foreach(unpersist)
+    private def unpersist(k: (String, Int)): Unit =
+      synchronized(gens.remove(k)).foreach(_.queryExecution.analyzed
+        .collectFirst { case r: org.apache.spark.sql.execution.LogicalRDD =>
+          r.rdd.unpersist(blocking = false) })
+  }
+
   private[api] final case class KeyedState(keys: Seq[String],
       batchKeys: (SparkSession, String, DataFrame) => DataFrame,
       // every N generations the runner hands the fold the WHOLE state
@@ -245,8 +360,8 @@ private[api] trait SiddhiQlLive extends Serializable {
     * read to the buckets a given key-value relation hashes into
     * ([[KeyedState]] stores only — other modes fall back to `full`),
     * so a join that can name its key domain up front (the enrichment
-    * read: only batch-event keys can match) scans O(touched buckets)
-    * files instead of the whole accumulated state. */
+    * read: only batch-event keys can match) scans the generations of
+    * O(touched buckets) instead of the whole accumulated state. */
   private[api] final case class LiveState(slice: DataFrame,
       full: () => DataFrame,
       // true on the generations where this state's [[KeyedState]]
@@ -273,13 +388,14 @@ private[api] trait SiddhiQlLive extends Serializable {
     * `unique:last` (keep-last upsert), `sort(N)` (running top-N),
     * `frequent(N)` (per-key algebraic components), and the enrichment
     * join reading a DML-maintained table. [[deployApp]] runs
-    * `fold(spark, dir, states, batch)` in `foreachBatch` over parquet
+    * `fold(spark, dir, states, batch)` in `foreachBatch` over in-memory
     * generations — one NAMED state per entry in `schemas`, so a fold
     * can carry several pieces of state (the maintained table AND the
     * accumulated enrichment output) — then `finish(spark, states)`
     * shapes the final table. Each state stays one-batch-lineage deep
-    * and survives a restart, and its storage/rewrite granularity is
-    * its [[StateMode]]. State is bounded by contract: the
+    * (an eager local checkpoint per write; not durable across a
+    * restart), and its storage/rewrite granularity is its
+    * [[StateMode]]. State is bounded by contract: the
     * table/unique key domain, N rows, or the key domain's component
     * rows (the enrichment OUTPUT accumulation mirrors a sink, not
     * operator state). */
@@ -436,8 +552,8 @@ private[api] trait SiddhiQlLive extends Serializable {
     * [[windowedDmlFold]] construction per writer, cross-trigger
     * bucket partials merging componentwise — and each PER-EVENT
     * writer holds an APPEND-ONLY emission log (its dmlEmissions
-    * relation per trigger, the delta the AppendState mode persists as
-    * parquet generations — O(events) rows like the event-log
+    * relation per trigger, the delta the AppendState mode keeps as
+    * generations — O(events) rows like the event-log
     * enrichment stores, never driver state). Finish reconstructs
     * every writer's emission relation (flush emissions get `__g_ord`
     * = (bucket start, 0, statement index); logged per-event emissions
@@ -1929,8 +2045,8 @@ private[api] trait SiddhiQlLive extends Serializable {
             // batch by construction, the same accumulate-then-rank
             // trade the r12 count-mode outer joins made (rate is a
             // globally-ordered pick, inherently total-order; the
-            // accumulated state is O(matches), distributed in parquet
-            // generations, never driver-resident).
+            // accumulated state is O(matches), distributed in
+            // executor-held generations, never driver-resident).
             val rateP = ast.rate
             val outSchemaR =
               if (rateP.isEmpty) outSchema
@@ -2106,7 +2222,7 @@ private[api] trait SiddhiQlLive extends Serializable {
             // other accumulated row enters the as-of window pass and
             // is filtered at `__isE` without touching any event. So
             // the per-trigger table read PRUNES to the batch's event
-            // join-key domain: bucket-restricted at the file level
+            // join-key domain: bucket-restricted at the generation level
             // (the keyed store hashes on the DML keys, which the
             // deploy-time prototype asserts equal the join keys) and
             // null-safe-semi-joined at the row level (the window pass
@@ -4410,13 +4526,6 @@ private[api] trait SiddhiQlLive extends Serializable {
         // broadcast/skew handling on the fold joins.
         "spark.sql.adaptive.enabled" -> "false",
         graft.engine.Streaming.NoDataOff)(q)
-    // NOTE (r18): an attempt to pack tiny state-generation files into
-    // fewer scan tasks via scoped openCostInBytes=0 + minPartitionNum=1
-    // was MEASURED AND REVERTED — it also collapses the event-log
-    // table loads (loadTable parquet scans inside enrich folds) into
-    // one serial task, regressing the elog gates 2-3× (A/B in
-    // OPTIMIZATION_r18.md). The tiny-file fan-out is addressed by the
-    // stateBuckets default below instead.
     def replay(q: StreamingQuery, flush: Boolean): Unit =
       graft.engine.Streaming.replay(ms, q, rows, chunksEff,
         if (flush) graft.engine.Streaming.flushSentinels else Nil)
@@ -4425,21 +4534,18 @@ private[api] trait SiddhiQlLive extends Serializable {
         case Some(lf) =>
           // folded stage LIVE (table DML / unique:last / sort /
           // frequent / enrichment): every micro-batch folds into the
-          // accumulated state — parquet generations materialize it
-          // between triggers (engine twin: Streaming.tableUpsert), so
-          // lineage stays one-batch deep and a restart resumes from
-          // the last generations. Generations are written at each
-          // state's [[StateMode]] granularity: KEYED states are
+          // accumulated state, held between triggers as in-memory
+          // generations (eager local checkpoints, [[Generations]]), so
+          // lineage stays one-batch deep. Generations are written at
+          // each state's [[StateMode]] granularity: KEYED states are
           // hash-bucketed and only the buckets the batch touches are
           // read into the fold and rewritten (per-trigger write cost
           // O(batch-touched buckets), not O(state)); APPEND states
           // write the batch delta only; FULL states (tiny by
           // contract) rewrite whole.
-          val tmp = graft.engine.Streaming.scratchDir("graft_live_fold")
           // default bucket count 4 (r18; was 16): per-trigger cost has a
-          // component per touched bucket (scan splits, write tasks, one
-          // file per bucket per generation), and at replay granularity
-          // 16 buckets is pure fan-out waste — measured ~300-800 ms of
+          // component per touched bucket (probe and read fan-out), and
+          // at replay granularity 16 buckets measured ~300-800 ms of
           // 16-task stages per write job. Results are bucketing-invariant
           // (internal layout only; oracle-pinned). A real deployment
           // sizes `graft.live.stateBuckets` to its key domain (the
@@ -4448,45 +4554,11 @@ private[api] trait SiddhiQlLive extends Serializable {
           val nBuckets = spark.conf.getOption("graft.live.stateBuckets")
             .map(_.toInt).getOrElse(4)
           var gen = 0
-          // (state, bucket) -> generation holding that bucket's latest
-          // rows; bucket -1 = the whole state (FullState). AppendState
-          // keeps every generation that wrote a delta.
-          val latest = scala.collection.mutable.Map.empty[(String, Int),
-            Int]
-          val appendGens = scala.collection.mutable.Map
-            .empty[String, List[Int]].withDefaultValue(Nil)
-          val schemaOf = lf.schemas.map { case (n, s2, _) => n -> s2 }
-            .toMap
-          def path(n: String, g: Int, b: Int): String =
-            s"$tmp/gen$g/$n" + (if (b >= 0) s"/__b=$b" else "")
-          def hasFiles(p: String): Boolean = {
-            val f = new java.io.File(p)
-            f.exists && f.listFiles != null &&
-              f.listFiles.exists(_.getName.endsWith(".parquet"))
-          }
-          def bucketCol(keys: Seq[String]): Column = {
-            val h = hash(keys.map(col): _*)
-            (h % nBuckets + lit(nBuckets)) % nBuckets
-          }
-          def readPaths(sp: SparkSession, n: String, ps: Seq[String])
-              : DataFrame = {
-            val live = ps.filter(hasFiles)
-            if (live.isEmpty) emptyOf(sp, schemaOf(n))
-            else sp.read.schema(schemaOf(n)).parquet(live: _*)
-          }
-          def fullState(sp: SparkSession, n: String, m: StateMode)
-              : DataFrame = m match {
-            case FullState => readPaths(sp, n,
-              latest.get((n, -1)).map(g => path(n, g, -1)).toSeq)
-            case AppendState => readPaths(sp, n,
-              appendGens(n).map(g => path(n, g, -1)))
-            case _: KeyedState => readPaths(sp, n,
-              (0 until nBuckets).flatMap(b =>
-                latest.get((n, b)).map(g => path(n, g, b))))
-          }
+          val gens = new Generations(nBuckets,
+            lf.schemas.map { case (n, s2, _) => n -> s2 }.toMap)
           def allStates(sp: SparkSession): Map[String, DataFrame] =
-            lf.schemas.map { case (n, _, m) =>
-              n -> fullState(sp, n, m) }.toMap
+            lf.schemas.map { case (n, _, m) => n -> gens.full(sp, n, m) }
+              .toMap
           // decided ONCE per deployment from the feed's logical plan:
           // a feed carrying a join / aggregation / window / stateful
           // map is expensive enough that each trigger caches its batch
@@ -4517,47 +4589,29 @@ private[api] trait SiddhiQlLive extends Serializable {
               // cache, so only stateful/join/window feeds persist.
               if (cacheFeed) batch.persist()
               try {
-              // buckets each keyed state's merge can touch — from the
-              // batch's key values, before the fold reads any state; a
-              // compaction generation (compactEvery) touches ALL
-              // buckets so the fold may rewrite the state whole
-              // the per-state probes are independent tiny Spark jobs;
-              // running them concurrently overlaps their scheduling
-              // latency (the fold trigger's cost is many ~100 ms jobs,
-              // not data) — each closure re-pins scriptFns on its own
-              // thread, and the session is shared safely
-              val touched: Map[String, Seq[Int]] =
-                scala.concurrent.Await.result(
-                  scala.concurrent.Future.sequence(
-                    lf.schemas.collect {
-                      case (n, _, KeyedState(keys, batchKeys, ce)) =>
-                        scala.concurrent.Future {
-                          n -> (if (ce.exists(e => (gen + 1) % e == 0))
-                              (0 until nBuckets): Seq[Int]
-                            else if (!latest.keysIterator.exists(
-                                _._1 == n))
-                              // no generation of this state exists yet
-                              // (every first trigger): there is nothing
-                              // to read whatever the batch's keys are,
-                              // and the write side lays files out by
-                              // partitionBy(__b) regardless — so skip
-                              // the probe JOB entirely and claim all
-                              // buckets (readPaths/hasFiles filter the
-                              // never-written ones on later reads)
-                              (0 until nBuckets): Seq[Int]
-                            else tagged(sp, s"probe:$n")(
-                              distinctIntsLocal(
-                                batchKeys(sp, dir, batch)
-                                  .select(bucketCol(keys).cast("int")
-                                    .as("__b")))))
-                        }(foldEc)
-                    })(
-                      scala.collection.BuildFrom.buildFromIterableOps,
-                      foldEc),
-                  // bounded like the write phase: probes are tiny
-                  // collects; a wedged one fails the trigger loudly
-                  scala.concurrent.duration.Duration(30,
-                    java.util.concurrent.TimeUnit.MINUTES)).toMap
+              // buckets each keyed state's merge can touch, from the
+              // batch's key values (a compactEvery generation touches
+              // ALL buckets so the fold may rewrite the state whole).
+              // The probes are independent ~100 ms jobs, run
+              // concurrently to overlap their scheduling latency; each
+              // closure re-pins scriptFns on its own thread
+              val touched: Map[String, Seq[Int]] = settleAll(
+                lf.schemas.collect {
+                  case (n, _, KeyedState(keys, batchKeys, ce)) => () =>
+                    n -> (if (ce.exists(e => (gen + 1) % e == 0))
+                        (0 until nBuckets): Seq[Int]
+                      else if (!gens.has(n))
+                        // no generation of this state exists yet (every
+                        // first trigger): there is nothing to read
+                        // whatever the batch's keys are, and the write
+                        // side tags every row with its bucket regardless
+                        // — so skip the probe JOB and claim all buckets
+                        (0 until nBuckets): Seq[Int]
+                      else tagged(sp, s"probe:$n")(
+                        distinctIntsLocal(batchKeys(sp, dir, batch)
+                          .select(gens.bucketCol(keys).cast("int")
+                            .as("__b")))))
+                }).map(_.get).toMap
               val compactingNow: Set[String] = lf.schemas.collect {
                 case (n, _, KeyedState(_, _, Some(e)))
                     if (gen + 1) % e == 0 => n
@@ -4565,14 +4619,12 @@ private[api] trait SiddhiQlLive extends Serializable {
               val states = lf.schemas.map { case (n, sch, m) =>
                 n -> LiveState(
                   m match {
-                    case FullState => fullState(sp, n, m)
+                    case FullState => gens.full(sp, n, m)
                     case AppendState => emptyOf(sp, sch)
-                    case _: KeyedState => readPaths(sp, n,
-                      touched(n).flatMap(b =>
-                        latest.get((n, b)).map(g => path(n, g, b))))
+                    case _: KeyedState => gens.keyed(sp, n, touched(n))
                   },
                   () => {
-                    val f = fullState(sp, n, m)
+                    val f = gens.full(sp, n, m)
                     foldReadProbe.foreach(_ += ((gen + 1, n, f.count())))
                     f
                   },
@@ -4580,10 +4632,10 @@ private[api] trait SiddhiQlLive extends Serializable {
                   fullForKeys = m match {
                     case KeyedState(ks, _, _) => Some((kdf: DataFrame) =>
                       // bucket-restricted read: the key values hash
-                      // with the SAME bucketCol the write path
-                      // partitions on, so only their buckets' latest
+                      // with the SAME bucketCol the write path tags
+                      // rows with, so only their buckets' latest
                       // generations are scanned — O(batch key-buckets)
-                      // file I/O per trigger, not O(state). Guard: a
+                      // generations per trigger, not O(state). Guard: a
                       // caller whose key relation doesn't cover the
                       // state keys by name gets the full read — and
                       // RECORDS it (an unexpected full read must show
@@ -4592,141 +4644,101 @@ private[api] trait SiddhiQlLive extends Serializable {
                         foldReadProbe.foreach(
                           _ += ((gen + 1, s"__fullread_fallback:$n",
                             -1L)))
-                        (fullState(sp, n, m), kdf)
-                      } else if (!latest.keysIterator.exists(
-                          _._1 == n)) {
+                        (gens.full(sp, n, m), kdf)
+                      } else if (!gens.has(n)) {
                         // no generation of this state yet (every first
                         // trigger): the pruned read is empty whatever
                         // the keys are — skip the keyread job
-                        (readPaths(sp, n, Nil), kdf)
+                        (gens.keyed(sp, n, Nil), kdf)
                       } else {
-                        // ONE job: distinct keys + their bucket. Small
-                        // key sets (every harness batch) come back as a
+                        // ONE one-STAGE job (r18: partition-local +
+                        // driver distinct by [[keyOf]], no Exchange):
+                        // distinct keys + their bucket. Small key sets
+                        // (every harness batch) come back as a
                         // LocalRelation so the caller's semi-join
-                        // re-evaluates nothing; bigger batches fall
-                        // back to bucket ids only + the original
-                        // relation. The collect is O(partitions × cap),
-                        // not O(cap): the driver receives up to
-                        // partitions × (keyLocalCap + 1) rows before
-                        // the over-cap decision.
-                        // r18: partition-LOCAL distinct (capped per
-                        // partition at keyLocalCap+1) + driver distinct
-                        // — drops the `.distinct()` Exchange, making
-                        // this a one-STAGE job. A partition whose local
-                        // distinct exceeds the cap implies the global
-                        // distinct does too, so the over-cap fallback
-                        // decision below is unchanged.
+                        // re-evaluates nothing; past keyLocalCap only
+                        // bucket ids + the original relation. A partition
+                        // past the cap ships a truncation marker (None):
+                        // the global distinct passes it too, and the
+                        // driver receives ≤ partitions × keyLocalCap rows
                         val kCols = kdf.columns.toSeq
-                        val rows = tagged(sp, s"keyread:$n")(kdf
-                          .select(kCols.map(col) :+
-                            bucketCol(ks).cast("int").as("__b"): _*)
-                          .rdd.mapPartitions { it =>
-                            val seen = scala.collection.mutable
-                              .LinkedHashSet
-                              .empty[org.apache.spark.sql.Row]
-                            while (it.hasNext &&
-                                seen.size <= keyLocalCap)
-                              seen += it.next()
-                            seen.iterator
-                          }.collect().distinct)
-                        // over-cap: RECORD the fallback (r15 — the
-                        // scale path must show in the probe, so a
-                        // rehearsal can assert it actually fired)
-                        if (rows.length > keyLocalCap)
-                          foldReadProbe.foreach(
-                            _ += ((gen + 1, s"__keycap_fallback:$n",
-                              rows.length.toLong)))
-                        val bs =
-                          if (rows.length > keyLocalCap)
-                            tagged(sp, s"keyread2:$n")(
-                              distinctIntsLocal(kdf
-                                .select(bucketCol(ks).cast("int")
-                                  .as("__b"))))
-                          else rows.map(_.getAs[Int]("__b"))
-                            .distinct.toSeq
-                        val kdfEff =
-                          if (rows.length > keyLocalCap) kdf
-                          else sp.createDataFrame(
-                            java.util.Arrays.asList(rows.map(r =>
-                              org.apache.spark.sql.Row.fromSeq(
-                                r.toSeq.dropRight(1))): _*),
-                            StructType(kdf.schema.fields))
-                        (readPaths(sp, n, bs.flatMap(b =>
-                          latest.get((n, b)).map(g => path(n, g, b)))),
-                          kdfEff)
+                        val rows = tagged(sp, s"keyread:$n") {
+                          val parts = kdf
+                            .select(kCols.map(col) :+
+                              gens.bucketCol(ks).cast("int").as("__b"): _*)
+                            .rdd.mapPartitions(it =>
+                              Iterator.single(distinctKeys(it, keyLocalCap)))
+                            .collect()
+                          if (parts.contains(None)) None
+                          else distinctKeys(parts.iterator.flatten.flatten,
+                            keyLocalCap)
+                        }
+                        rows match {
+                          case None =>
+                            // over-cap: RECORD the fallback (r15 — the
+                            // scale path must show in the probe, so a
+                            // rehearsal can assert it actually fired);
+                            // the count records the cap crossing
+                            foldReadProbe.foreach(
+                              _ += ((gen + 1, s"__keycap_fallback:$n",
+                                keyLocalCap + 1L)))
+                            (gens.keyed(sp, n, tagged(sp, s"keyread2:$n")(
+                              distinctIntsLocal(kdf.select(
+                                gens.bucketCol(ks).cast("int").as("__b"))))),
+                              kdf)
+                          case Some(rs) =>
+                            (gens.keyed(sp, n,
+                              rs.map(_.getAs[Int]("__b")).distinct),
+                              sp.createDataFrame(
+                                java.util.Arrays.asList(rs.map(r =>
+                                  org.apache.spark.sql.Row.fromSeq(
+                                    r.toSeq.dropRight(1))): _*),
+                                StructType(kdf.schema.fields)))
+                        }
                       })
                     case _ => None
                   })
               }.toMap
               val next = lf.fold(sp, dir, states, batch)
               val g1 = gen + 1
-              // state writes run CONCURRENTLY (independent parquet
-              // jobs — overlapping them hides per-job scheduling
-              // latency); bookkeeping thunks apply sequentially after,
-              // so `latest`/`appendGens` stay driver-thread-only
-              val bookkeeping: Seq[() => Unit] =
-                try scala.concurrent.Await.result(
-                  scala.concurrent.Future.sequence(
-                    lf.schemas.map { case (n, _, m) =>
-                      scala.concurrent.Future[() => Unit] { m match {
-                        case FullState =>
-                          tagged(sp, s"write:$n")(
-                            next(n).write.mode("overwrite")
-                              .parquet(path(n, g1, -1)))
-                          () => latest((n, -1)) = g1
-                        case AppendState =>
-                          tagged(sp, s"write:$n")(
-                            next(n).write.mode("overwrite")
-                              .parquet(path(n, g1, -1)))
-                          () => appendGens(n) = appendGens(n) :+ g1
-                        case KeyedState(keys, _, _) =>
-                          // the fold is a per-key merge, so its output
-                          // holds exactly the touched buckets' new
-                          // content; untouched buckets keep their prior
-                          // generation untouched — and an untouched
-                          // STATE (a compacted base between
-                          // compactions) skips its write entirely
-                          if (touched(n).nonEmpty) {
-                            tagged(sp, s"write:$n")(
-                              next(n).withColumn("__b", bucketCol(keys))
-                                .repartition(
-                                  math.max(touched(n).size, 1),
-                                  col("__b"))
-                                .write.mode("overwrite")
-                                .partitionBy("__b")
-                                .parquet(s"$tmp/gen$g1/$n"))
-                            // probe appends cross future threads —
-                            // synchronize the buffer (test-only path)
-                            foldWriteProbe.foreach { b =>
-                              val c = next(n).count()
-                              b.synchronized { b += ((g1, n, c)) }
-                            }
-                            () => touched(n)
-                              .foreach(b => latest((n, b)) = g1)
-                          } else () => ()
-                      } }(foldEc)
-                    })(
-                      scala.collection.BuildFrom.buildFromIterableOps,
-                      foldEc),
-                  // bounded: a wedged write job must fail the trigger,
-                  // not hang it forever (generous — harness triggers
-                  // are seconds; scale writes are minutes)
-                  scala.concurrent.duration.Duration(30,
-                    java.util.concurrent.TimeUnit.MINUTES))
-                catch { case e: Throwable =>
-                  // one failed/timed-out write discards the deferred
-                  // bookkeeping of siblings that already wrote: state
-                  // stays consistent (`latest` never advanced), but
-                  // their gen$g1 files would leak in scratch — remove
-                  // the whole generation before rethrowing
-                  scala.util.Try {
-                    import scala.reflect.io.Directory
-                    new Directory(new java.io.File(s"$tmp/gen${g1}"))
-                      .deleteRecursively()
+              // state writes run CONCURRENTLY, like the probes. Each
+              // returns the buckets its generation now holds (-1 = the
+              // whole state; none for an append delta, whose
+              // generations all stay). A failed write drops its
+              // siblings' checkpoints before rethrowing, so `latest`
+              // (advanced on this thread only) never sees the trigger
+              val written =
+                try settleAll(lf.schemas.collect {
+                  // the fold is a per-key merge, so its output holds
+                  // exactly the touched buckets' new content; untouched
+                  // buckets keep their prior generation — and an
+                  // untouched STATE (a compacted base between
+                  // compactions) skips its write entirely
+                  case (n, _, m) if (m match {
+                      case _: KeyedState => touched(n).nonEmpty
+                      case _ => true }) => () => {
+                    val keys = m match {
+                      case KeyedState(ks, _, _) => ks; case _ => Nil }
+                    val c = tagged(sp, s"write:$n")(
+                      gens.put(n, g1, next(n), keys))
+                    // probe appends cross future threads — synchronize
+                    // the buffer (test-only path)
+                    if (keys.nonEmpty) foldWriteProbe.foreach { b =>
+                      val k = c.count()
+                      b.synchronized { b += ((g1, n, k)) }
+                    }
+                    n -> (m match {
+                      case FullState => Seq(-1)
+                      case AppendState => Nil
+                      case _ => touched(n)
+                    })
                   }
-                  throw e
-                }
-              bookkeeping.foreach(_.apply())
+                }).map(_.get)
+                catch { case e: Throwable => gens.drop(g1); throw e }
+              for ((n, held) <- written if held.nonEmpty) {
+                held.foreach(b => gens.latest((n, b)) = g1)
+                gens.release(n)
+              }
               gen = g1
               } finally { if (cacheFeed) batch.unpersist(); () }
             }.start())
@@ -4746,60 +4758,38 @@ private[api] trait SiddhiQlLive extends Serializable {
           if (kind == 4) {
             // UPDATE-mode global aggregation: the stream emits only
             // the groups each trigger changed; the keyed upsert sink
-            // (last write per __ukey wins) is the SAME hash-bucketed
-            // parquet-generation store the fold runner uses — each
+            // (last write per __ukey wins) keeps the SAME hash-bucketed
+            // in-memory generations the fold runner uses — each
             // trigger rewrites only the buckets its changed groups
             // hash into, so BOTH per-trigger sink volume (O(changed
             // groups)) and per-trigger write cost (O(touched buckets))
             // survive scale, and nothing accumulates on the driver.
-            val tmpU = graft.engine.Streaming.scratchDir("graft_upd")
             val nB = spark.conf.getOption("graft.live.stateBuckets")
               .map(_.toInt).getOrElse(4) // r18: see fold runner's note
-            val latestU = scala.collection.mutable.Map
-              .empty[Int, Int] // bucket -> generation
+            val gensU = new Generations(nB, Map("u" -> df.schema))
             var genU = 0
-            val schemaU = df.schema
-            def pathU(g: Int, b: Int) = s"$tmpU/gen$g/__b=$b"
-            def bCol: Column =
-              (hash(col("__ukey")) % nB + lit(nB)) % nB
             val q = start(df.writeStream.outputMode("update")
               .option("checkpointLocation", ckpt("update"))
               .foreachBatch { (batch: DataFrame, _: Long) =>
                 val sp = batch.sparkSession
-                val bt = batch.withColumn("__b", bCol.cast("int"))
                 // persist: the batch feeds the touched-bucket probe,
                 // the anti-join, and the union — one evaluation
-                bt.persist()
-                updateEmitProbe.foreach(_ += bt.count())
-                val touched = distinctIntsLocal(bt.select(col("__b")))
-                val prior = {
-                  val ps = touched.flatMap(b =>
-                    latestU.get(b).map(g => pathU(g, b)))
-                    .filter(p => new java.io.File(p).exists)
-                  if (ps.isEmpty)
-                    emptyOf(sp, schemaU).withColumn("__b",
-                      lit(0).cast("int"))
-                  else sp.read.schema(schemaU).parquet(ps: _*)
-                    .withColumn("__b", bCol.cast("int"))
-                }
-                val g1 = genU + 1
-                prior.join(bt.select("__ukey"), Seq("__ukey"),
-                    "left_anti")
-                  .unionByName(bt)
-                  .repartition(math.max(touched.size, 1), col("__b"))
-                  .write.mode("overwrite").partitionBy("__b")
-                  .parquet(s"$tmpU/gen$g1")
-                bt.unpersist()
-                touched.foreach(b => latestU(b) = g1)
-                genU = g1
+                batch.persist()
+                try {
+                  updateEmitProbe.foreach(_ += batch.count())
+                  val touched = distinctIntsLocal(batch.select(
+                    gensU.bucketCol(Seq("__ukey")).cast("int")))
+                  val g1 = genU + 1
+                  gensU.put("u", g1, gensU.keyed(sp, "u", touched)
+                    .join(batch.select("__ukey"), Seq("__ukey"), "left_anti")
+                    .unionByName(batch), Seq("__ukey"))
+                  touched.foreach(b => gensU.latest(("u", b)) = g1)
+                  gensU.release("u")
+                  genU = g1
+                } finally { batch.unpersist(); () }
               }.start())
             replay(q, flush = false)
-            val live = latestU.toSeq.map { case (b, g) => pathU(g, b) }
-              .filter(p => new java.io.File(p).exists)
-            val t =
-              (if (live.isEmpty) emptyOf(spark, schemaU)
-               else spark.read.schema(schemaU).parquet(live: _*))
-                .drop("__ukey")
+            val t = gensU.keyed(spark, "u", 0 until nB).drop("__ukey")
             return (if (ordCols.nonEmpty) t.orderBy(ordCols: _*) else t)
           }
           val mode = if (kind == 1) OutputMode.Complete()

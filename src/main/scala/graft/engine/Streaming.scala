@@ -78,15 +78,14 @@ object Streaming {
     * advances the watermark before being discarded. */
   val FlushNs: Long = 4102444800000000000L // 2100-01-01T00:00:00Z, ns
 
-  /** HARNESS scratch dir: RAM-backed when the platform offers it (the
-    * finite-replay harness's per-trigger parquet/checkpoint round trips
-    * are fsync-bound on disk; a real deployment points state at durable
-    * storage instead). */
-  def scratchDir(tag: String): String = {
+  /** HARNESS scratch root: RAM-backed when the platform offers it (the
+    * replay harness's per-trigger checkpoint round trips are
+    * fsync-bound on disk; a real deployment uses durable storage). */
+  private[graft] def scratchRoot: java.nio.file.Path =
     // SPARK_GRAFT_SCRATCH overrides the root (A/B lever: point it at
     // /tmp to measure the disk-vs-RAM checkpoint cost — BASELINE.md
     // round 14 records the attribution)
-    val root = sys.env.get("SPARK_GRAFT_SCRATCH")
+    sys.env.get("SPARK_GRAFT_SCRATCH")
       .map(java.nio.file.Paths.get(_))
       .getOrElse {
         val shm = new java.io.File("/dev/shm")
@@ -94,7 +93,9 @@ object Streaming {
         else java.nio.file.Paths.get(
           sys.props.getOrElse("java.io.tmpdir", "/tmp"))
       }
-    val p = java.nio.file.Files.createTempDirectory(root, tag)
+
+  def scratchDir(tag: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(scratchRoot, tag)
     scratchDirs.add(p.toString)
     p.toString
   }
