@@ -72,14 +72,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
     // filter/select/having expressions; rows matching any condition
     // route to !S with _error, and S's own readers see only the clean
     // complement (an erroring event produces no main output).
-    val onErrStreams = stmts.collect { case (_, b, true) =>
-      val p0 = new P(lex(b))
-      p0.eatKw("define")
-      if (!p0.tryKw("stream"))
-        fail("@OnError annotates a `define stream` (v1)")
-      p0.ident()
-    }
-    onErrStreams.foreach { sN =>
+    onErrorStreams(stmts).foreach { sN =>
       val (fault, clean) =
         onErrorSplit(loadTable(spark, dir, sN, env), stmts, sN)
       env += ("!" + sN) -> fault
@@ -140,195 +133,55 @@ private[api] trait SiddhiQlCompiler extends Serializable {
         .getOrElse { i += 1; s"q$i" }
       results += key -> next
     }
+    // a non-DML query's result: fed into its insert-into target and
+    // recorded under its @info name (else the target, else `q<i>`)
+    def emit(name: Option[String], ast: Ast, df: DataFrame): Unit = {
+      val key = name.orElse(ast.action.map(_.target)).getOrElse {
+        i += 1; s"q$i"
+      }
+      ast.action.foreach(a => feed(a.target, df))
+      results += key -> df
+    }
     stmts.foreach { case (name, body, _) =>
       val head = body.split("\\s+", 2).headOption.getOrElse("")
-      if (head.equalsIgnoreCase("define")) {
-        // `define table T (col type, ...)` declares mutable state the DML
-        // forms target; `define stream` stays a no-op (schemas come from
-        // parquet)
-        val p = new P(lex(body))
-        p.eatKw("define")
-        if (p.tryKw("table")) {
-          val tname = p.ident()
-          p.eatSym("(")
-          val fields = List.newBuilder[StructField]
-          def one(): StructField = {
-            val c = p.ident()
-            StructField(c, typeOf(p.ident()))
-          }
-          fields += one()
-          while (p.trySym(",")) fields += one()
-          p.eatSym(")")
-          val schema = StructType(fields.result())
-          tableDefs += tname -> schema
-          env += tname -> spark.createDataFrame(
+      if (head.equalsIgnoreCase("define")) parseDefine(body).foreach {
+        // a table starts as its empty seed; `define stream` is a no-op
+        // (schemas come from parquet)
+        case DefTable(t, schema) =>
+          tableDefs += t -> schema
+          env += t -> spark.createDataFrame(
             new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        } else if (p.tryKw("window")) {
-          // `define window W (col type, ...) timeBatch(1 min)` — a SHARED
-          // window: queries `insert into W` feed it, any number of later
-          // queries `from W` read THROUGH the same window spec (the
-          // reference's named-window sharing; engine twin:
-          // named_window_shared). Batch replay: the fed rows carry the
-          // spec, each reader compiles as fed-stream#window.spec — plan
-          // composition again, so Catalyst fuses feeder and readers
-          val wname = p.ident()
-          p.eatSym("(")
-          // schema comes from the feeding query; names are declarative
-          var done = false
-          while (!done) { p.ident(); p.ident()
-            if (!p.trySym(",")) { p.eatSym(")"); done = true } }
-          windowDefs += wname -> p.windowNameArgs()
-        } else if (p.tryKw("trigger")) {
-          // `define trigger T at every 10 min` — a tick stream. Batch
-          // replay spans the replayed feed's event-time range (aligned
-          // ticks over [min, max] of events.ts_ns); a deployment would
-          // drive the same plan from wall-clock (engine twin:
-          // graft.engine.Ops.triggerGapfill / a rate source)
-          val tname = p.ident()
-          p.eatKw("at"); p.eatKw("every")
-          val ivNs = p.duration()
+        // a SHARED window: queries `insert into W` feed it, any number
+        // of later queries `from W` read THROUGH the same window spec
+        // (the reference's named-window sharing; engine twin:
+        // named_window_shared). Batch replay: each reader compiles as
+        // fed-stream#window.spec — plan composition again, so Catalyst
+        // fuses feeder and readers
+        case DefWindow(w, spec) => windowDefs += w -> spec
+        // a tick stream. Batch replay spans the replayed feed's
+        // event-time range (aligned ticks over [min, max] of
+        // events.ts_ns); a deployment drives the same plan from
+        // wall-clock (engine twin: graft.engine.Ops.triggerGapfill / a
+        // rate source)
+        case DefTrigger(t, ivNs) =>
           val ivMs = ivNs / 1000000L
-          val ticks = Tables.events(spark, dir)
+          env += t -> Tables.events(spark, dir)
             .agg(expr(s"(min(ts_ns) div ${ivNs}L) * ${ivMs}L").as("__lo"),
               expr(s"(max(ts_ns) div ${ivNs}L) * ${ivMs}L").as("__hi"))
             .select(explode(sequence(col("__lo"), col("__hi"),
               lit(ivMs))).as("tick_ms"))
-          env += tname -> ticks
-        } else if (p.tryKw("function")) {
-          registerScriptFn(body)
-        } else if (p.tryKw("aggregation")) {
-          val (aname, adef) = parseAggDefRest(p)
-          aggDefs += aname -> adef
-        }
+        case DefFunction(b) => registerScriptFn(b)
+        case DefAggregation(a, adef) => aggDefs += a -> adef
+        case DefStream(_) => ()
       } else if (head.equalsIgnoreCase("partition")) {
-        // partition with (user_id of S) / (cond as 'label' or ... of S)
-        // begin <queries> end — per-key isolated query instances
-        // (SURVEY §1.1; engine twins: graft.engine.Ops.partitionPerKey /
-        // partitionRange). Spark's shuffle IS the partition: the key
-        // prepends to every inner grouping and partitions lengthBatch
-        // chunking, so the reference's per-key instances become ONE
-        // keyed plan — per-key parallel at any executor count (and the
-        // global-lengthBatch single-task caveat disappears inside a
-        // partition: chunks count per key)
-        val (innerBody, keyAttr, rs, srcName) = parsePartition(body)
-        val baseDf = loadTable(spark, dir, srcName, env)
-        val (partKey, view) = keyAttr match {
-          case Some(attr) =>
-            if (!baseDf.columns.contains(attr))
-              fail(s"partition attribute '$attr' is not a column of " +
-                s"'$srcName'")
-            (attr, baseDf)
-          case None =>
-            // first matching range labels the event; unmatched events
-            // leave the partition (Siddhi range-partition semantics)
-            val keyCol = rs.tail.foldLeft(
-              when(expr(sqlOf(rs.head._1)), lit(rs.head._2))) {
-              case (acc, (c, l)) => acc.when(expr(sqlOf(c)), lit(l))
-            }
-            ("partition_key",
-              baseDf.withColumn("partition_key", keyCol)
-                .where(col("partition_key").isNotNull))
-        }
-        val envInner = env + (srcName -> view)
-        innerBody.split(";").map(_.trim).filter(_.nonEmpty)
-          .flatMap(stripAnnotations).foreach { case (qName, qBody, _) =>
-          val ast0 = new P(lex(qBody)).query()
-          val dmlAct0 = ast0.action.filter {
-            case InsertInto(t2) => tableDefs.contains(t2)
-            case _              => true
-          }
-          if (dmlAct0.nonEmpty) {
-            // table DML inside a partition block (r13 decision; r14
-            // CLOSES the windowed/range cells): every case HOISTS to
-            // legitimate top-level writer AST(s), so the registered
-            // writer recompiles identically everywhere the DML algebra
-            // reads it back (multi-writer merges, enrichment reads,
-            // live folds):
-            //   per-event + keyed — partition-invariant (the keyed
-            //     view is the unfiltered stream; per-event DML holds
-            //     no per-key state): hoist verbatim (r13).
-            //   windowed/aggregating + keyed — per-key window
-            //     INSTANCES over this engine's ALIGNED timeBatch
-            //     buckets == ONE writer grouped by (key ∪ groupBy):
-            //     the same key-prepends-to-every-inner-grouping
-            //     equivalence the non-DML inner path uses, so prepend
-            //     the key and hoist.
-            //   per-event + range — the ranges only SCOPE instances
-            //     (an event outside every range leaves the partition);
-            //     a per-event writer therefore sees exactly the events
-            //     matching ANY range: AND the OR of range conditions
-            //     into the writer's filter and hoist.
-            //   windowed + range — per-LABEL window instances = one
-            //     hoisted writer per label carrying the
-            //     first-match-wins filter (cond_i and not(earlier
-            //     conds)); the label filters are disjoint, so each
-            //     event feeds exactly one instance, and the N writers'
-            //     interleaved emission order is applyDmlMulti's
-            //     existing order algebra (same-instant flushes of
-            //     different labels tie-break on statement index —
-            //     the reference leaves concurrent instance flush
-            //     order unspecified).
-            val ss0 = ast0.stream match {
-              case ss: SingleStream =>
-                if (!ss.table.equalsIgnoreCase(srcName))
-                  fail("partitioned queries read the partitioned " +
-                    s"stream '$srcName' (v1)")
-                ss
-              case _ => fail("partition blocks hold single-stream " +
-                "queries (v1; joins/patterns stay outside)")
-            }
-            val winOrAgg = ss0.window.nonEmpty ||
-              ast0.select.exists(it => containsAgg(it.e)) ||
-              ast0.groupBy.nonEmpty
-            def andF(f: Option[Expr], c: Expr): Option[Expr] =
-              Some(f.fold(c)(f0 => Bin("and", c, f0)))
-            keyAttr match {
-              case Some(k) =>
-                val ast1 =
-                  if (winOrAgg && !ast0.groupBy.contains(k))
-                    ast0.copy(groupBy = k :: ast0.groupBy)
-                  else ast0
-                runDmlStage(qName, ast1, dmlAct0.get)
-              case None =>
-                val conds = rs.map(_._1)
-                if (!winOrAgg)
-                  runDmlStage(qName, ast0.copy(stream = ss0.copy(
-                    filter = andF(ss0.filter,
-                      conds.reduce((a, b) => Bin("or", a, b))))),
-                    dmlAct0.get)
-                else conds.zipWithIndex.foreach { case (c, idx) =>
-                  val firstM =
-                    if (idx == 0) c
-                    else Bin("and", c, Not(conds.take(idx)
-                      .reduce((a, b) => Bin("or", a, b))))
-                  runDmlStage(
-                    if (idx == 0) qName else qName.map(_ + s"__r$idx"),
-                    ast0.copy(stream =
-                      ss0.copy(filter = andF(ss0.filter, firstM))),
-                    dmlAct0.get)
-                }
-            }
-          } else {
-          val ast = ast0.stream match {
-            case ss: SingleStream if ss.table.equalsIgnoreCase(srcName) =>
-              val needsKey = (ss.window.nonEmpty ||
-                ast0.select.exists(it => containsAgg(it.e))) &&
-                !ast0.groupBy.contains(partKey)
-              if (needsKey) ast0.copy(groupBy = partKey :: ast0.groupBy)
-              else ast0
-            case _: SingleStream => fail("partitioned queries read the " +
-              s"partitioned stream '$srcName' (v1)")
-            case _ => fail("partition blocks hold single-stream queries " +
-              "(v1; joins/patterns stay outside)")
-          }
-          val df = compileAst(spark, dir, ast, envInner, aggDefs,
-            partKey = Some(partKey))
-          val key = qName.orElse(ast.action.map(_.target)).getOrElse {
-            i += 1; s"q$i"
-          }
-          ast.action.foreach(a => feed(a.target, df))
-          results += key -> df
-          }
+        val pb = parsePartition(body)
+        val envInner = env +
+          (pb.src -> pb.view(loadTable(spark, dir, pb.src, env), identity))
+        pb.queries(tableDefs.contains).foreach {
+          case PartQuery(qName, ast, Some(act)) => runDmlStage(qName, ast, act)
+          case PartQuery(qName, ast, None) =>
+            emit(qName, ast, compileAst(spark, dir, ast, envInner, aggDefs,
+              partKey = Some(pb.key)))
         }
       } else if (head.equalsIgnoreCase("from")) {
         val ast = new P(lex(body)).query()
@@ -339,23 +192,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
         dml match {
           case Some(act) => runDmlStage(name, ast, act)
           case None =>
-            // reading a named window compiles as fed-stream#window.spec
-            // — on single-stream reads AND on join sides (r16: Siddhi
-            // joins a named window like any windowed stream; the
-            // rewritten shape must be one the join compiler supports)
-            def namedWin(ss: SingleStream): SingleStream =
-              if (windowDefs.contains(ss.table) && ss.window.isEmpty) {
-                if (!env.contains(ss.table))
-                  fail(s"named window '${ss.table}' has not been fed " +
-                    s"— add an `insert into ${ss.table}` query first")
-                ss.copy(window = Some(windowDefs(ss.table)))
-              } else ss
-            val ast1 = ast.stream match {
-              case ss: SingleStream => ast.copy(stream = namedWin(ss))
-              case j: JoinStream => ast.copy(stream = j.copy(
-                left = namedWin(j.left), right = namedWin(j.right)))
-              case _ => ast
-            }
+            val ast1 = readNamedWindows(ast, windowDefs, env.contains)
             val df = ast1.stream match {
               // joining a DML-maintained table = the per-event
               // enrichment join (the event sees the table as of its
@@ -366,20 +203,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
               case j2x: JoinStream
                   if dmlWriters.contains(j2x.right.table) ||
                      dmlWriters.contains(j2x.left.table) =>
-                // an INNER enrichment join is symmetric: a table on
-                // the LEFT auto-swaps (Siddhi accepts either side);
-                // outer directions keep the stream-left convention
-                val j2 =
-                  if (dmlWriters.contains(j2x.left.table) &&
-                      !dmlWriters.contains(j2x.right.table) &&
-                      j2x.joinType == "inner")
-                    j2x.copy(left = j2x.right, leftAlias = j2x.rightAlias,
-                      right = j2x.left, rightAlias = j2x.leftAlias)
-                  else j2x
-                if (dmlWriters.contains(j2.left.table))
-                  fail("an OUTER enrichment join puts the maintained " +
-                    "table on the RIGHT side (v1) — swap the join " +
-                    "sides (inner joins swap automatically)")
+                val j2 = enrichmentSides(j2x, dmlWriters.contains)
                 if (onDemandMutated(j2.right.table))
                   fail(s"'${j2.right.table}' was mutated by an " +
                     "on-demand DML statement — enrichment joins " +
@@ -397,11 +221,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
                 ordered
               case _ => compileAst(spark, dir, ast1, env, aggDefs)
             }
-            val key = name.orElse(ast.action.map(_.target)).getOrElse {
-              i += 1; s"q$i"
-            }
-            ast.action.foreach(a => feed(a.target, df))
-            results += key -> df
+            emit(name, ast, df)
         }
       } else if (head.equalsIgnoreCase("update") ||
                  head.equalsIgnoreCase("delete")) {
@@ -582,6 +402,274 @@ private[api] trait SiddhiQlCompiler extends Serializable {
       }
     }
     if (s.isEmpty) None else Some((name, s, onErr))
+  }
+
+  // ---------- app front-end shared by compileApp and deployStages ----------
+  // Pure parsing and AST rewrites only: each surface keeps its own
+  // in-order statement loop and decides what a parsed statement becomes
+  // (a batch plan, a streaming stage, a fold).
+
+  /** A parsed `define` statement (see [[parseDefine]]). */
+  private[api] sealed trait Define
+  /** `define stream S (...)` — the schema comes from the data, so only
+    * the name is kept (the `@OnError` prepass needs it). */
+  private[api] final case class DefStream(name: String) extends Define
+  /** `define table T (col type, ...)` — the mutable state DML targets. */
+  private[api] final case class DefTable(name: String, schema: StructType)
+      extends Define
+  /** `define window W (cols) spec` — a shared window readers go through
+    * (the column list is declarative: the feeding query fixes it). */
+  private[api] final case class DefWindow(name: String, spec: WindowSpec)
+      extends Define
+  /** `define trigger T at every <interval>`. */
+  private[api] final case class DefTrigger(name: String, ivNs: Long)
+      extends Define
+  /** `define aggregation A from ... aggregate by ts every grains`. */
+  private[api] final case class DefAggregation(name: String, agg: AggDef)
+      extends Define
+  /** `define function f[javascript] return type { ... }`, registered
+    * by the surface with [[registerScriptFn]] in textual order. */
+  private[api] final case class DefFunction(body: String) extends Define
+
+  /** Parse one `define` statement; None for any other statement and for
+    * define kinds outside the six above (both surfaces ignore those). A
+    * function body is not run through the SiddhiQL lexer — it is
+    * JavaScript, parsed by [[registerScriptFn]]. */
+  private[api] def parseDefine(body: String): Option[Define] = {
+    val words = body.split("\\s+", 3)
+    val kind = words.lift(1).map(_.toLowerCase).getOrElse("")
+    if (!words(0).equalsIgnoreCase("define")) None
+    else if (kind == "function") Some(DefFunction(body))
+    else if (!Set("stream", "table", "window", "trigger",
+        "aggregation")(kind)) None
+    else {
+      val p = new P(lex(body))
+      p.eatKw("define"); p.eatKw(kind)
+      if (kind == "aggregation") {
+        val (aname, adef) = parseAggDefRest(p)
+        Some(DefAggregation(aname, adef))
+      } else {
+        val name = p.ident()
+        Some(kind match {
+          case "stream" => DefStream(name)
+          case "table" =>
+            p.eatSym("(")
+            val fields = List.newBuilder[StructField]
+            def one(): StructField = {
+              val c = p.ident()
+              StructField(c, typeOf(p.ident()))
+            }
+            fields += one()
+            while (p.trySym(",")) fields += one()
+            p.eatSym(")")
+            DefTable(name, StructType(fields.result()))
+          case "window" =>
+            p.eatSym("(")
+            var done = false
+            while (!done) { p.ident(); p.ident()
+              if (!p.trySym(",")) { p.eatSym(")"); done = true } }
+            DefWindow(name, p.windowNameArgs())
+          case _ =>
+            p.eatKw("at"); p.eatKw("every")
+            DefTrigger(name, p.duration())
+        })
+      }
+    }
+  }
+
+  /** The streams an app annotates `@OnError(action='STREAM')`, in
+    * textual order. Each gets a fault twin `!S` ([[onErrorSplit]]) in
+    * the read environment before any query compiles; the surface
+    * supplies S's base relation. */
+  private[api] def onErrorStreams(
+      stmts: List[(Option[String], String, Boolean)]): List[String] =
+    stmts.collect { case (_, b, true) =>
+      parseDefine(b) match {
+        case Some(DefStream(n)) => n
+        case _ => fail("@OnError annotates a `define stream` (v1)")
+      }
+    }
+
+  /** One query of a partition block, rewritten to run outside it (see
+    * [[Partition.queries]]): `dml` is set for a table-DML writer hoisted
+    * to top level, None for a query over the block's [[Partition.view]]. */
+  private[api] final case class PartQuery(name: Option[String], ast: Ast,
+      dml: Option[Action])
+
+  /** A parsed `partition with (<spec> of <src>) begin <queries> end`
+    * block: a keyed attribute, or first-match-wins range branches
+    * `cond as 'label' or ...` (SURVEY §1.1; engine twins:
+    * graft.engine.Ops.partitionPerKey / partitionRange). Spark's shuffle
+    * IS the partition: the key prepends to every inner grouping, so the
+    * reference's per-key query instances become ONE keyed plan, per-key
+    * parallel at any executor count (and a lengthBatch inside a
+    * partition chunks per key). */
+  private[api] final case class Partition(src: String,
+      keyAttr: Option[String], ranges: List[(Expr, String)],
+      inner: String) {
+    /** The column the block's queries are keyed by. */
+    def key: String = keyAttr.getOrElse("partition_key")
+
+    /** `base` (the surface's relation for [[src]]) as the block's
+      * non-DML queries read it. A range block labels each event with
+      * its first matching range; events matching none leave the
+      * partition, through the filter `keep(partition_key IS NOT NULL)`
+      * (live widens it so flush sentinels still reach the watermark). */
+    def view(base: DataFrame, keep: Column => Column): DataFrame =
+      keyAttr match {
+        case Some(attr) =>
+          if (!base.columns.contains(attr))
+            fail(s"partition attribute '$attr' is not a column of '$src'")
+          base
+        case None =>
+          val keyCol = ranges.tail.foldLeft(
+            when(expr(sqlOf(ranges.head._1)), lit(ranges.head._2))) {
+            case (acc, (c, l)) => acc.when(expr(sqlOf(c)), lit(l))
+          }
+          base.withColumn(key, keyCol).where(keep(col(key).isNotNull))
+      }
+
+    /** The block's queries in textual order, each rewritten to run
+      * outside the block. A non-DML query keeps reading [[src]] (the
+      * surface binds it to [[view]]) with [[key]] prepended to its
+      * grouping when it windows or aggregates. A table-DML query HOISTS
+      * to legitimate top-level writer AST(s) over the unpartitioned
+      * stream, so the registered writer recompiles identically
+      * everywhere the DML algebra reads it back (multi-writer merges,
+      * enrichment reads, live folds):
+      *  - per-event + keyed: partition-invariant (per-event DML holds
+      *    no per-key state), hoisted verbatim.
+      *  - windowed/aggregating + keyed: per-key window instances over
+      *    the ALIGNED timeBatch buckets == ONE writer grouped by
+      *    (key ∪ group by), the non-DML key-prepend equivalence.
+      *  - per-event + range: the ranges only scope instances, so the
+      *    writer sees exactly the events matching ANY range — the OR of
+      *    the range conditions is ANDed into its filter.
+      *  - windowed + range: one writer per label with the first-match
+      *    filter (cond_i and not(earlier conds)), named `<q>__r<i>` past
+      *    the first; the label filters are disjoint, so each event
+      *    feeds exactly one instance, and the writers' interleaved
+      *    emission order is [[applyDmlMulti]]'s order algebra
+      *    (same-instant flushes of different labels tie-break on
+      *    statement index; the reference leaves concurrent instance
+      *    flush order unspecified).
+      * `isTable` tells an `insert into` a defined table (DML) from a
+      * stream insert. */
+    def queries(isTable: String => Boolean): List[PartQuery] =
+      inner.split(";").map(_.trim).filter(_.nonEmpty)
+        .flatMap(stripAnnotations).toList.flatMap { case (qName, qBody, _) =>
+          val ast0 = new P(lex(qBody)).query()
+          val ss0 = ast0.stream match {
+            case ss: SingleStream if ss.table.equalsIgnoreCase(src) => ss
+            case _: SingleStream => fail("partitioned queries read the " +
+              s"partitioned stream '$src' (v1)")
+            case _ => fail("partition blocks hold single-stream queries " +
+              "(v1; joins/patterns stay outside)")
+          }
+          val hasAgg = ast0.select.exists(it => containsAgg(it.e))
+          def keyed(need: Boolean): Ast =
+            if (need && !ast0.groupBy.contains(key))
+              ast0.copy(groupBy = key :: ast0.groupBy)
+            else ast0
+          val dml = ast0.action.filter {
+            case InsertInto(t) => isTable(t)
+            case _             => true
+          }
+          if (dml.isEmpty)
+            List(PartQuery(qName, keyed(ss0.window.nonEmpty || hasAgg), None))
+          else {
+            val winOrAgg =
+              ss0.window.nonEmpty || hasAgg || ast0.groupBy.nonEmpty
+            def andF(c: Expr): Ast = ast0.copy(stream = ss0.copy(
+              filter = Some(ss0.filter.fold(c)(f0 => Bin("and", c, f0)))))
+            def or(cs: List[Expr]): Expr = cs.reduce((a, b) => Bin("or", a, b))
+            keyAttr match {
+              case Some(_) => List(PartQuery(qName, keyed(winOrAgg), dml))
+              case None =>
+                val conds = ranges.map(_._1)
+                if (!winOrAgg) List(PartQuery(qName, andF(or(conds)), dml))
+                else conds.zipWithIndex.map { case (c, idx) =>
+                  if (idx == 0) PartQuery(qName, andF(c), dml)
+                  else PartQuery(qName.map(_ + s"__r$idx"),
+                    andF(Bin("and", c, Not(or(conds.take(idx))))), dml)
+                }
+            }
+          }
+        }
+  }
+
+  /** Parse a `partition with (<spec> of <src>) begin <queries> end`
+    * statement into a [[Partition]]. */
+  private[api] def parsePartition(body: String): Partition = {
+    val m = ("(?is)^partition\\s+with\\s*\\((.*)\\)\\s*" +
+      "begin\\b(.*?)\\bend\\s*$").r.findFirstMatchIn(body)
+      .getOrElse(fail("malformed partition: expected `partition " +
+        "with (<spec> of <stream>) begin <queries> end`"))
+    val (spec, innerBody) = (m.group(1), m.group(2))
+    val sp = new P(lex(spec))
+    val ranges = List.newBuilder[(Expr, String)]
+    var keyAttr: Option[String] = None
+    var done = false
+    while (!done) {
+      val e = sp.rangeExpr()
+      if (sp.tryKw("as")) {
+        val label = sp.advance() match {
+          case TStr(l) => l
+          case t => fail(s"range label must be a string, got $t")
+        }
+        ranges += ((e, label))
+        if (!sp.tryKw("or")) done = true
+      } else {
+        e match {
+          case Ref(attr :: Nil) => keyAttr = Some(attr); done = true
+          case other => fail("partition spec must be `<attr> of S` " +
+            s"or `cond as 'label' or ... of S`, got '${sqlOf(other)}'")
+        }
+      }
+    }
+    sp.eatKw("of")
+    Partition(sp.ident(), keyAttr, ranges.result(), innerBody)
+  }
+
+  /** Reads of a `define window` compile as fed-stream#window.spec — on
+    * single-stream reads AND on join sides (r16: Siddhi joins a named
+    * window like any windowed stream; the rewritten shape must be one
+    * the join compiler supports). `fed` tells whether an earlier query
+    * has inserted into the window. */
+  private[api] def readNamedWindows(ast: Ast,
+      windows: Map[String, WindowSpec], fed: String => Boolean): Ast = {
+    def namedWin(ss: SingleStream): SingleStream =
+      if (windows.contains(ss.table) && ss.window.isEmpty) {
+        if (!fed(ss.table))
+          fail(s"named window '${ss.table}' has not been fed " +
+            s"— add an `insert into ${ss.table}` query first")
+        ss.copy(window = Some(windows(ss.table)))
+      } else ss
+    ast.stream match {
+      case ss: SingleStream => ast.copy(stream = namedWin(ss))
+      case j: JoinStream => ast.copy(stream = j.copy(
+        left = namedWin(j.left), right = namedWin(j.right)))
+      case _ => ast
+    }
+  }
+
+  /** An enrichment join (a join reading a DML-maintained table) with
+    * the table on the RIGHT: an INNER join is symmetric, so a table on
+    * the left auto-swaps (Siddhi accepts either side); outer directions
+    * keep the stream-left convention and a table on their left fails. */
+  private[api] def enrichmentSides(j: JoinStream,
+      maintained: String => Boolean): JoinStream = {
+    val j2 =
+      if (maintained(j.left.table) && !maintained(j.right.table) &&
+          j.joinType == "inner")
+        j.copy(left = j.right, leftAlias = j.rightAlias,
+          right = j.left, rightAlias = j.leftAlias)
+      else j
+    if (maintained(j2.left.table))
+      fail("an OUTER enrichment join puts the maintained " +
+        "table on the RIGHT side (v1) — swap the join " +
+        "sides (inner joins swap automatically)")
+    j2
   }
 
   // ---------- incremental aggregation (define aggregation + within/per) --
@@ -2829,16 +2917,16 @@ private[api] trait SiddhiQlCompiler extends Serializable {
       if (head.equalsIgnoreCase("from"))
         scala.util.Try(fromAst(new P(lex(b)).query())).getOrElse(Nil)
       else if (head.equalsIgnoreCase("partition")) scala.util.Try {
-        val (innerBody, _, ranges, srcName) = parsePartition(b)
-        if (!isSn(srcName)) Nil
-        else ranges.map(_._1).flatMap(divisors) :::
-          innerBody.split(";").map(_.trim).filter(_.nonEmpty).toList
+        val pb = parsePartition(b)
+        if (!isSn(pb.src)) Nil
+        else pb.ranges.map(_._1).flatMap(divisors) :::
+          pb.inner.split(";").map(_.trim).filter(_.nonEmpty).toList
             .flatMap(stripAnnotations).flatMap { case (_, qb, _) =>
               scala.util.Try {
                 val a = new P(lex(qb)).query()
                 a.stream match {
                   case ss: SingleStream if isSn(ss.table) ||
-                      ss.table.equalsIgnoreCase(srcName) => fromAst(
+                      ss.table.equalsIgnoreCase(pb.src) => fromAst(
                     a.copy(stream = ss.copy(table = sN)))
                   case _ => fromAst(a)
                 }

@@ -1206,41 +1206,4 @@ private[api] trait SiddhiQlFrontend extends Serializable {
     }
     (cur, b) => ev(cond, cur, b).asInstanceOf[Boolean]
   }
-
-
-  /** `partition with (<spec>) begin <queries> end` → (inner query text,
-    * keyed attribute OR range branches, partitioned stream name).
-    * Shared by the batch compile and the live deployment. */
-  private[api] def parsePartition(body: String)
-      : (String, Option[String], List[(Expr, String)], String) = {
-    val m = ("(?is)^partition\\s+with\\s*\\((.*)\\)\\s*" +
-      "begin\\b(.*?)\\bend\\s*$").r.findFirstMatchIn(body)
-      .getOrElse(fail("malformed partition: expected `partition " +
-        "with (<spec> of <stream>) begin <queries> end`"))
-    val (spec, innerBody) = (m.group(1), m.group(2))
-    val sp = new P(lex(spec))
-    val ranges = List.newBuilder[(Expr, String)]
-    var keyAttr: Option[String] = None
-    var done = false
-    while (!done) {
-      val e = sp.rangeExpr()
-      if (sp.tryKw("as")) {
-        val label = sp.advance() match {
-          case TStr(l) => l
-          case t => fail(s"range label must be a string, got $t")
-        }
-        ranges += ((e, label))
-        if (!sp.tryKw("or")) done = true
-      } else {
-        e match {
-          case Ref(attr :: Nil) => keyAttr = Some(attr); done = true
-          case other => fail("partition spec must be `<attr> of S` " +
-            s"or `cond as 'label' or ... of S`, got '${sqlOf(other)}'")
-        }
-      }
-    }
-    sp.eatKw("of")
-    val srcName = sp.ident()
-    (innerBody, keyAttr, ranges.result(), srcName)
-  }
 }

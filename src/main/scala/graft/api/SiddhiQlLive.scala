@@ -27,16 +27,24 @@ private[api] trait SiddhiQlLive extends Serializable {
     * once per deployment so the two cannot drift apart. */
   private[api] final val DefaultWatermarkNs: Long = 60000000000L
   private[api] def watermarkNs(sp: SparkSession): Long =
-    sp.conf.getOption("graft.live.watermark").map { s =>
-      val n = try s.trim.toLong catch {
+    positiveIntConf(sp, "graft.live.watermark")
+      .map(_ * 1000000000L).getOrElse(DefaultWatermarkNs)
+
+  /** A `graft.live.*` integer knob, validated: a malformed or
+    * non-positive value fails at deploy time with the key named
+    * (mirroring the other deploy-time fail-fasts) instead of an
+    * uncontextualized NumberFormatException, a modulo that never fires
+    * or an empty bucket range. None when unset. */
+  private[api] def positiveIntConf(sp: SparkSession, key: String)
+      : Option[Int] =
+    sp.conf.getOption(key).map { s =>
+      val n = try s.trim.toInt catch {
         case _: NumberFormatException =>
-          fail(s"graft.live.watermark must be a positive integer " +
-            s"(seconds); got '$s'")
+          fail(s"$key must be a positive integer; got '$s'")
       }
-      if (n <= 0) fail(s"graft.live.watermark must be a positive " +
-        s"integer (seconds); got '$s'")
-      n * 1000000000L
-    }.getOrElse(DefaultWatermarkNs)
+      if (n <= 0) fail(s"$key must be a positive integer; got '$s'")
+      n
+    }
 
   /** Small shared pool for the fold runner's independent per-state
     * Spark jobs (touched-bucket probes, generation writes): a fold
@@ -59,22 +67,6 @@ private[api] trait SiddhiQlLive extends Serializable {
       scala.concurrent.duration.Duration(30,
         java.util.concurrent.TimeUnit.MINUTES))
 
-  /** `graft.live.compactEvery`, validated: a malformed or
-    * non-positive value fails at deploy time with the key named
-    * (mirroring the other deploy-time fail-fasts) instead of an
-    * uncontextualized NumberFormatException or a modulo that never
-    * fires. */
-  private[api] def compactEveryConf(sp: SparkSession): Option[Int] =
-    sp.conf.getOption("graft.live.compactEvery").map { s =>
-      val n = try s.trim.toInt catch {
-        case _: NumberFormatException =>
-          fail(s"graft.live.compactEvery must be a positive " +
-            s"integer; got '$s'")
-      }
-      if (n <= 0) fail(s"graft.live.compactEvery must be a positive " +
-        s"integer; got '$s'")
-      n
-    }
   /** Deploy a compiled app as a LIVE Structured Streaming topology over a
     * streaming events DataFrame (columns `event_id, ts_ns, user_id,
     * event_type, value, ts`) — the SiddhiProcess analog: the same text a
@@ -99,8 +91,9 @@ private[api] trait SiddhiQlLive extends Serializable {
     * query — exactly the batch path's property, which is why batch
     * replay is a valid oracle for the deployed result.
     *
-    * Watermark design: ONE `withWatermark("ts", "1 minute")` node sits
-    * at the SOURCE, above nothing — so every event (and every flush
+    * Watermark design: ONE `withWatermark("ts", <delay>)` node sits at
+    * the SOURCE, above nothing (the delay is `graft.live.watermark`,
+    * default 60 s; see [[watermarkNs]]) — so every event (and every flush
     * sentinel) reaches it before any user filter. User filters are
     * OR-extended with the sentinel region (`f OR ts >= flushCutoff`):
     * the predicate then references the event-time column, which stops
@@ -134,25 +127,6 @@ private[api] trait SiddhiQlLive extends Serializable {
       else if (kind == 4) OutputMode.Update()
       else OutputMode.Append(),
       ordCols, kind == 2)
-  }
-
-  /** `define table T (col type, ...)` → its schema, None otherwise. */
-  private[api] def parseTableDef(body: String): Option[(String, StructType)] = {
-    val p = new P(lex(body))
-    p.eatKw("define")
-    if (!p.tryKw("table")) None
-    else {
-      val tname = p.ident()
-      p.eatSym("(")
-      val fields = List.newBuilder[StructField]
-      def one(): StructField = {
-        val c = p.ident(); StructField(c, typeOf(p.ident()))
-      }
-      fields += one()
-      while (p.trySym(",")) fields += one()
-      p.eatSym(")")
-      Some(tname -> StructType(fields.result()))
-    }
   }
 
   /** How a [[LiveFold]] state is materialized between triggers, as
@@ -756,11 +730,16 @@ private[api] trait SiddhiQlLive extends Serializable {
       (sp, st) => finish(sp, st("state")), ordCols, limit, offset)
 
   /** Stage compiler shared by [[deployAppOn]] and [[deployApp]]:
-    * returns the `out` query's streaming DataFrame (with its stage
-    * kind 0=stateless / 1=complete-agg / 2=windowed-append-agg and
-    * ordering), or — when `out` names a table-DML statement — the DML
-    * spec (ast, action, table schema, feeding stream name + its
-    * streaming DataFrame) for the caller's foreachBatch merge. */
+    * returns the `out` query's streaming DataFrame with its stage kind
+    * (0 = stateless append, 1 = Complete-mode aggregation, 2 = windowed
+    * Append-mode aggregation that needs flush sentinels, 4 = Update-mode
+    * aggregation whose `__ukey` column is the upsert key) and ordering,
+    * or — when `out` is a folded stage (kind 3: table DML, unique:last,
+    * sort, frequent, enrichment join, rate over matches, …) — the
+    * [[LiveFold]] the caller runs in a `foreachBatch`. The app text goes
+    * through the front-end shared with [[compileApp]]
+    * ([[parseDefine]], [[onErrorStreams]], [[parsePartition]],
+    * [[readNamedWindows]], [[enrichmentSides]]). */
   private[api] def deployStages(src: DataFrame, app: String, out: String)
       : (Option[(DataFrame, Int, Seq[Column])], Option[LiveFold]) = {
     val need = Seq("event_id", "ts_ns", "user_id", "event_type", "value")
@@ -871,28 +850,51 @@ private[api] trait SiddhiQlLive extends Serializable {
           else it.e match { case Ref(parts) => col(parts.last).as(a)
                             case _ => col(a) } }: _*)
     }
+    // Per-key buffered fold (length / timeLength / expression windows):
+    // each `key` group's events arrive in (ts_ns, event_id) order inside
+    // flatMapGroupsWithState; `step(buffer, event)` returns (the buffer
+    // kept as state, the events the select items evaluate over with
+    // [[bufEval]]), so state is whatever the step retains per key.
+    def bufferFold(ast: Ast, base: DataFrame, key: String,
+        step: (Vector[Cep.Ev], Cep.Ev) => (Vector[Cep.Ev], Vector[Cep.Ev]))
+        : DataFrame = {
+      val items = itemsOf(ast)
+      val schema2 = StructType(evOutTypes(items).map {
+        case (n3, t) => StructField(n3, t) })
+      implicit val enc2: org.apache.spark.sql.Encoder[
+        org.apache.spark.sql.Row] =
+        org.apache.spark.sql.Encoders.row(schema2)
+      import org.apache.spark.sql.Encoders
+      import org.apache.spark.sql.streaming.GroupStateTimeout
+      base.select(col("event_id").as("eventId"),
+          col("ts_ns").as("tsNs"), col("user_id").as("userId"),
+          col("event_type").as("eventType"), col("value"))
+        .as[Cep.Ev](Encoders.product[Cep.Ev])
+        .groupByKey(e => String.valueOf(field(e, key)))(Encoders.STRING)
+        .flatMapGroupsWithState[Vector[Cep.Ev], org.apache.spark.sql.Row](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          (_, it2, st) =>
+            var buf = st.getOption.getOrElse(Vector.empty[Cep.Ev])
+            val out = it2.toVector.sortBy(e => (e.tsNs, e.eventId)).map {
+              e =>
+                val (kept, win) = step(buf, e)
+                buf = kept
+                org.apache.spark.sql.Row.fromSeq(
+                  items.map { case (it3, _, _) => bufEval(it3.e, win, e) })
+            }
+            st.update(buf)
+            out.iterator
+        }.toDF()
+    }
     // one `from ...` stage: compiles onto the live topology, updating
     // env / statefulStreams / result / dmlResult. `view` is the stage's
     // read environment (a partition block overrides its stream with the
     // keyed/labeled view); `partKey` marks partition-block queries.
     def runStage(name: Option[String], ast0L: Ast,
         view: Map[String, DataFrame], partKey: Option[String]): Unit = {
-        // reading a defined window compiles as fed-stream#spec (the
-        // batch replay's named-window sharing, on the incremental
-        // plan) — on single-stream reads AND join sides (r16)
-        def namedWinL(ss: SingleStream): SingleStream =
-          if (liveWindowDefs.contains(ss.table) && ss.window.isEmpty) {
-            if (!env.contains(ss.table))
-              fail(s"named window '${ss.table}' has not been fed — " +
-                s"add an `insert into ${ss.table}` query first")
-            ss.copy(window = Some(liveWindowDefs(ss.table)))
-          } else ss
-        val ast = ast0L.stream match {
-          case ss: SingleStream => ast0L.copy(stream = namedWinL(ss))
-          case j: JoinStream => ast0L.copy(stream = j.copy(
-            left = namedWinL(j.left), right = namedWinL(j.right)))
-          case _ => ast0L
-        }
+        // a defined window reads as fed-stream#spec, exactly like the
+        // batch replay — reading W as a plain stream would miscompile
+        val ast = readNamedWindows(ast0L, liveWindowDefs, env.contains)
         // rate over pattern matches deploys through the fold channel
         // (see the PatternStream case); snapshot keeps the batch
         // compiler's refusal, named identically on both surfaces
@@ -906,12 +908,10 @@ private[api] trait SiddhiQlLive extends Serializable {
         }
         if (dmlAct.nonEmpty) {
           // table DML from a partition block never reaches this arm
-          // with a partKey: the partition branch HOISTS it to
-          // top-level writer AST(s) first (keyed windowed → key
-          // prepended to group by; range → range conditions folded
-          // into the writer filter — the batch compiler's exact r14
-          // rewrite) and re-enters runStage partKey-less, so the DML
-          // capture below sees only legitimate top-level writers.
+          // with a partKey: [[Partition.queries]] HOISTS it to
+          // top-level writer AST(s) first and the partition branch
+          // re-enters runStage partKey-less, so the DML capture below
+          // sees only legitimate top-level writers.
           // table DML deployed LIVE: captured here, executed by
           // deployApp as a per-micro-batch keyed MERGE over the
           // accumulated table (engine twin: Streaming.tableUpsert).
@@ -1638,41 +1638,13 @@ private[api] trait SiddhiQlLive extends Serializable {
                   case _ => fail("live expression window (v1) needs " +
                     "exactly one group by key to partition the fold")
                 }
-                val items = itemsOf(ast)
-                val schema2 = StructType(evOutTypes(items).map {
-                  case (n3, t) => StructField(n3, t) })
-                implicit val enc2: org.apache.spark.sql.Encoder[
-                  org.apache.spark.sql.Row] =
-                  org.apache.spark.sql.Encoders.row(schema2)
-                import org.apache.spark.sql.Encoders
-                import org.apache.spark.sql.streaming.GroupStateTimeout
-                val folded = base.select(col("event_id").as("eventId"),
-                    col("ts_ns").as("tsNs"), col("user_id").as("userId"),
-                    col("event_type").as("eventType"), col("value"))
-                  .as[Cep.Ev](Encoders.product[Cep.Ev])
-                  .groupByKey(e =>
-                    String.valueOf(field(e, key)))(Encoders.STRING)
-                  .flatMapGroupsWithState[Vector[Cep.Ev],
-                    org.apache.spark.sql.Row](
-                    OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-                    (_, it2, st) =>
-                      var buf = st.getOption.getOrElse(
-                        Vector.empty[Cep.Ev])
-                      val out = it2.toVector
-                        .sortBy(e => (e.tsNs, e.eventId)).map { e =>
-                          buf = buf :+ e
-                          while (buf.nonEmpty &&
-                              !bufEval(ret, buf, e)
-                                .asInstanceOf[Boolean])
-                            buf = buf.tail
-                          org.apache.spark.sql.Row.fromSeq(
-                            items.map { case (it3, _, _) =>
-                              bufEval(it3.e, buf, e) })
-                        }
-                      st.update(buf)
-                      out.iterator
-                  }
-                (folded.toDF(), KStateless)
+                (bufferFold(ast, base, key, { (buf0, e) =>
+                  var buf = buf0 :+ e
+                  while (buf.nonEmpty &&
+                      !bufEval(ret, buf, e).asInstanceOf[Boolean])
+                    buf = buf.tail
+                  (buf, buf)
+                }), KStateless)
               case Some(WindowSpec(n2, _, sargs2))
                   if n2.equalsIgnoreCase("cron") =>
                 // cron live: the epoch-aligned fixed-interval Quartz
@@ -1734,39 +1706,10 @@ private[api] trait SiddhiQlLive extends Serializable {
                   case _ => fail("live timeLength window (v1) needs " +
                     "exactly one group by key to partition the ring")
                 }
-                val items = itemsOf(ast)
-                val schema2 = StructType(evOutTypes(items).map {
-                  case (n3, t) => StructField(n3, t) })
-                implicit val enc2: org.apache.spark.sql.Encoder[
-                  org.apache.spark.sql.Row] =
-                  org.apache.spark.sql.Encoders.row(schema2)
-                import org.apache.spark.sql.Encoders
-                import org.apache.spark.sql.streaming.GroupStateTimeout
-                val folded = base.select(col("event_id").as("eventId"),
-                    col("ts_ns").as("tsNs"), col("user_id").as("userId"),
-                    col("event_type").as("eventType"), col("value"))
-                  .as[Cep.Ev](Encoders.product[Cep.Ev])
-                  .groupByKey(e =>
-                    String.valueOf(field(e, key)))(Encoders.STRING)
-                  .flatMapGroupsWithState[Vector[Cep.Ev],
-                    org.apache.spark.sql.Row](
-                    OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-                    (_, it2, st) =>
-                      var ring = st.getOption.getOrElse(
-                        Vector.empty[Cep.Ev])
-                      val out = it2.toVector
-                        .sortBy(e => (e.tsNs, e.eventId)).map { e =>
-                          ring = (ring :+ e).takeRight(nCap)
-                          val win = ring.filter(
-                            _.tsNs >= e.tsNs - tNs2)
-                          org.apache.spark.sql.Row.fromSeq(
-                            items.map { case (it3, _, _) =>
-                              bufEval(it3.e, win, e) })
-                        }
-                      st.update(ring)
-                      out.iterator
-                  }
-                (folded.toDF(), KStateless)
+                (bufferFold(ast, base, key, { (ring0, e) =>
+                  val ring = (ring0 :+ e).takeRight(nCap)
+                  (ring, ring.filter(_.tsNs >= e.tsNs - tNs2))
+                }), KStateless)
               case Some(WindowSpec(n2, _, sargs2))
                   if n2.equalsIgnoreCase("unique:last") ||
                     n2.equalsIgnoreCase("unique:ever") =>
@@ -1965,37 +1908,10 @@ private[api] trait SiddhiQlLive extends Serializable {
                 need2.foreach(c => if (!base.columns.contains(c))
                   fail(s"live length window reads event streams; " +
                     s"'${s.table}' lacks '$c'"))
-                val items = itemsOf(ast)
-                val schema2 = StructType(evOutTypes(items).map {
-                  case (n3, t) => StructField(n3, t) })
-                implicit val enc2: org.apache.spark.sql.Encoder[
-                  org.apache.spark.sql.Row] =
-                  org.apache.spark.sql.Encoders.row(schema2)
-                import org.apache.spark.sql.Encoders
-                import org.apache.spark.sql.streaming.GroupStateTimeout
-                val folded = base.select(col("event_id").as("eventId"),
-                    col("ts_ns").as("tsNs"), col("user_id").as("userId"),
-                    col("event_type").as("eventType"), col("value"))
-                  .as[Cep.Ev](Encoders.product[Cep.Ev])
-                  .groupByKey(e =>
-                    String.valueOf(field(e, key)))(Encoders.STRING)
-                  .flatMapGroupsWithState[Vector[Cep.Ev],
-                    org.apache.spark.sql.Row](
-                    OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-                    (_, it2, st) =>
-                      var ring = st.getOption.getOrElse(
-                        Vector.empty[Cep.Ev])
-                      val out = it2.toVector
-                        .sortBy(e => (e.tsNs, e.eventId)).map { e =>
-                          ring = (ring :+ e).takeRight(nRing)
-                          org.apache.spark.sql.Row.fromSeq(
-                            items.map { case (it3, _, _) =>
-                              bufEval(it3.e, ring, e) })
-                        }
-                      st.update(ring)
-                      out.iterator
-                  }
-                (folded.toDF(), KStateless)
+                (bufferFold(ast, base, key, { (ring0, e) =>
+                  val ring = (ring0 :+ e).takeRight(nRing)
+                  (ring, ring)
+                }), KStateless)
               case Some(WindowSpec(n2, args2, _))
                   if n2.equalsIgnoreCase("session") =>
                 // live session aggregation: built-in session_window in
@@ -2132,20 +2048,7 @@ private[api] trait SiddhiQlLive extends Serializable {
             if (partKey.nonEmpty)
               fail("enrichment joins inside a partition block are not " +
                 "deployed (v1)")
-            // an INNER enrichment join is symmetric: a table on the
-            // LEFT auto-swaps (Siddhi accepts either side); outer
-            // directions keep the stream-left convention
-            val j =
-              if (dmlInfos.contains(jx.left.table) &&
-                  !dmlInfos.contains(jx.right.table) &&
-                  jx.joinType == "inner")
-                jx.copy(left = jx.right, leftAlias = jx.rightAlias,
-                  right = jx.left, rightAlias = jx.leftAlias)
-              else jx
-            if (dmlInfos.contains(j.left.table))
-              fail("an OUTER enrichment join puts the maintained " +
-                "table on the RIGHT side (v1) — swap the join sides " +
-                "(inner joins swap automatically)")
+            val j = enrichmentSides(jx, dmlInfos.contains)
             if (j.unidirectional)
               fail("live enrichment joins are already one-directional " +
                 "(events trigger, the table holds state) — drop " +
@@ -2933,7 +2836,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                         p.flushOf(emptyOf(sp0, p.stateSchema)).schema
                       val fCols = flushSch.map(_.name).toSet
                       if (gb.nonEmpty && gb.forall(fCols.contains))
-                        Some(wi -> ((compactEveryConf(sp0).getOrElse(8),
+                        Some(wi -> ((positiveIntConf(sp0,
+                          "graft.live.compactEvery").getOrElse(8),
                           gb: Seq[String], flushSch)))
                       else None
                     case _ => None
@@ -3509,7 +3413,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // bucket growth
                 val compactN: Option[Int] =
                   if (dAst.groupBy.forall(flushCols.contains))
-                    Some(compactEveryConf(sp0).getOrElse(8))
+                    Some(positiveIntConf(sp0, "graft.live.compactEvery")
+                      .getOrElse(8))
                   else None
                 val baseKeys: Seq[String] =
                   if (dAst.groupBy.nonEmpty) dAst.groupBy
@@ -4275,13 +4180,7 @@ private[api] trait SiddhiQlLive extends Serializable {
     // source, so it composes onto the incremental plan exactly as it
     // does onto the batch replay (onErrorSplit) — `!S` and S's clean
     // view go into the read environment before any stage compiles
-    liveStmts.collect { case (_, b, true) =>
-      val p0 = new P(lex(b))
-      p0.eatKw("define")
-      if (!p0.tryKw("stream"))
-        fail("@OnError annotates a `define stream` (v1)")
-      p0.ident()
-    }.foreach { sN =>
+    onErrorStreams(liveStmts).foreach { sN =>
       val baseDf = envLookup(env, sN).getOrElse(fail("@OnError live deployment " +
         s"annotates the source stream; '$sN' is not declared"))
       val (fault, clean) = onErrorSplit(baseDf, liveStmts, sN)
@@ -4290,163 +4189,49 @@ private[api] trait SiddhiQlLive extends Serializable {
     }
     liveStmts.foreach { case (name, body, _) =>
       val head = body.split("\\s+", 2).headOption.getOrElse("")
-      if (head.equalsIgnoreCase("define")) {
-        // stream schemas come from the source; function defines compile
-        // (they inline into the incremental plan like any expression);
-        // table defines declare the mutable state live DML targets
-        val defKind = body.split("\\s+", 3).lift(1).map(_.toLowerCase)
-        if (defKind.contains("function")) registerScriptFn(body)
-        else if (defKind.contains("table"))
-          parseTableDef(body).foreach { case (t, sch) =>
-            tableDefs += t -> sch }
-        else if (defKind.contains("window")) {
-          // `define window W (cols) spec` deployed LIVE: readers
-          // compile as fed-stream#spec, exactly like the batch replay
-          // — silently reading W as a plain stream would miscompile
-          val p2 = new P(lex(body))
-          p2.eatKw("define"); p2.eatKw("window")
-          val wname = p2.ident()
-          p2.eatSym("(")
-          var done2 = false
-          while (!done2) { p2.ident(); p2.ident()
-            if (!p2.trySym(",")) { p2.eatSym(")"); done2 = true } }
-          liveWindowDefs += wname -> p2.windowNameArgs()
-        }
-        else if (defKind.contains("aggregation")) {
-          // `define aggregation` deployed LIVE: the grain cascade's
-          // finest-grain partial table becomes keyed fold state (see
-          // the aggregation-read case in runStage)
-          val p2 = new P(lex(body))
-          p2.eatKw("define"); p2.eatKw("aggregation")
-          val (aname, adef) = parseAggDefRest(p2)
+      if (head.equalsIgnoreCase("define")) parseDefine(body).foreach {
+        // stream schemas come from the source; functions inline into
+        // the incremental plan like any expression
+        case DefStream(_) => ()
+        case DefFunction(b) => registerScriptFn(b)
+        case DefTable(t, sch) => tableDefs += t -> sch
+        case DefWindow(w, spec) => liveWindowDefs += w -> spec
+        // the grain cascade's finest-grain partial table becomes keyed
+        // fold state (see the aggregation-read case in runStage)
+        case DefAggregation(a, adef) =>
           if (!adef.source.equalsIgnoreCase("events"))
             fail("a live `define aggregation` (v1) aggregates the " +
               s"source stream 'events'; got '${adef.source}'")
-          liveAggDefs += aname -> adef
-        }
-        else if (defKind.contains("trigger")) {
-          // `define trigger T at every <iv>` deployed LIVE: the replay
-          // twin of a rate source — tick generation is driven by the
-          // STREAM'S event-time span, tracked incrementally in fold
-          // state (see the trigger-read case in runStage); a real
-          // deployment points the same read at a wall-clock rate
-          // source (engine twin: Ops.triggerGapfill)
-          val p2 = new P(lex(body))
-          p2.eatKw("define"); p2.eatKw("trigger")
-          val tname = p2.ident()
-          p2.eatKw("at"); p2.eatKw("every")
-          liveTriggerDefs += tname -> p2.duration()
-        }
+          liveAggDefs += a -> adef
+        // the replay twin of a rate source: tick generation is driven
+        // by the STREAM'S event-time span, tracked incrementally in
+        // fold state (see the trigger-read case in runStage); a real
+        // deployment points the same read at a wall-clock rate source
+        // (engine twin: Ops.triggerGapfill)
+        case DefTrigger(t, ivNs) => liveTriggerDefs += t -> ivNs
       }
       else if (head.equalsIgnoreCase("partition")) {
-        // partition with (<spec> of S) begin ... end deployed LIVE:
-        // Spark's shuffle IS the partition (the batch compile's
-        // property holds unchanged on the incremental plan) — the key
-        // prepends to every inner grouping, so the reference's per-key
-        // query instances become ONE keyed streaming plan, per-key
-        // parallel at any executor count
-        val (innerBody, keyAttr, ranges, srcName) = parsePartition(body)
-        if (statefulStreams.contains(srcName))
-          fail(s"live deployment (v1): '$srcName' is an aggregation " +
+        // deployed LIVE with the batch compile's rewrite: the key
+        // prepends to every inner grouping on the incremental plan;
+        // hoisted DML writers re-enter runStage partKey-less over the
+        // GLOBAL env (the rewritten AST carries the partition's whole
+        // semantics, so enrichment reads and live folds recompile it)
+        val pb = parsePartition(body)
+        if (statefulStreams.contains(pb.src))
+          fail(s"live deployment (v1): '${pb.src}' is an aggregation " +
             "output — it cannot feed a partition block")
-        val baseDf = envLookup(env, srcName).getOrElse(fail("live deployment " +
-          s"reads declared streams; '$srcName' is neither the source " +
-          "nor an earlier insert-into target"))
-        val (partKey, view) = keyAttr match {
-          case Some(attr) =>
-            if (!baseDf.columns.contains(attr))
-              fail(s"partition attribute '$attr' is not a column of " +
-                s"'$srcName'")
-            (attr, baseDf)
-          case None =>
-            // first matching range labels the event; unmatched events
-            // leave the partition. The OR keeps the label filter above
-            // the source watermark node so flush sentinels (which may
-            // match no range) still advance the watermark.
-            val keyCol = ranges.tail.foldLeft(
-              when(expr(sqlOf(ranges.head._1)), lit(ranges.head._2))) {
-              case (acc, (c, l)) => acc.when(expr(sqlOf(c)), lit(l))
-            }
-            ("partition_key",
-              baseDf.withColumn("partition_key", keyCol)
-                .where(col("partition_key").isNotNull ||
-                  col("ts") >= Streaming.flushCutoff))
-        }
-        innerBody.split(";").map(_.trim).filter(_.nonEmpty)
-          .flatMap(stripAnnotations).foreach { case (qName, qBody, _) =>
-          val ast0 = new P(lex(qBody)).query()
-          val dmlAct0 = ast0.action.filter {
-            case InsertInto(t2) => tableDefs.contains(t2)
-            case _              => true
-          }
-          if (dmlAct0.nonEmpty) {
-            // table DML hoists to top-level writer AST(s) — the batch
-            // compiler's r14 rewrite verbatim (see the partition arm
-            // in SiddhiQlCompiler for the four-case derivation):
-            // keyed per-event verbatim, keyed windowed with the key
-            // prepended to group by, range per-event with the OR of
-            // range conditions folded into the filter, range windowed
-            // as one first-match-filtered writer per label (>1 label
-            // then hits the live multi-writer windowed bound, which
-            // names itself). The hoisted stages re-enter runStage
-            // partKey-less over the GLOBAL env: the rewritten AST
-            // carries the partition's whole semantics, so enrichment
-            // reads and live folds recompile it correctly everywhere.
-            val ss0 = ast0.stream match {
-              case ss: SingleStream =>
-                if (!ss.table.equalsIgnoreCase(srcName))
-                  fail("partitioned queries read the partitioned " +
-                    s"stream '$srcName' (v1)")
-                ss
-              case _ => fail("partition blocks hold single-stream " +
-                "queries (v1; joins/patterns stay outside)")
-            }
-            val winOrAgg = ss0.window.nonEmpty ||
-              ast0.select.exists(it => containsAgg(it.e)) ||
-              ast0.groupBy.nonEmpty
-            def andF(f: Option[Expr], c: Expr): Option[Expr] =
-              Some(f.fold(c)(f0 => Bin("and", c, f0)))
-            keyAttr match {
-              case Some(k) =>
-                val ast1 =
-                  if (winOrAgg && !ast0.groupBy.contains(k))
-                    ast0.copy(groupBy = k :: ast0.groupBy)
-                  else ast0
-                runStage(qName, ast1, env, None)
-              case None =>
-                val conds = ranges.map(_._1)
-                if (!winOrAgg)
-                  runStage(qName, ast0.copy(stream = ss0.copy(
-                    filter = andF(ss0.filter,
-                      conds.reduce((a, b) => Bin("or", a, b))))),
-                    env, None)
-                else conds.zipWithIndex.foreach { case (c, idx) =>
-                  val firstM =
-                    if (idx == 0) c
-                    else Bin("and", c, Not(conds.take(idx)
-                      .reduce((a, b) => Bin("or", a, b))))
-                  runStage(
-                    if (idx == 0) qName else qName.map(_ + s"__r$idx"),
-                    ast0.copy(stream =
-                      ss0.copy(filter = andF(ss0.filter, firstM))),
-                    env, None)
-                }
-            }
-          } else {
-          val ast = ast0.stream match {
-            case ss: SingleStream if ss.table.equalsIgnoreCase(srcName) =>
-              val needsKey = (ss.window.nonEmpty ||
-                ast0.select.exists(it => containsAgg(it.e))) &&
-                !ast0.groupBy.contains(partKey)
-              if (needsKey) ast0.copy(groupBy = partKey :: ast0.groupBy)
-              else ast0
-            case _: SingleStream => fail("partitioned queries read the " +
-              s"partitioned stream '$srcName' (v1)")
-            case _ => fail("partition blocks hold single-stream queries " +
-              "(v1; joins/patterns stay outside)")
-          }
-          runStage(qName, ast, env + (srcName -> view), Some(partKey))
-          }
+        val baseDf = envLookup(env, pb.src).getOrElse(fail("live " +
+          s"deployment reads declared streams; '${pb.src}' is neither " +
+          "the source nor an earlier insert-into target"))
+        // the sentinel OR keeps the label filter above the source
+        // watermark node, so flush sentinels (which may match no range)
+        // still advance the watermark
+        val view = pb.view(baseDf, _ || col("ts") >= Streaming.flushCutoff)
+        pb.queries(tableDefs.contains).foreach {
+          case PartQuery(qName, ast, Some(_)) =>
+            runStage(qName, ast, env, None)
+          case PartQuery(qName, ast, None) =>
+            runStage(qName, ast, env + (pb.src -> view), Some(pb.key))
         }
       }
       else if (head.equalsIgnoreCase("from"))
@@ -4490,6 +4275,16 @@ private[api] trait SiddhiQlLive extends Serializable {
       if (spark.conf.getOption("graft.live.fastGates").contains("true"))
         math.min(chunks, 2)
       else chunks
+    // state bucket count for the fold runner and the Update-mode sink.
+    // Default 4 (r18; was 16): per-trigger cost has a component per
+    // touched bucket (probe and read fan-out), and at replay
+    // granularity 16 buckets measured ~300-800 ms of 16-task stages per
+    // write job. Results are bucketing-invariant (internal layout only;
+    // oracle-pinned). A real deployment sizes `graft.live.stateBuckets`
+    // to its key domain (the per-trigger write cost O(touched buckets)
+    // contract needs bucket count >> concurrent hot keys at 100 TB).
+    val nBuckets =
+      positiveIntConf(spark, "graft.live.stateBuckets").getOrElse(4)
     val rows = graft.engine.Streaming.feedRows(spark, dir)
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Cep.Ev]
@@ -4543,16 +4338,6 @@ private[api] trait SiddhiQlLive extends Serializable {
           // O(batch-touched buckets), not O(state)); APPEND states
           // write the batch delta only; FULL states (tiny by
           // contract) rewrite whole.
-          // default bucket count 4 (r18; was 16): per-trigger cost has a
-          // component per touched bucket (probe and read fan-out), and
-          // at replay granularity 16 buckets measured ~300-800 ms of
-          // 16-task stages per write job. Results are bucketing-invariant
-          // (internal layout only; oracle-pinned). A real deployment
-          // sizes `graft.live.stateBuckets` to its key domain (the
-          // per-trigger write cost O(touched buckets) contract needs
-          // bucket count >> concurrent hot keys at 100 TB).
-          val nBuckets = spark.conf.getOption("graft.live.stateBuckets")
-            .map(_.toInt).getOrElse(4)
           var gen = 0
           val gens = new Generations(nBuckets,
             lf.schemas.map { case (n, s2, _) => n -> s2 }.toMap)
@@ -4764,9 +4549,7 @@ private[api] trait SiddhiQlLive extends Serializable {
             // hash into, so BOTH per-trigger sink volume (O(changed
             // groups)) and per-trigger write cost (O(touched buckets))
             // survive scale, and nothing accumulates on the driver.
-            val nB = spark.conf.getOption("graft.live.stateBuckets")
-              .map(_.toInt).getOrElse(4) // r18: see fold runner's note
-            val gensU = new Generations(nB, Map("u" -> df.schema))
+            val gensU = new Generations(nBuckets, Map("u" -> df.schema))
             var genU = 0
             val q = start(df.writeStream.outputMode("update")
               .option("checkpointLocation", ckpt("update"))
@@ -4789,7 +4572,7 @@ private[api] trait SiddhiQlLive extends Serializable {
                 } finally { batch.unpersist(); () }
               }.start())
             replay(q, flush = false)
-            val t = gensU.keyed(spark, "u", 0 until nB).drop("__ukey")
+            val t = gensU.keyed(spark, "u", 0 until nBuckets).drop("__ukey")
             return (if (ordCols.nonEmpty) t.orderBy(ordCols: _*) else t)
           }
           val mode = if (kind == 1) OutputMode.Complete()

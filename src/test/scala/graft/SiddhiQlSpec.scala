@@ -522,9 +522,16 @@ class SiddhiQlSpec extends AnyFunSuite {
   }
 
   test("partition diagnostics") {
-    def appMsg(app: String): String =
-      intercept[IllegalArgumentException](
+    // both surfaces share the partition front-end, so a malformed block
+    // fails with the same message on each
+    def appMsg(app: String): String = {
+      val m = intercept[IllegalArgumentException](
         SiddhiQL.compileApp(spark, sf, app)).getMessage
+      val live = intercept[IllegalArgumentException](
+        SiddhiQL.deployApp(spark, sf, app, "O")).getMessage
+      assert(live == m, s"deployApp: '$live' vs compileApp: '$m'")
+      m
+    }
     assert(appMsg("partition with (nope of events) begin " +
       "from events select count() as n insert into O; end")
       .contains("not a column"))
@@ -1733,9 +1740,19 @@ class SiddhiQlSpec extends AnyFunSuite {
       val m = intercept[IllegalArgumentException](
         SiddhiQL.deployApp(spark, dir, app, "read")).getMessage
       assert(m.contains("graft.live.watermark"))
+      spark.conf.unset("graft.live.watermark")
+      // so does the state bucket count: a non-positive one would leave
+      // every keyed state's bucket range empty (an empty result)
+      Seq("x", "0", "-4").foreach { v =>
+        spark.conf.set("graft.live.stateBuckets", v)
+        val mb = intercept[IllegalArgumentException](
+          SiddhiQL.deployApp(spark, dir, app, "read")).getMessage
+        assert(mb.contains("graft.live.stateBuckets"), s"'$v': $mb")
+      }
     } finally {
       spark.conf.unset("graft.live.compactEvery")
       spark.conf.unset("graft.live.watermark")
+      spark.conf.unset("graft.live.stateBuckets")
     }
   }
 
