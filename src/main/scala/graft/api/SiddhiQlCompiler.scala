@@ -212,13 +212,8 @@ private[api] trait SiddhiQlCompiler extends Serializable {
                     "join; read it with the store form " +
                     "(`from Table on cond select …`) instead")
                 val ws = dmlWriters(j2.right.table)
-                val enr = enrichCompile(spark, dir, ast1, j2, ws,
-                  emptyOf(spark, ws.head._3), env)
-                val ordered =
-                  if (ast1.orderBy.isEmpty) enr
-                  else enr.orderBy(ast1.orderBy.map { case (c, asc) =>
-                    if (asc) col(c).asc else col(c).desc }: _*)
-                ordered
+                orderOffsetLimit(ast1, enrichCompile(spark, dir, ast1, j2,
+                  ws, emptyOf(spark, ws.head._3), env))
               case _ => compileAst(spark, dir, ast1, env, aggDefs)
             }
             emit(name, ast, df)
@@ -2604,13 +2599,19 @@ private[api] trait SiddhiQlCompiler extends Serializable {
         compileJoin(spark, dir, ast, j, env, aggDefs)
       case (None, pt: PatternStream) => compilePattern(spark, dir, ast, pt)
     }
+    orderOffsetLimit(ast, selected)
+  }
+
+  /** `ast`'s `order by` as sort columns. */
+  private[api] def orderColsOf(ast: Ast): Seq[Column] =
+    ast.orderBy.map { case (c, asc) => if (asc) col(c).asc else col(c).desc }
+
+  /** A query's result tail, shared by the batch compile and the live
+    * [[deployApp]]: order, then Siddhi's offset skips M rows and limit
+    * caps what follows (Spark's offset/limit compose in that order). */
+  private[api] def orderOffsetLimit(ast: Ast, df: DataFrame): DataFrame = {
     val ordered =
-      if (ast.orderBy.isEmpty) selected
-      else selected.orderBy(ast.orderBy.map { case (c, asc) =>
-        if (asc) col(c).asc else col(c).desc
-      }: _*)
-    // Siddhi's limit/offset: offset skips M output rows, limit caps what
-    // follows (Spark's offset/limit compose in that order)
+      if (ast.orderBy.isEmpty) df else df.orderBy(orderColsOf(ast): _*)
     val off = ast.offset.fold(ordered)(m => ordered.offset(m.toInt))
     ast.limit.fold(off)(n => off.limit(n.toInt))
   }

@@ -58,14 +58,18 @@ private[api] trait SiddhiQlLive extends Serializable {
 
   /** Run `tasks` concurrently on [[foldEc]] and wait until every one
     * has settled — bounded, so a wedged job fails the trigger instead
-    * of hanging it (generous: harness jobs take seconds). */
-  private def settleAll[A](tasks: Seq[() => A]): Seq[scala.util.Try[A]] =
+    * of hanging it (generous: harness jobs take seconds). Each task
+    * runs under the caller's script functions. */
+  private def settleAll[A](tasks: Seq[() => A]): Seq[scala.util.Try[A]] = {
+    val fns = scriptFns
     scala.concurrent.Await.result(
       scala.concurrent.Future.traverse(tasks)(t => scala.concurrent
-        .Future(t())(foldEc).transform(scala.util.Success(_))(foldEc))(
+        .Future { scriptFns = fns; t() }(foldEc)
+        .transform(scala.util.Success(_))(foldEc))(
         scala.collection.BuildFrom.buildFromIterableOps, foldEc),
       scala.concurrent.duration.Duration(30,
         java.util.concurrent.TimeUnit.MINUTES))
+  }
 
   /** Deploy a compiled app as a LIVE Structured Streaming topology over a
     * streaming events DataFrame (columns `event_id, ts_ns, user_id,
@@ -104,29 +108,37 @@ private[api] trait SiddhiQlLive extends Serializable {
     * watermarked `ts` (+ `ts_ns`) through their projections so a
     * downstream window can still bucket and evict by event time.
     *
-    * Table DML stages deploy through [[deployApp]] (a `foreachBatch`
-    * keyed MERGE cannot be expressed as one unstarted DataFrame) —
-    * this entry fails fast on them. */
+    * Folded stages ([[Folded]]: table DML, unique:last, sort, …)
+    * deploy through [[deployApp]] (a `foreachBatch` keyed MERGE cannot
+    * be expressed as one unstarted DataFrame) — this entry fails fast
+    * on them, and on an out query with `limit`/`offset`: those cut a
+    * finished result, and an unbounded stream has no end to cut at. */
   def deployAppOn(src: DataFrame, app: String, out: String)
       : (DataFrame, OutputMode, Seq[Column], Boolean) = {
-    val (stages, dml) = deployStages(src, app, out)
-    dml.foreach { _ =>
-      fail("live deployment of this stage (table DML / unique:last / " +
-        "sort / frequent) runs through deployApp (a foreachBatch keyed " +
-        "fold) — deployAppOn returns a single unstarted DataFrame and " +
-        "cannot express a folded sink")
+    val (ast, stage) = deployStages(src, app, out)
+    stage match {
+      case _: Folded =>
+        fail("live deployment of this stage (table DML / unique:last / " +
+          "sort / frequent) runs through deployApp (a foreachBatch keyed " +
+          "fold) — deployAppOn returns a single unstarted DataFrame and " +
+          "cannot express a folded sink")
+      case Streamed(df, mode, _) =>
+        if (ast.limit.nonEmpty || ast.offset.nonEmpty)
+          fail("deployAppOn cannot apply `limit`/`offset`: they cut a " +
+            "finished result, and an unbounded stream has no end to cut " +
+            "at — deploy through deployApp or drop them")
+        // Update mode (global agg): the caller's sink receives only the
+        // groups each trigger changed and is expected to upsert them
+        // keyed on the group columns — __ukey is the runner's internal
+        // collapse handle, not part of the user-facing schema
+        (if (mode == LiveMode.Update) df.drop("__ukey") else df,
+          mode match {
+            case LiveMode.Complete => OutputMode.Complete()
+            case LiveMode.Update   => OutputMode.Update()
+            case _                 => OutputMode.Append()
+          },
+          orderColsOf(ast), mode == LiveMode.AppendFlushed)
     }
-    val (df, kind, ordCols) = stages.getOrElse(
-      fail(s"app has no query named or inserting into '$out'"))
-    // kind 4 (Update-mode global agg): the caller's sink receives only
-    // the groups each trigger changed and is expected to upsert them
-    // keyed on the group columns — __ukey is the runner's internal
-    // collapse handle, not part of the user-facing schema
-    (if (kind == 4) df.drop("__ukey") else df,
-      if (kind == 1) OutputMode.Complete()
-      else if (kind == 4) OutputMode.Update()
-      else OutputMode.Append(),
-      ordCols, kind == 2)
   }
 
   /** How a [[LiveFold]] state is materialized between triggers, as
@@ -366,7 +378,9 @@ private[api] trait SiddhiQlLive extends Serializable {
     * generations — one NAMED state per entry in `schemas`, so a fold
     * can carry several pieces of state (the maintained table AND the
     * accumulated enrichment output) — then `finish(spark, states)`
-    * shapes the final table. Each state stays one-batch-lineage deep
+    * shapes the final table; [[deployApp]] then orders it and applies
+    * the out query's offset and limit, once, over the finished result.
+    * Each state stays one-batch-lineage deep
     * (an eager local checkpoint per write; not durable across a
     * restart), and its storage/rewrite granularity is its
     * [[StateMode]]. State is bounded by contract: the
@@ -378,18 +392,40 @@ private[api] trait SiddhiQlLive extends Serializable {
       fold: (SparkSession, String, Map[String, LiveState], DataFrame)
         => Map[String, DataFrame],
       finish: (SparkSession, Map[String, DataFrame]) => DataFrame,
-      ordCols: Seq[Column],
-      // Siddhi limit/offset compose ONCE at finish, after ordCols
-      // orders the finalized output (offset skips, limit caps — the
-      // batch compile's order) — chunking-invariant by construction,
-      // exactly like the having-at-finish filter
-      limit: Option[Long] = None, offset: Option[Long] = None,
       // true when the feed contains an OUTER watermarked join: its
       // null-padded rows only materialize once the watermark passes
       // their band, so the runner must append the two flush-sentinel
       // batches after the data (the sentinels are dropped above the
       // join — they advance the watermark and produce no feed rows)
-      needsFlush: Boolean = false)
+      needsFlush: Boolean = false,
+      // the script functions defined before the out stage: the runner
+      // pins them on its micro-batch thread and before finish, where
+      // the fold closures re-render SQL
+      fns: Map[String, ScriptFn] = Map.empty)
+
+  /** How a live stage's streaming plan reaches its sink: plain
+    * append; append whose last windows close on the flush sentinels
+    * ([[graft.engine.Streaming.flushSentinels]]); Complete
+    * re-emission; Update mode, whose `__ukey` column is the upsert
+    * key. */
+  private[api] sealed trait LiveMode
+  private[api] object LiveMode {
+    case object Append extends LiveMode
+    case object AppendFlushed extends LiveMode
+    case object Complete extends LiveMode
+    case object Update extends LiveMode
+  }
+
+  /** What one live stage compiles to. [[Streamed]]: an incremental
+    * streaming plan; `carried` names the event-time columns it keeps
+    * for downstream windows, which its sink drops. [[Folded]]: a
+    * per-micro-batch [[LiveFold]] — downstream stages see
+    * `outSchema`, and `fold` is built only for the out stage. */
+  private[api] sealed trait LiveStage
+  private[api] final case class Streamed(df: DataFrame, mode: LiveMode,
+      carried: Seq[String] = Nil) extends LiveStage
+  private[api] final case class Folded(outSchema: StructType,
+      fold: () => LiveFold) extends LiveStage
 
   /** [[StateMode]] of a DML-maintained table state: insert-only DML
     * appends (the fold's output IS the batch delta when folded into an
@@ -399,7 +435,7 @@ private[api] trait SiddhiQlLive extends Serializable {
     * expressions CAST to the table key types, so batch rows and state
     * rows hash into the same buckets. */
   private[api] def dmlStateMode(ast: Ast, act: Action, schema: StructType,
-      srcName: String, fnsSnap: Map[String, ScriptFn],
+      srcName: String,
       envOf: (SparkSession, String, DataFrame) => Map[String, DataFrame])
       : StateMode = {
     val onOpt = act match {
@@ -413,7 +449,6 @@ private[api] trait SiddhiQlLive extends Serializable {
       case Some(on) =>
         val keys = keyEqsOf(on, act.target)
         KeyedState(keys.map(_._1), (sp, d2, batch) => {
-          scriptFns = fnsSnap
           val env = envOf(sp, d2, batch)
           val base0 = loadTable(sp, d2, srcName, env)
           val base = (ast.stream match {
@@ -442,7 +477,7 @@ private[api] trait SiddhiQlLive extends Serializable {
     * keyed merge (slice ∪ batch rows) IS the append. */
   private[api] def dmlStateModeMulti(
       writers: List[(Ast, Action, StructType, String)], tName: String,
-      schema: StructType, fnsSnap: Map[String, ScriptFn],
+      schema: StructType,
       envOf: (SparkSession, String, DataFrame) => Map[String, DataFrame],
       fallbackKeys: Seq[String] = Nil)
       : StateMode = {
@@ -454,7 +489,6 @@ private[api] trait SiddhiQlLive extends Serializable {
     }.getOrElse(fallbackKeys.distinct.sorted.toList)
     if (keysM.isEmpty) AppendState
     else KeyedState(keysM, (sp, d2, batch) => {
-      scriptFns = fnsSnap
       val benv = envOf(sp, d2, batch)
       writers.map { case (wAst, wAct, _, wSrc) =>
         val onO = wAct match {
@@ -503,13 +537,12 @@ private[api] trait SiddhiQlLive extends Serializable {
     * keys — the contract the live grain cascade already carries);
     * per-trigger write cost O(batch-touched buckets) via KeyedState. */
   private[api] def windowedDmlFold(feed: DataFrame, ast: Ast, act: Action,
-      schema: StructType, tNs: Long,
-      fnsSnap: Map[String, ScriptFn]): LiveFold = {
+      schema: StructType, tNs: Long): LiveFold = {
     val ss = ast.stream.asInstanceOf[SingleStream]
     val items = itemsOf(ast)
     val outCols = items.map(_._2)
-    flushPartialFold(feed, ss.filter, ast.groupBy, items, tNs, fnsSnap,
-      Nil, (sp, flush) => {
+    flushPartialFold(feed, ss.filter, ast.groupBy, items, tNs,
+      (sp, flush) => {
         val emis = flush.select(outCols.map(col) :+
           struct((col("__wb") * lit(tNs)).cast("long").as("ts_ns"),
             lit(0L).as("event_id")).as("__g_ord"): _*)
@@ -541,7 +574,7 @@ private[api] trait SiddhiQlLive extends Serializable {
     * smaller than a log). */
   private[api] def multiWindowedDmlFold(srcTs: DataFrame,
       writers: List[(Ast, Action, StructType, String)],
-      schema: StructType, fnsSnap: Map[String, ScriptFn],
+      schema: StructType,
       envOf: (SparkSession, String, DataFrame) => Map[String, DataFrame])
       : LiveFold = {
     val sp0 = srcTs.sparkSession
@@ -589,15 +622,12 @@ private[api] trait SiddhiQlLive extends Serializable {
       writers.indices.map(i => (s"w$i",
         infos(i).fold(_.stateSchema, _._1),
         infos(i) match {
-          case Left(p) => KeyedState(p.keys, (sp, d2, batch) => {
-            scriptFns = fnsSnap
+          case Left(p) => KeyedState(p.keys, (sp, d2, batch) =>
             p.probeSel(loadTable(sp, d2, writers(i)._4,
-              envOf(sp, d2, batch)))
-          })
+              envOf(sp, d2, batch))))
           case Right(_) => AppendState
         })),
       (sp, d2, st, batch) => {
-        scriptFns = fnsSnap
         val env = envOf(sp, d2, batch)
         writers.indices.map { i =>
           s"w$i" -> (infos(i) match {
@@ -609,11 +639,8 @@ private[api] trait SiddhiQlLive extends Serializable {
           })
         }.toMap
       },
-      (sp, st) => {
-        scriptFns = fnsSnap
-        mergeEmissions(writers, schema,
-          emptyOf(sp, schema), emisOf(st))
-      }, Nil)
+      (sp, st) => mergeEmissions(writers, schema,
+        emptyOf(sp, schema), emisOf(st)))
   }
 
   /** The shared core of the live windowed folds ([[windowedDmlFold]],
@@ -695,26 +722,16 @@ private[api] trait SiddhiQlLive extends Serializable {
 
   private[api] def flushPartialFold(feed: DataFrame, filter: Option[Expr],
       groupBy: List[String], items: List[(SelItem, String, Boolean)],
-      tNs: Long, fnsSnap: Map[String, ScriptFn], ordCols: Seq[Column],
-      finish: (SparkSession, DataFrame) => DataFrame)
+      tNs: Long, finish: (SparkSession, DataFrame) => DataFrame)
       : (LiveFold, DataFrame) = {
     val empty = emptyOf(feed.sparkSession, feed.schema)
     val p = flushPiecesOf(empty, filter, groupBy, items, tNs)
     // deploy-time validation + the caller's result prototype
     val proto = finish(feed.sparkSession, p.flushOf(p.partialOf(empty)))
     (singleFold(feed, p.stateSchema,
-      (sp, _, acc, batch) => {
-        scriptFns = fnsSnap
-        p.merge(acc, p.partialOf(batch))
-      },
-      (sp, acc) => {
-        scriptFns = fnsSnap
-        finish(sp, p.flushOf(acc))
-      }, ordCols,
-      KeyedState(p.keys, (sp, _, batch) => {
-        scriptFns = fnsSnap
-        p.probeSel(batch)
-      })), proto)
+      (_, _, acc, batch) => p.merge(acc, p.partialOf(batch)),
+      (sp, acc) => finish(sp, p.flushOf(acc)),
+      KeyedState(p.keys, (_, _, batch) => p.probeSel(batch))), proto)
   }
 
   /** The one-state [[LiveFold]] shape every pre-enrichment fold stage
@@ -722,26 +739,24 @@ private[api] trait SiddhiQlLive extends Serializable {
   private[api] def singleFold(feed: DataFrame, schema: StructType,
       fold: (SparkSession, String, DataFrame, DataFrame) => DataFrame,
       finish: (SparkSession, DataFrame) => DataFrame,
-      ordCols: Seq[Column],
-      mode: StateMode = FullState,
-      limit: Option[Long] = None, offset: Option[Long] = None): LiveFold =
+      mode: StateMode = FullState): LiveFold =
     LiveFold(feed, Seq(("state", schema, mode)),
       (sp, d, st, b) => Map("state" -> fold(sp, d, st("state").slice, b)),
-      (sp, st) => finish(sp, st("state")), ordCols, limit, offset)
+      (sp, st) => finish(sp, st("state")))
 
   /** Stage compiler shared by [[deployAppOn]] and [[deployApp]]:
-    * returns the `out` query's streaming DataFrame with its stage kind
-    * (0 = stateless append, 1 = Complete-mode aggregation, 2 = windowed
-    * Append-mode aggregation that needs flush sentinels, 4 = Update-mode
-    * aggregation whose `__ukey` column is the upsert key) and ordering,
-    * or — when `out` is a folded stage (kind 3: table DML, unique:last,
-    * sort, frequent, enrichment join, rate over matches, …) — the
-    * [[LiveFold]] the caller runs in a `foreachBatch`. The app text goes
-    * through the front-end shared with [[compileApp]]
-    * ([[parseDefine]], [[onErrorStreams]], [[parsePartition]],
-    * [[readNamedWindows]], [[enrichmentSides]]). */
+    * returns the `out` query's AST (its order by, offset and limit
+    * compose in the caller) and its [[LiveStage]] — a [[Streamed]]
+    * plan with its sink mode (carried event-time columns already
+    * dropped), or a [[Folded]] stage (table DML, unique:last, sort,
+    * frequent, enrichment join, rate over matches, …) whose
+    * [[LiveFold]] is already built, for the caller to run in a
+    * `foreachBatch`. The last stage named `out` or inserting into it
+    * wins. The app text goes through the front-end shared with
+    * [[compileApp]] ([[parseDefine]], [[onErrorStreams]],
+    * [[parsePartition]], [[readNamedWindows]], [[enrichmentSides]]). */
   private[api] def deployStages(src: DataFrame, app: String, out: String)
-      : (Option[(DataFrame, Int, Seq[Column])], Option[LiveFold]) = {
+      : (Ast, LiveStage) = {
     val need = Seq("event_id", "ts_ns", "user_id", "event_type", "value")
     need.foreach { c =>
       if (!src.columns.contains(c))
@@ -752,10 +767,6 @@ private[api] trait SiddhiQlLive extends Serializable {
     lazy val evDs = src.select(col("event_id").as("eventId"),
       col("ts_ns").as("tsNs"), col("user_id").as("userId"),
       col("event_type").as("eventType"), col("value")).as[Cep.Ev]
-    // per-stage state behavior when deployed (see scaladoc)
-    val KStateless = 0; val KComplete = 1; val KWindowAgg = 2
-    val KFold = 3 // handled via foldResult; no streaming sink of its own
-    val KUpdate = 4 // global agg in Update mode → keyed upsert collapse
     val srcTs =
       if (src.columns.contains("ts")) src
       else src.withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
@@ -771,8 +782,7 @@ private[api] trait SiddhiQlLive extends Serializable {
     var liveWindowDefs = Map.empty[String, WindowSpec]
     var liveAggDefs = Map.empty[String, AggDef]
     var liveTriggerDefs = Map.empty[String, Long] // name -> interval ns
-    var result: Option[(DataFrame, Int, Seq[Column])] = None
-    var foldResult: Option[LiveFold] = None
+    var outStage: Option[(Ast, LiveStage)] = None
     // (ast, action, table schema, feeding stream) per DML writer, keyed
     // by target table — the enrichment-join compiler reads these
     var dmlInfos = Map.empty[String, List[(Ast, Action, StructType,
@@ -886,10 +896,12 @@ private[api] trait SiddhiQlLive extends Serializable {
             out.iterator
         }.toDF()
     }
-    // one `from ...` stage: compiles onto the live topology, updating
-    // env / statefulStreams / result / dmlResult. `view` is the stage's
-    // read environment (a partition block overrides its stream with the
-    // keyed/labeled view); `partKey` marks partition-block queries.
+    // one `from ...` stage: lowers onto the live topology as a
+    // [[LiveStage]], then its one exit updates env / statefulStreams /
+    // statelessAsts and, for the out stage, builds the result. `view`
+    // is the stage's read environment (a partition block overrides its
+    // stream with the keyed/labeled view); `partKey` marks
+    // partition-block queries.
     def runStage(name: Option[String], ast0L: Ast,
         view: Map[String, DataFrame], partKey: Option[String]): Unit = {
         // a defined window reads as fed-stream#spec, exactly like the
@@ -906,7 +918,101 @@ private[api] trait SiddhiQlLive extends Serializable {
           case InsertInto(t) => tableDefs.contains(t)
           case _             => true
         }
-        if (dmlAct.nonEmpty) {
+        // a DML-maintained table's fold, as its writers so far build
+        // it — for the writer stage itself and for a `from T select
+        // ...` read: the multi-writer interleave, the windowed flush
+        // partials, or the plain keyed merge
+        def tableFoldFor(tName: String): LiveFold = {
+          val allWriters = dmlInfos(tName)
+          val schema = tableDefs(tName)
+          val statelessSnap = statelessAsts
+          def envOf(sp: SparkSession, d2: String, batch: DataFrame)
+              : Map[String, DataFrame] =
+            batchEnv(sp, d2, batch, statelessSnap)
+          def feedOf(wSrc: String): DataFrame =
+            envLookup(view, wSrc).getOrElse(fail("live deployment " +
+              s"reads declared streams; table writer source '$wSrc' " +
+              "is neither the source nor an earlier insert-into " +
+              "target"))
+          if (allWriters.length > 1) {
+            // MULTI-WRITER table deployed LIVE: the fold applies every
+            // registered writer's emissions per trigger in per-event
+            // interleaved order (applyDmlMulti — the same merged
+            // algebra as the batch compile, which is why the batch
+            // replay is the oracle). Each writer's feed re-derives from
+            // the source batch, so every writer must read the source
+            // (or a stateless derived stream). Groups with ANY windowed
+            // writer — all-windowed or MIXED with per-event
+            // writers/sweepers — deploy via per-writer states + the
+            // batch merge tail (r14, multiWindowedDmlFold);
+            // all-per-event groups keep the per-trigger incremental
+            // merge (O(table keys) state).
+            if (!dmlComposable(allWriters))
+              fail(s"multi-writer table '$tName' (v1) deploys " +
+                "ORDER-COMPOSABLE writer groups only (all insert / " +
+                "all implicit-set upsert / all identical-fold upsert " +
+                "/ insert + implicit-set upsert multiset groups / " +
+                "any of those + keyed delete sweepers on the same " +
+                "key) — the remaining heterogeneous pipelines " +
+                "(insert + expr-set fold upserts, update/upsert-expr " +
+                "mixes, mixed keys) are row-level replays, batch " +
+                s"surfaces by design; got [${dmlKinds(allWriters)
+                  .mkString(", ")}]")
+            val winN = allWriters.count { case (wAst, _, _, _) =>
+              wAst.stream match {
+                case ss: SingleStream => ss.window.nonEmpty
+                case _                => false
+              }
+            }
+            allWriters.foreach { case (_, _, _, wSrc) =>
+              val derivable = Set("events") ++ statelessSnap.map(_._1)
+              if (!derivable.contains(wSrc))
+                fail(s"multi-writer table '$tName' (v1): writer " +
+                  s"source '$wSrc' must be the source stream or a " +
+                  "stateless derived stream")
+            }
+            // deploy-time probe: shape checks fail NOW, not at the
+            // first trigger
+            val sp00 = srcTs.sparkSession
+            applyDmlMulti(sp00, "", allWriters, schema,
+              emptyOf(sp00, schema),
+              envOf(sp00, "", emptyOf(sp00, srcTs.schema)))
+            if (winN > 0)
+              multiWindowedDmlFold(srcTs, allWriters, schema, envOf)
+            else singleFold(srcTs, schema,
+              (sp, d2, acc, batch) => applyDmlMulti(sp, d2, allWriters,
+                schema, acc, envOf(sp, d2, batch)),
+              (_, acc) => acc,
+              dmlStateModeMulti(allWriters, tName, schema, envOf))
+          } else {
+            val (wAst, wAct, _, wSrc) = allWriters.head
+            val winSpec = wAst.stream match {
+              case ss: SingleStream => ss.window
+              case _ => None
+            }
+            winSpec match {
+              case Some(wtb @ WindowSpec(_, tNs :: _, _)) =>
+                // windowed-aggregate DML (the Siddhi store pattern)
+                // LIVE: a per-batch applyDml would double-apply a
+                // window bucket that spans two triggers, so the fold
+                // keeps per-(bucket ∪ group keys) algebraic PARTIALS
+                // instead and runs the emission merge once, at finish
+                requireEpochTb(wtb, "live windowed table DML")
+                windowedDmlFold(feedOf(wSrc), wAst, wAct, schema, tNs)
+              case _ =>
+                singleFold(feedOf(wSrc), schema,
+                  (sp, d2, acc, batch) => applyDml(sp, d2, wAst, wAct,
+                    schema, acc, Map(wSrc -> batch)),
+                  (_, acc) => acc,
+                  // insert-only DML appends generation deltas; keyed
+                  // DML bucket-merges — per-trigger write cost
+                  // O(batch), not O(accumulated table)
+                  dmlStateMode(wAst, wAct, schema, wSrc,
+                    (_, _, batch) => Map(wSrc -> batch)))
+            }
+          }
+        }
+        val stage: LiveStage = if (dmlAct.nonEmpty) {
           // table DML from a partition block never reaches this arm
           // with a partKey: [[Partition.queries]] HOISTS it to
           // top-level writer AST(s) first and the partition branch
@@ -946,190 +1052,20 @@ private[api] trait SiddhiQlLive extends Serializable {
           statefulStreams += act.target
           dmlInfos += act.target -> (dmlInfos.getOrElse(act.target, Nil)
             :+ ((ast, act, schema, srcName)))
-          if (name.contains(out) || act.target == out) {
-            val fnsSnap = scriptFns // restore on the micro-batch thread
-            val winSpec = ast.stream match {
-              case ss: SingleStream => ss.window
-              case _ => None
-            }
-            val allWriters = dmlInfos(act.target)
-            if (allWriters.length > 1 && !dmlComposable(allWriters))
-              fail(s"multi-writer table '${act.target}' (v1) deploys " +
-                "ORDER-COMPOSABLE writer groups only (all insert / " +
-                "all implicit-set upsert / all identical-fold upsert " +
-                "/ insert + implicit-set upsert multiset groups / " +
-                "any of those + keyed delete sweepers on the same " +
-                "key) — the remaining heterogeneous pipelines " +
-                "(insert + expr-set fold upserts, update/upsert-expr " +
-                "mixes, mixed keys) are row-level replays, batch " +
-                "surfaces by design")
-            if (allWriters.length > 1) {
-              // MULTI-WRITER table deployed LIVE: the fold applies
-              // every registered writer's emissions per trigger in
-              // per-event interleaved order (applyDmlMulti — the same
-              // merged algebra as the batch compile, which is why the
-              // batch replay is the oracle). Each writer's feed
-              // re-derives from the source batch, so every writer must
-              // read the source (or a stateless derived stream).
-              // Groups with ANY windowed writer — all-windowed or
-              // MIXED with per-event writers/sweepers — deploy via
-              // per-writer states + the batch merge tail (r14,
-              // multiWindowedDmlFold); all-per-event groups keep the
-              // per-trigger incremental merge (O(table keys) state).
-              val winN = allWriters.count { case (wAst, _, _, _) =>
-                wAst.stream match {
-                  case ss: SingleStream => ss.window.nonEmpty
-                  case _                => false
-                }
-              }
-              allWriters.foreach { case (_, _, _, wSrc) =>
-                val derivable = Set("events") ++ statelessAsts.map(_._1)
-                if (!derivable.contains(wSrc))
-                  fail(s"multi-writer table '${act.target}' (v1): " +
-                    s"writer source '$wSrc' must be the source stream " +
-                    "or a stateless derived stream")
-              }
-              val statelessSnap = statelessAsts
-              val sp00 = srcTs.sparkSession
-              // deploy-time probe: shape checks fail NOW, not at the
-              // first trigger
-              applyDmlMulti(sp00, "", allWriters, schema,
-                emptyOf(sp00, schema), batchEnv(sp00, "",
-                  emptyOf(sp00, srcTs.schema), statelessSnap))
-              foldResult = Some(
-                if (winN > 0)
-                  multiWindowedDmlFold(srcTs, allWriters, schema,
-                    fnsSnap, (sp, d2, batch) =>
-                      batchEnv(sp, d2, batch, statelessSnap))
-                else singleFold(srcTs, schema,
-                  (sp, d2, acc, batch) => {
-                    scriptFns = fnsSnap
-                    applyDmlMulti(sp, d2, allWriters, schema, acc,
-                      batchEnv(sp, d2, batch, statelessSnap))
-                  },
-                  (_, acc) => acc, Nil,
-                  dmlStateModeMulti(allWriters, act.target, schema,
-                    fnsSnap, (sp, d2, batch) =>
-                      batchEnv(sp, d2, batch, statelessSnap))))
-            } else winSpec match {
-              case Some(WindowSpec(_, tNs :: _, _)) =>
-                // windowed-aggregate DML (the Siddhi store pattern)
-                // LIVE: a per-batch applyDml would double-apply a
-                // window bucket that spans two triggers, so the fold
-                // keeps per-(bucket ∪ group keys) algebraic PARTIALS
-                // instead and runs the emission merge once, at finish
-                foldResult = Some(windowedDmlFold(feed, ast, act,
-                  schema, tNs, fnsSnap))
-              case _ =>
-                foldResult = Some(singleFold(feed, schema,
-                  (sp, d2, acc, batch) => {
-                    scriptFns = fnsSnap
-                    applyDml(sp, d2, ast, act, schema, acc,
-                      Map(srcName -> batch))
-                  },
-                  (_, acc) => acc, Nil,
-                  // insert-only DML appends generation deltas; keyed
-                  // DML bucket-merges — per-trigger write cost
-                  // O(batch), not O(accumulated table)
-                  dmlStateMode(ast, act, schema, srcName, fnsSnap,
-                    (_, _, batch) => Map(srcName -> batch))))
-            }
-          }
+          Folded(schema, () => tableFoldFor(act.target))
         } else {
-        var carriedNow: Seq[String] = Nil
         // rate over pattern matches: register the accumulate-then-rank
         // fold (AppendState match log; finish = the BATCH selection,
         // rateOverMatches, so both surfaces share one code path)
         def patternRateFold(matches: DataFrame, r: Rate,
             outCols: Seq[String], schemaR: StructType,
-            needsFl: Boolean): (DataFrame, Int) = {
-          val keyP = name.orElse(ast.action.map(_.target))
-          if (keyP.contains(out) || name.contains(out))
-            foldResult = Some(LiveFold(matches,
-              Seq(("m", schemaR, AppendState)),
-              (_, _, _, batch) => Map("m" -> batch),
-              (_, st) => rateOverMatches(st("m"), outCols, r),
-              ast.orderBy.map { case (c, a) =>
-                if (a) col(c).asc else col(c).desc },
-              needsFlush = needsFl))
-          (emptyOf(matches.sparkSession, schemaR), KFold)
-        }
-        // END-OF-REPLAY table READ (r14): the maintained table's fold
-        // for a `from T select ...` OUT stage — the same
-        // constructions the DML-capture branch deploys (multi-writer
-        // interleave / windowed flush partials / plain keyed merge),
-        // so the read rides whatever store the writers already built
-        def tableFoldFor(tName: String): LiveFold = {
-          val allWriters = dmlInfos(tName)
-          val schema = tableDefs(tName)
-          val fnsSnap = scriptFns
-          val statelessSnap = statelessAsts
-          def feedOf(wSrc: String): DataFrame =
-            envLookup(view, wSrc).getOrElse(fail("live deployment " +
-              s"reads declared streams; table writer source '$wSrc' " +
-              "is neither the source nor an earlier insert-into " +
-              "target"))
-          if (allWriters.length > 1) {
-            // the DML-capture branch validates composability and
-            // writer shapes when a DML stage IS the out — a read-out
-            // app validates here, with the same rules
-            if (!dmlComposable(allWriters))
-              fail(s"multi-writer table '$tName' (v1) deploys " +
-                "ORDER-COMPOSABLE writer groups only — see the DML " +
-                s"diagnostics; got [${dmlKinds(allWriters)
-                  .mkString(", ")}]")
-            val winN = allWriters.count { case (wAst, _, _, _) =>
-              wAst.stream match {
-                case ss: SingleStream => ss.window.nonEmpty
-                case _                => false
-              }
-            }
-            allWriters.foreach { case (_, _, _, wSrc) =>
-              val derivable = Set("events") ++ statelessSnap.map(_._1)
-              if (!derivable.contains(wSrc))
-                fail(s"multi-writer table '$tName' (v1): writer " +
-                  s"source '$wSrc' must be the source stream or a " +
-                  "stateless derived stream")
-            }
-            if (winN > 0)
-              multiWindowedDmlFold(srcTs, allWriters, schema, fnsSnap,
-                (sp, d2, batch) =>
-                  batchEnv(sp, d2, batch, statelessSnap))
-            else singleFold(srcTs, schema,
-              (sp, d2, acc, batch) => {
-                scriptFns = fnsSnap
-                applyDmlMulti(sp, d2, allWriters, schema, acc,
-                  batchEnv(sp, d2, batch, statelessSnap))
-              },
-              (_, acc) => acc, Nil,
-              dmlStateModeMulti(allWriters, tName, schema, fnsSnap,
-                (sp, d2, batch) =>
-                  batchEnv(sp, d2, batch, statelessSnap)))
-          } else {
-            val (wAst, wAct, _, wSrc) = allWriters.head
-            val winSpec = wAst.stream match {
-              case ss: SingleStream => ss.window
-              case _ => None
-            }
-            winSpec match {
-              case Some(wtb @ WindowSpec(_, tNs :: _, _)) =>
-                requireEpochTb(wtb, "live windowed table DML")
-                windowedDmlFold(feedOf(wSrc), wAst, wAct, schema,
-                  tNs, fnsSnap)
-              case _ =>
-                singleFold(feedOf(wSrc), schema,
-                  (sp, d2, acc, batch) => {
-                    scriptFns = fnsSnap
-                    applyDml(sp, d2, wAst, wAct, schema, acc,
-                      Map(wSrc -> batch))
-                  },
-                  (_, acc) => acc, Nil,
-                  dmlStateMode(wAst, wAct, schema, wSrc, fnsSnap,
-                    (_, _, batch) => Map(wSrc -> batch)))
-            }
-          }
-        }
-        val (df, kind) = ast.stream match {
+            needsFl: Boolean): LiveStage =
+          Folded(schemaR, () => LiveFold(matches,
+            Seq(("m", schemaR, AppendState)),
+            (_, _, _, batch) => Map("m" -> batch),
+            (_, st) => rateOverMatches(st("m"), outCols, r),
+            needsFlush = needsFl))
+        ast.stream match {
           // `from AggName within ... per '...'` reading a LIVE
           // `define aggregation`: the grain cascade compiles onto the
           // keyed bucket-merge fold channel. State is the FINEST-grain
@@ -1158,7 +1094,6 @@ private[api] trait SiddhiQlLive extends Serializable {
             val ivNs = liveTriggerDefs(s.table)
             val ivMs = ivNs / 1000000L
             val tname = s.table
-            val fnsSnap = scriptFns
             val sp0 = srcTs.sparkSession
             val spanSchema = StructType(Seq(
               StructField("lo", LongType), StructField("hi", LongType)))
@@ -1170,9 +1105,9 @@ private[api] trait SiddhiQlLive extends Serializable {
             // finish recompile carries no table directory)
             val protoT = compileAst(sp0, "", ast,
               Map(tname -> ticksOf(emptyOf(sp0, spanSchema))))
-            val keyT = name.orElse(ast.action.map(_.target))
-            if (keyT.contains(out) || name.contains(out))
-              foldResult = Some(singleFold(srcTs, spanSchema,
+            // finish leaves order/offset/limit to the runner
+            val astT = ast.copy(orderBy = Nil, limit = None, offset = None)
+            Folded(protoT.schema, () => singleFold(srcTs, spanSchema,
                 (_, _, acc, batch) => {
                   val b2 = batch.agg(
                     expr(s"min((ts_ns div ${ivNs}L) * ${ivMs}L)")
@@ -1183,14 +1118,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                     .agg(min("lo").as("lo"), max("hi").as("hi"))
                     .where(col("lo").isNotNull)
                 },
-                (sp, acc) => {
-                  scriptFns = fnsSnap
-                  compileAst(sp, "", ast, Map(tname -> ticksOf(acc)))
-                },
-                ast.orderBy.map { case (c2, asc) =>
-                  if (asc) col(c2).asc else col(c2).desc }))
-            carriedNow = Nil
-            (emptyOf(sp0, protoT.schema), KFold)
+                (sp, acc) =>
+                  compileAst(sp, "", astT, Map(tname -> ticksOf(acc)))))
           case s: SingleStream if liveAggDefs.contains(s.table) =>
             if (partKey.nonEmpty)
               fail("an aggregation read inside a partition block is " +
@@ -1206,7 +1135,6 @@ private[api] trait SiddhiQlLive extends Serializable {
               if (isAgg) fail("an aggregation read selects stored " +
                 s"attributes (no re-aggregation, v1): '$a2'")
             }
-            val fnsSnap = scriptFns
             def readProj(stored: DataFrame): DataFrame =
               stored.select(col("bucket_start_ms") +:
                 items.map { case (it, a2, _) =>
@@ -1219,9 +1147,7 @@ private[api] trait SiddhiQlLive extends Serializable {
             val proto = aggGrainPartial(
               emptyOf(sp0, srcTs.schema), adef, pCols)
             readProj(aggRollUp(proto, adef, perMs, lo, hi, cCols, fMap))
-            def mergeFold(sp: SparkSession, acc: DataFrame,
-                batch: DataFrame): DataFrame = {
-              scriptFns = fnsSnap
+            def mergeFold(acc: DataFrame, batch: DataFrame): DataFrame = {
               val u = aggGrainPartial(batch, adef, pCols)
               acc.as("t").join(u.as("u"),
                   stateKeys.map(k2 => col(s"t.$k2") <=> col(s"u.$k2"))
@@ -1229,17 +1155,10 @@ private[api] trait SiddhiQlLive extends Serializable {
                 .select(stateKeys.map(k2 => coalesce(col(s"u.$k2"),
                     col(s"t.$k2")).as(k2)) ++ aggMergeCols(adef): _*)
             }
-            val keyA = name.orElse(ast.action.map(_.target))
-            if (keyA.contains(out) || name.contains(out))
-              foldResult = Some(singleFold(srcTs, proto.schema,
-                (sp, _, acc, batch) => mergeFold(sp, acc, batch),
-                (_, acc) => {
-                  scriptFns = fnsSnap
-                  readProj(aggRollUp(acc, adef, perMs, lo, hi,
-                    cCols, fMap))
-                },
-                ast.orderBy.map { case (c2, asc) =>
-                  if (asc) col(c2).asc else col(c2).desc },
+            Folded(proto.schema, () => singleFold(srcTs, proto.schema,
+                (_, _, acc, batch) => mergeFold(acc, batch),
+                (_, acc) => readProj(aggRollUp(acc, adef, perMs, lo, hi,
+                  cCols, fMap)),
                 KeyedState(stateKeys, (_, _, batch) => {
                   val f = adef.filter.fold(batch)(ff =>
                     batch.where(expr(sqlOf(ff))))
@@ -1247,8 +1166,6 @@ private[api] trait SiddhiQlLive extends Serializable {
                     s"${finestMs * 1000000L}L) * ${finestMs}L")
                     .as("__gb") +: adef.groupBy.map(col): _*)
                 })))
-            carriedNow = Nil
-            (emptyOf(sp0, proto.schema), KFold)
           case s: SingleStream if dmlInfos.contains(s.table) =>
             // `from T select ...` over a DML-maintained table (r14):
             // an END-OF-REPLAY snapshot read — the table fold runs as
@@ -1270,12 +1187,9 @@ private[api] trait SiddhiQlLive extends Serializable {
             if (partKey.nonEmpty)
               fail("a live table read inside a partition block is " +
                 "not deployed (v1)")
-            val baseLf = tableFoldFor(s.table)
-            val fnsSnapR = scriptFns
             val itemsR = itemsOf(expandStar(ast,
               tableDefs(s.table).fieldNames))
             def projectT(t: DataFrame): DataFrame = {
-              scriptFns = fnsSnapR
               val f = s.filter.fold(t)(ff => t.where(expr(sqlOf(ff))))
               f.select(itemsR.map { case (it, a2, _) =>
                 expr(sqlOf(it.e)).as(a2) }: _*)
@@ -1283,14 +1197,11 @@ private[api] trait SiddhiQlLive extends Serializable {
             // deploy-time fail-fast + output schema
             val protoT = projectT(
               emptyOf(srcTs.sparkSession, tableDefs(s.table)))
-            val keyT = name.orElse(ast.action.map(_.target))
-            if (keyT.contains(out) || name.contains(out))
-              foldResult = Some(baseLf.copy(
-                finish = (sp, st) => projectT(baseLf.finish(sp, st)),
-                ordCols = ast.orderBy.map { case (c2, a2) =>
-                  if (a2) col(c2).asc else col(c2).desc },
-                limit = ast.limit, offset = ast.offset))
-            (protoT, KFold)
+            Folded(protoT.schema, () => {
+              val baseLf = tableFoldFor(s.table)
+              baseLf.copy(finish = (sp, st) =>
+                projectT(baseLf.finish(sp, st)))
+            })
           case s: SingleStream =>
             if (statefulStreams.contains(s.table))
               fail(s"live deployment (v1): '${s.table}' is an " +
@@ -1329,7 +1240,7 @@ private[api] trait SiddhiQlLive extends Serializable {
                   .agg(max_by(rowC,
                     struct(col("ts_ns"), col("event_id"))).as("__row"))
                   .select(col("__row.*"))
-                (lastDf, KWindowAgg)
+                Streamed(lastDf, LiveMode.AppendFlushed)
               case None if ast.rate.exists(r => r.mode == "snapshot" &&
                   r.timeNs.nonEmpty && r.count.isEmpty) &&
                   !ast.select.exists(it => containsAgg(it.e)) =>
@@ -1363,17 +1274,12 @@ private[api] trait SiddhiQlLive extends Serializable {
                       col("__ord")).as("__row"),
                       max(col("__ord")).as("__ord"))
                 val schemaS = partialSnap(base).schema
-                val keyR = name.orElse(ast.action.map(_.target))
-                val fnsSnapR = scriptFns
-                if (keyR.contains(out) || name.contains(out))
-                  foldResult = Some(singleFold(base, schemaS,
-                    (_, _, acc, batch) => {
-                      scriptFns = fnsSnapR
+                Folded(schemaS, () => singleFold(base, schemaS,
+                    (_, _, acc, batch) =>
                       acc.unionByName(partialSnap(batch))
                         .groupBy("__iv")
                         .agg(max_by(col("__row"), col("__ord"))
-                          .as("__row"), max(col("__ord")).as("__ord"))
-                    },
+                          .as("__row"), max(col("__ord")).as("__ord")),
                     (_, acc) => {
                       val ticks = acc
                         .agg(min("__iv").as("__lo"),
@@ -1392,12 +1298,9 @@ private[api] trait SiddhiQlLive extends Serializable {
                         .select(((col("__iv") + 1) * ivMs)
                           .as("w_end_ms") +: outCols.map(col): _*)
                     },
-                    ast.orderBy.map { case (c, a2) =>
-                      if (a2) col(c).asc else col(c).desc },
                     KeyedState(Seq("__iv"), (_, _, batch) =>
                       batch.select(expr(s"ts_ns div ${tNs}L")
                         .as("__iv")))))
-                (emptyOf(base.sparkSession, schemaS), KFold)
               case None
                   if ast.rate.exists(r =>
                     r.count.nonEmpty &&
@@ -1432,12 +1335,10 @@ private[api] trait SiddhiQlLive extends Serializable {
                   projR(base.withColumn("__rn", lit(0L))).schema
                 val pendSchema = StructType(
                   base.schema.fields :+ StructField("__rn", LongType))
-                val keyR = name.orElse(ast.action.map(_.target))
                 // state = the pending chunk-tail row only: its __rn IS
                 // the running arrival count (the rank of the last
                 // filtered arrival), so no separate counter row exists
-                if (keyR.contains(out) || name.contains(out))
-                  foldResult = Some(LiveFold(base,
+                Folded(outSchema, () => LiveFold(base,
                     Seq(("out", outSchema, AppendState),
                       ("pend", pendSchema, FullState)),
                     (_, _, st, batch0) => {
@@ -1467,10 +1368,7 @@ private[api] trait SiddhiQlLive extends Serializable {
                           st("out").unionByName(projR(st("pend")))
                         else st("out")
                       fin.orderBy("__rn").drop("__rn")
-                    },
-                    ast.orderBy.map { case (c2, a2) =>
-                      if (a2) col(c2).asc else col(c2).desc }))
-                (emptyOf(base.sparkSession, outSchema), KFold)
+                    }))
               case None =>
                 val agg = ast.select.exists(it => containsAgg(it.e))
                 // `output first every T` LIVE: streaming dropDuplicates
@@ -1525,10 +1423,9 @@ private[api] trait SiddhiQlLive extends Serializable {
                     Seq("ts", "ts_ns").filter(c =>
                       rated.columns.contains(c) && !aliases.contains(c))
                   }
-                carriedNow = carryCols
                 val outDf = selectOrAggregate(ast, rated, Nil,
                   windowed = false, carry = carryCols.map(col))
-                if (!agg) (outDf, KStateless)
+                if (!agg) Streamed(outDf, LiveMode.Append, carryCols)
                 else {
                   // live global (unwindowed) aggregation runs UPDATE
                   // mode: each trigger emits only the groups the batch
@@ -1543,11 +1440,12 @@ private[api] trait SiddhiQlLive extends Serializable {
                   // identity, so the stage keeps bounded-state
                   // Complete re-emission.
                   if (ast.groupBy.isEmpty)
-                    (outDf.withColumn("__ukey", lit(0L)), KUpdate)
+                    Streamed(outDf.withColumn("__ukey", lit(0L)),
+                      LiveMode.Update)
                   else if (ast.groupBy.forall(outDf.columns.contains))
-                    (outDf.withColumn("__ukey",
-                      struct(ast.groupBy.map(col): _*)), KUpdate)
-                  else (outDf, KComplete)
+                    Streamed(outDf.withColumn("__ukey",
+                      struct(ast.groupBy.map(col): _*)), LiveMode.Update)
+                  else Streamed(outDf, LiveMode.Complete)
                 }
               case Some(WindowSpec(n, args, _))
                   if n.equalsIgnoreCase("timebatch") =>
@@ -1579,22 +1477,14 @@ private[api] trait SiddhiQlLive extends Serializable {
                     requireEpochTb(s.window.get,
                       "rate limiting over a windowed aggregation")
                     val tNsW = args.head
-                    val fnsSnapW = scriptFns
                     val (lfW, protoW) = flushPartialFold(base, None,
-                      Nil, itemsW, tNsW, fnsSnapW,
-                      ast.orderBy.map { case (c2, a2) =>
-                        if (a2) col(c2).asc else col(c2).desc },
+                      Nil, itemsW, tNsW,
                       (_, flush) => rateOverFlushes(flush,
                         itemsW.map(_._2), tNsW / 1000000L, rW))
-                    val keyW = name.orElse(ast.action.map(_.target))
-                    if (keyW.contains(out) || name.contains(out))
-                      foldResult = Some(lfW)
-                    carriedNow = Nil
-                    (emptyOf(base.sparkSession, protoW.schema), KFold)
+                    Folded(protoW.schema, () => lfW)
                   case None =>
-                    (windowedAgg(ast, base, "w_start_ms", args.head,
-                      tbOffNs(s.window.get)),
-                      KWindowAgg)
+                    Streamed(windowedAgg(ast, base, "w_start_ms", args.head,
+                      tbOffNs(s.window.get)), LiveMode.AppendFlushed)
                 }
               case Some(WindowSpec(n2, _, sargs2))
                   if n2.equalsIgnoreCase("unique:first") =>
@@ -1615,9 +1505,9 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // keyed dedup state is held forever BY CONTRACT —
                 // unique:first must remember every key it has seen, so
                 // state is bounded by the key domain, not the watermark
-                (selectOrAggregate(ast,
+                Streamed(selectOrAggregate(ast,
                   base.dropDuplicates(sargs2.head, sargs2.tail: _*),
-                  Nil, windowed = false), KStateless)
+                  Nil, windowed = false), LiveMode.Append)
               case Some(WindowSpec(n2, _, sargs2))
                   if n2.equalsIgnoreCase("expression") =>
                 // live retain-while window: the batch fold's eviction
@@ -1638,13 +1528,13 @@ private[api] trait SiddhiQlLive extends Serializable {
                   case _ => fail("live expression window (v1) needs " +
                     "exactly one group by key to partition the fold")
                 }
-                (bufferFold(ast, base, key, { (buf0, e) =>
+                Streamed(bufferFold(ast, base, key, { (buf0, e) =>
                   var buf = buf0 :+ e
                   while (buf.nonEmpty &&
                       !bufEval(ret, buf, e).asInstanceOf[Boolean])
                     buf = buf.tail
                   (buf, buf)
-                }), KStateless)
+                }), LiveMode.Append)
               case Some(WindowSpec(n2, _, sargs2))
                   if n2.equalsIgnoreCase("cron") =>
                 // cron live: the epoch-aligned fixed-interval Quartz
@@ -1655,8 +1545,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                     "(v1) — not above a cron aggregation")
                 val spec = sargs2.headOption.getOrElse(
                   fail("cron needs a quoted Quartz expression argument"))
-                (windowedAgg(ast, base, "cron_tick_ms",
-                  cronIntervalNs(spec)), KWindowAgg)
+                Streamed(windowedAgg(ast, base, "cron_tick_ms",
+                  cronIntervalNs(spec)), LiveMode.AppendFlushed)
               case Some(WindowSpec(n2, args2, _))
                   if n2.equalsIgnoreCase("delay") =>
                 // delay(T) live: the same stateless re-timestamp the
@@ -1686,10 +1576,9 @@ private[api] trait SiddhiQlLive extends Serializable {
                     val aliases = itemsOf(ast).map(_._2).toSet
                     Seq("ts", "ts_ns").filterNot(aliases.contains)
                   }
-                carriedNow = carry2
-                (selectOrAggregate(ast, shifted, Nil, windowed = false,
-                  carry = carry2.map(col)),
-                  if (agg2) KComplete else KStateless)
+                Streamed(selectOrAggregate(ast, shifted, Nil,
+                  windowed = false, carry = carry2.map(col)),
+                  if (agg2) LiveMode.Complete else LiveMode.Append, carry2)
               case Some(WindowSpec(n2, args2, _))
                   if n2.equalsIgnoreCase("timelength") =>
                 // live timeLength(T, N): per-key ring of the last N
@@ -1706,10 +1595,10 @@ private[api] trait SiddhiQlLive extends Serializable {
                   case _ => fail("live timeLength window (v1) needs " +
                     "exactly one group by key to partition the ring")
                 }
-                (bufferFold(ast, base, key, { (ring0, e) =>
+                Streamed(bufferFold(ast, base, key, { (ring0, e) =>
                   val ring = (ring0 :+ e).takeRight(nCap)
                   (ring, ring.filter(_.tsNs >= e.tsNs - tNs2))
-                }), KStateless)
+                }), LiveMode.Append)
               case Some(WindowSpec(n2, _, sargs2))
                   if n2.equalsIgnoreCase("unique:last") ||
                     n2.equalsIgnoreCase("unique:ever") =>
@@ -1742,26 +1631,20 @@ private[api] trait SiddhiQlLive extends Serializable {
                     col("event_id").as("__uord_id")): _*)
                 val schemaU = selLast(base).schema
                 val helperCols = Seq("__ukey", "__uord_ts", "__uord_id")
-                val keyU = name.orElse(ast.action.map(_.target))
-                val fnsSnap = scriptFns // for the micro-batch thread
-                if (keyU.contains(out) || name.contains(out))
-                  foldResult = Some(singleFold(base, schemaU,
+                Folded(schemaU, () => singleFold(base, schemaU,
                     (_, _, acc, batch) =>
-                      { scriptFns = fnsSnap; acc }.unionByName(selLast(batch))
+                      acc.unionByName(selLast(batch))
                         .withColumn("__rn", expr("row_number() over " +
                           "(partition by __ukey order by __uord_ts " +
                           "desc, __uord_id desc)"))
                         .where(col("__rn") === 1).drop("__rn"),
                     (_, acc) => acc.drop(helperCols: _*),
-                    ast.orderBy.map { case (c, asc) =>
-                      if (asc) col(c).asc else col(c).desc },
                     // keep-last is a per-__ukey merge: only buckets
                     // the batch's keys hash into are read and rewritten
                     KeyedState(Seq("__ukey"), (_, _, batch) =>
                       batch.select(struct(sargs2.map(col): _*)
                         .cast(schemaU("__ukey").dataType)
                         .as("__ukey")))))
-                (emptyOf(base.sparkSession, schemaU), KFold)
               case Some(WindowSpec(n2, args2, sargs2))
                   if n2.equalsIgnoreCase("sort") =>
                 // live sort(N, attr, dir): running top-N retention —
@@ -1782,19 +1665,13 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // compile's shared sortComparator, so live ≡ batch
                 val ordS = sortComparator(sargs2, base.columns) ++
                   Seq(col("ts_ns").asc, col("event_id").asc)
-                val astS = ast
-                val keyS = name.orElse(ast.action.map(_.target))
-                if (keyS.contains(out) || name.contains(out))
-                  foldResult = Some(singleFold(base, base.schema,
+                Folded(base.schema, () => singleFold(base, base.schema,
                     (_, _, acc, batch) =>
                       acc.unionByName(
                           batch.select(acc.columns.map(col): _*))
                         .orderBy(ordS: _*).limit(nKeep),
-                    (_, acc) => selectOrAggregate(astS, acc, Nil,
-                      windowed = false),
-                    astS.orderBy.map { case (c, a2) =>
-                      if (a2) col(c).asc else col(c).desc }))
-                (emptyOf(base.sparkSession, base.schema), KFold)
+                    (_, acc) => selectOrAggregate(ast, acc, Nil,
+                      windowed = false)))
               case Some(WindowSpec(n2, args2, sargs2))
                   if n2.equalsIgnoreCase("frequent") =>
                 // live frequent(N, attr): per-key ALGEBRAIC components
@@ -1851,9 +1728,7 @@ private[api] trait SiddhiQlLive extends Serializable {
                   df.groupBy(col(attr)).agg(count(lit(1)).as("__cnt"),
                     comps.map(_._2): _*)
                 val schemaF = partialOf(base).schema
-                val keyF = name.orElse(ast.action.map(_.target))
-                if (keyF.contains(out) || name.contains(out))
-                  foldResult = Some(singleFold(base, schemaF,
+                Folded(schemaF, () => singleFold(base, schemaF,
                     (_, _, acc, batch) => {
                       val u = partialOf(batch)
                       acc.as("t").join(u.as("u"),
@@ -1877,14 +1752,11 @@ private[api] trait SiddhiQlLive extends Serializable {
                           col(s"__c$i").as(a)
                         }
                       }: _*),
-                    ast.orderBy.map { case (c, a2) =>
-                      if (a2) col(c).asc else col(c).desc },
                     // component rows merge per attr value: only the
                     // batch's attr buckets are read and rewritten
                     KeyedState(Seq(attr), (_, _, batch) =>
                       batch.select(col(attr)
                         .cast(schemaF(attr).dataType).as(attr)))))
-                (emptyOf(base.sparkSession, schemaF), KFold)
               case Some(WindowSpec(n2, args2, _))
                   if n2.equalsIgnoreCase("length") =>
                 // live per-key sliding length window: a
@@ -1908,10 +1780,10 @@ private[api] trait SiddhiQlLive extends Serializable {
                 need2.foreach(c => if (!base.columns.contains(c))
                   fail(s"live length window reads event streams; " +
                     s"'${s.table}' lacks '$c'"))
-                (bufferFold(ast, base, key, { (ring0, e) =>
+                Streamed(bufferFold(ast, base, key, { (ring0, e) =>
                   val ring = (ring0 :+ e).takeRight(nRing)
                   (ring, ring)
-                }), KStateless)
+                }), LiveMode.Append)
               case Some(WindowSpec(n2, args2, _))
                   if n2.equalsIgnoreCase("session") =>
                 // live session aggregation: built-in session_window in
@@ -1942,12 +1814,12 @@ private[api] trait SiddhiQlLive extends Serializable {
                   .agg(aggCols.head, aggCols.tail: _*)
                 val hav = ast.having.fold(agged)(h =>
                   agged.where(expr(sqlOf(h))))
-                (hav.select(
+                Streamed(hav.select(
                   unix_millis(col("session_window.start"))
                     .as("w_start_ms") +:
                   unix_millis(col("session_window.end")).as("w_end_ms") +:
                   items.map { case (_, a2, _) => col(a2) }: _*),
-                  KWindowAgg)
+                  LiveMode.AppendFlushed)
               case Some(w) => fail("live deployment (v1) supports " +
                 "stateless stages, timeBatch/session aggregation, and " +
                 s"patterns; got window '${w.name}'")
@@ -1996,7 +1868,7 @@ private[api] trait SiddhiQlLive extends Serializable {
               // never come (engine twins: Streaming.cepAbsence /
               // cepAbsenceTws). Reads the WATERMARKED declared view
               // (clean under @OnError); flush sentinels drop here,
-              // above the source watermark node, and KWindowAgg makes
+              // above the source watermark node, and AppendFlushed makes
               // the finite-replay harness feed them so the last
               // deadlines resolve.
               val evT = envLookup(view, "events").getOrElse(
@@ -2009,8 +1881,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                   col("ts"))
                 .as[Streaming.EvT]
               rateP match {
-                case None =>
-                  (b.selectStreamTimed(evT)(proj).toDF(), KWindowAgg)
+                case None => Streamed(b.selectStreamTimed(evT)(proj).toDF(),
+                  LiveMode.AppendFlushed)
                 case Some(r) =>
                   // absence deadlines resolve off the watermark, so
                   // the fold needs the flush-sentinel batches
@@ -2020,7 +1892,7 @@ private[api] trait SiddhiQlLive extends Serializable {
               }
             } else rateP match {
               case None =>
-                (b.selectStream(evDs)(proj).toDF(), KStateless)
+                Streamed(b.selectStream(evDs)(proj).toDF(), LiveMode.Append)
               case Some(r) =>
                 patternRateFold(b.selectStream(evDs)(proj).toDF(), r,
                   outSchema.map(_._1), schema, needsFl = false)
@@ -2088,13 +1960,13 @@ private[api] trait SiddhiQlLive extends Serializable {
               if (writers.length == 1)
                 applyDml(sp, d2, dAst, dAct, dSchema, accT, benv)
               else applyDmlMulti(sp, d2, writers, dSchema, accT, benv)
-            def tModeOf(fnsSnap2: Map[String, ScriptFn]): StateMode = {
+            def tMode: StateMode = {
               val m0 =
                 if (writers.length == 1)
-                  dmlStateMode(dAst, dAct, dSchema, dSrc, fnsSnap2,
+                  dmlStateMode(dAst, dAct, dSchema, dSrc,
                     (sp, d2, batch) =>
                       batchEnv(sp, d2, batch, statelessSnap))
-                else dmlStateModeMulti(writers, tName, dSchema, fnsSnap2,
+                else dmlStateModeMulti(writers, tName, dSchema,
                   (sp, d2, batch) =>
                     batchEnv(sp, d2, batch, statelessSnap))
               // insert-only log tables read by THIS enrichment join
@@ -2105,7 +1977,7 @@ private[api] trait SiddhiQlLive extends Serializable {
               m0 match {
                 case AppendState
                     if dAct.isInstanceOf[InsertInto] =>
-                  dmlStateModeMulti(writers, tName, dSchema, fnsSnap2,
+                  dmlStateModeMulti(writers, tName, dSchema,
                     (sp, d2, batch) =>
                       batchEnv(sp, d2, batch, statelessSnap),
                     fallbackKeys = {
@@ -2219,8 +2091,9 @@ private[api] trait SiddhiQlLive extends Serializable {
               * branch runs it per trigger with whatever override
               * mechanism it maintains), and folds the per-trigger
               * enriched rows as FoldAlg algebraic partials keyed on
-              * the group aliases. having/limit/offset compose ONCE at
-              * finish over the finalized groups — chunking-invariant
+              * the group aliases. having (then deployApp's order,
+              * offset and limit) applies ONCE over the finalized
+              * groups — chunking-invariant
               * by construction, because every stream event (and so
               * every per-pair row) lands in exactly one trigger. */
             final class EnrichAggTail {
@@ -2312,11 +2185,9 @@ private[api] trait SiddhiQlLive extends Serializable {
                 .select(finals.map { case (a2, e2) =>
                   expr(sqlOf(e2)).as(a2) }: _*)
               /** The keyed partial state this tail folds into. */
-              def stateEntry(stName: String,
-                  fnsSnap: Map[String, ScriptFn])
+              def stateEntry(stName: String)
                   : (String, StructType, StateMode) =
                 (stName, schemaA, KeyedState(keys, (sp, d2, batch) => {
-                  scriptFns = fnsSnap
                   if (keyAliases.isEmpty)
                     batch.select(lit(0L).as("__k"))
                   else {
@@ -2342,7 +2213,7 @@ private[api] trait SiddhiQlLive extends Serializable {
                     comps.toSeq.flatMap { case (b2, n, _) =>
                       FoldAlg.mergeCols(n, b2) }: _*)
               }
-              /** Finalize + having (limit/offset ride the LiveFold). */
+              /** Finalize + having. */
               def finish(acc: DataFrame): DataFrame = {
                 val fin = acc.select(finals.map { case (a2, e2) =>
                   expr(sqlOf(e2)).as(a2) }: _*)
@@ -2408,7 +2279,6 @@ private[api] trait SiddhiQlLive extends Serializable {
               // emission relations carry all prior history for its
               // keys), so per-trigger partials sum to the batch
               // aggregation under any chunking
-              val fnsSnapL = scriptFns
               val protoEnvL = batchEnv(sp0, "",
                 emptyOf(sp0, srcTs.schema), statelessSnap)
               // deploy-time prototype WITHOUT overrides — routes
@@ -2512,8 +2382,7 @@ private[api] trait SiddhiQlLive extends Serializable {
                         .find(_._1 == kc).get._2))
                       .cast(dSchema(kc).dataType).as(s"__mk$j2") } ++
                   rel.columns.toSeq.map(col): _*)
-              val keyL = name.orElse(ast.action.map(_.target))
-              if (keyL.contains(out) || name.contains(out)) {
+              Folded(protoL.schema, () => {
                 val statesL: Seq[(String, StructType, StateMode)] =
                   writers.indices.map { wi =>
                     infosL(wi) match {
@@ -2521,7 +2390,6 @@ private[api] trait SiddhiQlLive extends Serializable {
                         (s"wst$wi",
                           mkOfW(wi, emptyOf(sp0, p.stateSchema)).schema,
                           KeyedState(mkColsL, (sp, d2, batch) => {
-                            scriptFns = fnsSnapL
                             val benv =
                               batchEnv(sp, d2, batch, statelessSnap)
                             val base0 =
@@ -2542,22 +2410,18 @@ private[api] trait SiddhiQlLive extends Serializable {
                         // (bucket, group)-keyed store with the r15
                         // full() read
                         (s"wst$wi", p.stateSchema,
-                          KeyedState(p.keys, (sp, d2, batch) => {
-                            scriptFns = fnsSnapL
+                          KeyedState(p.keys, (sp, d2, batch) =>
                             p.probeSel(loadTable(sp, d2,
                               writers(wi)._4,
-                              batchEnv(sp, d2, batch, statelessSnap)))
-                          }))
+                              batchEnv(sp, d2, batch, statelessSnap)))))
                       case Right(sch) => (s"elog$wi", sch,
-                        KeyedState(mkColsL, (sp, d2, batch) => {
-                          scriptFns = fnsSnapL
+                        KeyedState(mkColsL, (sp, d2, batch) =>
                           withMkL(logDelta(sp, d2, wi,
                             batchEnv(sp, d2, batch, statelessSnap)),
-                            wi).select(mkColsL.map(col): _*)
-                        }))
+                            wi).select(mkColsL.map(col): _*)))
                     }
                   } :+ (if (hasAggE)
-                          aggTail.stateEntry("aggst", fnsSnapL)
+                          aggTail.stateEntry("aggst")
                         else ("__out", protoL.schema, AppendState))
                 // one trigger's state advance: merge every writer's
                 // state and assemble the per-writer emission
@@ -2634,9 +2498,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                     }.toMap
                     (stUpd, emisM)
                 }
-                foldResult = Some(LiveFold(srcTs, statesL,
+                LiveFold(srcTs, statesL,
                   (sp, d2, acc, batch) => {
-                    scriptFns = fnsSnapL
                     val benv = batchEnv(sp, d2, batch, statelessSnap)
                     val (stUpd, emisM) =
                       stepL(sp, d2, acc, batch, benv)
@@ -2653,13 +2516,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                   },
                   (_, acc) =>
                     if (hasAggE) aggTail.finish(acc("aggst"))
-                    else acc("__out"),
-                  ast.orderBy.map { case (c2, asc) =>
-                    if (asc) col(c2).asc else col(c2).desc },
-                  if (hasAggE) ast.limit else None,
-                  if (hasAggE) ast.offset else None))
-              }
-              (emptyOf(sp0, protoL.schema), KFold)
+                    else acc("__out"))
+              })
             } else if (writers.length > 1 &&
                 winTNsPer.exists(_.nonEmpty)) {
               // MIXED windowed + per-event writer group read LIVE
@@ -2734,7 +2592,6 @@ private[api] trait SiddhiQlLive extends Serializable {
                 fail("live enrichment aggregation over a MIXED " +
                   "windowed + per-event writer group (v1): use the " +
                   "projection form and aggregate in a downstream stage")
-              val fnsSnapM = scriptFns
               val protoEnvM = batchEnv(sp0, "",
                 emptyOf(sp0, srcTs.schema), statelessSnap)
               val keysPer: List[List[(String, String)]] =
@@ -3007,8 +2864,7 @@ private[api] trait SiddhiQlLive extends Serializable {
               // deploy-time prototype: fail fast + output schema
               val protoM = enrichCompile(sp0, "", ast, j, writers,
                 emptyOf(sp0, dSchema), protoEnvM)
-              val keyM = name.orElse(ast.action.map(_.target))
-              if (keyM.contains(out) || name.contains(out)) {
+              Folded(protoM.schema, () => {
                 val states: Seq[(String, StructType, StateMode)] =
                   (writers.indices.map { wi =>
                     infosM(wi) match {
@@ -3019,7 +2875,6 @@ private[api] trait SiddhiQlLive extends Serializable {
                         (s"wst$wi",
                           mkOfM(wi, emptyOf(sp0, p.stateSchema)).schema,
                           KeyedState(mkCols, (sp, d2, batch) => {
-                            scriptFns = fnsSnapM
                             val benv =
                               batchEnv(sp, d2, batch, statelessSnap)
                             val base0 =
@@ -3034,20 +2889,16 @@ private[api] trait SiddhiQlLive extends Serializable {
                           }, compactEvery =
                             compactInfoM.get(wi).map(_._1)))
                       case Left(p) => (s"wst$wi", p.stateSchema,
-                        KeyedState(p.keys, (sp, d2, batch) => {
-                          scriptFns = fnsSnapM
+                        KeyedState(p.keys, (sp, d2, batch) =>
                           p.probeSel(loadTable(sp, d2, writers(wi)._4,
-                            batchEnv(sp, d2, batch, statelessSnap)))
-                        }, compactEvery =
-                          compactInfoM.get(wi).map(_._1)))
+                            batchEnv(sp, d2, batch, statelessSnap))),
+                          compactEvery = compactInfoM.get(wi).map(_._1)))
                       case Right(sch) => (s"pst$wi", sch,
-                        KeyedState(mkCols, (sp, d2, batch) => {
-                          scriptFns = fnsSnapM
+                        KeyedState(mkCols, (sp, d2, batch) =>
                           withMk(perEventURel(sp, d2, writers(wi)._1,
                             writers(wi)._4, wi,
                             batchEnv(sp, d2, batch, statelessSnap))._1,
-                            wi).select(mkCols.map(col): _*)
-                        }))
+                            wi).select(mkCols.map(col): _*)))
                     }
                   } ++ compactInfoM.toSeq.sortBy(_._1).map {
                     // per-writer base: rewrites ONLY on compaction
@@ -3069,9 +2920,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                             .toArray)),
                         compactEvery = Some(e)))
                   }) :+ (("__out", protoM.schema, AppendState))
-                foldResult = Some(LiveFold(srcTs, states,
+                LiveFold(srcTs, states,
                   (sp, d2, acc, batch) => {
-                    scriptFns = fnsSnapM
                     val benv = batchEnv(sp, d2, batch, statelessSnap)
                     val kdf = batchKeyRel(sp, d2, batch, benv)
                     val kdfMk = kdf.select(keyOrderM.zipWithIndex
@@ -3283,11 +3133,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                       writers, emptyOf(sp, dSchema), benv,
                       winFlush = winFlushM, uRelOverride = uRelM))
                   },
-                  (_, acc) => acc("__out"),
-                  ast.orderBy.map { case (c2, asc) =>
-                    if (asc) col(c2).asc else col(c2).desc }))
-              }
-              (emptyOf(sp0, protoM.schema), KFold)
+                  (_, acc) => acc("__out"))
+              })
             } else if (winWriterTNs.nonEmpty) {
               // PER-EVENT AS-OF enrichment of a WINDOWED-aggregate
               // store (the Siddhi store pattern read back through a
@@ -3312,7 +3159,6 @@ private[api] trait SiddhiQlLive extends Serializable {
                 fail("windowed-writer enrichment (v1) reads a table " +
                   s"whose writer consumes the source stream; '$tName' " +
                   s"is written from derived stream '$dSrc'")
-              val fnsSnapW = scriptFns
               val tNsW = winWriterTNs.get
               val ssW = dAst.stream.asInstanceOf[SingleStream]
               // flush-partial fold with an IDENTITY finish (its
@@ -3421,17 +3267,14 @@ private[api] trait SiddhiQlLive extends Serializable {
                   else Seq("__wb")
                 val stMode0: StateMode = mkInfoW match {
                   case Some((mkCols, addSt, _)) =>
-                    KeyedState(mkCols, (sp, _, batch) => {
-                      scriptFns = fnsSnapW
+                    KeyedState(mkCols, (_, _, batch) => {
                       val f = ssW.filter.fold(batch)(ff =>
                         batch.where(expr(sqlOf(ff))))
                       addSt(f).select(mkCols.map(col): _*)
                     }, compactEvery = compactN)
                   case None =>
-                    KeyedState(keysP, (sp, _, batch) => {
-                      scriptFns = fnsSnapW
-                      p.probeSel(batch)
-                    }, compactEvery = compactN)
+                    KeyedState(keysP, (_, _, batch) => p.probeSel(batch),
+                      compactEvery = compactN)
                 }
                 val baseSch = mkInfoW.fold(flushSchema)(i =>
                   i._3(emptyOf(sp0, flushSchema)).schema)
@@ -3461,7 +3304,6 @@ private[api] trait SiddhiQlLive extends Serializable {
                 def mergeSt1(sp: SparkSession,
                     acc: Map[String, LiveState], batch: DataFrame)
                     : DataFrame = {
-                  scriptFns = fnsSnapW
                   val s0 = mkInfoW.fold(acc("state").slice)(i =>
                     acc("state").slice.drop(i._1: _*))
                   p.merge(s0, p.partialOf(batch))
@@ -3571,14 +3413,12 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // EnrichAggTail, fed per trigger by the same
                 // post-merge flush relation the projection arm below
                 // maintains (winFlush)
-                val keyWA = name.orElse(ast.action.map(_.target))
-                if (keyWA.contains(out) || name.contains(out)) {
+                Folded(aggTail.protoOut.schema, () => {
                   val (wfMerge, wfFlushRel, wfSchemas, wfSplit) =
                     winFoldOf()
-                  foldResult = Some(LiveFold(srcTs,
-                    wfSchemas :+ aggTail.stateEntry("aggst", fnsSnapW),
+                  LiveFold(srcTs,
+                    wfSchemas :+ aggTail.stateEntry("aggst"),
                     (sp, d2, acc, batch) => {
-                      scriptFns = fnsSnapW
                       val st1 = wfMerge(sp, acc, batch)
                       val benv = batchEnv(sp, d2, batch, statelessSnap)
                       // flush rows prune to the batch's event keys:
@@ -3596,12 +3436,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                         aggTail.mergeInto(acc("aggst").slice,
                           enriched))
                     },
-                    (_, acc) => aggTail.finish(acc("aggst")),
-                    ast.orderBy.map { case (c2, asc) =>
-                      if (asc) col(c2).asc else col(c2).desc },
-                    ast.limit, ast.offset))
-                }
-                (emptyOf(sp0, aggTail.protoOut.schema), KFold)
+                    (_, acc) => aggTail.finish(acc("aggst")))
+                })
               } else {
               // deploy-time prototype: fail fast + output schema (the
               // dmlEmissions path recomputes flushes from the raw
@@ -3610,14 +3446,12 @@ private[api] trait SiddhiQlLive extends Serializable {
                 emptyOf(sp0, dSchema),
                 batchEnv(sp0, "", emptyOf(sp0, srcTs.schema),
                   statelessSnap))
-              val keyW = name.orElse(ast.action.map(_.target))
-              if (keyW.contains(out) || name.contains(out)) {
+              Folded(protoW.schema, () => {
                 val (wfMerge, wfFlushRel, wfSchemas, wfSplit) =
                   winFoldOf()
-                foldResult = Some(LiveFold(srcTs,
+                LiveFold(srcTs,
                   wfSchemas :+ (("__out", protoW.schema, AppendState)),
                   (sp, d2, acc, batch) => {
-                    scriptFns = fnsSnapW
                     val st1 = wfMerge(sp, acc, batch)
                     val benv = batchEnv(sp, d2, batch, statelessSnap)
                     val kdf = batchKeyRel(sp, d2, batch, benv)
@@ -3629,11 +3463,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                     wfSplit(sp, acc, st1, batch) +
                       ("__out" -> enriched)
                   },
-                  (_, acc) => acc("__out"),
-                  ast.orderBy.map { case (c2, asc) =>
-                    if (asc) col(c2).asc else col(c2).desc }))
-              }
-              (emptyOf(sp0, protoW.schema), KFold)
+                  (_, acc) => acc("__out"))
+              })
               }
             } else if (hasAggE) {
               // AGGREGATION ABOVE the enrichment join: the shared
@@ -3642,15 +3473,10 @@ private[api] trait SiddhiQlLive extends Serializable {
               // state writes; the batch compile aggregates the
               // identical as-of rows globally, so it is the oracle
               // under any chunking)
-              val keyE2 = name.orElse(ast.action.map(_.target))
-              if (keyE2.contains(out) || name.contains(out)) {
-                val fnsSnap = scriptFns
-                val tMode = tModeOf(fnsSnap)
-                foldResult = Some(LiveFold(srcTs,
+              Folded(aggTail.protoOut.schema, () => LiveFold(srcTs,
                   Seq((tName, dSchema, tMode),
-                    aggTail.stateEntry("state", fnsSnap)),
+                    aggTail.stateEntry("state")),
                   (sp, d2, acc, batch) => {
-                    scriptFns = fnsSnap
                     val benv = batchEnv(sp, d2, batch, statelessSnap)
                     val enriched = enrichCompile(sp, d2,
                       aggTail.astRows, j, writers,
@@ -3660,31 +3486,21 @@ private[api] trait SiddhiQlLive extends Serializable {
                       "state" -> aggTail.mergeInto(
                         acc("state").slice, enriched))
                   },
-                  (_, acc) => aggTail.finish(acc("state")),
-                  ast.orderBy.map { case (c2, asc) =>
-                    if (asc) col(c2).asc else col(c2).desc },
-                  ast.limit, ast.offset))
-              }
-              (emptyOf(sp0, aggTail.protoOut.schema), KFold)
+                  (_, acc) => aggTail.finish(acc("state"))))
             } else {
             // fail fast at deploy time + learn the output schema
             val proto = enrichCompile(sp0, "", ast, j, writers,
               emptyOf(sp0, dSchema),
               batchEnv(sp0, "", emptyOf(sp0, srcTs.schema),
                 statelessSnap))
-            val keyE = name.orElse(ast.action.map(_.target))
-            if (keyE.contains(out) || name.contains(out)) {
-              val fnsSnap = scriptFns
-              // the maintained table bucket-merges on its DML keys
-              // (write cost O(batch-touched buckets)); the enrichment
-              // OUTPUT is a sink-like accumulation — each trigger
-              // appends its delta generation, never rewriting history
-              val tMode = tModeOf(fnsSnap)
-              foldResult = Some(LiveFold(srcTs,
+            // the maintained table bucket-merges on its DML keys (write
+            // cost O(batch-touched buckets)); the enrichment OUTPUT is a
+            // sink-like accumulation — each trigger appends its delta
+            // generation, never rewriting history
+            Folded(proto.schema, () => LiveFold(srcTs,
                 Seq((tName, dSchema, tMode),
                     ("__out", proto.schema, AppendState)),
                 (sp, d2, acc, batch) => {
-                  scriptFns = fnsSnap
                   val benv = batchEnv(sp, d2, batch, statelessSnap)
                   Map(
                     tName -> tApply(sp, d2, acc(tName).slice, benv),
@@ -3695,11 +3511,7 @@ private[api] trait SiddhiQlLive extends Serializable {
                     "__out" -> enrichCompile(sp, d2, ast, j, writers,
                       tReadPruned(sp, d2, acc, batch, benv), benv))
                 },
-                (_, acc) => acc("__out"),
-                ast.orderBy.map { case (c2, asc) =>
-                  if (asc) col(c2).asc else col(c2).desc }))
-            }
-            (emptyOf(sp0, proto.schema), KFold)
+                (_, acc) => acc("__out")))
             }
 
           case j: JoinStream
@@ -3739,8 +3551,8 @@ private[api] trait SiddhiQlLive extends Serializable {
               // join: Spark emits the null-padded side once the
               // watermark passes the band (state eviction doubles as
               // the no-match proof), so outer needs the flush-sentinel
-              // Append channel (KWindowAgg) where inner emits matches
-              // as they arrive (KStateless)
+              // Append channel (AppendFlushed) where inner emits
+              // matches as they arrive (Append)
               val jType = j.joinType match {
                 case "inner" | "left_outer" | "right_outer" |
                      "full_outer" => j.joinType
@@ -3879,16 +3691,13 @@ private[api] trait SiddhiQlLive extends Serializable {
                 val feedJ = joined.select(itemsJ.map { case (it, a2, _) =>
                   expr(sqlOfWith(it.e, qual)).as(a2) } :+
                   emitTs.as("__emit_ts") :+ ordJ.as("__emit_ord"): _*)
-                val ordFin = ast.orderBy.map { case (c2, asc) =>
-                  if (asc) col(c2).asc else col(c2).desc }
-                val keyJ2 = name.orElse(ast.action.map(_.target))
-                carriedNow = Nil
                 (rJ.mode, rJ.timeNs, rJ.count) match {
                   case ("all", _, _) => // emission batching only; an
                     // outer join still needs the sentinel Append
                     // channel for its tail null-pads
-                    (feedJ.drop("__emit_ts", "__emit_ord"),
-                      if (jType == "inner") KStateless else KWindowAgg)
+                    Streamed(feedJ.drop("__emit_ts", "__emit_ord"),
+                      if (jType == "inner") LiveMode.Append
+                      else LiveMode.AppendFlushed)
                   case (m @ ("first" | "last"), Some(t), None) =>
                     val withIv = feedJ.withColumn("__iv",
                       expr(s"__emit_ts div ${t}L")).drop("__emit_ts")
@@ -3902,24 +3711,20 @@ private[api] trait SiddhiQlLive extends Serializable {
                         .select(withIv.columns.map(c =>
                           col(s"__row.$c").as(c)): _*)
                     }
-                    if (keyJ2.contains(out) || name.contains(out))
-                      foldResult = Some(singleFold(withIv, schemaR,
+                    Folded(schemaR, () => singleFold(withIv, schemaR,
                         (_, _, acc, batch) =>
                           pickRow(acc.unionByName(batch)),
                         (_, acc) => acc.select(outColsJ.map(col): _*),
-                        ordFin,
                         KeyedState(Seq("__iv"), (_, _, batch) =>
                           batch.select(col("__iv"))))
                         .copy(needsFlush = jType != "inner"))
-                    (emptyOf(joined.sparkSession, schemaR), KFold)
                   case (m @ ("first" | "last"), None, Some(nEv))
                       if jType != "inner" =>
                     // OUTER count mode: rank-and-pick at finish (see
                     // the channel comment above)
                     val schemaC = feedJ.drop("__emit_ts").schema
                     val protoC = feedJ.drop("__emit_ts", "__emit_ord")
-                    if (keyJ2.contains(out) || name.contains(out))
-                      foldResult = Some(LiveFold(feedJ,
+                    Folded(protoC.schema, () => LiveFold(feedJ,
                         Seq(("out", schemaC, AppendState)),
                         (_, _, _, batch) =>
                           Map("out" -> batch.drop("__emit_ts")),
@@ -3932,14 +3737,12 @@ private[api] trait SiddhiQlLive extends Serializable {
                             else ranked.filter(col("__rn") % nEv === 0)
                           kept.orderBy("__rn")
                             .select(outColsJ.map(col): _*)
-                        }, ordFin).copy(needsFlush = true))
-                    (emptyOf(joined.sparkSession, protoC.schema), KFold)
+                        }, needsFlush = true))
                   case (m @ ("first" | "last"), None, Some(nEv)) =>
                     val rankedSchema = StructType(feedJ
                       .drop("__emit_ts", "__emit_ord").schema.fields :+
                       StructField("__rn", LongType))
-                    if (keyJ2.contains(out) || name.contains(out))
-                      foldResult = Some(LiveFold(feedJ,
+                    Folded(rankedSchema, () => LiveFold(feedJ,
                         Seq(("out", rankedSchema, AppendState),
                           ("pend", rankedSchema, FullState)),
                         (_, _, st, batch0) => {
@@ -3969,8 +3772,7 @@ private[api] trait SiddhiQlLive extends Serializable {
                               st("out").unionByName(st("pend"))
                             else st("out")
                           fin.orderBy("__rn").drop("__rn")
-                        }, ordFin))
-                    (emptyOf(joined.sparkSession, rankedSchema), KFold)
+                        }))
                   case ("snapshot", _, _) =>
                     fail("output snapshot over a join (v1): insert the " +
                       "join into a stream and snapshot that stream — a " +
@@ -4005,10 +3807,9 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // flush-sentinel batches (needsFlush) make the tail's
                 // pads materialize before finish, and null group keys
                 // merge via the null-safe key equality below
-                // having/limit/offset apply ONCE at finish over the
-                // finalized groups (alias refs, like the batch
-                // compile); limit/offset compose with the runner's
-                // finish ordering — see [[LiveFold.limit]]
+                // having applies ONCE at finish over the finalized
+                // groups (alias refs, like the batch compile); order,
+                // offset and limit follow in [[deployApp]]
                 val items = itemsOf(ast)
                 val keyItems = items.filter(!_._3)
                 val keyAliases = keyItems.map(_._2)
@@ -4066,9 +3867,7 @@ private[api] trait SiddhiQlLive extends Serializable {
                 def mergeComp(base: String, n: String): Seq[Column] =
                   FoldAlg.mergeCols(n, base)
                 val schemaJ = partialOf(feed).schema
-                val keyJ = name.orElse(ast.action.map(_.target))
-                if (keyJ.contains(out) || name.contains(out))
-                  foldResult = Some(singleFold(feed, schemaJ,
+                Folded(schemaJ, () => singleFold(feed, schemaJ,
                     (_, _, acc, batch) => {
                       val u = partialOf(batch)
                       // <=> so a null group key merges with itself
@@ -4089,14 +3888,9 @@ private[api] trait SiddhiQlLive extends Serializable {
                       ast.having.fold(fin)(h =>
                         fin.where(expr(sqlOf(h))))
                     },
-                    ast.orderBy.map { case (c2, asc) =>
-                      if (asc) col(c2).asc else col(c2).desc },
                     KeyedState(keys, (_, _, batch) =>
-                      batch.select(keys.map(col): _*)),
-                    ast.limit, ast.offset)
+                      batch.select(keys.map(col): _*)))
                     .copy(needsFlush = jType != "inner"))
-                carriedNow = Nil
-                (emptyOf(joined.sparkSession, schemaJ), KFold)
               } else {
               // carry the non-nullable side's watermarked event-time
               // columns through the projection (dropped again if this
@@ -4117,12 +3911,12 @@ private[api] trait SiddhiQlLive extends Serializable {
                 Seq("ts", "ts_ns").filter(c =>
                   joined.columns.contains(s"${s0}_$c") &&
                     !aliases.contains(c)))
-              carriedNow = carry
-              (joined.select(itemsOf(ast).map { case (it, a2, _) =>
+              Streamed(joined.select(itemsOf(ast).map { case (it, a2, _) =>
                 expr(sqlOfWith(it.e, qual)).as(a2) } ++
                 carry.map(c =>
                   col(s"${carrySide.get}_$c").as(c)): _*),
-                if (jType == "inner") KStateless else KWindowAgg)
+                if (jType == "inner") LiveMode.Append
+                else LiveMode.AppendFlushed, carry)
               }
             case _ => fail("live deployment joins need #window.time(T) " +
               "or #window.timeBatch(T) on both sides (the watermarked " +
@@ -4130,10 +3924,17 @@ private[api] trait SiddhiQlLive extends Serializable {
               "global arrival rank and are batch-replay surfaces (v1)")
           }
         }
-        val key = name.orElse(ast.action.map(_.target))
-        ast.action.foreach {
-          case InsertInto(t) =>
-            if (kind != KStateless) statefulStreams += t
+        }
+        // the one exit. A stage inserting into a stream registers it —
+        // a folded stage as an empty frame of its output schema, which
+        // later stages refuse to read as an aggregation output
+        ast.action.collect { case InsertInto(t) if dmlAct.isEmpty => t }
+          .foreach { t =>
+            val (df, stateless) = stage match {
+              case Streamed(d, m, _) => (d, m == LiveMode.Append)
+              case Folded(sch, _) => (emptyOf(src.sparkSession, sch), false)
+            }
+            if (!stateless) statefulStreams += t
             // only genuinely chunking-invariant stages are
             // batch-re-derivable (plain filter/projection): windowed,
             // rate-limited, joined, and fMGWS stages all carry state
@@ -4151,7 +3952,7 @@ private[api] trait SiddhiQlLive extends Serializable {
             // mid-topology
             env += t -> (env.get(t) match {
               case Some(prev) =>
-                if (kind != KStateless || statefulStreams.contains(t))
+                if (!stateless || statefulStreams.contains(t))
                   fail(s"live deployment (v1): multi-writer stream '$t' " +
                     "cannot take an aggregated writer")
                 if (prev.columns.toSet != df.columns.toSet)
@@ -4161,17 +3962,21 @@ private[api] trait SiddhiQlLive extends Serializable {
                 prev.unionByName(df)
               case None => df
             })
-          case a => fail(s"live deployment (v1) cannot run table DML " +
-            s"('${a.target}') — deploy onto the engine's upsert sink")
-        }
-        val ordCols = ast.orderBy.map { case (c, asc) =>
-          if (asc) col(c).asc else col(c).desc }
-        if (kind != KFold && (key.contains(out) || name.contains(out)))
-          // the sink never shows the carried event-time helper columns
-          result = Some((
-            if (carriedNow.nonEmpty) df.drop(carriedNow: _*) else df,
-            kind, ordCols))
-        } // end non-DML stage
+          }
+        if (name.orElse(ast.action.map(_.target)).contains(out) ||
+            dmlAct.exists(_.target == out))
+          outStage = Some(ast -> (stage match {
+            // built here, while dmlInfos / statelessAsts are what the
+            // stage compiled against; the runner pins the functions
+            // defined so far
+            case Folded(sch, build) =>
+              val lf = build().copy(fns = scriptFns)
+              Folded(sch, () => lf)
+            // the sink never shows the carried event-time helper columns
+            case Streamed(df, mode, carried) if carried.nonEmpty =>
+              Streamed(df.drop(carried: _*), mode)
+            case streamed => streamed
+          }))
     }
     scriptFns = Map.empty // live apps carry their own defines
     val liveStmts = splitStatements(app)
@@ -4244,7 +4049,8 @@ private[api] trait SiddhiQlLive extends Serializable {
           "(compileApp) against the replayed state")
       else fail(s"live deployment cannot run: '${body.take(40)}...'")
     }
-    (result, foldResult)
+    outStage.getOrElse(
+      fail(s"app has no query named or inserting into '$out'"))
   }
 
   /** Harness-side deployment: feed the events table through a
@@ -4293,7 +4099,7 @@ private[api] trait SiddhiQlLive extends Serializable {
         col("userId").as("user_id"), col("eventType").as("event_type"),
         col("value"))
       .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-    val (stages, dmlOpt) = deployStages(src, app, out)
+    val (outAst, stage) = deployStages(src, app, out)
     // HARNESS scratch: streaming checkpoints (offsets/commits/state
     // deltas, fsync'd once per trigger) go to RAM-backed storage when
     // the platform offers it — the replay loop's bottleneck is the
@@ -4324,9 +4130,11 @@ private[api] trait SiddhiQlLive extends Serializable {
     def replay(q: StreamingQuery, flush: Boolean): Unit =
       graft.engine.Streaming.replay(ms, q, rows, chunksEff,
         if (flush) graft.engine.Streaming.flushSentinels else Nil)
-    try {
-      dmlOpt match {
-        case Some(lf) =>
+    // each branch yields the finished result; the out query's order by,
+    // offset and limit apply once, over it, as in the batch compile
+    try orderOffsetLimit(outAst, stage match {
+        case Folded(_, build) =>
+          val lf = build()
           // folded stage LIVE (table DML / unique:last / sort /
           // frequent / enrichment): every micro-batch folds into the
           // accumulated state, held between triggers as in-memory
@@ -4359,12 +4167,14 @@ private[api] trait SiddhiQlLive extends Serializable {
             .option("checkpointLocation", ckpt("fold"))
             .foreachBatch { (batch: DataFrame, _: Long) =>
               val sp = batch.sparkSession
+              // the fold closures re-render SQL on this thread
+              scriptFns = lf.fns
               // persist the trigger's batch ONCE when the feed plan is
               // worth not re-running: every consumer below — the
               // per-state bucket probes, keyedRead, the fold, and each
               // state's write — otherwise RE-EXECUTES the whole
               // micro-batch plan per action, the documented foreachBatch
-              // hazard the kind-4 update sink already guards against
+              // hazard the Update-mode sink already guards against
               // (r17 per-site job census: probe:state ≈ write:state ≈
               // 0.6 s EACH on the stream-stream-join topologies = one
               // full plan execution per job; a `perfbench/run.py
@@ -4378,8 +4188,7 @@ private[api] trait SiddhiQlLive extends Serializable {
               // batch's key values (a compactEvery generation touches
               // ALL buckets so the fold may rewrite the state whole).
               // The probes are independent ~100 ms jobs, run
-              // concurrently to overlap their scheduling latency; each
-              // closure re-pins scriptFns on its own thread
+              // concurrently to overlap their scheduling latency
               val touched: Map[String, Seq[Int]] = settleAll(
                 lf.schemas.collect {
                   case (n, _, KeyedState(keys, batchKeys, ce)) => () =>
@@ -4530,65 +4339,54 @@ private[api] trait SiddhiQlLive extends Serializable {
           // outer-join feeds flush (the stages channel's exact rule)
           // so the tail's null-padded rows materialize before finish
           replay(q, lf.needsFlush)
-          val fin = lf.finish(spark, allStates(spark))
-          val ord =
-            if (lf.ordCols.nonEmpty) fin.orderBy(lf.ordCols: _*) else fin
-          // Siddhi limit/offset: offset skips M ordered rows, limit
-          // caps what follows (the batch compile's composition order)
-          val off = lf.offset.fold(ord)(m => ord.offset(m.toInt))
-          lf.limit.fold(off)(n => off.limit(n.toInt))
-        case None =>
-          val (df, kind, ordCols) = stages.getOrElse(
-            fail(s"app has no query named or inserting into '$out'"))
-          if (kind == 4) {
-            // UPDATE-mode global aggregation: the stream emits only
-            // the groups each trigger changed; the keyed upsert sink
-            // (last write per __ukey wins) keeps the SAME hash-bucketed
-            // in-memory generations the fold runner uses — each
-            // trigger rewrites only the buckets its changed groups
-            // hash into, so BOTH per-trigger sink volume (O(changed
-            // groups)) and per-trigger write cost (O(touched buckets))
-            // survive scale, and nothing accumulates on the driver.
-            val gensU = new Generations(nBuckets, Map("u" -> df.schema))
-            var genU = 0
-            val q = start(df.writeStream.outputMode("update")
-              .option("checkpointLocation", ckpt("update"))
-              .foreachBatch { (batch: DataFrame, _: Long) =>
-                val sp = batch.sparkSession
-                // persist: the batch feeds the touched-bucket probe,
-                // the anti-join, and the union — one evaluation
-                batch.persist()
-                try {
-                  updateEmitProbe.foreach(_ += batch.count())
-                  val touched = distinctIntsLocal(batch.select(
-                    gensU.bucketCol(Seq("__ukey")).cast("int")))
-                  val g1 = genU + 1
-                  gensU.put("u", g1, gensU.keyed(sp, "u", touched)
-                    .join(batch.select("__ukey"), Seq("__ukey"), "left_anti")
-                    .unionByName(batch), Seq("__ukey"))
-                  touched.foreach(b => gensU.latest(("u", b)) = g1)
-                  gensU.release("u")
-                  genU = g1
-                } finally { batch.unpersist(); () }
-              }.start())
-            replay(q, flush = false)
-            val t = gensU.keyed(spark, "u", 0 until nBuckets).drop("__ukey")
-            return (if (ordCols.nonEmpty) t.orderBy(ordCols: _*) else t)
-          }
-          val mode = if (kind == 1) OutputMode.Complete()
-                     else OutputMode.Append()
+          scriptFns = lf.fns
+          lf.finish(spark, allStates(spark))
+        case Streamed(df, LiveMode.Update, _) =>
+          // UPDATE-mode global aggregation: the stream emits only the
+          // groups each trigger changed; the keyed upsert sink (last
+          // write per __ukey wins) keeps the SAME hash-bucketed
+          // in-memory generations the fold runner uses — each trigger
+          // rewrites only the buckets its changed groups hash into, so
+          // BOTH per-trigger sink volume (O(changed groups)) and
+          // per-trigger write cost (O(touched buckets)) survive scale,
+          // and nothing accumulates on the driver.
+          val gensU = new Generations(nBuckets, Map("u" -> df.schema))
+          var genU = 0
+          val q = start(df.writeStream.outputMode("update")
+            .option("checkpointLocation", ckpt("update"))
+            .foreachBatch { (batch: DataFrame, _: Long) =>
+              val sp = batch.sparkSession
+              // persist: the batch feeds the touched-bucket probe, the
+              // anti-join, and the union — one evaluation
+              batch.persist()
+              try {
+                updateEmitProbe.foreach(_ += batch.count())
+                val touched = distinctIntsLocal(batch.select(
+                  gensU.bucketCol(Seq("__ukey")).cast("int")))
+                val g1 = genU + 1
+                gensU.put("u", g1, gensU.keyed(sp, "u", touched)
+                  .join(batch.select("__ukey"), Seq("__ukey"), "left_anti")
+                  .unionByName(batch), Seq("__ukey"))
+                touched.foreach(b => gensU.latest(("u", b)) = g1)
+                gensU.release("u")
+                genU = g1
+              } finally { batch.unpersist(); () }
+            }.start())
+          replay(q, flush = false)
+          gensU.keyed(spark, "u", 0 until nBuckets).drop("__ukey")
+        case Streamed(df, mode, _) =>
           val sinkName = s"graft_deploy_$out"
           val q = start(
             df.writeStream.format("memory").queryName(sinkName)
               .option("checkpointLocation", ckpt("sink"))
-              .outputMode(mode).start())
+              .outputMode(if (mode == LiveMode.Complete) OutputMode.Complete()
+                          else OutputMode.Append()).start())
           // windowed Append stages close their last windows on the
           // flush sentinels (engine twin: Streaming.runStream)
-          replay(q, flush = kind == 2)
-          val t = spark.table(sinkName)
-          if (ordCols.nonEmpty) t.orderBy(ordCols: _*) else t
-      }
-    } finally {
+          replay(q, flush = mode == LiveMode.AppendFlushed)
+          spark.table(sinkName)
+      })
+    finally {
       scala.util.Try {
         import scala.reflect.io.Directory
         new Directory(ckptRoot.toFile).deleteRecursively()

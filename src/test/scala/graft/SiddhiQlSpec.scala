@@ -1904,17 +1904,52 @@ class SiddhiQlSpec extends AnyFunSuite {
   }
 
   test("live deployment with a script function equals batch replay") {
-    val app =
-      """define function boost[javascript] return double {
-        |  return data[0] > 100 ? data[0] * 1.5 : data[0];
-        |};
+    val fn = """define function boost[javascript] return double {
+               |  return data[0] > 100 ? data[0] * 1.5 : data[0];
+               |};
+               |""".stripMargin
+    // a stateless stage, and two folds whose closures call the
+    // function on the runner's micro-batch thread
+    val apps = Seq(fn +
+      """@info(name = 'q') from events[value > 50]
+        |select user_id, event_id, boost(value) as bv insert into Out""",
+      fn + """define table T (user_id long, bv double);
         |@info(name = 'q') from events[value > 50]
-        |select user_id, event_id, boost(value) as bv insert into Out""".stripMargin
-    val live = SiddhiQL.deployApp(spark, sf, app, "q")
-      .collect().map(_.toSeq).sortBy(_.toString)
-    val batch = SiddhiQL.compileApp(spark, sf, app)("q")
-      .collect().map(_.toSeq).sortBy(_.toString)
-    assert(live.nonEmpty && (live sameElements batch))
+        |select user_id, boost(value) as bv
+        |update or insert into T on T.user_id == user_id""",
+      fn + """@info(name = 'q') from events#window.unique:last(user_id)
+        |select user_id, boost(value) as bv
+        |order by user_id insert into Out""").map(_.stripMargin)
+    for (app <- apps) {
+      val live = SiddhiQL.deployApp(spark, sf, app, "q")
+        .collect().map(_.toSeq).sortBy(_.toString)
+      val batch = SiddhiQL.compileApp(spark, sf, app)("q")
+        .collect().map(_.toSeq).sortBy(_.toString)
+      assert(live.nonEmpty && (live sameElements batch), app)
+    }
+  }
+
+  test("live deployApp applies the out query's order by, offset and " +
+       "limit like compileApp") {
+    val apps = Seq(
+      "@info(name = 'q') from events[event_type == 'click'] " +
+        "select event_id, value order by event_id limit 5 offset 10 " +
+        "insert into Out",
+      "@info(name = 'q') from events#window.unique:last(user_id) " +
+        "select user_id, value order by user_id limit 3 insert into Out",
+      "@info(name = 'q') from events#window.timeBatch(1 min) " +
+        "select user_id, count() as n group by user_id " +
+        "order by w_start_ms, user_id limit 2 insert into Out",
+      "@info(name = 'q') from events select user_id, count() as n " +
+        "group by user_id order by user_id limit 2 insert into Out")
+    for (app <- apps) {
+      val live = SiddhiQL.deployApp(spark, sf, app, "q")
+        .collect().map(_.toSeq).toSeq
+      val batch = SiddhiQL.compileApp(spark, sf, app)("q")
+        .collect().map(_.toSeq).toSeq
+      assert(live.nonEmpty && live == batch,
+        s"$app: live=${live.length} batch=${batch.length}")
+    }
   }
 
   test("partition-block rate limiting and aggregation reads fail " +
@@ -2077,6 +2112,11 @@ class SiddhiQlSpec extends AnyFunSuite {
     val err = intercept[IllegalArgumentException](
       SiddhiQL.deployAppOn(raw, dmlApp, "q")).getMessage
     assert(err.contains("deployApp"))
+    // nor can an unbounded stream take a limit/offset cut
+    val cut = intercept[IllegalArgumentException](
+      SiddhiQL.deployAppOn(raw, "@info(name='q') from events select " +
+        "event_id order by event_id limit 5 insert into O", "q")).getMessage
+    assert(cut.contains("limit") && cut.contains("unbounded stream"))
   }
 
   test("expression window: sum-predicate fold matches the engine twin's " +
