@@ -65,4 +65,4 @@ import graft.engine.{Cep, Tables}
   * anywhere (the r9 guardGlobalWindow fail-fast family is retired).
   */
 object SiddhiQL extends SiddhiQlFrontend with SiddhiQlCompiler
-  with SiddhiQlLive with Serializable
+  with SiddhiQlLive with SiddhiQlLiveEnrich with Serializable

@@ -764,18 +764,25 @@ private[api] trait SiddhiQlCompiler extends Serializable {
   private[api] def perEventURel(sp: SparkSession, dir: String,
       dAst: Ast, dSrc: String, wi: Int,
       env: Map[String, DataFrame]): (DataFrame, List[String]) = {
-    val uBase0 = loadTable(sp, dir, dSrc, env)
-    val uBase = dAst.stream match {
-      case ss2: SingleStream => ss2.filter.fold(uBase0)(f =>
-        applyFilter(sp, dir, uBase0, f, env))
-      case _ => uBase0 // unreachable: DML is single-stream
-    }
-    val uItems = itemsOf(expandStar(dAst, uBase0.columns))
+    val uBase = writerSource(sp, dir, dAst, dSrc, env)
+    val uItems = itemsOf(expandStar(dAst, uBase.columns))
     (uBase.select(uItems.map { case (it, a2, _) =>
       expr(sqlOf(it.e)).as(a2) } :+
       struct(col("ts_ns"), col("event_id"),
         lit(wi.toLong).as("w")).as("__ord"): _*),
       uItems.map(_._2))
+  }
+
+  /** A DML writer's source rows over `env`: its stream `wSrc` through
+    * the writer's filter (membership conjuncts become semi/anti joins,
+    * so the columns stay the stream's). */
+  private[api] def writerSource(sp: SparkSession, dir: String, wAst: Ast,
+      wSrc: String, env: Map[String, DataFrame]): DataFrame = {
+    val b0 = loadTable(sp, dir, wSrc, env)
+    (wAst.stream match {
+      case ss: SingleStream => ss.filter
+      case _                => None
+    }).fold(b0)(f => applyFilter(sp, dir, b0, f, env))
   }
 
   private[api] def enrichCompile(sp: SparkSession, dir: String, ast: Ast,
@@ -1442,19 +1449,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
             (col("__g_ord.ts_ns") + lit(t2)).as("ts_ns"),
             col("__g_ord.event_id"),
             lit(wi.toLong).as("w"))).drop("__g_ord"), outCols0)
-        case None =>
-          val uBase0 = loadTable(sp, dir, wSrc, env)
-          val uBase = wAst.stream match {
-            case ss2: SingleStream => ss2.filter.fold(uBase0)(f =>
-              applyFilter(sp, dir, uBase0, f, env))
-            case _ => uBase0
-          }
-          val uItems = itemsOf(expandStar(wAst, uBase0.columns))
-          (uBase.select(uItems.map { case (it, a2, _) =>
-              expr(sqlOf(it.e)).as(a2) } :+
-              struct(col("ts_ns"), col("event_id"),
-                lit(wi.toLong).as("w")).as("__ord"): _*),
-            uItems.map(_._2))
+        case None => perEventURel(sp, dir, wAst, wSrc, wi, env)
       }
     // insert rows: the row's key VALUES are its own key-column outputs
     val insRows = insWI.map { case ((iAst, iAct, _, iSrc), wi) =>
@@ -1511,18 +1506,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
       }
       val sel = emisOverride.get(wi) match {
         case Some(rel) => rel
-        case None =>
-          val uBase0 = loadTable(sp, dir, dSrc2, env)
-          val uBase = dAst2.stream match {
-            case ss2: SingleStream => ss2.filter.fold(uBase0)(f =>
-              applyFilter(sp, dir, uBase0, f, env))
-            case _ => uBase0
-          }
-          val uItems = itemsOf(expandStar(dAst2, uBase0.columns))
-          uBase.select(uItems.map { case (it, a2, _) =>
-            expr(sqlOf(it.e)).as(a2) } :+
-            struct(col("ts_ns"), col("event_id"),
-              lit(wi.toLong).as("w")).as("__ord"): _*)
+        case None => perEventURel(sp, dir, dAst2, dSrc2, wi, env)._1
       }
       sel.select(Seq(
           keyC(keyOrder.map(c => dKeys.find(_._1 == c).get._2))

@@ -9,11 +9,11 @@ import graft.engine.{Cep, Tables}
 
 /** [[SiddhiQL]]'s live deployment: the Structured Streaming topology
   * builder (deployApp), the LiveFold channel (keyed/bucketed state,
-  * windowed flush folds, enrichment joins, rate folds), and the
-  * fold runner over in-memory state generations. Mixed into
-  * `object SiddhiQL`. */
+  * windowed flush folds, rate folds; the enrichment join lowers in
+  * [[SiddhiQlLiveEnrich]]), and the fold runner over in-memory state
+  * generations. Mixed into `object SiddhiQL`. */
 private[api] trait SiddhiQlLive extends Serializable {
-  self: SiddhiQlFrontend with SiddhiQlCompiler =>
+  self: SiddhiQlFrontend with SiddhiQlCompiler with SiddhiQlLiveEnrich =>
   // ---------- live deployment ----------
   /** The single source watermark bound: every deployed topology
     * declares `withWatermark("ts", <delay>)` at the source, and the
@@ -449,13 +449,8 @@ private[api] trait SiddhiQlLive extends Serializable {
       case Some(on) =>
         val keys = keyEqsOf(on, act.target)
         KeyedState(keys.map(_._1), (sp, d2, batch) => {
-          val env = envOf(sp, d2, batch)
-          val base0 = loadTable(sp, d2, srcName, env)
-          val base = (ast.stream match {
-            case ss: SingleStream => ss.filter
-            case _                => None
-          }).fold(base0)(f => applyFilter(sp, d2, base0, f, env))
-          val items = itemsOf(expandStar(ast, base0.columns))
+          val base = writerSource(sp, d2, ast, srcName, envOf(sp, d2, batch))
+          val items = itemsOf(expandStar(ast, base.columns))
           val seld = base.select(items.map { case (it, a, _) =>
             expr(sqlOf(it.e)).as(a) }: _*)
           seld.select(keys.map { case (tc, rhs) =>
@@ -500,12 +495,8 @@ private[api] trait SiddhiQlLive extends Serializable {
             s"`insert into`, `update or insert` and `delete` " +
             s"writers; got '${a2.getClass.getSimpleName}'")
         }
-        val b0 = loadTable(sp, d2, wSrc, benv)
-        val b1 = (wAst.stream match {
-          case ss: SingleStream => ss.filter
-          case _ => None
-        }).fold(b0)(f => applyFilter(sp, d2, b0, f, benv))
-        val items2 = itemsOf(expandStar(wAst, b0.columns))
+        val b1 = writerSource(sp, d2, wAst, wSrc, benv)
+        val items2 = itemsOf(expandStar(wAst, b1.columns))
         val seld = b1.select(items2.map { case (it, a2, _) =>
           expr(sqlOf(it.e)).as(a2) }: _*)
         onO match {
@@ -643,12 +634,6 @@ private[api] trait SiddhiQlLive extends Serializable {
         emptyOf(sp, schema), emisOf(st)))
   }
 
-  /** The shared core of the live windowed folds ([[windowedDmlFold]],
-    * rate-over-window): per-(bucket ∪ group keys) algebraic flush
-    * PARTIALS merged componentwise per trigger; `finish` receives the
-    * finalized flush relation (`__wb` + group keys + output attrs) —
-    * also evaluated over an EMPTY flush at build time, so a bad stage
-    * fails at deploy and the caller gets the result prototype. */
   /** Per-writer machinery of one flush-partial fold: derived once at
     * deploy from (filter, groupBy, items, tNs) over a prototype feed
     * frame, reused per trigger. Factored out of [[flushPartialFold]]
@@ -720,6 +705,12 @@ private[api] trait SiddhiQlLive extends Serializable {
       probeSel = df => keyedSel(df).select(keys.map(col): _*))
   }
 
+  /** The shared core of the live windowed folds ([[windowedDmlFold]],
+    * rate-over-window): per-(bucket ∪ group keys) algebraic flush
+    * PARTIALS merged componentwise per trigger; `finish` receives the
+    * finalized flush relation (`__wb` + group keys + output attrs) —
+    * also evaluated over an EMPTY flush at build time, so a bad stage
+    * fails at deploy and the caller gets the result prototype. */
   private[api] def flushPartialFold(feed: DataFrame, filter: Option[Expr],
       groupBy: List[String], items: List[(SelItem, String, Boolean)],
       tNs: Long, finish: (SparkSession, DataFrame) => DataFrame)
@@ -733,6 +724,20 @@ private[api] trait SiddhiQlLive extends Serializable {
       (sp, acc) => finish(sp, p.flushOf(acc)),
       KeyedState(p.keys, (_, _, batch) => p.probeSel(batch))), proto)
   }
+
+  /** Batch twin of the stateless stage environment: re-derives every
+    * stateless derived stream (`defs`, in textual order) from one
+    * micro-batch of the SOURCE via the batch compiler (stateless plans
+    * are chunking-invariant, so the derived batch rows ARE the derived
+    * stream's rows for that trigger). Plan construction only — nothing
+    * executes until used. */
+  private[api] def batchEnv(sp: SparkSession, d2: String, rawBatch: DataFrame,
+      defs: List[(String, Ast)]): Map[String, DataFrame] =
+    defs.foldLeft(Map[String, DataFrame]("events" -> rawBatch)) {
+      case (benv, (t, a)) =>
+        val df = compileAst(sp, d2, a, benv)
+        benv + (t -> benv.get(t).fold(df)(_.unionByName(df)))
+    }
 
   /** The one-state [[LiveFold]] shape every pre-enrichment fold stage
     * uses (table DML, unique:last, sort, frequent). */
@@ -792,23 +797,6 @@ private[api] trait SiddhiQlLive extends Serializable {
     // raw source through these (so one foreachBatch serves stages that
     // need several derived feeds: the DML's and the enrichment's)
     var statelessAsts = List.empty[(String, Ast)]
-    // Batch twin of the stateless stage environment: re-derives every
-    // stateless derived stream from one micro-batch of the SOURCE via
-    // the batch compiler (stateless plans are chunking-invariant, so
-    // the derived batch rows ARE the derived stream's rows for that
-    // trigger). Plan construction only — nothing executes until used.
-    def batchEnv(sp: SparkSession, d2: String, rawBatch: DataFrame,
-        defs: List[(String, Ast)]): Map[String, DataFrame] = {
-      var benv = Map[String, DataFrame]("events" -> rawBatch)
-      defs.foreach { case (t, a) =>
-        val df = compileAst(sp, d2, a, benv)
-        benv += t -> (benv.get(t) match {
-          case Some(prev) => prev.unionByName(df)
-          case None => df
-        })
-      }
-      benv
-    }
     // `f OR ts >= flushCutoff`: keeps the user predicate above the
     // source watermark node (it now references the event-time column)
     // and lets flush sentinels through; real rows (ts < cutoff) see
@@ -1401,7 +1389,8 @@ private[api] trait SiddhiQlLive extends Serializable {
                     // sound (an interval's state drops once the
                     // watermark passes its start).
                     val mdw = new MetadataBuilder()
-                      .putLong("spark.watermarkDelayMs", 60000L).build()
+                      .putLong("spark.watermarkDelayMs", wmNs / 1000000L)
+                      .build()
                     base.select(col("*"),
                         timestamp_millis(
                           expr(s"(ts_ns div ${tNs}L) * ${tNs / 1000000}L"))
@@ -1562,7 +1551,7 @@ private[api] trait SiddhiQlLive extends Serializable {
                 val tNs2 = args2.headOption.getOrElse(
                   fail("delay needs a duration argument"))
                 val md = new MetadataBuilder()
-                  .putLong("spark.watermarkDelayMs", 60000L).build()
+                  .putLong("spark.watermarkDelayMs", wmNs / 1000000L).build()
                 val others = base.columns
                   .filterNot(c => c == "ts" || c == "ts_ns").map(col)
                 val shifted = base.select(others ++ Seq(
@@ -1897,1622 +1886,11 @@ private[api] trait SiddhiQlLive extends Serializable {
                 patternRateFold(b.selectStream(evDs)(proj).toDF(), r,
                   outSchema.map(_._1), schema, needsFl = false)
             }
-          // ENRICHMENT JOIN deployed LIVE: a query joins the table a
-          // sibling DML stage maintains — the reference's canonical
-          // enrichment loop (a stream updates UserState, a sibling
-          // query enriches against it). Semantics are PER-EVENT: an
-          // event sees the table as of its own position in the stream
-          // (definition order makes an event's own update visible:
-          // `<=` on the (ts_ns, event_id) arrival order), which makes
-          // the live result independent of micro-batch boundaries —
-          // the batch asof oracle and the live run agree for ANY
-          // chunking. Runs in the foreachBatch fold channel: per
-          // trigger the maintained table folds first, then the batch's
-          // events fill their enrichment state from (accumulated
-          // generations ∪ same-batch updates at-or-before them) in ONE
-          // keyed window pass — a single shuffle on the table key,
-          // exactly the partitioning a 100× scale-up wants (state and
-          // events co-partition; no per-event lookups, no broadcast of
-          // unbounded state).
           case jx: JoinStream
               if dmlInfos.contains(jx.left.table) ||
                  dmlInfos.contains(jx.right.table) =>
-            if (partKey.nonEmpty)
-              fail("enrichment joins inside a partition block are not " +
-                "deployed (v1)")
-            val j = enrichmentSides(jx, dmlInfos.contains)
-            if (j.unidirectional)
-              fail("live enrichment joins are already one-directional " +
-                "(events trigger, the table holds state) — drop " +
-                "`unidirectional`")
-            val tSide = j.right; val sSide = j.left
-            val tName = tSide.table
-            if (tSide.window.nonEmpty)
-              fail("live enrichment joins read the whole maintained " +
-                s"table '$tName' (v1) — no window on the table side")
-            if (sSide.window.nonEmpty)
-              fail("live enrichment joins are per-event lookups (v1) — " +
-                "no window on the stream side")
-            val writers = dmlInfos(tName)
-            val (dAst, dAct, dSchema, dSrc) = writers.head
-            val sName = sSide.table
-            if (statefulStreams.contains(sName))
-              fail(s"live deployment (v1): '$sName' is an aggregation " +
-                "output — it cannot feed an enrichment join")
-            val derivable = Set("events") ++ statelessAsts.map(_._1)
-            (sName +: writers.map(_._4)).foreach { n2 =>
-              if (!derivable.contains(n2))
-                fail(s"live enrichment joins derive their feeds from " +
-                  s"the source through stateless stages; '$n2' is not " +
-                  "(windowed/rate-limited/joined stages cannot be " +
-                  "re-derived per batch)")
-            }
-            val statelessSnap = statelessAsts
-            val sp0 = src.sparkSession
-            val hasAggE = ast.select.exists(it => containsAgg(it.e)) ||
-              ast.groupBy.nonEmpty
-            // table maintenance for the fold channel: single-writer =
-            // the plain keyed DML merge; multi-writer = the interleaved
-            // emission-order merge (applyDmlMulti), batch-key probes =
-            // the union of every writer's key projection
-            def tApply(sp: SparkSession, d2: String, accT: DataFrame,
-                benv: Map[String, DataFrame]): DataFrame =
-              if (writers.length == 1)
-                applyDml(sp, d2, dAst, dAct, dSchema, accT, benv)
-              else applyDmlMulti(sp, d2, writers, dSchema, accT, benv)
-            def tMode: StateMode = {
-              val m0 =
-                if (writers.length == 1)
-                  dmlStateMode(dAst, dAct, dSchema, dSrc,
-                    (sp, d2, batch) =>
-                      batchEnv(sp, d2, batch, statelessSnap))
-                else dmlStateModeMulti(writers, tName, dSchema,
-                  (sp, d2, batch) =>
-                    batchEnv(sp, d2, batch, statelessSnap))
-              // insert-only log tables read by THIS enrichment join
-              // get a KEYED store on the join key columns (instead of
-              // AppendState), so the per-trigger read bucket-restricts
-              // to the batch's event keys — otherwise the table's
-              // per-trigger scan grows with deployment lifetime
-              m0 match {
-                case AppendState
-                    if dAct.isInstanceOf[InsertInto] =>
-                  dmlStateModeMulti(writers, tName, dSchema,
-                    (sp, d2, batch) =>
-                      batchEnv(sp, d2, batch, statelessSnap),
-                    fallbackKeys = {
-                      val sAliasM = j.leftAlias.getOrElse(sName)
-                      keyEqsOf(j.on, tName, {
-                        case q :: c :: Nil
-                            if q.equalsIgnoreCase(sAliasM) ||
-                              q.equalsIgnoreCase(sName) => c
-                        case parts => parts.mkString(".")
-                      }).map(_._1).distinct
-                    })
-                case m => m
-              }
-            }
-            // r13 (VERDICT r12 #1): only keys present in THIS batch's
-            // events can produce join output this trigger — every
-            // other accumulated row enters the as-of window pass and
-            // is filtered at `__isE` without touching any event. So
-            // the per-trigger table read PRUNES to the batch's event
-            // join-key domain: bucket-restricted at the generation level
-            // (the keyed store hashes on the DML keys, which the
-            // deploy-time prototype asserts equal the join keys) and
-            // null-safe-semi-joined at the row level (the window pass
-            // partitions null keys together, so === would drop a
-            // null-keyed event's state). Acute for event-log tables,
-            // whose live row count grows with deployment lifetime:
-            // the un-pruned read is O(all live rows); this is O(rows
-            // of batch-touched keys). Lazy: the join-key extraction
-            // must not run before the prototype's own diagnostics.
-            lazy val enrichJoinKeys: List[(String, String)] = {
-              val sAliasK = j.leftAlias.getOrElse(sName)
-              keyEqsOf(j.on, tName, {
-                case q :: c :: Nil if q.equalsIgnoreCase(sAliasK) ||
-                    q.equalsIgnoreCase(sName) => c
-                case parts => parts.mkString(".")
-              })
-            }
-            var enrichReadGen = 0
-            def batchKeyRel(sp: SparkSession, d2: String,
-                batch: DataFrame,
-                benv: Map[String, DataFrame]): DataFrame = {
-              val keyCols = enrichJoinKeys.map(_._1).distinct
-              val sb0 = envLookup(benv, sName).getOrElse(batch)
-              val sb = sSide.filter.fold(sb0)(f =>
-                applyFilter(sp, d2, sb0, f, benv))
-              sb.select(keyCols.map { kc =>
-                expr(enrichJoinKeys.find(_._1 == kc).get._2)
-                  .cast(dSchema(kc).dataType).as(kc) }: _*).distinct()
-            }
-            // null-safe key-domain prune of any table-side relation
-            // (the accumulated table or a flush relation): only rows
-            // of batch-event keys can produce join output this
-            // trigger. Falls through when the relation doesn't carry
-            // the key columns (defensive; the prototype asserts it).
-            def pruneToBatchKeys(rel: DataFrame, kdf: DataFrame)
-                : DataFrame = {
-              val keyCols = enrichJoinKeys.map(_._1).distinct
-              if (!keyCols.forall(rel.columns.contains)) {
-                // defensive fallback — RECORD it so an unexpected
-                // unpruned read shows in the read-prune gate instead
-                // of silently regressing the O(batch) guarantee
-                foldReadProbe.foreach { buf =>
-                  enrichReadGen += 1
-                  buf += ((enrichReadGen,
-                    s"__prune_fallback:$tName", -1L))
-                }
-                rel
-              } else {
-                val pruned = rel.as("t").join(kdf.as("k"),
-                  keyCols.map(c => col(s"t.$c")
-                      .cast(dSchema(c).dataType) <=> col(s"k.$c"))
-                    .reduce(_ && _), "left_semi")
-                  .select(rel.columns.toSeq.map(c => col(s"t.$c")): _*)
-                foldReadProbe.foreach { buf =>
-                  enrichReadGen += 1
-                  buf += ((enrichReadGen, tName, pruned.count()))
-                }
-                pruned
-              }
-            }
-            // null-safe row-level prune of an __mk*-keyed state read
-            // against the key relation keyedRead handed back (a
-            // LocalRelation for small batches) — shared by every
-            // channel that keys a store on its join-key projections
-            def pruneMkG(rel: DataFrame, kdf2: DataFrame,
-                mkCols2: Seq[String]): DataFrame =
-              rel.as("t").join(kdf2.as("k"),
-                  mkCols2.map(c2 =>
-                    col(s"t.$c2") <=> col(s"k.$c2"))
-                    .reduce(_ && _), "left_semi")
-                .select(rel.columns.toSeq
-                  .map(c2 => col(s"t.$c2")): _*)
-            def tReadPruned(sp: SparkSession, d2: String,
-                acc: Map[String, LiveState], batch: DataFrame,
-                benv: Map[String, DataFrame]): DataFrame = {
-              // keyedRead hands back the key relation to prune with —
-              // a collected LocalRelation when the batch's key set is
-              // small, so the whole per-trigger read costs ONE probe
-              // job and the semi-join re-evaluates nothing
-              val (rel, kdfEff) = acc(tName)
-                .keyedRead(batchKeyRel(sp, d2, batch, benv))
-              pruneToBatchKeys(rel, kdfEff)
-            }
-            /** The shared "aggregation ABOVE the enrichment join"
-              * tail (r16 — one definition for the per-event, windowed
-              * and windowed event-log read channels, deleting two
-              * near-identical inline copies): validates the v1
-              * contract (group keys = the aliases of the
-              * non-aggregate select items, stream-side), rewrites the
-              * read to its per-pair PROJECTION form (`astRows` — the
-              * branch runs it per trigger with whatever override
-              * mechanism it maintains), and folds the per-trigger
-              * enriched rows as FoldAlg algebraic partials keyed on
-              * the group aliases. having (then deployApp's order,
-              * offset and limit) applies ONCE over the finalized
-              * groups — chunking-invariant
-              * by construction, because every stream event (and so
-              * every per-pair row) lands in exactly one trigger. */
-            final class EnrichAggTail {
-              private val items = itemsOf(ast)
-              private val keyItems = items.filter(!_._3)
-              private val keyAliases = keyItems.map(_._2)
-              if (ast.groupBy.sorted != keyAliases.sorted.toList)
-                fail("live enrichment aggregation (v1) groups by " +
-                  "exactly the aliases of its non-aggregate select " +
-                  s"items (non-aggregate [${keyAliases.mkString(", ")}" +
-                  s"], group by [${ast.groupBy.mkString(", ")}])")
-              private val comps = scala.collection.mutable.Buffer
-                .empty[(String, String, Option[Expr])]
-              private def rw(e: Expr): Expr = e match {
-                case Call(None, n, args0) if aggNames(n.toLowerCase) =>
-                  val base = s"__g${comps.length}"
-                  comps += ((base, n.toLowerCase, args0.headOption))
-                  FoldAlg.rewrite(n.toLowerCase, base)
-                case Call(ns2, n, as2) => Call(ns2, n, as2.map(rw))
-                case Bin(op, l2, r2) => Bin(op, rw(l2), rw(r2))
-                case Not(x) => Not(rw(x))
-                case Neg(x) => Neg(rw(x))
-                case other2 => other2
-              }
-              private val finals: Seq[(String, Expr)] = items.map {
-                case (it, a2, isAgg) =>
-                  a2 -> (if (isAgg) rw(it.e) else Ref(List(a2)))
-              }
-              comps.foreach { case (_, n, argO) =>
-                if (n != "count" && argO.isEmpty)
-                  fail(s"$n(...) needs an argument")
-              }
-              if (comps.isEmpty)
-                fail("live enrichment aggregation selects at least " +
-                  "one aggregate")
-              // group keys are STREAM-side expressions (v1): the
-              // touched-bucket probe evaluates them on the raw batch,
-              // before any state is read
-              keyItems.foreach { case (it, _, _) =>
-                if (refsTable(it.e, tName) ||
-                    j.rightAlias.exists(refsTable(it.e, _)))
-                  fail("live enrichment aggregation group keys are " +
-                    "STREAM-side expressions (v1) — a table-side " +
-                    "key needs the projection form + a downstream " +
-                    "stage")
-              }
-              private val sAliasA = j.leftAlias.getOrElse(sName)
-              private def streamKeySql(e: Expr): String = sqlOfWith(e, {
-                case q2 :: c :: Nil if q2.equalsIgnoreCase(sAliasA) ||
-                    q2.equalsIgnoreCase(sName) => c
-                case c :: Nil => c
-                case parts => fail("live enrichment aggregation " +
-                  "group keys are stream-side (v1); got " +
-                  s"'${parts.mkString(".")}'")
-              })
-              private val keySqls = keyItems.map { case (it, a2, _) =>
-                (streamKeySql(it.e), a2) }
-              // per-event rows: group-key exprs + aggregate arguments
-              private val rowsSel = keyItems.map { case (it, a2, _) =>
-                SelItem(it.e, Some(a2)) } ++
-                comps.toList.flatMap { case (base, _, argO) =>
-                  argO.map(a0 =>
-                    SelItem(a0, Some(s"${base}_x"))).toList }
-              val astRows: Ast = ast.copy(select = rowsSel,
-                groupBy = Nil, having = None, orderBy = Nil,
-                limit = None, offset = None)
-              private val keys = if (keyAliases.isEmpty) Seq("__k")
-                                 else keyAliases
-              private def withK(df: DataFrame): DataFrame =
-                if (keyAliases.isEmpty) df.withColumn("__k", lit(0L))
-                else df
-              private def partialOf(df: DataFrame): DataFrame = {
-                val aggs: Seq[Column] = comps.toSeq.flatMap {
-                  case (base, n, argO) =>
-                    FoldAlg.partialCols(n, base,
-                      argO.map(_ => col(s"${base}_x")))
-                }
-                df.groupBy(keys.map(col): _*)
-                  .agg(aggs.head, aggs.tail: _*)
-              }
-              // deploy-time prototypes: fail fast + schemas (routes
-              // astRows through the branch-shared batch validations)
-              private val protoRows = enrichCompile(sp0, "", astRows,
-                j, writers, emptyOf(sp0, dSchema),
-                batchEnv(sp0, "", emptyOf(sp0, srcTs.schema),
-                  statelessSnap))
-              private val schemaA = partialOf(withK(protoRows)).schema
-              val protoOut: DataFrame = emptyOf(sp0, schemaA)
-                .select(finals.map { case (a2, e2) =>
-                  expr(sqlOf(e2)).as(a2) }: _*)
-              /** The keyed partial state this tail folds into. */
-              def stateEntry(stName: String)
-                  : (String, StructType, StateMode) =
-                (stName, schemaA, KeyedState(keys, (sp, d2, batch) => {
-                  if (keyAliases.isEmpty)
-                    batch.select(lit(0L).as("__k"))
-                  else {
-                    val benv = batchEnv(sp, d2, batch, statelessSnap)
-                    val sb0 = envLookup(benv, sName).getOrElse(batch)
-                    val sb = sSide.filter.fold(sb0)(f =>
-                      applyFilter(sp, d2, sb0, f, benv))
-                    sb.select(keySqls.map { case (sq, a2) =>
-                      expr(sq).as(a2) }: _*)
-                  }
-                }))
-              /** Merge this trigger's enriched per-pair rows into the
-                * accumulated keyed partials (componentwise FoldAlg). */
-              def mergeInto(slice: DataFrame, enriched: DataFrame)
-                  : DataFrame = {
-                val u = partialOf(withK(enriched))
-                slice.as("t").join(u.as("u"),
-                    keys.map(k2 =>
-                      col(s"t.$k2") <=> col(s"u.$k2"))
-                      .reduce(_ && _), "full_outer")
-                  .select(keys.map(k2 => coalesce(col(s"u.$k2"),
-                      col(s"t.$k2")).as(k2)) ++
-                    comps.toSeq.flatMap { case (b2, n, _) =>
-                      FoldAlg.mergeCols(n, b2) }: _*)
-              }
-              /** Finalize + having. */
-              def finish(acc: DataFrame): DataFrame = {
-                val fin = acc.select(finals.map { case (a2, e2) =>
-                  expr(sqlOf(e2)).as(a2) }: _*)
-                ast.having.fold(fin)(h => fin.where(expr(sqlOf(h))))
-              }
-            }
-            // built on demand: the constructor VALIDATES, so only
-            // hasAggE arms may touch it
-            lazy val aggTail = new EnrichAggTail
-            val winWriterTNs: Option[Long] = dAst.stream match {
-              case ss2: SingleStream =>
-                if (ss2.window.nonEmpty && ss2.window.get.args.isEmpty)
-                  fail(s"windowed DML writer on '$tName' has a " +
-                    "window with no duration")
-                ss2.window.foreach(
-                  requireEpochTb(_, "enrichment-read writer windows"))
-                ss2.window.map(_.args.head)
-              case _ => None
-            }
-            val winTNsPer: List[Option[Long]] = writers.map {
-              case (wAst2, _, _, _) => wAst2.stream match {
-                case ss2: SingleStream => ss2.window match {
-                  case Some(w2 @ WindowSpec(n2, t2 :: _, _))
-                      if n2.equalsIgnoreCase("timebatch") =>
-                    requireEpochTb(w2,
-                      "enrichment-read writer windows")
-                    Some(t2)
-                  case Some(w2) => fail("windowed-writer enrichment " +
-                    s"reads a timeBatch writer (v1); '#window." +
-                    s"${w2.name}' flush emissions have no per-event " +
-                    "visibility instant")
-                  case None => None
-                }
-                case _ => None
-              }
-            }
-            val hasInsL = writers.exists(_._2.isInstanceOf[InsertInto])
-            if (hasInsL && winTNsPer.exists(_.nonEmpty)) {
-              // LIVE per-event reads of EVENT-LOG tables with
-              // WINDOWED members (r15, deleting the last live/batch
-              // asymmetry of the composition matrix): each windowed
-              // (timeBatch) writer holds cross-trigger flush PARTIALS
-              // — flushOf(fullPost) is the complete per-bucket
-              // emission relation at TRUE ords (a bucket whose end ≤
-              // an event's ts is complete by in-order arrival, and
-              // open buckets sort after every current event) — and
-              // each per-event writer holds its tagged EMISSION LOG
-              // (dmlEmissions rows + ord). BOTH kinds of state are
-              // keyed on the JOIN keys (r16 for the flush partials),
-              // so every per-trigger read bucket-prunes to the
-              // batch's event keys — O(batch-key history), never the
-              // whole accumulated log/partial store. Per
-              // trigger, enrichCompile's event-log construction runs
-              // over (pruned prior logs ∪ this batch's emissions) and
-              // the flush relations — everything at true ords, so the
-              // per-trigger pass IS the batch construction restricted
-              // to the batch's keys: chunking-invariant by
-              // construction, live ≡ batch by shared code.
-              // aggregation (r16, VERDICT r15 #2): the shared
-              // EnrichAggTail folds the same per-pair relation the
-              // projection arm emits — each read event lands in
-              // exactly one trigger with its COMPLETE pair set (the
-              // emission relations carry all prior history for its
-              // keys), so per-trigger partials sum to the batch
-              // aggregation under any chunking
-              val protoEnvL = batchEnv(sp0, "",
-                emptyOf(sp0, srcTs.schema), statelessSnap)
-              // deploy-time prototype WITHOUT overrides — routes
-              // through enrichLogCompile's own validations (windowed
-              // forms, key checks, shape routing); the agg arm routes
-              // them through aggTail's projection-form prototype
-              // instead (enrichCompile is projection-only by design)
-              val protoL =
-                if (hasAggE) aggTail.protoOut
-                else enrichCompile(sp0, "", ast, j, writers,
-                  emptyOf(sp0, dSchema), protoEnvL)
-              val keyOrderL = enrichJoinKeys.map(_._1).distinct.sorted
-              val mkColsL = keyOrderL.indices.map(j2 => s"__mk$j2")
-              def keyRhsOf(wi: Int): List[(String, String)] =
-                writers(wi)._2 match {
-                  case UpsertTable(_, _, on2) => keyEqsOf(on2, tName)
-                  case DeleteTable(_, on2) => keyEqsOf(on2, tName)
-                  // an insert row's key values are its own outputs
-                  case _ => keyOrderL.map(kc => kc -> kc).toList
-                }
-              def withMkL(rel: DataFrame, wi: Int): DataFrame = {
-                val rhs = keyRhsOf(wi)
-                rel.select(keyOrderL.zipWithIndex.map {
-                  case (kc, j2) =>
-                    expr(rhs.find(_._1 == kc).get._2)
-                      .cast(dSchema(kc).dataType).as(s"__mk$j2") } ++
-                  rel.columns.toSeq.map(col): _*)
-              }
-              def pruneMkL(rel: DataFrame, kdf2: DataFrame)
-                  : DataFrame =
-                rel.as("t").join(kdf2.as("k"),
-                    mkColsL.map(c2 =>
-                      col(s"t.$c2") <=> col(s"k.$c2"))
-                      .reduce(_ && _), "left_semi")
-                  .select(rel.columns.toSeq
-                    .map(c2 => col(s"t.$c2")): _*)
-              // a per-event writer's tagged emission delta: its
-              // dmlEmissions rows + the 3-field replay ord
-              def logDelta(sp: SparkSession, d2: String, wi: Int,
-                  benv: Map[String, DataFrame]): DataFrame =
-                dmlEmissions(sp, d2, writers(wi)._1, writers(wi)._2,
-                  dSchema, benv)._1
-                  .withColumn("__ord", struct(col("__g_ord.ts_ns"),
-                    col("__g_ord.event_id"), lit(wi.toLong).as("w")))
-                  .drop("__g_ord")
-              val infosL: List[Either[FlushPieces, StructType]] =
-                writers.zipWithIndex.map {
-                  case ((wAst2, wAct2, _, wSrc2), wi) =>
-                    winTNsPer(wi) match {
-                      case Some(t2)
-                          if !wAct2.isInstanceOf[DeleteTable] =>
-                        val ss2 =
-                          wAst2.stream.asInstanceOf[SingleStream]
-                        Left(flushPiecesOf(
-                          loadTable(sp0, "", wSrc2, protoEnvL),
-                          ss2.filter, wAst2.groupBy, itemsOf(wAst2),
-                          t2))
-                      case _ =>
-                        Right(withMkL(
-                          logDelta(sp0, "", wi, protoEnvL), wi).schema)
-                    }
-                }
-              // (r16, VERDICT r15 #1) key each windowed member's
-              // flush-partial store on the JOIN-key projections
-              // (__mk*) — the elog discipline applied to the wst
-              // states — so the per-trigger read can bucket-restrict
-              // to the batch's keys via keyedRead instead of the r15
-              // full() scan (that state grows one row per (key,
-              // bucket) FOREVER under log semantics, so the unpruned
-              // scan was O(history) per trigger). The table key
-              // columns must be NON-AGGREGATE outputs of the windowed
-              // writer: an aggregate-valued key changes as partials
-              // merge, which would move state rows across buckets.
-              // Non-agg key item exprs evaluate over BOTH the partial
-              // state rows (group columns survive partialOf) and the
-              // writer's raw source rows (the touched-bucket probe).
-              // (r17, VERDICT r16 #3 / ADVICE) an AGGREGATE-valued or
-              // non-output key no longer REFUSES: that member keeps
-              // the r15 full() read on a (bucket, group)-keyed store —
-              // correct (merge stability never mattered for the
-              // unkeyed store), just key-unpruned — restoring the
-              // apps the r16 fail-fast had narrowed out.
-              val winKeyExprsL: Map[Int, List[(String, Expr)]] =
-                writers.indices.flatMap { wi =>
-                  infosL(wi).left.toOption.flatMap { _ =>
-                    val items2 = itemsOf(writers(wi)._1)
-                    val picked = keyOrderL.map { kc =>
-                      items2.find(_._2 == kc) match {
-                        case Some((it2, _, false)) => Some(kc -> it2.e)
-                        case _ => None
-                      }
-                    }
-                    if (picked.exists(_.isEmpty)) None
-                    else Some(wi -> picked.flatten)
-                  }
-                }.toMap
-              def mkOfW(wi: Int, rel: DataFrame): DataFrame =
-                rel.select(keyOrderL.zipWithIndex.map {
-                  case (kc, j2) =>
-                    expr(sqlOf(winKeyExprsL(wi)
-                        .find(_._1 == kc).get._2))
-                      .cast(dSchema(kc).dataType).as(s"__mk$j2") } ++
-                  rel.columns.toSeq.map(col): _*)
-              Folded(protoL.schema, () => {
-                val statesL: Seq[(String, StructType, StateMode)] =
-                  writers.indices.map { wi =>
-                    infosL(wi) match {
-                      case Left(p) if winKeyExprsL.contains(wi) =>
-                        (s"wst$wi",
-                          mkOfW(wi, emptyOf(sp0, p.stateSchema)).schema,
-                          KeyedState(mkColsL, (sp, d2, batch) => {
-                            val benv =
-                              batchEnv(sp, d2, batch, statelessSnap)
-                            val base0 =
-                              loadTable(sp, d2, writers(wi)._4, benv)
-                            val base = (writers(wi)._1.stream match {
-                              case ss3: SingleStream => ss3.filter
-                              case _                 => None
-                            }).fold(base0)(f =>
-                              applyFilter(sp, d2, base0, f, benv))
-                            // key exprs are non-agg writer outputs —
-                            // they evaluate over raw source rows, so
-                            // the probe needs no partial aggregation
-                            mkOfW(wi, base)
-                              .select(mkColsL.map(col): _*)
-                          }))
-                      case Left(p) =>
-                        // aggregate-keyed member fallback (r17): the
-                        // (bucket, group)-keyed store with the r15
-                        // full() read
-                        (s"wst$wi", p.stateSchema,
-                          KeyedState(p.keys, (sp, d2, batch) =>
-                            p.probeSel(loadTable(sp, d2,
-                              writers(wi)._4,
-                              batchEnv(sp, d2, batch, statelessSnap)))))
-                      case Right(sch) => (s"elog$wi", sch,
-                        KeyedState(mkColsL, (sp, d2, batch) =>
-                          withMkL(logDelta(sp, d2, wi,
-                            batchEnv(sp, d2, batch, statelessSnap)),
-                            wi).select(mkColsL.map(col): _*)))
-                    }
-                  } :+ (if (hasAggE)
-                          aggTail.stateEntry("aggst")
-                        else ("__out", protoL.schema, AppendState))
-                // one trigger's state advance: merge every writer's
-                // state and assemble the per-writer emission
-                // relations (both arms share it verbatim)
-                def stepL(sp: SparkSession, d2: String,
-                    acc: Map[String, LiveState], batch: DataFrame,
-                    benv: Map[String, DataFrame])
-                    : (Map[String, DataFrame], Map[Int, DataFrame]) = {
-                    val kdf = batchKeyRel(sp, d2, batch, benv)
-                    val kdfMk = kdf.select(keyOrderL.zipWithIndex
-                      .map { case (kc, j2) =>
-                        col(kc).as(s"__mk$j2") }: _*)
-                    var emisM = Map.empty[Int, DataFrame]
-                    val stUpd = writers.indices.map { wi =>
-                      infosL(wi) match {
-                        case Left(p) =>
-                          val keyedWi = winKeyExprsL.contains(wi)
-                          val st1 = p.merge(
-                            if (keyedWi)
-                              acc(s"wst$wi").slice.drop(mkColsL: _*)
-                            else acc(s"wst$wi").slice,
-                            p.partialOf(loadTable(sp, d2,
-                              writers(wi)._4, benv)))
-                          // bucket-restricted read of the batch's
-                          // keys (r16): only batch-event keys can
-                          // emit this trigger, and the store is keyed
-                          // on the same __mk* projection — so the
-                          // read scans O(batch-key buckets), not the
-                          // whole ever-growing partial history.
-                          // Aggregate-keyed members (r17 fallback)
-                          // keep the full() read.
-                          val full0 =
-                            if (keyedWi) {
-                              val (priorW, kdfWEff) =
-                                acc(s"wst$wi").keyedRead(kdfMk)
-                              val r = pruneMkL(priorW, kdfWEff)
-                                .drop(mkColsL: _*)
-                              foldReadProbe.foreach { buf =>
-                                enrichReadGen += 1
-                                buf += ((enrichReadGen, s"wst$wi",
-                                  r.count()))
-                              }
-                              r
-                            } else acc(s"wst$wi").full()
-                          val fullPost = full0.as("t")
-                            .join(st1.select(p.keys.map(col): _*)
-                                .distinct().as("u"),
-                              p.keys.map(k2 =>
-                                col(s"t.$k2") <=> col(s"u.$k2"))
-                                .reduce(_ && _), "left_anti")
-                            .select(full0.columns.toSeq
-                              .map(c2 => col(s"t.$c2")): _*)
-                            .unionByName(st1)
-                          emisM += wi ->
-                            pruneToBatchKeys(p.flushOf(fullPost), kdf)
-                              .withColumn("__ord", struct(
-                                ((col("__wb") + lit(1L)) * lit(p.tNs))
-                                  .cast("long").as("ts_ns"),
-                                lit(0L).as("event_id"),
-                                lit(wi.toLong).as("w")))
-                              .drop("__wb")
-                          s"wst$wi" ->
-                            (if (keyedWi) mkOfW(wi, st1) else st1)
-                        case Right(_) =>
-                          val delta = logDelta(sp, d2, wi, benv)
-                          val (priorRel, kdfEff) =
-                            acc(s"elog$wi").keyedRead(kdfMk)
-                          emisM += wi ->
-                            pruneMkL(priorRel, kdfEff)
-                              .drop(mkColsL: _*).unionByName(delta)
-                          s"elog$wi" -> acc(s"elog$wi").slice
-                            .unionByName(withMkL(delta, wi))
-                      }
-                    }.toMap
-                    (stUpd, emisM)
-                }
-                LiveFold(srcTs, statesL,
-                  (sp, d2, acc, batch) => {
-                    val benv = batchEnv(sp, d2, batch, statelessSnap)
-                    val (stUpd, emisM) =
-                      stepL(sp, d2, acc, batch, benv)
-                    if (hasAggE)
-                      stUpd + ("aggst" -> aggTail.mergeInto(
-                        acc("aggst").slice,
-                        enrichCompile(sp, d2, aggTail.astRows, j,
-                          writers, emptyOf(sp, dSchema), benv,
-                          emisOverride = emisM)))
-                    else
-                      stUpd + ("__out" -> enrichCompile(sp, d2, ast,
-                        j, writers, emptyOf(sp, dSchema), benv,
-                        emisOverride = emisM))
-                  },
-                  (_, acc) =>
-                    if (hasAggE) aggTail.finish(acc("aggst"))
-                    else acc("__out"))
-              })
-            } else if (writers.length > 1 &&
-                winTNsPer.exists(_.nonEmpty)) {
-              // MIXED windowed + per-event writer group read LIVE
-              // through the as-of join (r14, deleting the last
-              // read-during-replay bound for the implicit-set case):
-              // the key insight is that with in-order replay every
-              // PRIOR trigger's update is admissible to every current
-              // event, and among one last-wins writer's updates for a
-              // key only the LATEST can ever win a future as-of pick —
-              // so each per-event writer's cross-trigger history
-              // collapses to a latest-row-per-key state CARRYING ITS
-              // TRUE `__ord` (O(key domain), no log growth), each
-              // windowed writer keeps its flush partials, and per
-              // trigger enrichCompile runs the one keyed window pass
-              // with (prior latest rows ∪ this batch's rows) as each
-              // per-event writer's update relation (uRelOverride) and
-              // each windowed writer's post-merge flush relation
-              // (winFlush) — true ords everywhere, so flushes
-              // interleave between per-event updates exactly as the
-              // batch replay orders them. v1 scope: implicit-set
-              // upsert writers (accumulator folds need frozen-delta
-              // sums, sweepers need tombstone segments — both named
-              // below); aggregation via a downstream stage.
-              val groupKinds = writers.map { case (_, wAct2, _, _) =>
-                wAct2 match {
-                  case UpsertTable(_, set2, _) if set2.isEmpty =>
-                    "upsert"
-                  case UpsertTable(_, set2, _) if set2.forall {
-                    case (c2, e2) => foldSetOf(tName, c2, e2).nonEmpty
-                  } => "fold"
-                  case _: DeleteTable => "delete"
-                  case _ => "other"
-                }
-              }.distinct.sorted
-              // composable mixed-read shapes: all-implicit-set,
-              // all-fold, implicit ± tombstone sweepers (a prior
-              // tombstone history collapses to the LAST tombstone per
-              // key — the only mark that can still decide a future
-              // as-of pick), and — r15 — implicit + fold SHAPE mixes
-              // (an implicit upsert is a segment RESET; the fold
-              // writers' two-row collapse re-scopes past the latest
-              // PAST reset at every merge — see the pass-2 scoping
-              // below). Fold + sweepers stays refused: sweeps SEGMENT
-              // the running sums, so the two-row collapse would need
-              // per-segment recomputation on every tombstone arrival.
-              if (groupKinds != List("upsert") &&
-                  groupKinds != List("fold") &&
-                  groupKinds != List("delete", "upsert") &&
-                  groupKinds != List("fold", "upsert"))
-                fail("live enrichment reads of a MIXED windowed + " +
-                  s"per-event writer group on '$tName' (v1) take " +
-                  "implicit-set and/or accumulator-fold `update or " +
-                  "insert` writers, implicit ± tombstone sweepers — " +
-                  "general expr-set shapes and fold + sweeper " +
-                  "mixes (sweeps segment the running sums) keep the " +
-                  "recorded bound: keep those writers on their own " +
-                  "table, or read the mixed table at end of replay " +
-                  s"(`from $tName select ...`)")
-              val isFoldGroup = groupKinds == List("fold")
-              val isShapeMix = groupKinds == List("fold", "upsert")
-              // per-writer shape (parallel to `writers`): "upsert"
-              // (implicit reset), "fold", or "delete"
-              val wKinds: List[String] = writers.map {
-                case (_, wAct2, _, _) => wAct2 match {
-                  case UpsertTable(_, set2, _) if set2.isEmpty =>
-                    "upsert"
-                  case _: UpsertTable => "fold"
-                  case _ => "delete"
-                }
-              }
-              if (hasAggE)
-                fail("live enrichment aggregation over a MIXED " +
-                  "windowed + per-event writer group (v1): use the " +
-                  "projection form and aggregate in a downstream stage")
-              val protoEnvM = batchEnv(sp0, "",
-                emptyOf(sp0, srcTs.schema), statelessSnap)
-              val keysPer: List[List[(String, String)]] =
-                writers.map { case (_, wAct2, _, _) => wAct2 match {
-                  case UpsertTable(_, _, on2) => keyEqsOf(on2, tName)
-                  case DeleteTable(_, on2)    => keyEqsOf(on2, tName)
-                  case _ => Nil
-                } }
-              val keyOrderM = keysPer.head.map(_._1).distinct.sorted
-              val nK = keyOrderM.length
-              val mkCols = (0 until nK).map(j2 => s"__mk$j2")
-              def withMk(rel: DataFrame, wi: Int): DataFrame =
-                rel.select(keyOrderM.zipWithIndex.map { case (kc, j2) =>
-                  expr(keysPer(wi).find(_._1 == kc).get._2)
-                    .cast(dSchema(kc).dataType).as(s"__mk$j2") } ++
-                  rel.columns.toSeq.map(col): _*)
-              // fold groups (r14): every state/batch row carries a
-              // PRE-EVALUATED `__fd` delta struct (uTagUpd consumes it
-              // by name), because the collapsed sum rows below have no
-              // per-row delta expression — their delta IS the sum
-              val foldSpecsPerM: List[List[(String, (String, Expr))]] =
-                writers.map { case (_, wAct2, _, _) => wAct2 match {
-                  case UpsertTable(_, set2, _) => set2.flatMap {
-                    case (c2, e2) => foldSetOf(tName, c2, e2)
-                      .map(f2 => c2 -> f2) }
-                  case _ => Nil
-                } }
-              val foldColsM: List[String] =
-                if (isFoldGroup || isShapeMix)
-                  foldSpecsPerM.find(_.nonEmpty)
-                    .getOrElse(Nil).map(_._1)
-                else Nil
-              def fdEval(rel: DataFrame, wi: Int): DataFrame =
-                if (!(isFoldGroup ||
-                    (isShapeMix && wKinds(wi) == "fold"))) rel
-                else {
-                  val outC = rel.columns.toSet
-                  def dSql(e2: Expr): String = sqlOfWith(e2, {
-                    case c2 :: Nil if outC.contains(c2) => c2
-                    case parts => fail(s"fold delta reference " +
-                      s"'${parts.mkString(".")}' is not a DML select " +
-                      "output attribute")
-                  })
-                  rel.withColumn("__fd", struct(foldColsM.map { c2 =>
-                    expr(dSql(foldSpecsPerM(wi)
-                      .find(_._1 == c2).get._2._2))
-                      .cast(dSchema(c2).dataType).as(c2) }: _*))
-                }
-              // per writer: Left(flush pieces) / Right(per-event-state
-              // schema) — both derived over empty prototypes at deploy
-              val infosM: List[Either[FlushPieces, StructType]] =
-                writers.zipWithIndex.map {
-                  case ((wAst2, wAct2, _, wSrc2), wi) =>
-                    winTNsPer(wi) match {
-                      // a windowed DELETE never gets flush pieces —
-                      // the deploy-time enrichCompile prototype below
-                      // refuses it by name (uTagDel's window check)
-                      case Some(t2)
-                          if !wAct2.isInstanceOf[DeleteTable] =>
-                        val ss2 = wAst2.stream.asInstanceOf[SingleStream]
-                        Left(flushPiecesOf(
-                          loadTable(sp0, "", wSrc2, protoEnvM),
-                          ss2.filter, wAst2.groupBy, itemsOf(wAst2), t2))
-                      case _ =>
-                        val (protoRel, _) = perEventURel(sp0, "",
-                          wAst2, wSrc2, wi, protoEnvM)
-                        Right(withMk(fdEval(protoRel, wi), wi).schema)
-                    }
-                }
-              // r15 (VERDICT r14 #2): the single-windowed path's
-              // TIME-BANDED base compaction, generalized PER WRITER —
-              // every compactEvery generations each windowed writer's
-              // flush-partial state sheds FROZEN buckets (bucket end ≤
-              // the batch's max ts − wmNs) into a compacted base of
-              // ONE latest flush row per group key, so long-horizon
-              // per-trigger reads stay O(live band + key domain), not
-              // O(every bucket ever flushed). Safe by the same freeze
-              // argument: a bucket frozen at generation g is
-              // admissible to EVERY event of later generations
-              // (in-order replay ⇒ their ts exceed the gen-g bound),
-              // and among ONE writer's admissible flushes per key only
-              // the LATEST ord can win the as-of pick — an older flush
-              // always loses to its own writer's newer one. Implicit-
-              // set (± sweeper) groups only: FOLD flush rows are
-              // DELTAS — every frozen delta still sums into future
-              // as-of values and the group's min-ord row can seed the
-              // 'a' pick, so latest-per-key collapse would be wrong;
-              // fold groups keep the un-compacted band (reads stay
-              // key-pruned).
-              val compactInfoM: Map[Int, (Int, Seq[String], StructType)] =
-                if (isFoldGroup) Map.empty
-                else writers.indices.flatMap { wi =>
-                  infosM(wi) match {
-                    // implicit-set windowed writers only: a FOLD
-                    // writer's flush rows are deltas (see above)
-                    case Left(p) if wKinds(wi) == "upsert" =>
-                      val gb = writers(wi)._1.groupBy
-                      val flushSch =
-                        p.flushOf(emptyOf(sp0, p.stateSchema)).schema
-                      val fCols = flushSch.map(_.name).toSet
-                      if (gb.nonEmpty && gb.forall(fCols.contains))
-                        Some(wi -> ((positiveIntConf(sp0,
-                          "graft.live.compactEvery").getOrElse(8),
-                          gb: Seq[String], flushSch)))
-                      else None
-                    case _ => None
-                  }
-                }.toMap
-              // (r17, VERDICT r16 #1) __mk*-keyed flush-partial
-              // stores for this branch's WINDOWED members — the
-              // discipline the event-log branch proved in r16: a
-              // windowed member whose join keys are NON-AGGREGATE
-              // writer outputs (bucket membership stable under
-              // partial merge; the key item exprs evaluate over raw
-              // source rows AND partial state rows) keys its wst
-              // store and compacted wbase on the join-key
-              // projections, so per-trigger reads bucket-restrict to
-              // the trigger's key domain (batch keys ∪ — for shape
-              // mixes — the fold-touched keys pass 2 reads flushes
-              // for) instead of scanning the whole accumulated
-              // state. A member whose keys are aggregate-valued or
-              // not bare writer outputs keeps the r15 full() read —
-              // a fallback, not a refusal: correct, compaction-
-              // bounded, just key-unpruned.
-              def mkOfKes(kes: List[(String, String, Expr)],
-                  rel: DataFrame, fromFlush: Boolean): DataFrame =
-                rel.select(kes.zipWithIndex.map {
-                  case ((kc, a2, e2), j2) =>
-                    (if (fromFlush) col(a2) else expr(sqlOf(e2)))
-                      .cast(dSchema(kc).dataType).as(s"__mk$j2") } ++
-                  rel.columns.toSeq.map(col): _*)
-              // SHAPE MIXES keep the r16 (bucket, group)-keyed stores
-              // and full() reads end-to-end: pass 2 scopes fold
-              // collapses with windowed flushes for fold-TOUCHED keys
-              // (a superset of the batch's), and restricting the read
-              // through kdfMk ∪ foldKeys re-evaluates the fold delta
-              // lineage inside the keyread collect — measured SLOWER
-              // than the full read it replaced (shapemix 10× arm
-              // +28%). The keyed discipline applies to every other
-              // mixed group.
-              val winMkM: Map[Int, List[(String, String, Expr)]] =
-                if (isShapeMix) Map.empty
-                else writers.indices.flatMap { wi =>
-                  infosM(wi).left.toOption.flatMap { p =>
-                    scala.util.Try {
-                      val items2 = itemsOf(writers(wi)._1)
-                      val picked = keyOrderM.map { kc =>
-                        val rhs =
-                          keysPer(wi).find(_._1 == kc).get._2.trim
-                        val byAlias =
-                          if (rhs.matches("[A-Za-z_][A-Za-z0-9_]*"))
-                            items2.find(_._2 == rhs)
-                          else None
-                        byAlias.orElse(items2.find(_._2 == kc)) match {
-                          case Some((it2, a2, false)) =>
-                            Some((kc, a2, it2.e))
-                          case _ => None
-                        }
-                      }
-                      if (picked.exists(_.isEmpty)) None
-                      else {
-                        val kes = picked.flatten
-                        // deploy-time analysis: the key exprs must
-                        // resolve over the partial-state schema, the
-                        // raw source proto AND the flush schema — any
-                        // failure keeps the full-read path
-                        mkOfKes(kes,
-                          emptyOf(sp0, p.stateSchema), false).schema
-                        mkOfKes(kes, loadTable(sp0, "",
-                          writers(wi)._4, protoEnvM), false).schema
-                        mkOfKes(kes, emptyOf(sp0, p.flushOf(
-                          emptyOf(sp0, p.stateSchema)).schema),
-                          true).schema
-                        Some(wi -> kes)
-                      }
-                    }.toOption.flatten
-                  }
-                }.toMap
-              def mkOfM(wi: Int, rel: DataFrame): DataFrame =
-                mkOfKes(winMkM(wi), rel, fromFlush = false)
-              def mkOfFlM(wi: Int, rel: DataFrame): DataFrame =
-                mkOfKes(winMkM(wi), rel, fromFlush = true)
-              // latest update per key, true __ord kept: max of
-              // (__ord, payload) per __mk* — __ord is unique per row
-              def latestMerge(prior: DataFrame, delta: DataFrame)
-                  : DataFrame = {
-                val all = prior.unionByName(delta)
-                val payCols = all.columns.filterNot(mkCols.contains)
-                all.groupBy(mkCols.map(col): _*)
-                  .agg(max(struct(col("__ord").as("o"),
-                    struct(payCols.map(col): _*).as("p"))).as("m"))
-                  .select(mkCols.map(col) ++
-                    payCols.map(c2 => col(s"m.p.$c2").as(c2)): _*)
-              }
-              // FOLD state = the as-of injection rows themselves: per
-              // key an 'a' row (the group's FIRST per-event upsert —
-              // true ord, own delta, insert values: the window pass's
-              // st0/f0 row unless an earlier FLUSH beats it) and a 'b'
-              // row (Σ of all later per-event deltas at (last ord ts,
-              // id, MaxValue−1) — after its 'a', before every future
-              // event under in-order replay; sums commute, so its
-              // position among flush deltas is free). Merge = one
-              // keyed groupBy over prior rows ∪ batch rows: 'a' = the
-              // min-ord row ('b' rows never win — their ord ≥ their
-              // own 'a'), total = Σ __fd, new 'b' = total − a's own
-              // delta. O(2 rows per key), no emission-log growth.
-              // SHAPE MIXES (r15) scope the collapse past the latest
-              // PAST reset per key (`rst`: __mk* + max __rord with
-              // ord ≤ the batch's max ts): rows at or before the
-              // reset are dead for every FUTURE event (in-order
-              // replay ⇒ future ts ≥ this batch's max ts ≥ reset ts),
-              // and because any reset newer than the last merge sorts
-              // after the prior 'b' row, a 'b' sum never straddles a
-              // reset — the drop is always whole-rows, never a split.
-              def foldMerge(prior: DataFrame, delta: DataFrame,
-                  rst: Option[DataFrame] = None): DataFrame = {
-                val all0 = prior.unionByName(delta)
-                val all = rst match {
-                  case None => all0
-                  case Some(r) =>
-                    all0.as("t").join(r.as("r"),
-                        mkCols.map(c2 =>
-                          col(s"t.$c2") <=> col(s"r.$c2"))
-                          .reduce(_ && _), "left_outer")
-                      .filter(col("r.__rord").isNull ||
-                        col("t.__ord") > col("r.__rord"))
-                      .select(all0.columns.toSeq
-                        .map(c2 => col(s"t.$c2")): _*)
-                }
-                val payCols = all.columns.filterNot(mkCols.contains)
-                val aggs = Seq(
-                  min(struct(col("__ord").as("o"),
-                    struct(payCols.map(col): _*).as("p"))).as("a"),
-                  max(col("__ord")).as("mo")) ++
-                  foldColsM.map(c2 =>
-                    sum(col(s"__fd.$c2")).as(s"__t_$c2"))
-                val aggd = all.groupBy(mkCols.map(col): _*)
-                  .agg(aggs.head, aggs.tail: _*)
-                val bStruct = struct(payCols.map {
-                  case "__ord" => struct(col("mo.ts_ns").as("ts_ns"),
-                    col("mo.event_id").as("event_id"),
-                    lit(Long.MaxValue - 1L).as("w")).as("__ord")
-                  case "__fd" => struct(foldColsM.map { c2 =>
-                    (col(s"__t_$c2") - col(s"a.p.__fd.$c2"))
-                      .cast(dSchema(c2).dataType).as(c2) }: _*)
-                    .as("__fd")
-                  case c2 => col(s"a.p.$c2").as(c2)
-                }: _*)
-                aggd.select(mkCols.map(col) :+
-                  explode(array(col("a.p"), bStruct)).as("r"): _*)
-                  .select(mkCols.map(col) ++
-                    payCols.map(c2 => col(s"r.$c2").as(c2)): _*)
-              }
-              def peMerge(prior: DataFrame, delta: DataFrame)
-                  : DataFrame =
-                if (isFoldGroup) foldMerge(prior, delta)
-                else latestMerge(prior, delta)
-              // ord of a windowed writer's flush rows (bucket END,
-              // event 0, statement index) — the reset ord for
-              // windowed IMPLICIT members of a shape mix
-              def flushOrdC(wi: Int, tNs2: Long): Column =
-                struct(((col("__wb") + lit(1L)) * lit(tNs2))
-                  .cast("long").as("ts_ns"),
-                  lit(0L).as("event_id"), lit(wi.toLong).as("w"))
-              def pruneMk(rel: DataFrame, kdf2: DataFrame): DataFrame =
-                rel.as("t").join(kdf2.as("k"),
-                    mkCols.map(c2 => col(s"t.$c2") <=> col(s"k.$c2"))
-                      .reduce(_ && _), "left_semi")
-                  .select(rel.columns.toSeq.map(c2 => col(s"t.$c2")): _*)
-              // deploy-time prototype: fail fast + output schema
-              val protoM = enrichCompile(sp0, "", ast, j, writers,
-                emptyOf(sp0, dSchema), protoEnvM)
-              Folded(protoM.schema, () => {
-                val states: Seq[(String, StructType, StateMode)] =
-                  (writers.indices.map { wi =>
-                    infosM(wi) match {
-                      case Left(p) if winMkM.contains(wi) =>
-                        // keyed on the join-key projections: the
-                        // probe evaluates the non-agg key exprs over
-                        // the writer's raw filtered source rows
-                        (s"wst$wi",
-                          mkOfM(wi, emptyOf(sp0, p.stateSchema)).schema,
-                          KeyedState(mkCols, (sp, d2, batch) => {
-                            val benv =
-                              batchEnv(sp, d2, batch, statelessSnap)
-                            val base0 =
-                              loadTable(sp, d2, writers(wi)._4, benv)
-                            val base = (writers(wi)._1.stream match {
-                              case ss3: SingleStream => ss3.filter
-                              case _                 => None
-                            }).fold(base0)(f =>
-                              applyFilter(sp, d2, base0, f, benv))
-                            mkOfM(wi, base)
-                              .select(mkCols.map(col): _*)
-                          }, compactEvery =
-                            compactInfoM.get(wi).map(_._1)))
-                      case Left(p) => (s"wst$wi", p.stateSchema,
-                        KeyedState(p.keys, (sp, d2, batch) =>
-                          p.probeSel(loadTable(sp, d2, writers(wi)._4,
-                            batchEnv(sp, d2, batch, statelessSnap))),
-                          compactEvery = compactInfoM.get(wi).map(_._1)))
-                      case Right(sch) => (s"pst$wi", sch,
-                        KeyedState(mkCols, (sp, d2, batch) =>
-                          withMk(perEventURel(sp, d2, writers(wi)._1,
-                            writers(wi)._4, wi,
-                            batchEnv(sp, d2, batch, statelessSnap))._1,
-                            wi).select(mkCols.map(col): _*)))
-                    }
-                  } ++ compactInfoM.toSeq.sortBy(_._1).map {
-                    // per-writer base: rewrites ONLY on compaction
-                    // generations (empty batchKeys ⇒ no touched
-                    // buckets ⇒ the runner skips its write between)
-                    case (wi, (e, bks, fSch))
-                        if winMkM.contains(wi) =>
-                      val bSch =
-                        mkOfFlM(wi, emptyOf(sp0, fSch)).schema
-                      (s"wbase$wi", bSch, KeyedState(mkCols,
-                        (sp, _, _) => emptyOf(sp, StructType(
-                          bSch.filter(f => mkCols.contains(f.name))
-                            .toArray)),
-                        compactEvery = Some(e)))
-                    case (wi, (e, bks, fSch)) =>
-                      (s"wbase$wi", fSch, KeyedState(bks,
-                        (sp, _, _) => emptyOf(sp, StructType(
-                          fSch.filter(f => bks.contains(f.name))
-                            .toArray)),
-                        compactEvery = Some(e)))
-                  }) :+ (("__out", protoM.schema, AppendState))
-                LiveFold(srcTs, states,
-                  (sp, d2, acc, batch) => {
-                    val benv = batchEnv(sp, d2, batch, statelessSnap)
-                    val kdf = batchKeyRel(sp, d2, batch, benv)
-                    val kdfMk = kdf.select(keyOrderM.zipWithIndex
-                      .map { case (kc, j2) =>
-                        col(kc).as(s"__mk$j2") }: _*)
-                    var winFlushM = Map.empty[Int, DataFrame]
-                    var uRelM = Map.empty[Int, DataFrame]
-                    var flushAllM = Map.empty[Int, DataFrame]
-                    var deltaMkM = Map.empty[Int, DataFrame]
-                    // pass 1a: per-event writers — their deltas feed
-                    // the uRel overrides and (shape mixes) the
-                    // fold-key relation pass 2 scopes with;
-                    // SHAPE-MIX fold writers only derive their
-                    // deltas here — their state merge needs the
-                    // trigger's reset relation (pass 2)
-                    val stUpdR = writers.indices.flatMap { wi =>
-                      infosM(wi) match {
-                        case Right(_) =>
-                          val (deltaRel0, _) = perEventURel(sp, d2,
-                            writers(wi)._1, writers(wi)._4, wi, benv)
-                          val deltaRel = fdEval(deltaRel0, wi)
-                          val (priorRel, kdfEff) =
-                            acc(s"pst$wi").keyedRead(kdfMk)
-                          uRelM += wi ->
-                            pruneMk(priorRel, kdfEff)
-                              .drop(mkCols: _*).unionByName(deltaRel)
-                          val dMk = withMk(deltaRel, wi)
-                          deltaMkM += wi -> dMk
-                          if (isShapeMix && wKinds(wi) == "fold") Nil
-                          else Seq(s"pst$wi" -> peMerge(
-                            acc(s"pst$wi").slice, dMk))
-                        case _ => Nil
-                      }
-                    }
-                    val foldWis = writers.indices.filter(wi =>
-                      isShapeMix && infosM(wi).isRight &&
-                        wKinds(wi) == "fold")
-                    val foldKeysO: Option[DataFrame] =
-                      if (foldWis.isEmpty) None
-                      else Some(foldWis.map(wi =>
-                        acc(s"pst$wi").slice
-                          .select(mkCols.map(col): _*)
-                          .unionByName(deltaMkM(wi)
-                            .select(mkCols.map(col): _*)))
-                        .reduce(_ unionByName _).distinct())
-                    // pass 1b: windowed writers (flush partials ∪
-                    // compacted base) merge
-                    val stUpd1 = writers.indices.flatMap { wi =>
-                      infosM(wi) match {
-                        case Left(p) =>
-                          val keyedWi = winMkM.contains(wi)
-                          val st1 = p.merge(
-                            if (keyedWi)
-                              acc(s"wst$wi").slice.drop(mkCols: _*)
-                            else acc(s"wst$wi").slice,
-                            p.partialOf(loadTable(sp, d2,
-                              writers(wi)._4, benv)))
-                          // post-merge flush relation: untouched
-                          // buckets + this trigger's merged buckets.
-                          // A KEYED store bucket-restricts the prior
-                          // read to the trigger's key domain BEFORE
-                          // the anti-join merge (r17): only those
-                          // keys' flushes can join this trigger, so
-                          // the read scans O(touched-key buckets),
-                          // not the whole accumulated partial history
-                          val full0 =
-                            if (keyedWi) {
-                              val (priorW, kEff) =
-                                acc(s"wst$wi").keyedRead(kdfMk)
-                              val r = pruneMkG(priorW, kEff, mkCols)
-                                .drop(mkCols: _*)
-                              foldReadProbe.foreach { buf =>
-                                enrichReadGen += 1
-                                buf += ((enrichReadGen, s"wst$wi",
-                                  r.count()))
-                              }
-                              r
-                            } else acc(s"wst$wi").full()
-                          val fullPost = full0.as("t")
-                            .join(st1.select(p.keys.map(col): _*)
-                                .distinct().as("u"),
-                              p.keys.map(k2 =>
-                                col(s"t.$k2") <=> col(s"u.$k2"))
-                                .reduce(_ && _), "left_anti")
-                            .select(full0.columns.toSeq
-                              .map(c2 => col(s"t.$c2")): _*)
-                            .unionByName(st1)
-                          // frozen history re-enters as the compacted
-                          // base — finished flush rows at TRUE __wb,
-                          // so their as-of ords are exact
-                          val flushAll = compactInfoM.get(wi) match {
-                            case Some(_) =>
-                              val baseRel =
-                                if (keyedWi) {
-                                  val (pb, kbEff) = acc(s"wbase$wi")
-                                    .keyedRead(kdfMk)
-                                  val r =
-                                    pruneMkG(pb, kbEff, mkCols)
-                                      .drop(mkCols: _*)
-                                  foldReadProbe.foreach { buf =>
-                                    enrichReadGen += 1
-                                    buf += ((enrichReadGen,
-                                      s"wbase$wi", r.count()))
-                                  }
-                                  r
-                                } else acc(s"wbase$wi").full()
-                              p.flushOf(fullPost)
-                                .unionByName(baseRel)
-                            case None => p.flushOf(fullPost)
-                          }
-                          flushAllM += wi -> flushAll
-                          winFlushM += wi ->
-                            pruneToBatchKeys(flushAll, kdf)
-                          def wrapSt(r: DataFrame): DataFrame =
-                            if (keyedWi) mkOfM(wi, r) else r
-                          compactInfoM.get(wi) match {
-                            case None => Seq(s"wst$wi" -> wrapSt(st1))
-                            case Some((_, bks, fSch)) =>
-                              val bSchW =
-                                if (keyedWi)
-                                  mkOfFlM(wi,
-                                    emptyOf(sp, fSch)).schema
-                                else fSch
-                              if (!acc(s"wst$wi").compacting)
-                                Seq(s"wst$wi" -> wrapSt(st1),
-                                  s"wbase$wi" -> emptyOf(sp, bSchW))
-                              else {
-                                val maxTs = batch
-                                  .agg(max(col("ts_ns"))).collect()(0)
-                                if (maxTs.isNullAt(0))
-                                  Seq(s"wst$wi" -> wrapSt(st1),
-                                    s"wbase$wi" ->
-                                      acc(s"wbase$wi").slice)
-                                else {
-                                  val w = maxTs.getLong(0) - wmNs
-                                  val frozenP = (col("__wb") + lit(1L)) *
-                                    lit(p.tNs) <= lit(w)
-                                  val fresh0 =
-                                    p.flushOf(st1.filter(frozenP))
-                                  val fresh =
-                                    if (keyedWi) mkOfFlM(wi, fresh0)
-                                    else fresh0
-                                  val ww = org.apache.spark.sql
-                                    .expressions.Window
-                                    .partitionBy(bks.map(col): _*)
-                                    .orderBy(col("__wb").desc)
-                                  val base2 = acc(s"wbase$wi").slice
-                                    .unionByName(fresh)
-                                    .withColumn("__rn",
-                                      row_number().over(ww))
-                                    .where(col("__rn") === 1)
-                                    .drop("__rn")
-                                  Seq(s"wst$wi" ->
-                                      wrapSt(st1.filter(!frozenP)),
-                                    s"wbase$wi" -> base2)
-                                }
-                              }
-                          }
-                        case _ => Nil
-                      }
-                    }
-                    // pass 2 (shape mixes): per fold-touched key, the
-                    // latest PAST reset — implicit per-event latest
-                    // rows (state ∪ batch) and windowed implicit
-                    // flushes whose bucket END ≤ the batch's max ts
-                    // (an OPEN bucket's flush must not scope: events
-                    // before its end still admit earlier deltas) —
-                    // then the scoped two-row collapses
-                    val stUpd2 = foldKeysO match {
-                      case None => Nil
-                      case Some(foldKeys) =>
-                        val perEvR = writers.indices.collect {
-                          case wj if infosM(wj).isRight &&
-                              wKinds(wj) == "upsert" =>
-                            val (pj, kj) =
-                              acc(s"pst$wj").keyedRead(foldKeys)
-                            pruneMk(pj, kj).select(mkCols.map(col) :+
-                                col("__ord").as("__rord"): _*)
-                              .unionByName(deltaMkM(wj)
-                                .select(mkCols.map(col) :+
-                                  col("__ord").as("__rord"): _*))
-                        }
-                        val maxTsRow =
-                          batch.agg(max(col("ts_ns"))).collect()(0)
-                        val winR =
-                          if (maxTsRow.isNullAt(0)) Nil
-                          else writers.indices.collect {
-                            case wj if infosM(wj).isLeft &&
-                                wKinds(wj) == "upsert" =>
-                              pruneMk(withMk(flushAllM(wj), wj),
-                                  foldKeys)
-                                .select(mkCols.map(col) :+
-                                  flushOrdC(wj, winTNsPer(wj).get)
-                                    .as("__rord"): _*)
-                                .where(col("__rord.ts_ns") <=
-                                  lit(maxTsRow.getLong(0)))
-                          }
-                        val rsts = perEvR ++ winR
-                        val rstO =
-                          if (rsts.isEmpty) None
-                          else Some(rsts.reduce(_ unionByName _)
-                            .groupBy(mkCols.map(col): _*)
-                            .agg(max(col("__rord")).as("__rord")))
-                        foldWis.map(wi => s"pst$wi" -> foldMerge(
-                          acc(s"pst$wi").slice, deltaMkM(wi), rstO))
-                      }
-                    val stUpd = (stUpdR ++ stUpd1 ++ stUpd2).toMap
-                    stUpd + ("__out" -> enrichCompile(sp, d2, ast, j,
-                      writers, emptyOf(sp, dSchema), benv,
-                      winFlush = winFlushM, uRelOverride = uRelM))
-                  },
-                  (_, acc) => acc("__out"))
-              })
-            } else if (winWriterTNs.nonEmpty) {
-              // PER-EVENT AS-OF enrichment of a WINDOWED-aggregate
-              // store (the Siddhi store pattern read back through a
-              // join, r11): each event sees the latest COMPLETED
-              // flush for its key — a flush row is an update row
-              // visible from its bucket END, and enrichCompile's
-              // keyed union+window pass reconstructs the as-of state
-              // exactly like per-event writers. The fold keeps the
-              // store pattern's per-(bucket ∪ group keys) algebraic
-              // PARTIALS (a bucket spanning triggers merges
-              // componentwise); per trigger it merges the batch's
-              // partials, derives the POST-merge flush relation, and
-              // runs the as-of pass over THIS batch's events —
-              // chunking-invariant because an event only reads
-              // flushes whose bucket closed at or before its own
-              // timestamp, whose data (in-order replay) has already
-              // arrived. The batch compile runs the identical
-              // construction over the whole replay, so it is the
-              // oracle. An AGGREGATING read folds the same as-of rows
-              // as algebraic keyed partials (the enrich-agg recipe).
-              if (dSrc != "events")
-                fail("windowed-writer enrichment (v1) reads a table " +
-                  s"whose writer consumes the source stream; '$tName' " +
-                  s"is written from derived stream '$dSrc'")
-              val tNsW = winWriterTNs.get
-              val ssW = dAst.stream.asInstanceOf[SingleStream]
-              // flush-partial fold with an IDENTITY finish (its
-              // finish(acc) is the flush relation, __wb + outputs) +
-              // the per-trigger post-merge flush derivation shared by
-              // the projection and aggregation sub-branches.
-              //
-              // The partial store is TIME-BANDED (r12): every
-              // `graft.live.compactEvery` generations the fold sheds
-              // FROZEN buckets — bucket end at or below the batch's
-              // watermark (max ts − the source's 1-minute bound), so
-              // in-order arrival means no later row can merge into
-              // them, and every later event admits them all, so only
-              // the LATEST per group key can ever win the as-of pick —
-              // into a compacted BASE of one finished flush row per
-              // key. Per-trigger full-state reads are then O(live
-              // band + base ≈ key domain), not O(every bucket partial
-              // ever written) — the bound a long-running deployment
-              // needs.
-              def winFoldOf(): (
-                  (SparkSession, Map[String, LiveState], DataFrame)
-                    => DataFrame,
-                  (SparkSession, Map[String, LiveState], DataFrame,
-                    DataFrame) => DataFrame,
-                  Seq[(String, StructType, StateMode)],
-                  (SparkSession, Map[String, LiveState], DataFrame,
-                    DataFrame) => Map[String, DataFrame]) = {
-                val p = flushPiecesOf(emptyOf(sp0, srcTs.schema),
-                  ssW.filter, dAst.groupBy, itemsOf(dAst), tNsW)
-                val stSch = p.stateSchema
-                val keysP = p.keys
-                val flushSchema =
-                  p.flushOf(emptyOf(sp0, stSch)).schema
-                val flushCols = flushSchema.map(_.name).toSet
-                // (r17, VERDICT r16 #1) __mk*-keyed store — the r16
-                // event-log discipline extended to this channel: when
-                // every enrichment join key is a NON-AGGREGATE writer
-                // output (its item expr evaluates over raw source
-                // rows AND partial state rows — group columns survive
-                // partialOf — so bucket membership is stable under
-                // partial merge), the flush-partial store and its
-                // compacted base key on the join-key projections and
-                // the per-trigger read bucket-restricts to the
-                // batch's event keys: O(batch-key history) instead of
-                // O(live band + whole key-domain base). Anything else
-                // (aggregate-valued or non-output join keys, exprs
-                // that don't analyze over the partial schema) keeps
-                // the r15 full() read — a fallback, not a refusal:
-                // reads stay compaction-bounded, just key-unpruned.
-                val mkInfoW: Option[(List[String],
-                    DataFrame => DataFrame, DataFrame => DataFrame)] =
-                  scala.util.Try {
-                    val items2 = itemsOf(dAst)
-                    val keyCols = enrichJoinKeys.map(_._1).distinct
-                    val picked = keyCols.map { kc =>
-                      items2.find(_._2 == kc) match {
-                        case Some((it2, _, false)) => Some(kc -> it2.e)
-                        case _ => None
-                      }
-                    }
-                    if (keyCols.isEmpty || picked.exists(_.isEmpty))
-                      None
-                    else {
-                      val kes = picked.flatten
-                      val mkCols =
-                        kes.indices.map(j2 => s"__mk$j2").toList
-                      def addSt(rel: DataFrame): DataFrame =
-                        rel.select(kes.zipWithIndex.map {
-                          case ((kc, e2), j2) =>
-                            expr(sqlOf(e2))
-                              .cast(dSchema(kc).dataType)
-                              .as(s"__mk$j2") } ++
-                          rel.columns.toSeq.map(col): _*)
-                      def addFl(rel: DataFrame): DataFrame =
-                        rel.select(kes.zipWithIndex.map {
-                          case ((kc, _), j2) =>
-                            col(kc).cast(dSchema(kc).dataType)
-                              .as(s"__mk$j2") } ++
-                          rel.columns.toSeq.map(col): _*)
-                      // deploy-time analysis over the partial/flush
-                      // schemas: a key expr that doesn't resolve
-                      // there keeps the full-read path
-                      addSt(emptyOf(sp0, stSch)).schema
-                      addFl(emptyOf(sp0, flushSchema)).schema
-                      Some((mkCols, addSt _, addFl _))
-                    }
-                  }.toOption.flatten
-                val stSchM = mkInfoW.fold(stSch)(i =>
-                  i._2(emptyOf(sp0, stSch)).schema)
-                // a group key must appear among the flush outputs for
-                // the base to key itself; otherwise keep the un-pruned
-                // store (correct, just O(history) — and the select-item
-                // checks make this branch unreachable in practice)
-                // default 8: short replays (the 4-chunk gates) never
-                // reach a compaction generation and pay zero overhead;
-                // a long-running deployment compacts every 8 triggers,
-                // bounding the store at the live band + 8 triggers of
-                // bucket growth
-                val compactN: Option[Int] =
-                  if (dAst.groupBy.forall(flushCols.contains))
-                    Some(positiveIntConf(sp0, "graft.live.compactEvery")
-                      .getOrElse(8))
-                  else None
-                val baseKeys: Seq[String] =
-                  if (dAst.groupBy.nonEmpty) dAst.groupBy
-                  else Seq("__wb")
-                val stMode0: StateMode = mkInfoW match {
-                  case Some((mkCols, addSt, _)) =>
-                    KeyedState(mkCols, (_, _, batch) => {
-                      val f = ssW.filter.fold(batch)(ff =>
-                        batch.where(expr(sqlOf(ff))))
-                      addSt(f).select(mkCols.map(col): _*)
-                    }, compactEvery = compactN)
-                  case None =>
-                    KeyedState(keysP, (_, _, batch) => p.probeSel(batch),
-                      compactEvery = compactN)
-                }
-                val baseSch = mkInfoW.fold(flushSchema)(i =>
-                  i._3(emptyOf(sp0, flushSchema)).schema)
-                val schemas2: Seq[(String, StructType, StateMode)] =
-                  compactN match {
-                    case Some(e) => Seq(
-                      ("state", stSchM, stMode0),
-                      // the base only rewrites on compaction
-                      // generations (batchKeys empty ⇒ no touched
-                      // buckets ⇒ the runner skips its write)
-                      ("base", baseSch, mkInfoW match {
-                        case Some((mkCols, _, _)) =>
-                          KeyedState(mkCols,
-                            (sp, _, _) => emptyOf(sp, StructType(
-                              baseSch.filter(f =>
-                                mkCols.contains(f.name)).toArray)),
-                            Some(e))
-                        case None =>
-                          KeyedState(baseKeys,
-                            (sp, _, _) => emptyOf(sp, StructType(
-                              flushSchema.filter(f =>
-                                baseKeys.contains(f.name)).toArray)),
-                            Some(e))
-                      }))
-                    case None => Seq(("state", stSchM, stMode0))
-                  }
-                def mergeSt1(sp: SparkSession,
-                    acc: Map[String, LiveState], batch: DataFrame)
-                    : DataFrame = {
-                  val s0 = mkInfoW.fold(acc("state").slice)(i =>
-                    acc("state").slice.drop(i._1: _*))
-                  p.merge(s0, p.partialOf(batch))
-                }
-                def split(sp: SparkSession,
-                    acc: Map[String, LiveState], st1: DataFrame,
-                    batch: DataFrame): Map[String, DataFrame] = {
-                  def wrapSt(r: DataFrame): DataFrame =
-                    mkInfoW.fold(r)(i => i._2(r))
-                  def wrapFl(r: DataFrame): DataFrame =
-                    mkInfoW.fold(r)(i => i._3(r))
-                  if (compactN.isEmpty) Map("state" -> wrapSt(st1))
-                  else if (!acc("state").compacting)
-                    Map("state" -> wrapSt(st1),
-                      "base" -> emptyOf(sp, baseSch))
-                  else {
-                    val maxTs = batch.agg(max(col("ts_ns"))).collect()(0)
-                    if (maxTs.isNullAt(0))
-                      Map("state" -> wrapSt(st1),
-                        "base" -> acc("base").slice)
-                    else {
-                      val w = maxTs.getLong(0) - wmNs
-                      val frozenP =
-                        (col("__wb") + lit(1L)) * lit(tNsW) <= lit(w)
-                      val fresh =
-                        wrapFl(p.flushOf(st1.filter(frozenP)))
-                      // latest flush per group key wins the base;
-                      // UNGROUPED writers keep one global latest row —
-                      // TakeOrderedAndProject (distributed), not a
-                      // row_number window over one all-rows partition
-                      val base2 =
-                        if (dAst.groupBy.isEmpty)
-                          acc("base").slice.unionByName(fresh)
-                            .orderBy(col("__wb").desc).limit(1)
-                        else {
-                          val ww = org.apache.spark.sql.expressions
-                            .Window
-                            .partitionBy(dAst.groupBy.map(col): _*)
-                            .orderBy(col("__wb").desc)
-                          acc("base").slice.unionByName(fresh)
-                            .withColumn("__rn", row_number().over(ww))
-                            .where(col("__rn") === 1).drop("__rn")
-                        }
-                      Map("state" -> wrapSt(st1.filter(!frozenP)),
-                        "base" -> base2)
-                    }
-                  }
-                }
-                def flushRelOf(sp: SparkSession,
-                    acc: Map[String, LiveState], st1: DataFrame,
-                    kdf: DataFrame): DataFrame = {
-                  // post-merge partials: untouched buckets from the
-                  // live-band state (pruned by the compaction split),
-                  // touched buckets replaced by st1 — then the frozen
-                  // history re-enters as the compacted base (one
-                  // latest-flush row per key, always admissible). The
-                  // keyed store bucket-restricts both reads to the
-                  // batch's event keys BEFORE the anti-join merge
-                  // (only batch-key rows can join this trigger; st1
-                  // unions in unpruned, and the caller's
-                  // pruneToBatchKeys re-prunes at the row level).
-                  val (full0, baseRel) = mkInfoW match {
-                    case Some((mkCols, _, _)) =>
-                      val keyCols = enrichJoinKeys.map(_._1).distinct
-                      val kdfMk = kdf.select(keyCols.zipWithIndex.map {
-                        case (kc, j2) => col(kc).as(s"__mk$j2") }: _*)
-                      val (priorW, kEff) =
-                        acc("state").keyedRead(kdfMk)
-                      val f0 = pruneMkG(priorW, kEff, mkCols)
-                        .drop(mkCols: _*)
-                      foldReadProbe.foreach { buf =>
-                        enrichReadGen += 1
-                        buf += ((enrichReadGen, "state", f0.count()))
-                      }
-                      val b0 = acc.get("base").map { b =>
-                        val (pb, kbEff) = b.keyedRead(kdfMk)
-                        val r = pruneMkG(pb, kbEff, mkCols)
-                          .drop(mkCols: _*)
-                        foldReadProbe.foreach { buf =>
-                          enrichReadGen += 1
-                          buf += ((enrichReadGen, "base", r.count()))
-                        }
-                        r
-                      }
-                      (f0, b0)
-                    case None =>
-                      (acc("state").full(),
-                        acc.get("base").map(_.full()))
-                  }
-                  val fullPost = full0.as("t")
-                    .join(st1.select(keysP.map(col): _*).distinct()
-                        .as("u"),
-                      keysP.map(k2 =>
-                        col(s"t.$k2") <=> col(s"u.$k2"))
-                        .reduce(_ && _), "left_anti")
-                    .select(full0.columns.toSeq
-                      .map(c2 => col(s"t.$c2")): _*)
-                    .unionByName(st1)
-                  val flushLive = p.flushOf(fullPost)
-                  baseRel.fold(flushLive)(b =>
-                    flushLive.unionByName(b))
-                }
-                (mergeSt1, flushRelOf, schemas2, split)
-              }
-              if (hasAggE) {
-                // AGGREGATION ABOVE the as-of join: the shared
-                // EnrichAggTail, fed per trigger by the same
-                // post-merge flush relation the projection arm below
-                // maintains (winFlush)
-                Folded(aggTail.protoOut.schema, () => {
-                  val (wfMerge, wfFlushRel, wfSchemas, wfSplit) =
-                    winFoldOf()
-                  LiveFold(srcTs,
-                    wfSchemas :+ aggTail.stateEntry("aggst"),
-                    (sp, d2, acc, batch) => {
-                      val st1 = wfMerge(sp, acc, batch)
-                      val benv = batchEnv(sp, d2, batch, statelessSnap)
-                      // flush rows prune to the batch's event keys:
-                      // only those keys can join this trigger (the
-                      // time-banded store bounds the HISTORY axis,
-                      // this bounds the KEY axis)
-                      val kdf = batchKeyRel(sp, d2, batch, benv)
-                      val flushRel = pruneToBatchKeys(
-                        wfFlushRel(sp, acc, st1, kdf), kdf)
-                      val enriched = enrichCompile(sp, d2,
-                        aggTail.astRows, j, writers,
-                        emptyOf(sp, dSchema), benv,
-                        winFlush = Map(0 -> flushRel))
-                      wfSplit(sp, acc, st1, batch) + ("aggst" ->
-                        aggTail.mergeInto(acc("aggst").slice,
-                          enriched))
-                    },
-                    (_, acc) => aggTail.finish(acc("aggst")))
-                })
-              } else {
-              // deploy-time prototype: fail fast + output schema (the
-              // dmlEmissions path recomputes flushes from the raw
-              // stream over an empty env)
-              val protoW = enrichCompile(sp0, "", ast, j, writers,
-                emptyOf(sp0, dSchema),
-                batchEnv(sp0, "", emptyOf(sp0, srcTs.schema),
-                  statelessSnap))
-              Folded(protoW.schema, () => {
-                val (wfMerge, wfFlushRel, wfSchemas, wfSplit) =
-                  winFoldOf()
-                LiveFold(srcTs,
-                  wfSchemas :+ (("__out", protoW.schema, AppendState)),
-                  (sp, d2, acc, batch) => {
-                    val st1 = wfMerge(sp, acc, batch)
-                    val benv = batchEnv(sp, d2, batch, statelessSnap)
-                    val kdf = batchKeyRel(sp, d2, batch, benv)
-                    val flushRel = pruneToBatchKeys(
-                      wfFlushRel(sp, acc, st1, kdf), kdf)
-                    val enriched = enrichCompile(sp, d2, ast, j,
-                      writers, emptyOf(sp, dSchema), benv,
-                      winFlush = Map(0 -> flushRel))
-                    wfSplit(sp, acc, st1, batch) +
-                      ("__out" -> enriched)
-                  },
-                  (_, acc) => acc("__out"))
-              })
-              }
-            } else if (hasAggE) {
-              // AGGREGATION ABOVE the enrichment join: the shared
-              // EnrichAggTail over the per-event as-of rows (the
-              // join-agg fold recipe — O(batch-touched buckets)
-              // state writes; the batch compile aggregates the
-              // identical as-of rows globally, so it is the oracle
-              // under any chunking)
-              Folded(aggTail.protoOut.schema, () => LiveFold(srcTs,
-                  Seq((tName, dSchema, tMode),
-                    aggTail.stateEntry("state")),
-                  (sp, d2, acc, batch) => {
-                    val benv = batchEnv(sp, d2, batch, statelessSnap)
-                    val enriched = enrichCompile(sp, d2,
-                      aggTail.astRows, j, writers,
-                      tReadPruned(sp, d2, acc, batch, benv), benv)
-                    Map(
-                      tName -> tApply(sp, d2, acc(tName).slice, benv),
-                      "state" -> aggTail.mergeInto(
-                        acc("state").slice, enriched))
-                  },
-                  (_, acc) => aggTail.finish(acc("state"))))
-            } else {
-            // fail fast at deploy time + learn the output schema
-            val proto = enrichCompile(sp0, "", ast, j, writers,
-              emptyOf(sp0, dSchema),
-              batchEnv(sp0, "", emptyOf(sp0, srcTs.schema),
-                statelessSnap))
-            // the maintained table bucket-merges on its DML keys (write
-            // cost O(batch-touched buckets)); the enrichment OUTPUT is a
-            // sink-like accumulation — each trigger appends its delta
-            // generation, never rewriting history
-            Folded(proto.schema, () => LiveFold(srcTs,
-                Seq((tName, dSchema, tMode),
-                    ("__out", proto.schema, AppendState)),
-                (sp, d2, acc, batch) => {
-                  val benv = batchEnv(sp, d2, batch, statelessSnap)
-                  Map(
-                    tName -> tApply(sp, d2, acc(tName).slice, benv),
-                    // the pre-batch table read is PRUNED to the
-                    // batch's event keys (tReadPruned): events may
-                    // reference keys this batch didn't UPDATE, but
-                    // never keys this batch's events don't carry
-                    "__out" -> enrichCompile(sp, d2, ast, j, writers,
-                      tReadPruned(sp, d2, acc, batch, benv), benv))
-                },
-                (_, acc) => acc("__out")))
-            }
+            enrichStage(ast, jx, dmlInfos, statelessAsts, statefulStreams,
+              partKey, srcTs, wmNs)
 
           case j: JoinStream
               if liveAggDefs.contains(j.left.table) ||
@@ -3963,8 +2341,17 @@ private[api] trait SiddhiQlLive extends Serializable {
               case None => df
             })
           }
-        if (name.orElse(ast.action.map(_.target)).contains(out) ||
-            dmlAct.exists(_.target == out))
+        val stageName = name.orElse(ast.action.map(_.target))
+        val isOut = stageName.contains(out) || dmlAct.exists(_.target == out)
+        // deployApp composes the OUT query's order by, offset and limit
+        // once over the finished result; a mid-topology cut would run
+        // per trigger (or not at all) — never the batch replay's cut
+        if (!isOut && (ast.limit.nonEmpty || ast.offset.nonEmpty))
+          fail("live deployment (v1) applies `limit`/`offset` to the " +
+            s"out query '$out' only; stage '${stageName.getOrElse("?")}' " +
+            "cuts mid-topology — move the cut to the out query, or use " +
+            "the batch replay (compileApp)")
+        if (isOut)
           outStage = Some(ast -> (stage match {
             // built here, while dmlInfos / statelessAsts are what the
             // stage compiled against; the runner pins the functions

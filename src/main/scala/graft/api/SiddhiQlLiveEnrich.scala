@@ -1,0 +1,1180 @@
+package graft.api
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+/** [[SiddhiQL]]'s live ENRICHMENT join ([[enrichStage]]): a query
+  * joining the table a sibling DML stage maintains, lowered onto the
+  * fold channel through one of four channels — plain table, windowed
+  * writer, mixed windowed + per-event writers, event log with windowed
+  * members. Each channel builds ONE [[LiveFold]] from the pieces of
+  * [[EnrichJoin]] and ends in one [[EnrichTail]] (projection or
+  * aggregation). Mixed into `object SiddhiQL`. */
+private[api] trait SiddhiQlLiveEnrich extends Serializable {
+  self: SiddhiQlFrontend with SiddhiQlCompiler with SiddhiQlLive =>
+
+  /** ENRICHMENT JOIN deployed LIVE: a query joins the table a sibling
+    * DML stage maintains — the reference's canonical enrichment loop
+    * (a stream updates UserState, a sibling query enriches against
+    * it). Semantics are PER-EVENT: an event sees the table as of its
+    * own position in the stream (definition order makes an event's own
+    * update visible: `<=` on the (ts_ns, event_id) arrival order),
+    * which makes the live result independent of micro-batch boundaries
+    * — the batch asof oracle and the live run agree for ANY chunking.
+    * Runs in the foreachBatch fold channel: per trigger the maintained
+    * table folds first, then the batch's events fill their enrichment
+    * state from (accumulated generations ∪ same-batch updates
+    * at-or-before them) in ONE keyed window pass — a single shuffle on
+    * the table key, exactly the partitioning a 100× scale-up wants
+    * (state and events co-partition; no per-event lookups, no
+    * broadcast of unbounded state).
+    *
+    * `dmlInfos` holds each table's DML writers so far, `statelessAsts`
+    * the stateless stages every feed re-derives through per batch,
+    * `statefulStreams` the stages that cannot feed a join; `srcTs` is
+    * the source with its event-time column and `wmNs` the deployment's
+    * watermark bound. */
+  private[api] def enrichStage(ast: Ast, jx: JoinStream,
+      dmlInfos: Map[String, List[(Ast, Action, StructType, String)]],
+      statelessAsts: List[(String, Ast)], statefulStreams: Set[String],
+      partKey: Option[String], srcTs: DataFrame, wmNs: Long): LiveStage = {
+    if (partKey.nonEmpty)
+      fail("enrichment joins inside a partition block are not " +
+        "deployed (v1)")
+    val j = enrichmentSides(jx, dmlInfos.contains)
+    if (j.unidirectional)
+      fail("live enrichment joins are already one-directional " +
+        "(events trigger, the table holds state) — drop " +
+        "`unidirectional`")
+    val tName = j.right.table
+    if (j.right.window.nonEmpty)
+      fail("live enrichment joins read the whole maintained " +
+        s"table '$tName' (v1) — no window on the table side")
+    if (j.left.window.nonEmpty)
+      fail("live enrichment joins are per-event lookups (v1) — " +
+        "no window on the stream side")
+    val writers = dmlInfos(tName)
+    val sName = j.left.table
+    if (statefulStreams.contains(sName))
+      fail(s"live deployment (v1): '$sName' is an aggregation " +
+        "output — it cannot feed an enrichment join")
+    val derivable = Set("events") ++ statelessAsts.map(_._1)
+    (sName +: writers.map(_._4)).foreach { n2 =>
+      if (!derivable.contains(n2))
+        fail(s"live enrichment joins derive their feeds from " +
+          s"the source through stateless stages; '$n2' is not " +
+          "(windowed/rate-limited/joined stages cannot be " +
+          "re-derived per batch)")
+    }
+    val e = new EnrichJoin(ast, j, writers, statelessAsts, srcTs, wmNs)
+    val winWriterTNs: Option[Long] = e.dAst.stream match {
+      case ss2: SingleStream =>
+        if (ss2.window.nonEmpty && ss2.window.get.args.isEmpty)
+          fail(s"windowed DML writer on '$tName' has a " +
+            "window with no duration")
+        ss2.window.foreach(
+          requireEpochTb(_, "enrichment-read writer windows"))
+        ss2.window.map(_.args.head)
+      case _ => None
+    }
+    val winTNsPer: List[Option[Long]] = writers.map {
+      case (wAst2, _, _, _) => wAst2.stream match {
+        case ss2: SingleStream => ss2.window match {
+          case Some(w2 @ WindowSpec(n2, t2 :: _, _))
+              if n2.equalsIgnoreCase("timebatch") =>
+            requireEpochTb(w2, "enrichment-read writer windows")
+            Some(t2)
+          case Some(w2) => fail("windowed-writer enrichment " +
+            s"reads a timeBatch writer (v1); '#window." +
+            s"${w2.name}' flush emissions have no per-event " +
+            "visibility instant")
+          case None => None
+        }
+        case _ => None
+      }
+    }
+    val hasInsL = writers.exists(_._2.isInstanceOf[InsertInto])
+    if (hasInsL && winTNsPer.exists(_.nonEmpty))
+      eventLogChannel(e, winTNsPer)
+    else if (writers.length > 1 && winTNsPer.exists(_.nonEmpty))
+      mixedChannel(e, winTNsPer)
+    else winWriterTNs.fold(plainChannel(e))(windowedChannel(e, _))
+  }
+
+  /** Picked join-key items: (table key column, writer alias, expr). */
+  private[api] type KeyPick = List[(String, String, Expr)]
+
+  /** A windowed writer's non-aggregate select items that compute the
+    * table key columns: per key column in `wanted`, the first of its
+    * candidate aliases the writer selects, which must be non-aggregate —
+    * an aggregate-valued key moves as partials merge. None when any
+    * key column has no such item. */
+  private def pickKeyItems(items: List[(SelItem, String, Boolean)],
+      wanted: List[(String, Seq[String])]): Option[KeyPick] = {
+    val picked = wanted.map { case (kc, aliases) =>
+      aliases.iterator.flatMap(a => items.find(_._2 == a)).nextOption()
+        .collect { case (it, a, false) => (kc, a, it.e) }
+    }
+    if (picked.exists(_.isEmpty)) None else Some(picked.flatten)
+  }
+
+  /** The output tail of an enrichment read, one [[LiveFold]] state
+    * (`state`). The PROJECTION form compiles the read as written and
+    * appends each trigger's enriched rows to `__out` — a sink-like
+    * accumulation, never rewritten. The AGGREGATION form compiles the
+    * read to its per-pair rows (`readAst`) and folds them into keyed
+    * FoldAlg partials (`step`); `finish` finalizes them and applies
+    * `having` once. `proto` is the deploy-time output prototype. */
+  private[api] final case class EnrichTail(readAst: Ast, proto: DataFrame,
+      state: (String, StructType, StateMode),
+      step: (LiveState, DataFrame) => DataFrame,
+      finish: DataFrame => DataFrame) {
+    def name: String = state._1
+  }
+
+  /** One enrichment read's shared pieces, derived once per deployment:
+    * the sides and writers, the join keys, the per-trigger batch-key
+    * relation and prune, the `__mk*` join-key projections the keyed
+    * stores hash on, the flush-partial reads and compaction split, and
+    * the output tail. */
+  private[api] final class EnrichJoin(val ast: Ast, val j: JoinStream,
+      val writers: List[(Ast, Action, StructType, String)],
+      statelessSnap: List[(String, Ast)], val srcTs: DataFrame,
+      wmNs: Long) {
+    val sSide: SingleStream = j.left
+    val sName: String = sSide.table
+    val tName: String = j.right.table
+    val (dAst, dAct, dSchema, dSrc) = writers.head
+    val sp0: SparkSession = srcTs.sparkSession
+    val hasAggE: Boolean = ast.select.exists(it => containsAgg(it.e)) ||
+      ast.groupBy.nonEmpty
+
+    /** One batch's derived-stream environment (see [[batchEnv]]). */
+    def benvOf(sp: SparkSession, d2: String, batch: DataFrame)
+        : Map[String, DataFrame] =
+      batchEnv(sp, d2, batch, statelessSnap)
+    /** The environment every deploy-time prototype compiles over. */
+    lazy val protoEnv: Map[String, DataFrame] =
+      benvOf(sp0, "", emptyOf(sp0, srcTs.schema))
+
+    // r13 (VERDICT r12 #1): only keys present in THIS batch's events
+    // can produce join output this trigger — every other accumulated
+    // row enters the as-of window pass and is filtered at `__isE`
+    // without touching any event. So the per-trigger table read
+    // PRUNES to the batch's event join-key domain: bucket-restricted
+    // at the generation level (the keyed store hashes on the DML keys,
+    // which the deploy-time prototype asserts equal the join keys) and
+    // null-safe-semi-joined at the row level (the window pass
+    // partitions null keys together, so === would drop a null-keyed
+    // event's state). Acute for event-log tables, whose live row count
+    // grows with deployment lifetime: the un-pruned read is O(all live
+    // rows); this is O(rows of batch-touched keys). Lazy: the join-key
+    // extraction must not run before the prototype's own diagnostics.
+    lazy val joinKeys: List[(String, String)] = {
+      val sAlias = j.leftAlias.getOrElse(sName)
+      keyEqsOf(j.on, tName, {
+        case q :: c :: Nil if q.equalsIgnoreCase(sAlias) ||
+            q.equalsIgnoreCase(sName) => c
+        case parts => parts.mkString(".")
+      })
+    }
+    lazy val keyCols: List[String] = joinKeys.map(_._1).distinct
+
+    private var readGen = 0
+    /** Record a per-trigger state read for [[foldReadProbe]]. */
+    def record(name: String, rows: => Long): Unit =
+      foldReadProbe.foreach { buf =>
+        readGen += 1
+        buf += ((readGen, name, rows))
+      }
+    def probed(name: String, rel: DataFrame): DataFrame = {
+      record(name, rel.count())
+      rel
+    }
+
+    /** The stream side's rows of one batch, through its filter. */
+    def streamRows(sp: SparkSession, d2: String, batch: DataFrame,
+        benv: Map[String, DataFrame]): DataFrame = {
+      val sb0 = envLookup(benv, sName).getOrElse(batch)
+      sSide.filter.fold(sb0)(f => applyFilter(sp, d2, sb0, f, benv))
+    }
+    /** The batch's distinct event join keys, cast to the table's key
+      * types. */
+    def batchKeyRel(sp: SparkSession, d2: String, batch: DataFrame,
+        benv: Map[String, DataFrame]): DataFrame =
+      streamRows(sp, d2, batch, benv).select(keyCols.map { kc =>
+        expr(joinKeys.find(_._1 == kc).get._2)
+          .cast(dSchema(kc).dataType).as(kc) }: _*).distinct()
+    /** Null-safe key-domain prune of any table-side relation (the
+      * accumulated table or a flush relation): only rows of batch-event
+      * keys can produce join output this trigger. Falls through when
+      * the relation doesn't carry the key columns (defensive; the
+      * prototype asserts it) — and RECORDS it, so an unexpected
+      * unpruned read shows in the read-prune gate instead of silently
+      * regressing the O(batch) guarantee. */
+    def pruneToBatchKeys(rel: DataFrame, kdf: DataFrame): DataFrame =
+      if (!keyCols.forall(rel.columns.contains)) {
+        record(s"__prune_fallback:$tName", -1L)
+        rel
+      } else probed(tName, rel.as("t").join(kdf.as("k"),
+          keyCols.map(c => col(s"t.$c")
+              .cast(dSchema(c).dataType) <=> col(s"k.$c"))
+            .reduce(_ && _), "left_semi")
+        .select(rel.columns.toSeq.map(c => col(s"t.$c")): _*))
+
+    /** The `__mk*` join-key projection columns: the i-th computes
+      * table key column `kc` over a relation, cast to its table type. */
+    def mkProj(keys: Seq[(String, Column)]): Seq[Column] =
+      keys.zipWithIndex.map { case ((kc, c), i) =>
+        c.cast(dSchema(kc).dataType).as(s"__mk$i") }
+    def mkNames(n: Int): List[String] = (0 until n).map(i => s"__mk$i").toList
+    /** `rel` with the `__mk*` projections prepended. */
+    def withMk(rel: DataFrame, keys: Seq[(String, Column)]): DataFrame =
+      rel.select(mkProj(keys) ++ rel.columns.toSeq.map(col): _*)
+    /** `withMk` over picked writer items: a flush relation carries each
+      * key under its writer alias; partial-state and raw source rows
+      * evaluate the item expr. */
+    def withMkPicked(kes: KeyPick, rel: DataFrame, fromFlush: Boolean)
+        : DataFrame =
+      withMk(rel, kes.map { case (kc, a, e) =>
+        kc -> (if (fromFlush) col(a) else expr(sqlOf(e))) })
+    /** The batch-key relation as `__mk*` columns in `keyOrder`. */
+    def kdfMk(kdf: DataFrame, keyOrder: Seq[String]): DataFrame =
+      kdf.select(mkProj(keyOrder.map(kc => kc -> col(kc))): _*)
+    /** Null-safe row-level prune of an `__mk*`-keyed relation against
+      * a key relation (the one keyedRead handed back — a LocalRelation
+      * for small batches). */
+    def pruneMk(rel: DataFrame, kdf2: DataFrame, mkCols: Seq[String])
+        : DataFrame =
+      rel.as("t").join(kdf2.as("k"),
+          mkCols.map(c => col(s"t.$c") <=> col(s"k.$c")).reduce(_ && _),
+          "left_semi")
+        .select(rel.columns.toSeq.map(c => col(s"t.$c")): _*)
+    /** An `__mk*`-keyed state's rows for the batch's keys: a
+      * bucket-restricted read, row-pruned, key columns dropped. */
+    def keyedMkRead(st: LiveState, kdfMk: DataFrame, mkCols: Seq[String])
+        : DataFrame = {
+      val (prior, kEff) = st.keyedRead(kdfMk)
+      pruneMk(prior, kEff, mkCols).drop(mkCols: _*)
+    }
+    /** A flush-partial store's prior rows: the recorded key-pruned read
+      * when the store is `__mk*`-keyed (`mk` = the batch's `__mk*` keys
+      * and the key columns), else the whole store. */
+    def priorRead(name: String, st: LiveState,
+        mk: Option[(DataFrame, Seq[String])]): DataFrame =
+      mk.fold(st.full()) { case (kdf2, mkCols) =>
+        probed(name, keyedMkRead(st, kdf2, mkCols)) }
+    /** A flush-partial store merged with `rows`' partials; `mkCols`
+      * are the store's `__mk*` columns (none when unkeyed). */
+    def mergePartials(p: FlushPieces, st: LiveState, mkCols: Seq[String],
+        rows: DataFrame): DataFrame =
+      p.merge(if (mkCols.isEmpty) st.slice else st.slice.drop(mkCols: _*),
+        p.partialOf(rows))
+    /** The post-merge flush relation: the prior store's untouched
+      * buckets plus this trigger's merged buckets `st1`, finalized. */
+    def postMergeFlush(p: FlushPieces, prior: DataFrame, st1: DataFrame)
+        : DataFrame =
+      p.flushOf(prior.as("t")
+        .join(st1.select(p.keys.map(col): _*).distinct().as("u"),
+          p.keys.map(k => col(s"t.$k") <=> col(s"u.$k")).reduce(_ && _),
+          "left_anti")
+        .select(prior.columns.toSeq.map(c => col(s"t.$c")): _*)
+        .unionByName(st1))
+    /** A windowed writer's flush-row ord: (bucket END, event 0,
+      * statement index `wi`). */
+    def flushOrd(wi: Int, tNs: Long): Column =
+      struct(((col("__wb") + lit(1L)) * lit(tNs)).cast("long").as("ts_ns"),
+        lit(0L).as("event_id"), lit(wi.toLong).as("w"))
+
+    /** The TIME-BANDED compaction split of a flush-partial store and
+      * its compacted base: on a compacting generation the store sheds
+      * FROZEN buckets — bucket end at or below the batch's max ts −
+      * `wmNs`, so in-order arrival means no later row can merge into
+      * them and every later event admits them all — into the base,
+      * which keeps only the LATEST flush per group key (the only one
+      * that can still win an as-of pick; an ungrouped writer keeps one
+      * global latest row through TakeOrderedAndProject, not a
+      * row_number window over one all-rows partition). Returns the
+      * (store, base) replacements; `wrapSt`/`wrapFl` add a keyed
+      * store's `__mk*` columns to state and flush rows. */
+    def compactSplit(sp: SparkSession, st: LiveState, base: LiveState,
+        st1: DataFrame, batch: DataFrame, p: FlushPieces,
+        groupBy: Seq[String], baseSch: StructType,
+        wrapSt: DataFrame => DataFrame, wrapFl: DataFrame => DataFrame)
+        : (DataFrame, DataFrame) =
+      if (!st.compacting) (wrapSt(st1), emptyOf(sp, baseSch))
+      else {
+        val maxTs = batch.agg(max(col("ts_ns"))).collect()(0)
+        if (maxTs.isNullAt(0)) (wrapSt(st1), base.slice)
+        else {
+          val frozenP = (col("__wb") + lit(1L)) * lit(p.tNs) <=
+            lit(maxTs.getLong(0) - wmNs)
+          val all = base.slice
+            .unionByName(wrapFl(p.flushOf(st1.filter(frozenP))))
+          val base2 =
+            if (groupBy.isEmpty) all.orderBy(col("__wb").desc).limit(1)
+            else all.withColumn("__rn", row_number().over(
+                org.apache.spark.sql.expressions.Window
+                  .partitionBy(groupBy.map(col): _*)
+                  .orderBy(col("__wb").desc)))
+              .where(col("__rn") === 1).drop("__rn")
+          (wrapSt(st1.filter(!frozenP)), base2)
+        }
+      }
+
+    /** Windowed writer `wi`'s flush-partial store mode: keyed on the
+      * `__mk*` join-key projections when `mk` gives them (the probe
+      * evaluates the non-aggregate key exprs over the writer's raw
+      * filtered source rows — no partial aggregation needed), else on
+      * the (bucket, group) keys. */
+    def wstMode(wi: Int, p: FlushPieces,
+        mk: Option[(Seq[String], DataFrame => DataFrame)],
+        compactEvery: Option[Int]): StateMode = {
+      val (wAst, _, _, wSrc) = writers(wi)
+      mk match {
+        case Some((mkCols, mkOf)) =>
+          KeyedState(mkCols, (sp, d2, batch) =>
+            mkOf(writerSource(sp, d2, wAst, wSrc, benvOf(sp, d2, batch)))
+              .select(mkCols.map(col): _*), compactEvery)
+        case None =>
+          KeyedState(p.keys, (sp, d2, batch) =>
+            p.probeSel(loadTable(sp, d2, wSrc, benvOf(sp, d2, batch))),
+            compactEvery)
+      }
+    }
+
+    /** The read's output tail: the aggregation form when the read
+      * aggregates (its state named `aggState`), else the projection
+      * form. Built on demand — both VALIDATE the read. */
+    def tailOf(aggState: String): EnrichTail =
+      if (hasAggE) aggTail(aggState)
+      else {
+        val proto = enrichCompile(sp0, "", ast, j, writers,
+          emptyOf(sp0, dSchema), protoEnv)
+        EnrichTail(ast, proto, ("__out", proto.schema, AppendState),
+          (_, enriched) => enriched, identity)
+      }
+
+    /** The "aggregation ABOVE the enrichment join" tail (r16 — one
+      * definition for every channel): validates the v1 contract (group
+      * keys = the aliases of the non-aggregate select items,
+      * stream-side), rewrites the read to its per-pair PROJECTION form
+      * (`readAst` — the channel runs it per trigger with whatever
+      * override mechanism it maintains), and folds the per-trigger
+      * enriched rows as FoldAlg algebraic partials keyed on the group
+      * aliases. having (then deployApp's order, offset and limit)
+      * applies ONCE over the finalized groups — chunking-invariant by
+      * construction, because every stream event (and so every per-pair
+      * row) lands in exactly one trigger. */
+    private def aggTail(stName: String): EnrichTail = {
+      val items = itemsOf(ast)
+      val keyItems = items.filter(!_._3)
+      val keyAliases = keyItems.map(_._2)
+      if (ast.groupBy.sorted != keyAliases.sorted.toList)
+        fail("live enrichment aggregation (v1) groups by " +
+          "exactly the aliases of its non-aggregate select " +
+          s"items (non-aggregate [${keyAliases.mkString(", ")}" +
+          s"], group by [${ast.groupBy.mkString(", ")}])")
+      val comps = scala.collection.mutable.Buffer
+        .empty[(String, String, Option[Expr])]
+      def rw(e: Expr): Expr = e match {
+        case Call(None, n, args0) if aggNames(n.toLowerCase) =>
+          val base = s"__g${comps.length}"
+          comps += ((base, n.toLowerCase, args0.headOption))
+          FoldAlg.rewrite(n.toLowerCase, base)
+        case Call(ns2, n, as2) => Call(ns2, n, as2.map(rw))
+        case Bin(op, l2, r2) => Bin(op, rw(l2), rw(r2))
+        case Not(x) => Not(rw(x))
+        case Neg(x) => Neg(rw(x))
+        case other2 => other2
+      }
+      val finals: Seq[(String, Expr)] = items.map { case (it, a2, isAgg) =>
+        a2 -> (if (isAgg) rw(it.e) else Ref(List(a2)))
+      }
+      comps.foreach { case (_, n, argO) =>
+        if (n != "count" && argO.isEmpty) fail(s"$n(...) needs an argument")
+      }
+      if (comps.isEmpty)
+        fail("live enrichment aggregation selects at least one aggregate")
+      // group keys are STREAM-side expressions (v1): the touched-bucket
+      // probe evaluates them on the raw batch, before any state is read
+      keyItems.foreach { case (it, _, _) =>
+        if (refsTable(it.e, tName) || j.rightAlias.exists(refsTable(it.e, _)))
+          fail("live enrichment aggregation group keys are " +
+            "STREAM-side expressions (v1) — a table-side " +
+            "key needs the projection form + a downstream stage")
+      }
+      val sAlias = j.leftAlias.getOrElse(sName)
+      val keySqls = keyItems.map { case (it, a2, _) =>
+        (sqlOfWith(it.e, {
+          case q2 :: c :: Nil if q2.equalsIgnoreCase(sAlias) ||
+              q2.equalsIgnoreCase(sName) => c
+          case c :: Nil => c
+          case parts => fail("live enrichment aggregation " +
+            "group keys are stream-side (v1); got " +
+            s"'${parts.mkString(".")}'")
+        }), a2) }
+      // per-event rows: group-key exprs + aggregate arguments
+      val rowsSel = keyItems.map { case (it, a2, _) =>
+        SelItem(it.e, Some(a2)) } ++
+        comps.toList.flatMap { case (base, _, argO) =>
+          argO.map(a0 => SelItem(a0, Some(s"${base}_x"))).toList }
+      val astRows: Ast = ast.copy(select = rowsSel, groupBy = Nil,
+        having = None, orderBy = Nil, limit = None, offset = None)
+      val keys = if (keyAliases.isEmpty) Seq("__k") else keyAliases
+      def partialOf(df: DataFrame): DataFrame = {
+        val withK =
+          if (keyAliases.isEmpty) df.withColumn("__k", lit(0L)) else df
+        val aggs: Seq[Column] = comps.toSeq.flatMap { case (base, n, argO) =>
+          FoldAlg.partialCols(n, base, argO.map(_ => col(s"${base}_x")))
+        }
+        withK.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      }
+      def finalized(acc: DataFrame): DataFrame =
+        acc.select(finals.map { case (a2, e2) => expr(sqlOf(e2)).as(a2) }: _*)
+      // deploy-time prototypes: fail fast + schemas (routes astRows
+      // through the channel-shared batch validations)
+      val schemaA = partialOf(enrichCompile(sp0, "", astRows, j, writers,
+        emptyOf(sp0, dSchema), protoEnv)).schema
+      EnrichTail(astRows, finalized(emptyOf(sp0, schemaA)),
+        (stName, schemaA, KeyedState(keys, (sp, d2, batch) =>
+          if (keyAliases.isEmpty) batch.select(lit(0L).as("__k"))
+          else streamRows(sp, d2, batch, benvOf(sp, d2, batch))
+            .select(keySqls.map { case (sq, a2) => expr(sq).as(a2) }: _*))),
+        // merge this trigger's per-pair rows into the accumulated keyed
+        // partials (componentwise FoldAlg)
+        (st, enriched) => {
+          val u = partialOf(enriched)
+          st.slice.as("t").join(u.as("u"),
+              keys.map(k2 => col(s"t.$k2") <=> col(s"u.$k2")).reduce(_ && _),
+              "full_outer")
+            .select(keys.map(k2 =>
+                coalesce(col(s"u.$k2"), col(s"t.$k2")).as(k2)) ++
+              comps.toSeq.flatMap { case (b2, n, _) =>
+                FoldAlg.mergeCols(n, b2) }: _*)
+        },
+        acc => {
+          val fin = finalized(acc)
+          ast.having.fold(fin)(h => fin.where(expr(sqlOf(h))))
+        })
+    }
+
+    /** The channel's one [[LiveFold]] over the source: its `states`
+      * plus the tail's. Per trigger `step` returns the channel's state
+      * updates and the trigger's enriched rows, which the tail folds. */
+    def liveFold(tail: EnrichTail,
+        states: Seq[(String, StructType, StateMode)])(
+        step: (SparkSession, String, Map[String, LiveState], DataFrame,
+          Map[String, DataFrame]) => (Map[String, DataFrame], DataFrame))
+        : LiveFold =
+      LiveFold(srcTs, states :+ tail.state,
+        (sp, d2, acc, batch) => {
+          val (upd, enriched) =
+            step(sp, d2, acc, batch, benvOf(sp, d2, batch))
+          upd + (tail.name -> tail.step(acc(tail.name), enriched))
+        },
+        (_, acc) => tail.finish(acc(tail.name)))
+  }
+
+  /** PLAIN channel: per-event (non-windowed) writers. The maintained
+    * table bucket-merges on its DML keys (write cost O(batch-touched
+    * buckets)); per trigger the pre-batch table read is PRUNED to the
+    * batch's event keys — events may reference keys this batch didn't
+    * UPDATE, but never keys this batch's events don't carry. The batch
+    * compile runs the identical as-of rows over the whole replay, so
+    * it is the oracle under any chunking. */
+  private def plainChannel(e: EnrichJoin): LiveStage = {
+    import e._
+    // table maintenance: single-writer = the plain keyed DML merge;
+    // multi-writer = the interleaved emission-order merge
+    // (applyDmlMulti), batch-key probes = the union of every writer's
+    // key projection
+    def tApply(sp: SparkSession, d2: String, accT: DataFrame,
+        benv: Map[String, DataFrame]): DataFrame =
+      if (writers.length == 1)
+        applyDml(sp, d2, dAst, dAct, dSchema, accT, benv)
+      else applyDmlMulti(sp, d2, writers, dSchema, accT, benv)
+    def tMode: StateMode = {
+      val m0 =
+        if (writers.length == 1)
+          dmlStateMode(dAst, dAct, dSchema, dSrc, benvOf)
+        else dmlStateModeMulti(writers, tName, dSchema, benvOf)
+      // insert-only log tables read by THIS enrichment join get a KEYED
+      // store on the join key columns (instead of AppendState), so the
+      // per-trigger read bucket-restricts to the batch's event keys —
+      // otherwise the table's per-trigger scan grows with deployment
+      // lifetime
+      m0 match {
+        case AppendState if dAct.isInstanceOf[InsertInto] =>
+          dmlStateModeMulti(writers, tName, dSchema, benvOf,
+            fallbackKeys = keyCols)
+        case m => m
+      }
+    }
+    val tail = tailOf("state")
+    Folded(tail.proto.schema, () =>
+      liveFold(tail, Seq((tName, dSchema, tMode))) {
+        (sp, d2, acc, batch, benv) =>
+          // keyedRead hands back the key relation to prune with — a
+          // collected LocalRelation when the batch's key set is small,
+          // so the whole per-trigger read costs ONE probe job and the
+          // semi-join re-evaluates nothing
+          val (rel, kdfEff) =
+            acc(tName).keyedRead(batchKeyRel(sp, d2, batch, benv))
+          (Map(tName -> tApply(sp, d2, acc(tName).slice, benv)),
+            enrichCompile(sp, d2, tail.readAst, j, writers,
+              pruneToBatchKeys(rel, kdfEff), benv))
+      })
+  }
+
+  /** WINDOWED channel: PER-EVENT AS-OF enrichment of a
+    * WINDOWED-aggregate store (the Siddhi store pattern read back
+    * through a join, r11): each event sees the latest COMPLETED flush
+    * for its key — a flush row is an update row visible from its bucket
+    * END, and enrichCompile's keyed union+window pass reconstructs the
+    * as-of state exactly like per-event writers. The fold keeps the
+    * store pattern's per-(bucket ∪ group keys) algebraic PARTIALS (a
+    * bucket spanning triggers merges componentwise); per trigger it
+    * merges the batch's partials, derives the POST-merge flush
+    * relation, and runs the as-of pass over THIS batch's events —
+    * chunking-invariant because an event only reads flushes whose
+    * bucket closed at or before its own timestamp, whose data
+    * (in-order replay) has already arrived. The batch compile runs the
+    * identical construction over the whole replay, so it is the
+    * oracle.
+    *
+    * The partial store is TIME-BANDED (r12): every
+    * `graft.live.compactEvery` generations it sheds frozen buckets
+    * into a compacted BASE of one finished flush row per group key
+    * ([[EnrichJoin.compactSplit]]), so per-trigger reads are O(live
+    * band + base ≈ key domain), not O(every bucket partial ever
+    * written). */
+  private def windowedChannel(e: EnrichJoin, tNsW: Long): LiveStage = {
+    import e._
+    if (dSrc != "events")
+      fail("windowed-writer enrichment (v1) reads a table " +
+        s"whose writer consumes the source stream; '$tName' " +
+        s"is written from derived stream '$dSrc'")
+    val ssW = dAst.stream.asInstanceOf[SingleStream]
+    val tail = tailOf("aggst")
+    Folded(tail.proto.schema, () => {
+      val p = flushPiecesOf(emptyOf(sp0, srcTs.schema),
+        ssW.filter, dAst.groupBy, itemsOf(dAst), tNsW)
+      val stSch = p.stateSchema
+      val flushSchema = p.flushOf(emptyOf(sp0, stSch)).schema
+      // (r17, VERDICT r16 #1) __mk*-keyed store — the r16 event-log
+      // discipline extended to this channel: when every enrichment
+      // join key is a NON-AGGREGATE writer output (its item expr
+      // evaluates over raw source rows AND partial state rows — group
+      // columns survive partialOf — so bucket membership is stable
+      // under partial merge), the flush-partial store and its
+      // compacted base key on the join-key projections and the
+      // per-trigger read bucket-restricts to the batch's event keys:
+      // O(batch-key history) instead of O(live band + whole key-domain
+      // base). Anything else (aggregate-valued or non-output join keys,
+      // exprs that don't analyze over the partial schema) keeps the r15
+      // full() read — a fallback, not a refusal: reads stay
+      // compaction-bounded, just key-unpruned.
+      val mk: Option[(List[String], KeyPick)] = scala.util.Try {
+        pickKeyItems(itemsOf(dAst), keyCols.map(kc => kc -> Seq(kc)))
+          .filter(_.nonEmpty).map { kes =>
+            // deploy-time analysis over the partial/flush schemas: a
+            // key expr that doesn't resolve there keeps the full read
+            withMkPicked(kes, emptyOf(sp0, stSch), fromFlush = false).schema
+            withMkPicked(kes, emptyOf(sp0, flushSchema), fromFlush = true)
+              .schema
+            (mkNames(kes.length), kes)
+          }
+      }.toOption.flatten
+      def wrapSt(r: DataFrame): DataFrame =
+        mk.fold(r)(m => withMkPicked(m._2, r, fromFlush = false))
+      def wrapFl(r: DataFrame): DataFrame =
+        mk.fold(r)(m => withMkPicked(m._2, r, fromFlush = true))
+      val mkCols = mk.fold(List.empty[String])(_._1)
+      // a group key must appear among the flush outputs for the base to
+      // key itself; otherwise keep the un-pruned store (correct, just
+      // O(history) — and the select-item checks make this unreachable
+      // in practice). Default 8: short replays (the 4-chunk gates) never
+      // reach a compaction generation and pay zero overhead; a
+      // long-running deployment compacts every 8 triggers, bounding the
+      // store at the live band + 8 triggers of bucket growth
+      val compactN: Option[Int] =
+        if (dAst.groupBy.forall(flushSchema.fieldNames.contains))
+          Some(positiveIntConf(sp0, "graft.live.compactEvery").getOrElse(8))
+        else None
+      val stMode0: StateMode =
+        if (mk.isEmpty) KeyedState(p.keys,
+          (_, _, batch) => p.probeSel(batch), compactEvery = compactN)
+        else KeyedState(mkCols, (_, _, batch) =>
+          wrapSt(ssW.filter.fold(batch)(ff => batch.where(expr(sqlOf(ff)))))
+            .select(mkCols.map(col): _*), compactEvery = compactN)
+      val baseSch = wrapFl(emptyOf(sp0, flushSchema)).schema
+      // the base only rewrites on compaction generations (batchKeys
+      // empty ⇒ no touched buckets ⇒ the runner skips its write)
+      val baseKeys: Seq[String] =
+        if (mk.nonEmpty) mkCols
+        else if (dAst.groupBy.nonEmpty) dAst.groupBy
+        else Seq("__wb")
+      val states = ("state", wrapSt(emptyOf(sp0, stSch)).schema, stMode0) +:
+        compactN.toSeq.map(n => ("base", baseSch, KeyedState(baseKeys,
+          (sp, _, _) => emptyOf(sp, StructType(
+            baseSch.filter(f => baseKeys.contains(f.name)).toArray)),
+          Some(n))))
+      liveFold(tail, states) { (sp, d2, acc, batch, benv) =>
+        val st1 = mergePartials(p, acc("state"), mkCols, batch)
+        // post-merge partials: untouched buckets from the live-band
+        // state (pruned by the compaction split), touched buckets
+        // replaced by st1 — then the frozen history re-enters as the
+        // compacted base (one latest-flush row per key, always
+        // admissible). The keyed store bucket-restricts both reads to
+        // the batch's event keys BEFORE the anti-join merge; the flush
+        // rows then prune to the batch's event keys at the row level:
+        // only those keys can join this trigger (the time-banded store
+        // bounds the HISTORY axis, this bounds the KEY axis)
+        val kdf = batchKeyRel(sp, d2, batch, benv)
+        val mkR = mk.map(m => (kdfMk(kdf, keyCols), m._1))
+        val prior = priorRead("state", acc("state"), mkR)
+        val baseRel = acc.get("base").map(priorRead("base", _, mkR))
+        val flushLive = postMergeFlush(p, prior, st1)
+        val flushRel = pruneToBatchKeys(
+          baseRel.fold(flushLive)(flushLive.unionByName), kdf)
+        val enriched = enrichCompile(sp, d2, tail.readAst, j, writers,
+          emptyOf(sp, dSchema), benv, winFlush = Map(0 -> flushRel))
+        val split = compactN.fold(Map("state" -> wrapSt(st1))) { _ =>
+          val (s, b) = compactSplit(sp, acc("state"), acc("base"), st1,
+            batch, p, dAst.groupBy, baseSch, wrapSt, wrapFl)
+          Map("state" -> s, "base" -> b)
+        }
+        (split, enriched)
+      }
+    })
+  }
+
+  /** EVENT-LOG channel: LIVE per-event reads of EVENT-LOG tables with
+    * WINDOWED members (r15, deleting the last live/batch asymmetry of
+    * the composition matrix). Each windowed (timeBatch) writer holds
+    * cross-trigger flush PARTIALS — the post-merge flush is the
+    * complete per-bucket emission relation at TRUE ords (a bucket whose
+    * end ≤ an event's ts is complete by in-order arrival, and open
+    * buckets sort after every current event) — and each per-event
+    * writer holds its tagged EMISSION LOG (dmlEmissions rows + ord).
+    * BOTH kinds of state are keyed on the JOIN keys (r16 for the flush
+    * partials), so every per-trigger read bucket-prunes to the batch's
+    * event keys — O(batch-key history), never the whole accumulated
+    * log/partial store. Per trigger, enrichCompile's event-log
+    * construction runs over (pruned prior logs ∪ this batch's
+    * emissions) and the flush relations — everything at true ords, so
+    * the per-trigger pass IS the batch construction restricted to the
+    * batch's keys: chunking-invariant by construction, live ≡ batch by
+    * shared code. Aggregation (r16) folds the same per-pair relation:
+    * each read event lands in exactly one trigger with its COMPLETE
+    * pair set, so per-trigger partials sum to the batch aggregation
+    * under any chunking. */
+  private def eventLogChannel(e: EnrichJoin, winTNsPer: List[Option[Long]])
+      : LiveStage = {
+    import e._
+    // the tail's deploy-time prototype routes through enrichLogCompile's
+    // own validations (windowed forms, key checks, shape routing)
+    val tail = tailOf("aggst")
+    val keyOrder = keyCols.sorted
+    val mkCols = mkNames(keyOrder.length)
+    def withMkL(rel: DataFrame, wi: Int): DataFrame = {
+      val rhs = writers(wi)._2 match {
+        case UpsertTable(_, _, on2) => keyEqsOf(on2, tName)
+        case DeleteTable(_, on2) => keyEqsOf(on2, tName)
+        // an insert row's key values are its own outputs
+        case _ => keyOrder.map(kc => kc -> kc)
+      }
+      withMk(rel, keyOrder.map(kc => kc -> expr(rhs.find(_._1 == kc).get._2)))
+    }
+    // a per-event writer's tagged emission delta: its dmlEmissions rows
+    // + the 3-field replay ord
+    def logDelta(sp: SparkSession, d2: String, wi: Int,
+        benv: Map[String, DataFrame]): DataFrame =
+      dmlEmissions(sp, d2, writers(wi)._1, writers(wi)._2, dSchema, benv)._1
+        .withColumn("__ord", struct(col("__g_ord.ts_ns"),
+          col("__g_ord.event_id"), lit(wi.toLong).as("w")))
+        .drop("__g_ord")
+    val infos: List[Either[FlushPieces, StructType]] =
+      writers.zipWithIndex.map { case ((wAst2, wAct2, _, wSrc2), wi) =>
+        winTNsPer(wi) match {
+          case Some(t2) if !wAct2.isInstanceOf[DeleteTable] =>
+            Left(flushPiecesOf(loadTable(sp0, "", wSrc2, protoEnv),
+              wAst2.stream.asInstanceOf[SingleStream].filter,
+              wAst2.groupBy, itemsOf(wAst2), t2))
+          case _ =>
+            Right(withMkL(logDelta(sp0, "", wi, protoEnv), wi).schema)
+        }
+      }
+    // (r16, VERDICT r15 #1) key each windowed member's flush-partial
+    // store on the JOIN-key projections (__mk*) — the elog discipline
+    // applied to the wst states — so the per-trigger read can
+    // bucket-restrict to the batch's keys via keyedRead instead of the
+    // r15 full() scan (that state grows one row per (key, bucket)
+    // FOREVER under log semantics). The table key columns must be
+    // NON-AGGREGATE outputs of the windowed writer. (r17) an
+    // AGGREGATE-valued or non-output key keeps the r15 full() read on a
+    // (bucket, group)-keyed store — correct, just key-unpruned.
+    val winKeys: Map[Int, KeyPick] = writers.indices.flatMap { wi =>
+      infos(wi).left.toOption.flatMap(_ => pickKeyItems(
+        itemsOf(writers(wi)._1), keyOrder.map(kc => kc -> Seq(kc))))
+        .map(wi -> _)
+    }.toMap
+    def mkOfW(wi: Int, rel: DataFrame): DataFrame =
+      withMkPicked(winKeys(wi), rel, fromFlush = false)
+    Folded(tail.proto.schema, () => {
+      val states = writers.indices.map { wi =>
+        infos(wi) match {
+          case Left(p) if winKeys.contains(wi) =>
+            (s"wst$wi", mkOfW(wi, emptyOf(sp0, p.stateSchema)).schema,
+              wstMode(wi, p, Some((mkCols, mkOfW(wi, _))), None))
+          case Left(p) => (s"wst$wi", p.stateSchema, wstMode(wi, p, None, None))
+          case Right(sch) => (s"elog$wi", sch,
+            KeyedState(mkCols, (sp, d2, batch) =>
+              withMkL(logDelta(sp, d2, wi, benvOf(sp, d2, batch)), wi)
+                .select(mkCols.map(col): _*)))
+        }
+      }
+      liveFold(tail, states) { (sp, d2, acc, batch, benv) =>
+        val kdf = batchKeyRel(sp, d2, batch, benv)
+        val kdfM = kdfMk(kdf, keyOrder)
+        var emis = Map.empty[Int, DataFrame]
+        val upd = writers.indices.map { wi =>
+          infos(wi) match {
+            case Left(p) =>
+              val keyedWi = winKeys.contains(wi)
+              val st1 = mergePartials(p, acc(s"wst$wi"),
+                if (keyedWi) mkCols else Nil,
+                loadTable(sp, d2, writers(wi)._4, benv))
+              // bucket-restricted read of the batch's keys (r16): only
+              // batch-event keys can emit this trigger
+              val prior = priorRead(s"wst$wi", acc(s"wst$wi"),
+                if (keyedWi) Some((kdfM, mkCols)) else None)
+              emis += wi -> pruneToBatchKeys(postMergeFlush(p, prior, st1),
+                  kdf)
+                .withColumn("__ord", flushOrd(wi, p.tNs)).drop("__wb")
+              s"wst$wi" -> (if (keyedWi) mkOfW(wi, st1) else st1)
+            case Right(_) =>
+              val delta = logDelta(sp, d2, wi, benv)
+              emis += wi ->
+                keyedMkRead(acc(s"elog$wi"), kdfM, mkCols).unionByName(delta)
+              s"elog$wi" ->
+                acc(s"elog$wi").slice.unionByName(withMkL(delta, wi))
+          }
+        }.toMap
+        (upd, enrichCompile(sp, d2, tail.readAst, j, writers,
+          emptyOf(sp, dSchema), benv, emisOverride = emis))
+      }
+    })
+  }
+
+  /** MIXED channel: a windowed + per-event writer group read LIVE
+    * through the as-of join (r14). With in-order replay every PRIOR
+    * trigger's update is admissible to every current event, and among
+    * one last-wins writer's updates for a key only the LATEST can ever
+    * win a future as-of pick — so each per-event writer's cross-trigger
+    * history collapses to a latest-row-per-key state CARRYING ITS TRUE
+    * `__ord` (O(key domain), no log growth), each windowed writer keeps
+    * its flush partials, and per trigger enrichCompile runs the one
+    * keyed window pass with (prior latest rows ∪ this batch's rows) as
+    * each per-event writer's update relation (uRelOverride) and each
+    * windowed writer's post-merge flush relation (winFlush) — true ords
+    * everywhere, so flushes interleave between per-event updates
+    * exactly as the batch replay orders them. v1 scope: implicit-set
+    * and accumulator-fold upserts ± tombstone sweepers (named below);
+    * aggregation via a downstream stage. */
+  private def mixedChannel(e: EnrichJoin, winTNsPer: List[Option[Long]])
+      : LiveStage = {
+    import e._
+    val groupKinds = writers.map { case (_, wAct2, _, _) =>
+      wAct2 match {
+        case UpsertTable(_, set2, _) if set2.isEmpty => "upsert"
+        case UpsertTable(_, set2, _) if set2.forall {
+          case (c2, e2) => foldSetOf(tName, c2, e2).nonEmpty
+        } => "fold"
+        case _: DeleteTable => "delete"
+        case _ => "other"
+      }
+    }.distinct.sorted
+    // composable mixed-read shapes: all-implicit-set, all-fold,
+    // implicit ± tombstone sweepers (a prior tombstone history collapses
+    // to the LAST tombstone per key — the only mark that can still
+    // decide a future as-of pick), and — r15 — implicit + fold SHAPE
+    // mixes (an implicit upsert is a segment RESET; the fold writers'
+    // two-row collapse re-scopes past the latest PAST reset at every
+    // merge — see the pass-2 scoping below). Fold + sweepers stays
+    // refused: sweeps SEGMENT the running sums, so the two-row collapse
+    // would need per-segment recomputation on every tombstone arrival.
+    if (groupKinds != List("upsert") && groupKinds != List("fold") &&
+        groupKinds != List("delete", "upsert") &&
+        groupKinds != List("fold", "upsert"))
+      fail("live enrichment reads of a MIXED windowed + " +
+        s"per-event writer group on '$tName' (v1) take " +
+        "implicit-set and/or accumulator-fold `update or " +
+        "insert` writers, implicit ± tombstone sweepers — " +
+        "general expr-set shapes and fold + sweeper " +
+        "mixes (sweeps segment the running sums) keep the " +
+        "recorded bound: keep those writers on their own " +
+        "table, or read the mixed table at end of replay " +
+        s"(`from $tName select ...`)")
+    val isFoldGroup = groupKinds == List("fold")
+    val isShapeMix = groupKinds == List("fold", "upsert")
+    // per-writer shape (parallel to `writers`): "upsert" (implicit
+    // reset), "fold", or "delete"
+    val wKinds: List[String] = writers.map { case (_, wAct2, _, _) =>
+      wAct2 match {
+        case UpsertTable(_, set2, _) if set2.isEmpty => "upsert"
+        case _: UpsertTable => "fold"
+        case _ => "delete"
+      }
+    }
+    if (hasAggE)
+      fail("live enrichment aggregation over a MIXED " +
+        "windowed + per-event writer group (v1): use the " +
+        "projection form and aggregate in a downstream stage")
+    val keysPer: List[List[(String, String)]] =
+      writers.map { case (_, wAct2, _, _) => wAct2 match {
+        case UpsertTable(_, _, on2) => keyEqsOf(on2, tName)
+        case DeleteTable(_, on2)    => keyEqsOf(on2, tName)
+        case _ => Nil
+      } }
+    val keyOrder = keysPer.head.map(_._1).distinct.sorted
+    val mkCols = mkNames(keyOrder.length)
+    def withMkM(rel: DataFrame, wi: Int): DataFrame =
+      withMk(rel, keyOrder.map(kc =>
+        kc -> expr(keysPer(wi).find(_._1 == kc).get._2)))
+    // fold groups (r14): every state/batch row carries a PRE-EVALUATED
+    // `__fd` delta struct (uTagUpd consumes it by name), because the
+    // collapsed sum rows below have no per-row delta expression — their
+    // delta IS the sum
+    val foldSpecsPer: List[List[(String, (String, Expr))]] =
+      writers.map { case (_, wAct2, _, _) => wAct2 match {
+        case UpsertTable(_, set2, _) => set2.flatMap {
+          case (c2, e2) => foldSetOf(tName, c2, e2).map(f2 => c2 -> f2) }
+        case _ => Nil
+      } }
+    val foldCols: List[String] =
+      if (isFoldGroup || isShapeMix)
+        foldSpecsPer.find(_.nonEmpty).getOrElse(Nil).map(_._1)
+      else Nil
+    def fdEval(rel: DataFrame, wi: Int): DataFrame =
+      if (!(isFoldGroup || (isShapeMix && wKinds(wi) == "fold"))) rel
+      else {
+        val outC = rel.columns.toSet
+        def dSql(e2: Expr): String = sqlOfWith(e2, {
+          case c2 :: Nil if outC.contains(c2) => c2
+          case parts => fail(s"fold delta reference " +
+            s"'${parts.mkString(".")}' is not a DML select " +
+            "output attribute")
+        })
+        rel.withColumn("__fd", struct(foldCols.map { c2 =>
+          expr(dSql(foldSpecsPer(wi).find(_._1 == c2).get._2._2))
+            .cast(dSchema(c2).dataType).as(c2) }: _*))
+      }
+    // per writer: Left(flush pieces) / Right(per-event-state schema) —
+    // both derived over empty prototypes at deploy
+    val infos: List[Either[FlushPieces, StructType]] =
+      writers.zipWithIndex.map { case ((wAst2, wAct2, _, wSrc2), wi) =>
+        winTNsPer(wi) match {
+          // a windowed DELETE never gets flush pieces — the deploy-time
+          // enrichCompile prototype below refuses it by name (uTagDel's
+          // window check)
+          case Some(t2) if !wAct2.isInstanceOf[DeleteTable] =>
+            Left(flushPiecesOf(loadTable(sp0, "", wSrc2, protoEnv),
+              wAst2.stream.asInstanceOf[SingleStream].filter,
+              wAst2.groupBy, itemsOf(wAst2), t2))
+          case _ =>
+            val (protoRel, _) =
+              perEventURel(sp0, "", wAst2, wSrc2, wi, protoEnv)
+            Right(withMkM(fdEval(protoRel, wi), wi).schema)
+        }
+      }
+    // r15 (VERDICT r14 #2): the windowed channel's TIME-BANDED base
+    // compaction, PER WRITER ([[EnrichJoin.compactSplit]]) — safe by
+    // the same freeze argument: a bucket frozen at generation g is
+    // admissible to EVERY event of later generations, and among ONE
+    // writer's admissible flushes per key only the LATEST ord can win
+    // the as-of pick. Implicit-set (± sweeper) groups only: FOLD flush
+    // rows are DELTAS — every frozen delta still sums into future as-of
+    // values and the group's min-ord row can seed the 'a' pick, so
+    // latest-per-key collapse would be wrong; fold groups keep the
+    // un-compacted band (reads stay key-pruned).
+    val compactInfo: Map[Int, (Int, Seq[String], StructType)] =
+      if (isFoldGroup) Map.empty
+      else writers.indices.flatMap { wi =>
+        infos(wi) match {
+          case Left(p) if wKinds(wi) == "upsert" =>
+            val gb = writers(wi)._1.groupBy
+            val flushSch = p.flushOf(emptyOf(sp0, p.stateSchema)).schema
+            if (gb.nonEmpty && gb.forall(flushSch.fieldNames.contains))
+              Some(wi -> ((positiveIntConf(sp0,
+                "graft.live.compactEvery").getOrElse(8),
+                gb: Seq[String], flushSch)))
+            else None
+          case _ => None
+        }
+      }.toMap
+    // (r17, VERDICT r16 #1) __mk*-keyed flush-partial stores for this
+    // channel's WINDOWED members — the event-log channel's discipline: a
+    // windowed member whose join keys are NON-AGGREGATE writer outputs
+    // keys its wst store and compacted wbase on the join-key
+    // projections, so per-trigger reads bucket-restrict to the
+    // trigger's key domain instead of scanning the whole accumulated
+    // state. A member whose keys are aggregate-valued or not bare
+    // writer outputs keeps the r15 full() read — a fallback, not a
+    // refusal. SHAPE MIXES keep the r16 (bucket, group)-keyed stores and
+    // full() reads end-to-end: pass 2 scopes fold collapses with
+    // windowed flushes for fold-TOUCHED keys (a superset of the
+    // batch's), and restricting the read through kdfMk ∪ foldKeys
+    // re-evaluates the fold delta lineage inside the keyread collect —
+    // measured SLOWER than the full read it replaced (shapemix 10× arm
+    // +28%).
+    val winMk: Map[Int, KeyPick] =
+      if (isShapeMix) Map.empty
+      else writers.indices.flatMap { wi =>
+        infos(wi).left.toOption.flatMap { p =>
+          scala.util.Try {
+            // a key may be named by the `on` clause's bare stream alias
+            // or by the table column itself
+            pickKeyItems(itemsOf(writers(wi)._1), keyOrder.map { kc =>
+              val rhs = keysPer(wi).find(_._1 == kc).get._2.trim
+              kc -> ((if (rhs.matches("[A-Za-z_][A-Za-z0-9_]*")) Seq(rhs)
+                      else Nil) :+ kc)
+            }).map { kes =>
+              // deploy-time analysis: the key exprs must resolve over the
+              // partial-state schema, the raw source proto AND the flush
+              // schema — any failure keeps the full-read path
+              withMkPicked(kes, emptyOf(sp0, p.stateSchema), false).schema
+              withMkPicked(kes, loadTable(sp0, "", writers(wi)._4,
+                protoEnv), false).schema
+              withMkPicked(kes, emptyOf(sp0, p.flushOf(
+                emptyOf(sp0, p.stateSchema)).schema), true).schema
+              wi -> kes
+            }
+          }.toOption.flatten
+        }
+      }.toMap
+    def mkOfM(wi: Int, rel: DataFrame): DataFrame =
+      withMkPicked(winMk(wi), rel, fromFlush = false)
+    def mkOfFlM(wi: Int, rel: DataFrame): DataFrame =
+      withMkPicked(winMk(wi), rel, fromFlush = true)
+    def foldMerge(prior: DataFrame, delta: DataFrame,
+        rst: Option[DataFrame] = None): DataFrame =
+      foldCollapse(prior, delta, rst, mkCols, foldCols, dSchema)
+    def peMerge(prior: DataFrame, delta: DataFrame): DataFrame =
+      if (isFoldGroup) foldMerge(prior, delta)
+      else latestPerKey(prior, delta, mkCols)
+    // deploy-time prototype: fail fast + output schema
+    val tail = tailOf("aggst")
+    Folded(tail.proto.schema, () => {
+      val states: Seq[(String, StructType, StateMode)] =
+        writers.indices.map { wi =>
+          val ce = compactInfo.get(wi).map(_._1)
+          infos(wi) match {
+            case Left(p) if winMk.contains(wi) =>
+              (s"wst$wi", mkOfM(wi, emptyOf(sp0, p.stateSchema)).schema,
+                wstMode(wi, p, Some((mkCols, mkOfM(wi, _))), ce))
+            case Left(p) => (s"wst$wi", p.stateSchema, wstMode(wi, p, None, ce))
+            case Right(sch) => (s"pst$wi", sch,
+              KeyedState(mkCols, (sp, d2, batch) =>
+                withMkM(perEventURel(sp, d2, writers(wi)._1,
+                  writers(wi)._4, wi, benvOf(sp, d2, batch))._1, wi)
+                  .select(mkCols.map(col): _*)))
+          }
+        } ++ compactInfo.toSeq.sortBy(_._1).map { case (wi, (n, bks, fSch)) =>
+          // per-writer base: rewrites ONLY on compaction generations
+          // (empty batchKeys ⇒ no touched buckets ⇒ the runner skips
+          // its write between)
+          val (bSch, bKeys) =
+            if (winMk.contains(wi)) (mkOfFlM(wi, emptyOf(sp0, fSch)).schema,
+              mkCols)
+            else (fSch, bks)
+          (s"wbase$wi", bSch, KeyedState(bKeys,
+            (sp, _, _) => emptyOf(sp, StructType(
+              bSch.filter(f => bKeys.contains(f.name)).toArray)),
+            compactEvery = Some(n)))
+        }
+      liveFold(tail, states) { (sp, d2, acc, batch, benv) =>
+        val kdf = batchKeyRel(sp, d2, batch, benv)
+        val kdfM = kdfMk(kdf, keyOrder)
+        var winFlush = Map.empty[Int, DataFrame]
+        var uRel = Map.empty[Int, DataFrame]
+        var flushAll = Map.empty[Int, DataFrame]
+        var deltaMk = Map.empty[Int, DataFrame]
+        // pass 1a: per-event writers — their deltas feed the uRel
+        // overrides and (shape mixes) the fold-key relation pass 2
+        // scopes with; SHAPE-MIX fold writers only derive their deltas
+        // here — their state merge needs the trigger's reset relation
+        // (pass 2)
+        val stUpdR = writers.indices.flatMap { wi =>
+          infos(wi) match {
+            case Right(_) =>
+              val deltaRel = fdEval(perEventURel(sp, d2, writers(wi)._1,
+                writers(wi)._4, wi, benv)._1, wi)
+              uRel += wi -> keyedMkRead(acc(s"pst$wi"), kdfM, mkCols)
+                .unionByName(deltaRel)
+              val dMk = withMkM(deltaRel, wi)
+              deltaMk += wi -> dMk
+              if (isShapeMix && wKinds(wi) == "fold") Nil
+              else Seq(s"pst$wi" -> peMerge(acc(s"pst$wi").slice, dMk))
+            case _ => Nil
+          }
+        }
+        val foldWis = writers.indices.filter(wi =>
+          isShapeMix && infos(wi).isRight && wKinds(wi) == "fold")
+        val foldKeysO: Option[DataFrame] =
+          if (foldWis.isEmpty) None
+          else Some(foldWis.map(wi =>
+            acc(s"pst$wi").slice.select(mkCols.map(col): _*)
+              .unionByName(deltaMk(wi).select(mkCols.map(col): _*)))
+            .reduce(_ unionByName _).distinct())
+        // pass 1b: windowed writers (flush partials ∪ compacted base)
+        // merge; a KEYED store bucket-restricts the prior read to the
+        // trigger's key domain BEFORE the anti-join merge (r17)
+        val stUpd1 = writers.indices.flatMap { wi =>
+          infos(wi) match {
+            case Left(p) =>
+              val keyedWi = winMk.contains(wi)
+              val mkR = if (keyedWi) Some((kdfM, mkCols)) else None
+              val st1 = mergePartials(p, acc(s"wst$wi"),
+                if (keyedWi) mkCols else Nil,
+                loadTable(sp, d2, writers(wi)._4, benv))
+              val flushLive = postMergeFlush(p,
+                priorRead(s"wst$wi", acc(s"wst$wi"), mkR), st1)
+              // frozen history re-enters as the compacted base —
+              // finished flush rows at TRUE __wb, so their as-of ords
+              // are exact
+              val fl =
+                if (compactInfo.contains(wi)) flushLive.unionByName(
+                  priorRead(s"wbase$wi", acc(s"wbase$wi"), mkR))
+                else flushLive
+              flushAll += wi -> fl
+              winFlush += wi -> pruneToBatchKeys(fl, kdf)
+              def wrapSt(r: DataFrame): DataFrame =
+                if (keyedWi) mkOfM(wi, r) else r
+              def wrapFl(r: DataFrame): DataFrame =
+                if (keyedWi) mkOfFlM(wi, r) else r
+              compactInfo.get(wi) match {
+                case None => Seq(s"wst$wi" -> wrapSt(st1))
+                case Some((_, bks, fSch)) =>
+                  val (s, b) = compactSplit(sp, acc(s"wst$wi"),
+                    acc(s"wbase$wi"), st1, batch, p, bks,
+                    wrapFl(emptyOf(sp, fSch)).schema, wrapSt, wrapFl)
+                  Seq(s"wst$wi" -> s, s"wbase$wi" -> b)
+              }
+            case _ => Nil
+          }
+        }
+        // pass 2 (shape mixes): per fold-touched key, the latest PAST
+        // reset — implicit per-event latest rows (state ∪ batch) and
+        // windowed implicit flushes whose bucket END ≤ the batch's max
+        // ts (an OPEN bucket's flush must not scope: events before its
+        // end still admit earlier deltas) — then the scoped two-row
+        // collapses
+        val stUpd2 = foldKeysO match {
+          case None => Nil
+          case Some(foldKeys) =>
+            val perEvR = writers.indices.collect {
+              case wj if infos(wj).isRight && wKinds(wj) == "upsert" =>
+                val (pj, kj) = acc(s"pst$wj").keyedRead(foldKeys)
+                pruneMk(pj, kj, mkCols).select(mkCols.map(col) :+
+                    col("__ord").as("__rord"): _*)
+                  .unionByName(deltaMk(wj).select(mkCols.map(col) :+
+                    col("__ord").as("__rord"): _*))
+            }
+            val maxTsRow = batch.agg(max(col("ts_ns"))).collect()(0)
+            val winR =
+              if (maxTsRow.isNullAt(0)) Nil
+              else writers.indices.collect {
+                case wj if infos(wj).isLeft && wKinds(wj) == "upsert" =>
+                  pruneMk(withMkM(flushAll(wj), wj), foldKeys, mkCols)
+                    .select(mkCols.map(col) :+
+                      flushOrd(wj, winTNsPer(wj).get).as("__rord"): _*)
+                    .where(col("__rord.ts_ns") <= lit(maxTsRow.getLong(0)))
+              }
+            val rsts = perEvR ++ winR
+            val rstO =
+              if (rsts.isEmpty) None
+              else Some(rsts.reduce(_ unionByName _)
+                .groupBy(mkCols.map(col): _*)
+                .agg(max(col("__rord")).as("__rord")))
+            foldWis.map(wi => s"pst$wi" -> foldMerge(
+              acc(s"pst$wi").slice, deltaMk(wi), rstO))
+        }
+        ((stUpdR ++ stUpd1 ++ stUpd2).toMap,
+          enrichCompile(sp, d2, tail.readAst, j, writers,
+            emptyOf(sp, dSchema), benv, winFlush = winFlush,
+            uRelOverride = uRel))
+      }
+    })
+  }
+
+  /** [[mixedChannel]]'s implicit-set per-event state: the latest
+    * update per `__mk*` key, true `__ord` kept — max of (__ord,
+    * payload), __ord being unique per row. */
+  private def latestPerKey(prior: DataFrame, delta: DataFrame,
+      mkCols: Seq[String]): DataFrame = {
+    val all = prior.unionByName(delta)
+    val payCols = all.columns.filterNot(mkCols.contains)
+    all.groupBy(mkCols.map(col): _*)
+      .agg(max(struct(col("__ord").as("o"),
+        struct(payCols.map(col): _*).as("p"))).as("m"))
+      .select(mkCols.map(col) ++
+        payCols.map(c2 => col(s"m.p.$c2").as(c2)): _*)
+  }
+
+  /** [[mixedChannel]]'s FOLD per-event state (`foldCols` name the
+    * pre-evaluated `__fd` deltas): the as-of injection rows themselves —
+    * per key an 'a' row (the group's FIRST per-event upsert — true ord,
+    * own delta, insert values: the window pass's st0/f0 row unless an
+    * earlier FLUSH beats it) and a 'b' row (Σ of all later per-event
+    * deltas at (last ord ts, id, MaxValue−1) — after its 'a', before
+    * every future event under in-order replay; sums commute, so its
+    * position among flush deltas is free). Merge = one keyed groupBy over
+    * prior rows ∪ batch rows: 'a' = the min-ord row ('b' rows never win —
+    * their ord ≥ their own 'a'), total = Σ __fd, new 'b' = total − a's
+    * own delta. O(2 rows per key), no emission-log growth. SHAPE MIXES
+    * (r15) scope the collapse past the latest PAST reset per key (`rst`:
+    * __mk* + max __rord with ord ≤ the batch's max ts): rows at or before
+    * the reset are dead for every FUTURE event (in-order replay ⇒ future
+    * ts ≥ this batch's max ts ≥ reset ts), and because any reset newer
+    * than the last merge sorts after the prior 'b' row, a 'b' sum never
+    * straddles a reset — the drop is always whole-rows, never a split. */
+  private def foldCollapse(prior: DataFrame, delta: DataFrame,
+      rst: Option[DataFrame], mkCols: Seq[String], foldCols: Seq[String],
+      dSchema: StructType): DataFrame = {
+    val all0 = prior.unionByName(delta)
+    val all = rst match {
+      case None => all0
+      case Some(r) =>
+        all0.as("t").join(r.as("r"),
+            mkCols.map(c2 => col(s"t.$c2") <=> col(s"r.$c2"))
+              .reduce(_ && _), "left_outer")
+          .filter(col("r.__rord").isNull ||
+            col("t.__ord") > col("r.__rord"))
+          .select(all0.columns.toSeq.map(c2 => col(s"t.$c2")): _*)
+    }
+    val payCols = all.columns.filterNot(mkCols.contains)
+    val aggs = Seq(
+      min(struct(col("__ord").as("o"),
+        struct(payCols.map(col): _*).as("p"))).as("a"),
+      max(col("__ord")).as("mo")) ++
+      foldCols.map(c2 => sum(col(s"__fd.$c2")).as(s"__t_$c2"))
+    val aggd = all.groupBy(mkCols.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+    val bStruct = struct(payCols.map {
+      case "__ord" => struct(col("mo.ts_ns").as("ts_ns"),
+        col("mo.event_id").as("event_id"),
+        lit(Long.MaxValue - 1L).as("w")).as("__ord")
+      case "__fd" => struct(foldCols.map { c2 =>
+        (col(s"__t_$c2") - col(s"a.p.__fd.$c2"))
+          .cast(dSchema(c2).dataType).as(c2) }: _*).as("__fd")
+      case c2 => col(s"a.p.$c2").as(c2)
+    }: _*)
+    aggd.select(mkCols.map(col) :+
+      explode(array(col("a.p"), bStruct)).as("r"): _*)
+      .select(mkCols.map(col) ++
+        payCols.map(c2 => col(s"r.$c2").as(c2)): _*)
+  }
+}

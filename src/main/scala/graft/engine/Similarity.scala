@@ -146,10 +146,18 @@ object Similarity {
     // final row — is bit-identical (oracle-pinned).
     val planes: Array[Array[Double]] =
       Array.tabulate(SrpTables * SrpPlanes) { p =>
-        Array.tabulate(64)(dim =>
+        Array.tabulate(SrpDim)(dim =>
           if (DedupKernels.md5Int48(s"$p:$dim") % 2 == 0) 1.0 else -1.0)
       }
     val bucketsUdf = udf((v: Seq[Double]) => {
+      // the planes are SrpDim wide: a longer vector would index past
+      // them and a shorter one would hash a partial dot product
+      if (v == null)
+        throw new IllegalArgumentException("sim_topk_srp: null " +
+          s"embedding (the SRP planes take $SrpDim-dim vectors)")
+      if (v.length != SrpDim)
+        throw new IllegalArgumentException("sim_topk_srp: embedding " +
+          s"has ${v.length} dims; the SRP planes take $SrpDim")
       val va = v.toArray
       Array.tabulate(SrpTables) { t =>
         var b = 0
@@ -576,6 +584,8 @@ object Similarity {
     * planes t·P .. t·P+P−1. */
   private[engine] val SrpTables = 12
   private[engine] val SrpPlanes = 6
+  /** The embedding width every SRP plane spans. */
+  private[engine] val SrpDim = 64
 
   private def srpBucketSqlT(t: Int): String =
     (0 until SrpPlanes).map { k =>

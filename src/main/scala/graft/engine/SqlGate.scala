@@ -1540,7 +1540,7 @@ object SqlGate {
         |order by event_id, item, v
         |insert into Out""".stripMargin, "read")),
     // AGGREGATION over the windowed event-log read (r16, VERDICT r15
-    // #2): the shared EnrichAggTail over the windowed-log channel's
+    // #2): the shared aggregation tail over the event-log channel's
     // per-pair relation — each purchase lands in exactly one trigger
     // with its complete pair set, so per-trigger partials sum to the
     // global aggregation (live-only like every enrich-agg gate:

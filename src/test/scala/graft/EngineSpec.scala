@@ -250,6 +250,24 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(recall >= 0.8, s"SRP recall $recall vs brute top-5")
   }
 
+  test("sim_topk_srp: a null or non-64-dim embedding fails by name") {
+    import spark.implicits._
+    def run(rows: Seq[(Long, Seq[Float])]): String = {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft_srp_guard").toString
+      rows.toDF("vec_id", "embedding")
+        .write.parquet(s"$dir/embeddings.parquet")
+      val e = intercept[Exception](Similarity.topkSrp(spark, dir).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    val ok = (0L until 4L).map(i => i -> Seq.fill(64)(i.toFloat + 1f))
+    assert(run(ok :+ (9L -> Seq.fill(65)(1f)))
+      .contains("embedding has 65 dims; the SRP planes take 64"))
+    assert(run(ok :+ (9L -> null))
+      .contains("sim_topk_srp: null embedding"))
+  }
+
   test("sim_topk_ivf: nprobe-3 probing with top-2 multi-assignment " +
        "recalls a shippable share of the brute top-5") {
     import org.apache.spark.sql.functions._

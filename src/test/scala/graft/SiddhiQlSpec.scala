@@ -1042,9 +1042,11 @@ class SiddhiQlSpec extends AnyFunSuite {
     assert(live.nonEmpty && (live sameElements batch))
     // a different micro-batch split must not change the result —
     // per-event semantics never reference batch boundaries
-    val live7 = SiddhiQL.deployApp(spark, sf, app, "enrich", chunks = 7)
-      .collect().map(_.toSeq)
-    assert(live7 sameElements live)
+    for (c <- Seq(2, 7)) {
+      val liveC = SiddhiQL.deployApp(spark, sf, app, "enrich", chunks = c)
+        .collect().map(_.toSeq)
+      assert(liveC sameElements live, s"live($c) != live(4)")
+    }
     // independent truth for one user: the last pre-purchase update
     val ev = engine.Tables.events(spark, sf)
       .select("event_id", "ts_ns", "user_id", "event_type", "value")
@@ -1364,19 +1366,21 @@ class SiddhiQlSpec extends AnyFunSuite {
     // per-event fold — against the batch replay byte-for-byte.
     // chunks=2 (r16 suite economics): still multi-chunk, so the
     // chunking-invariance pin stands at half the trigger cost
-    def runBoth(app: String): Unit = {
+    def runBoth(app: String, chunks: Seq[Int] = Seq(2)): Unit = {
       val batch = SiddhiQL.compileApp(spark, sf, app)("q")
         .collect().toSeq
-      val live = SiddhiQL.deployApp(spark, sf,
-        "define stream events (event_id long, ts_ns long, user_id " +
-          "long, event_type string, value double);\n" + app, "q",
-        chunks = 2)
-        .collect().toSeq
-      assert(batch.nonEmpty && live == batch,
-        s"windowed shape-mix live (${live.size}) diverges from " +
-          s"batch (${batch.size})")
+      for (c <- chunks) {
+        val live = SiddhiQL.deployApp(spark, sf,
+          "define stream events (event_id long, ts_ns long, user_id " +
+            "long, event_type string, value double);\n" + app, "q",
+          chunks = c)
+          .collect().toSeq
+        assert(batch.nonEmpty && live == batch,
+          s"windowed shape-mix live($c) (${live.size}) diverges from " +
+            s"batch (${batch.size})")
+      }
     }
-    runBoth(
+    runBoth(chunks = Seq(2, 7), app =
       """define table SmB (user_id long, cnt long);
         |@info(name='rst') from events[event_type == 'view']
         |select user_id, event_id as cnt
@@ -1422,19 +1426,21 @@ class SiddhiQlSpec extends AnyFunSuite {
     // and per-event inserts overlaid by a windowed UPSERT member.
     // chunks=2 (r16 suite economics): still multi-chunk, so the
     // chunking-invariance pin stands at half the trigger cost
-    def runBoth(app: String): Unit = {
+    def runBoth(app: String, chunks: Seq[Int] = Seq(2)): Unit = {
       val batch = SiddhiQL.compileApp(spark, sf, app)("q")
         .collect().toSeq
-      val live = SiddhiQL.deployApp(spark, sf,
-        "define stream events (event_id long, ts_ns long, user_id " +
-          "long, event_type string, value double);\n" + app, "q",
-        chunks = 2)
-        .collect().toSeq
-      assert(batch.nonEmpty && live == batch,
-        s"windowed-log live (${live.size}) diverges from batch " +
-          s"(${batch.size})")
+      for (c <- chunks) {
+        val live = SiddhiQL.deployApp(spark, sf,
+          "define stream events (event_id long, ts_ns long, user_id " +
+            "long, event_type string, value double);\n" + app, "q",
+          chunks = c)
+          .collect().toSeq
+        assert(batch.nonEmpty && live == batch,
+          s"windowed-log live($c) (${live.size}) diverges from batch " +
+            s"(${batch.size})")
+      }
     }
-    runBoth(
+    runBoth(chunks = Seq(2, 7), app =
       """define table WL (user_id long, v double);
         |@info(name='roll') from events[event_type == 'click']
         |#window.timeBatch(10 min)
@@ -1482,6 +1488,68 @@ class SiddhiQlSpec extends AnyFunSuite {
         |  on LogA.k == e.user_id
         |select e.event_id as event_id, LogA.v as v
         |order by event_id, v insert into Out""".stripMargin)
+  }
+
+  test("enrichment channels x tails: deployApp at 2 chunks == at 7 " +
+       "chunks == compileApp (plain, windowed and event-log " +
+       "aggregates; windowed projection)") {
+    val evDef = "define stream events (event_id long, ts_ns long, " +
+      "user_id long, event_type string, value double);\n"
+    val read = "@info(name='q')\n" +
+      "from events as e[event_type == 'purchase'] join X\n" +
+      "  on X.user_id == e.user_id\n"
+    val projRead = read + "select e.event_id as event_id, " +
+      "e.user_id as user_id, X.c as c\norder by event_id, c " +
+      "insert into Out"
+    val aggRead = read + "select e.user_id as user_id, count() as n, " +
+      "sum(X.c) as s\ngroup by user_id\norder by user_id insert into Out"
+    def longs(rows: Seq[org.apache.spark.sql.Row]): Seq[Seq[Long]] =
+      rows.map(_.toSeq.map(_.asInstanceOf[Number].longValue))
+    // `writers` maintains table X (user_id long, c long); the batch
+    // compile keeps enrichment reads projection-only, so the aggregate's
+    // truth is its per-pair rows grouped by user (long sums: exact in
+    // any order)
+    def pin(writers: String, proj: Boolean): Unit = {
+      val app = "define table X (user_id long, c long);\n" + writers
+      val pairs = SiddhiQL.compileApp(spark, sf, app + projRead)("q")
+      val batchP = longs(pairs.collect().toSeq)
+      assert(batchP.nonEmpty, "no enriched rows at test scale — vacuous")
+      val batchA = longs(pairs.groupBy("user_id")
+        .agg(count(lit(1)).as("n"), sum("c").as("s"))
+        .orderBy("user_id").collect().toSeq)
+      for (c <- Seq(2, 7)) {
+        if (proj) {
+          val live = SiddhiQL.deployApp(spark, sf, evDef + app + projRead,
+            "q", chunks = c).collect().toSeq
+          assert(longs(live) == batchP, s"projection live($c) != batch")
+        }
+        val liveA = SiddhiQL.deployApp(spark, sf, evDef + app + aggRead,
+          "q", chunks = c).collect().toSeq
+        assert(longs(liveA) == batchA, s"aggregate live($c) != batch")
+      }
+    }
+    // plain table channel
+    pin("""@info(name='t') from events[event_type == 'click']
+          |select user_id, event_id as c
+          |update or insert into X on X.user_id == user_id;
+          |""".stripMargin, proj = false)
+    // windowed-writer channel
+    pin("""@info(name='roll') from events[event_type == 'click']
+          |#window.timeBatch(10 min)
+          |select user_id, count() as c
+          |group by user_id
+          |update or insert into X on X.user_id == user_id;
+          |""".stripMargin, proj = true)
+    // event log with a windowed member
+    pin("""@info(name='add') from events[event_type == 'click']
+          |select user_id, event_id as c
+          |insert into X;
+          |@info(name='roll') from events[event_type == 'view']
+          |#window.timeBatch(10 min)
+          |select user_id, count() as c
+          |group by user_id
+          |insert into X;
+          |""".stripMargin, proj = false)
   }
 
   test("windowed event-log member long-horizon soak: per-trigger wst " +
@@ -2117,6 +2185,12 @@ class SiddhiQlSpec extends AnyFunSuite {
       SiddhiQL.deployAppOn(raw, "@info(name='q') from events select " +
         "event_id order by event_id limit 5 insert into O", "q")).getMessage
     assert(cut.contains("limit") && cut.contains("unbounded stream"))
+    // a mid-topology cut has no live meaning: compileApp keeps 5 rows,
+    // a live run would have returned all 210
+    assert(msg("@info(name='s') from events[event_type == 'click'] " +
+      "select event_id, user_id, value order by event_id limit 5 " +
+      "insert into S;\n@info(name='q') from S select event_id, value " +
+      "insert into O").contains("stage 's' cuts mid-topology"))
   }
 
   test("expression window: sum-predicate fold matches the engine twin's " +
