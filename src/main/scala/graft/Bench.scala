@@ -53,13 +53,16 @@ object Bench {
     val only = args.toSet
     // one-time warmup: JIT + MicroBatchExecution/state-store class loading
     // otherwise lands on whichever streaming query happens to run first
-    // (observed ~5-10 s on the first stream_* query, order-dependent)
+    // (observed ~5-10 s on the first stream_* query, order-dependent).
+    // It starts and replays like the timed streams, so it loads the same
+    // checkpoint manager and replay classes.
     locally {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      import engine.Streaming.{NoDataOff, Width8, replay, startScoped}
       import spark.implicits._
       implicit val sq = spark.sqlContext
       val ms = MemoryStream[(Long, Double)]
-      val q = ms.toDS().groupByKey(_._1)
+      val q = startScoped(spark, Width8, NoDataOff)(ms.toDS().groupByKey(_._1)
         .flatMapGroupsWithState[Double, (Long, Double)](
           org.apache.spark.sql.streaming.OutputMode.Append(),
           org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
@@ -68,8 +71,8 @@ object Bench {
             st.update(s0); Iterator((k, s0))
         }
         .writeStream.format("memory").queryName("bench_warmup")
-        .outputMode("append").start()
-      ms.addData((1L, 1.0), (2L, 2.0)); q.processAllAvailable(); q.stop()
+        .outputMode("append").start())
+      replay(ms, q, Seq((1L, 1.0), (2L, 2.0)), 1)
       spark.sql("DROP TABLE IF EXISTS bench_warmup")
     }
     // batch-path warmup on the SMALLEST fixture (never the bench SF dir —

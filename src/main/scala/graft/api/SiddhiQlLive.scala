@@ -2488,10 +2488,9 @@ private[api] trait SiddhiQlLive extends Serializable {
       .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
     val (outAst, stage) = deployStages(src, app, out)
     // HARNESS scratch: streaming checkpoints (offsets/commits/state
-    // deltas, fsync'd once per trigger) go to RAM-backed storage when
-    // the platform offers it — the replay loop's bottleneck is the
-    // per-trigger checkpoint round trip, not operator work, and a
-    // REAL deployment points this at durable storage instead
+    // deltas, written once per trigger) go under the scratch root; what
+    // each file costs is set out at graft.engine.Streaming.FsCheckpoints.
+    // A REAL deployment points this at durable storage instead
     val ckptRoot = java.nio.file.Paths.get(
       graft.engine.Streaming.scratchDir("graft_ckpt"))
     def ckpt(tag: String): String = s"$ckptRoot/$tag"

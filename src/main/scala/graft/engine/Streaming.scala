@@ -78,9 +78,9 @@ object Streaming {
     * advances the watermark before being discarded. */
   val FlushNs: Long = 4102444800000000000L // 2100-01-01T00:00:00Z, ns
 
-  /** HARNESS scratch root: RAM-backed when the platform offers it (the
-    * replay harness's per-trigger checkpoint round trips are
-    * fsync-bound on disk; a real deployment uses durable storage). */
+  /** HARNESS scratch root: RAM-backed when the platform offers it (a
+    * real deployment uses durable storage). What a replay's per-trigger
+    * checkpoint files cost is set out at [[FsCheckpoints]]. */
   private[graft] def scratchRoot: java.nio.file.Path =
     // SPARK_GRAFT_SCRATCH overrides the root (A/B lever: point it at
     // /tmp to measure the disk-vs-RAM checkpoint cost — BASELINE.md
@@ -119,17 +119,15 @@ object Streaming {
     timestamp_micros(lit(FlushCutoffUs))
 
   /** Route the engine's streaming checkpoints and RocksDB's local
-    * working dir through the RAM-backed scratch root. Without this,
-    * Spark defaults them under java.io.tmpdir (/tmp — DISK on this
-    * box): every trigger's offset/commit WAL fsync and RocksDB
-    * snapshot then pays disk latency that swings with box load — the
-    * r10→r12 `stream_cep_absence_tws` 3.3→4.9 s creep was exactly
-    * this class. `ramCheckpoints` sets the RocksDB root once per
-    * session; `ckptOpt` gives each query START a fresh scratch
-    * checkpoint (a session-wide checkpointLocation base would key
-    * subdirs by query NAME and make a re-run try to RECOVER a
-    * memory-sink query — unsupported). A real deployment points both
-    * at durable storage instead (same knobs). */
+    * working dir through the [[scratchRoot]] instead of Spark's
+    * default under java.io.tmpdir. `ramCheckpoints` sets the RocksDB
+    * root once per session; `ckpt` gives each query START a fresh
+    * scratch checkpoint (a session-wide checkpointLocation base would
+    * key subdirs by query NAME and make a re-run try to RECOVER a
+    * memory-sink query — unsupported). The per-trigger cost of those
+    * files is the rename path, not the disk: see [[FsCheckpoints]]. A
+    * real deployment points both at durable storage instead (same
+    * knobs). */
   def ramCheckpoints(s: SparkSession): Unit = {
     if (s.conf.getOption(
         "spark.sql.streaming.stateStore.rocksdb.localRootDir").isEmpty)
@@ -157,8 +155,9 @@ object Streaming {
 
   // state-store partition count is fixed at query start from
   // spark.sql.shuffle.partitions; 8 is plenty for the harness feed and
-  // cuts per-batch checkpoint-file overhead 4× vs the batch setting
-  // (a real deployment sizes this to the cluster, not per query)
+  // writes 4× fewer state files per trigger than the batch setting
+  // (each file's cost: [[FsCheckpoints]]). A real deployment sizes this
+  // to the cluster, not per query.
   private[graft] val Width8 = "spark.sql.shuffle.partitions" -> "8"
   // sentinel and timer flushing is DATA-batch driven (the sentinels
   // advance the watermark, the batch after them emits and fires the
@@ -170,6 +169,23 @@ object Streaming {
   // for idle-stream timer progress.
   private[graft] val NoDataOff =
     "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+  // every replay commits its checkpoints (offset and commit logs,
+  // state-store delta files, their `.crc` sidecars) through Spark's
+  // FileSystem-based checkpoint manager. The default FileContext
+  // manager renames through AbstractFileSystem.rename →
+  // getFileLinkStatus → FileUtil.readLink, which forks a `readlink`
+  // child process per rename when libhadoop is not loaded; those forks,
+  // not fsync or disk latency, were a replay's per-trigger commit cost
+  // (traced live_window on a 4-vCPU VM: state.commit_ms 1300 → 110 ms
+  // and task run time 6.6 → 3.7 s per call; plans/fs_checkpoints/).
+  // The FileSystem manager renames with File.renameTo and writes the
+  // same files, Spark's state checksums included. Scoped by
+  // [[startScoped]], so a stream the caller starts itself keeps its
+  // own manager.
+  private[graft] val FsCheckpoints =
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      ("org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager")
   // transformWithState (per-family state, timers) requires RocksDB
   private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -179,21 +195,23 @@ object Streaming {
     * their own "previous" values and leave them behind. */
   private val confLock = new Object
 
-  /** Start a streaming query with `conf` set on `spark` around `start`
-    * only. A query clones its session when it is constructed, inside
-    * `start()`; its shuffle width, no-data batch flag and `foreachBatch`
-    * batch session all read that clone, so the scoped values need not
-    * outlive the start. Each key then gets its old value back, or is
-    * unset if it had none. Replays start on the caller's own session,
-    * not a new one: only its `StreamingQueryListener`s see the queries
-    * it starts, and memory-sink views must land where the caller reads
-    * them. */
+  /** Start a streaming query with [[FsCheckpoints]] and `conf` set on
+    * `spark` around `start` only. A query clones its session when it is
+    * constructed, inside `start()`; its shuffle width, no-data batch
+    * flag, checkpoint manager (via the clone's Hadoop conf, executors
+    * included) and `foreachBatch` batch session all read that clone, so
+    * the scoped values need not outlive the start. Each key then gets
+    * its old value back, or is unset if it had none. Replays start on
+    * the caller's own session, not a new one: only its
+    * `StreamingQueryListener`s see the queries it starts, and
+    * memory-sink views must land where the caller reads them. */
   def startScoped(spark: SparkSession, conf: (String, String)*)
                  (start: => StreamingQuery): StreamingQuery =
     confLock.synchronized {
-      val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      val scoped = FsCheckpoints +: conf
+      val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
       try {
-        conf.foreach { case (k, v) => spark.conf.set(k, v) }
+        scoped.foreach { case (k, v) => spark.conf.set(k, v) }
         start
       } finally prev.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
@@ -342,7 +360,7 @@ object Streaming {
     val tmp = scratchDir("graft_upsert")
     var gen = 0
     val ms = MemoryStream[Ev]
-    val q = ms.toDS().writeStream.outputMode("update")
+    val q = startScoped(s)(ms.toDS().writeStream.outputMode("update")
       .option("checkpointLocation", ckpt("table_upsert"))
       .foreachBatch { (batch: Dataset[Ev], _: Long) =>
         // winner struct carries eventId so a tsNs tie resolves by the
@@ -381,11 +399,8 @@ object Streaming {
           }
         merged.write.mode("overwrite").parquet(s"$tmp/gen${gen + 1}")
         gen += 1
-      }.start()
-    rows.grouped(math.max(rows.length / 4, 1)).foreach { g =>
-      ms.addData(g); q.processAllAvailable()
-    }
-    q.stop()
+      }.start())
+    replay(ms, q, rows, 4)
     s.read.parquet(s"$tmp/gen$gen")
       .select(col("user_id"), expr("last_ts_ns div 1000000")
         .as("last_ts_ms"), round(col("last_value"), 2).as("last_value"),
@@ -453,7 +468,7 @@ object Streaming {
     val acc = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Double)]
     val ms = MemoryStream[Ev]
-    val q = ms.toDS().writeStream.outputMode("append")
+    val q = startScoped(s)(ms.toDS().writeStream.outputMode("append")
       .option("checkpointLocation", ckpt("batch_window"))
       .foreachBatch { (batch: Dataset[Ev], _: Long) =>
         // batch_id = local counter over NON-EMPTY batches (engine batch ids
@@ -464,11 +479,8 @@ object Streaming {
           acc += ((acc.length.toLong, r.getLong(0), r.getDouble(1)))
         }
         ()
-      }.start()
-    rows.grouped(math.max(rows.length / 4, 1)).foreach { g =>
-      ms.addData(g); q.processAllAvailable()
-    }
-    q.stop()
+      }.start())
+    replay(ms, q, rows, 4)
     s.createDataFrame(acc.toSeq).toDF("batch_id", "n", "sum_value")
       .orderBy("batch_id")
   }

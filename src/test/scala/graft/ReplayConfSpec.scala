@@ -16,7 +16,8 @@ class ReplayConfSpec extends AnyFunSuite {
 
   private val keys = Seq("spark.sql.shuffle.partitions",
     "spark.sql.adaptive.enabled",
-    "spark.sql.streaming.noDataMicroBatches.enabled")
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    engine.Streaming.FsCheckpoints._1)
   private def confNow = keys.map(k => k -> spark.conf.getOption(k))
 
   private def tableLive(): Seq[String] =
@@ -25,6 +26,8 @@ class ReplayConfSpec extends AnyFunSuite {
   private def streamJoin(): Seq[String] =
     engine.Streaming.streamStreamJoin(spark, sf)
       .collect().map(_.toString).toSeq.sorted
+  private def gate(name: String): Seq[String] =
+    SparkEntry.queries(name)(spark, sf).collect().map(_.toString).toSeq.sorted
 
   test("concurrent deployApp and runStream replays: results as run " +
        "alone, session conf untouched") {
@@ -57,4 +60,41 @@ class ReplayConfSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("replays commit through the scoped checkpoint manager, not the " +
+       "session's") {
+    val key = engine.Streaming.FsCheckpoints._1
+    val bogus = classOf[CommitRefusingCheckpointFileManager].getName
+    // the fold runner, the state store, a runStream replay and the two
+    // foreachBatch replays
+    val names = Seq("sql_app_table_live", "sql_app_rate_live",
+      "stream_stream_join", "stream_table_upsert", "stream_batch_window")
+    val outer = confNow
+    try {
+      val want = names.map(gate)
+      assert(want.forall(_.nonEmpty))
+      spark.conf.set(key, bogus)
+      names.zip(want).foreach { case (name, rows) =>
+        assert(gate(name) == rows, name)
+        assert(spark.conf.get(key) == bogus, name)
+      }
+    } finally outer.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+}
+
+/** A checkpoint manager that refuses every commit: a replay that writes
+  * a checkpoint file (offset or commit log entry, state-store file)
+  * through the session's own manager instead of its scoped one fails.
+  * Reads pass, because a started query still lists its checkpoint
+  * directory through the session it was started on. */
+class CommitRefusingCheckpointFileManager(path: org.apache.hadoop.fs.Path,
+    conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.spark.sql.execution.streaming.checkpointing
+      .FileSystemBasedCheckpointFileManager(path, conf) {
+  override def createAtomic(p: org.apache.hadoop.fs.Path,
+      overwriteIfPossible: Boolean) =
+    throw new IllegalStateException(s"commit through the session's manager: $p")
 }
