@@ -3385,34 +3385,13 @@ private[api] trait SiddhiQlCompiler extends Serializable {
     def slidingBand(lenN: Option[Long], timeNs: Option[Long],
         timeAttr: String): DataFrame = {
       if (ast.having.nonEmpty) fail("having needs a tumbling window")
-      val comps = scala.collection.mutable.Buffer
-        .empty[(String, String, Option[Expr])]
-      def rwS(e: Expr): Expr = e match {
-        case Call(None, n2, args0) if aggNames(n2.toLowerCase) =>
-          val b = s"__s${comps.length}"
-          comps += ((b, n2.toLowerCase, args0.headOption))
-          FoldAlg.rewrite(n2.toLowerCase, b)
-        case Call(ns2, n2, as2) => Call(ns2, n2, as2.map(rwS))
-        case Bin(op, l, r) => Bin(op, rwS(l), rwS(r))
-        case Not(x) => Not(rwS(x))
-        case Neg(x) => Neg(rwS(x))
-        case other => other
-      }
-      val finalsS: Seq[(String, Expr)] = items.map { case (it, a, isAgg) =>
-        a -> (if (isAgg) rwS(it.e) else it.e)
-      }
-      comps.foreach { case (_, n2, argO) =>
-        if (n2 != "count" && argO.isEmpty)
-          fail(s"$n2(...) needs an argument")
-      }
+      val fp = FoldAlg.plan(items, Seq("__ark"))
       // No aggregate in the select → the frame is irrelevant: every
       // event projects its own attributes (Siddhi emits one output per
       // arrival either way). Plain projection, no rank, no join — the
       // r10 fail here was an accepted-surface regression vs the r9
       // sliding path, which compiled pass-through projections.
-      if (comps.isEmpty)
-        return base.select(finalsS.map { case (a, e2) =>
-          expr(sqlOf(e2)).as(a) }: _*)
+      if (fp.comps.isEmpty) return fp.finalized(base)
       // the anchor key: global arrival rank (unique); rows frames also
       // consume it as the band coordinate
       val ranked = globalRank(base, Seq(col("ts_ns"), col("event_id")),
@@ -3423,9 +3402,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
       }
       val anchors = ranked.withColumn("__ab", bucketOf("__ark", timeAttr))
       val data = ranked.select(col("__ark").as("__drk") +:
-        col(timeAttr).as("__dts") +:
-        comps.toSeq.flatMap { case (b, _, argO) =>
-          argO.map(a0 => expr(sqlOf(a0)).as(s"${b}_x")).toSeq }: _*)
+        col(timeAttr).as("__dts") +: fp.argCols(): _*)
         .withColumn("__db", explode(array(bucketOf("__drk", "__dts"),
           bucketOf("__drk", "__dts") + lit(1L))))
       val frameCond = (lenN.map(n2 =>
@@ -3434,16 +3411,11 @@ private[api] trait SiddhiQlCompiler extends Serializable {
         timeNs.map(t =>
           col("__dts") >= col(timeAttr) - lit(t) &&
             col("__dts") <= col(timeAttr)).toList).reduce(_ && _)
-      val aggsS = comps.toSeq.flatMap { case (b, n2, argO) =>
-        FoldAlg.partialCols(n2, b, argO.map(_ => col(s"${b}_x"))) }
-      val agged = anchors.select(col("__ark"), col("__ab"),
+      val agged = fp.partial(anchors.select(col("__ark"), col("__ab"),
           col(timeAttr))
-        .join(data, col("__ab") === col("__db") && frameCond)
-        .groupBy("__ark").agg(aggsS.head, aggsS.tail: _*)
+        .join(data, col("__ab") === col("__db") && frameCond))
         .withColumnRenamed("__ark", "__grk")
-      anchors.join(agged, col("__ark") === col("__grk"))
-        .select(finalsS.map { case (a, e2) =>
-          expr(sqlOf(e2)).as(a) }: _*)
+      fp.finalized(anchors.join(agged, col("__ark") === col("__grk")))
     }
 
     def sliding(frame: String): DataFrame = {
@@ -3835,11 +3807,17 @@ private[api] trait SiddhiQlCompiler extends Serializable {
   }
 
   /** The live fold algebra — one (rewrite, partial, merge) component
-    * recipe per MERGEABLE aggregate, shared by every componentwise-
-    * merge channel: the windowed flush folds (windowed table DML,
-    * rate-over-window), the keyed join/enrichment aggregation folds,
-    * and the define-aggregation live grain cascade's two-way state
-    * merge. Extending an aggregate here deploys it on all of them.
+    * recipe per MERGEABLE aggregate. Its entry point [[FoldAlg.plan]]
+    * turns select items into a [[FoldAlg.Plan]]: the aggregate
+    * sub-calls rewritten to components, the `<base>_x` argument
+    * columns, the keyed partial, the `<=>`-keyed merge and the
+    * finalize step. Its callers: [[flushPiecesOf]] (windowed table
+    * DML, rate over timeBatch), the live windowed-join aggregation,
+    * the enrichment aggregation tail (`aggTail`), the live `frequent`
+    * window, and the batch sliding band (`slidingBand`, partials
+    * only). The define-aggregation live grain cascade merges its state
+    * through the same [[FoldAlg.keyedMerge]] and [[FoldAlg.mergeCols]].
+    * Extending an aggregate here deploys it on all of them.
     *
     *   - count/sum/min/max — one partial column, trivially mergeable
     *     (sum partials keep SQL null semantics: null iff all inputs
@@ -3858,8 +3836,99 @@ private[api] trait SiddhiQlCompiler extends Serializable {
     *     cost of the exact form (the approx twin is the HLL-backed
     *     `sketch_approx_distinct`). */
   private[api] object FoldAlg {
+    /** One aggregate sub-call: `base` names its partial columns,
+      * `arg` its argument (absent only for bare count()). */
+    final case class Comp(base: String, kind: String, arg: Option[Expr])
+
+    /** A group-by-less aggregate folds under this one constant key
+      * (a single component row of state). */
+    val NoKey: Seq[String] = Seq("__k")
+
+    /** Select items as a keyed mergeable fold over `keys`: `comps` are
+      * the aggregate sub-calls, `finals` each item's Expr over the
+      * merged components, `having` applies once over the finals. */
+    final case class Plan(keys: Seq[String], comps: Seq[Comp],
+        finals: Seq[(String, Expr)], having: Option[Expr]) {
+      /** (`<base>_x` column, argument) per component with an argument. */
+      def args: Seq[(String, Expr)] =
+        comps.flatMap(c => c.arg.map(c.base + "_x" -> _))
+      def argCols(render: Expr => String = sqlOf): Seq[Column] =
+        args.map { case (c, e) => expr(render(e)).as(c) }
+      def keyCols: Seq[Column] =
+        if (keys == NoKey) Seq(lit(0L).as("__k")) else keys.map(col)
+      /** One batch's partials: group `df` (keys + argument columns) by
+        * the keys. */
+      def partial(df: DataFrame): DataFrame = {
+        val aggs = comps.flatMap(c => partialCols(c.kind, c.base,
+          c.arg.map(_ => col(s"${c.base}_x"))))
+        df.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
+      }
+      /** Accumulated partials merged with a batch's, componentwise. */
+      def merge(acc: DataFrame, u: DataFrame): DataFrame =
+        keyedMerge(acc, u, keys, comps.flatMap(c => mergeCols(c.kind, c.base)))
+      /** The finals (after the `lead` columns) over merged partials. */
+      def finalized(acc: DataFrame, lead: Seq[Column] = Nil): DataFrame = {
+        val fin = acc.select(lead ++ finals.map { case (a, e) =>
+          expr(sqlOf(e)).as(a) }: _*)
+        having.fold(fin)(h => fin.where(expr(sqlOf(h))))
+      }
+    }
+
+    /** The one entry point: every aggregate sub-call in the aggregate
+      * `items` becomes a component (`__c<i>`) and its final Expr reads
+      * the merged partials; a non-aggregate item finalizes as
+      * `keyFinal` (by default its own Expr). */
+    def plan(items: Seq[(SelItem, String, Boolean)], keys: Seq[String],
+        keyFinal: (SelItem, String) => Expr = (it, _) => it.e,
+        having: Option[Expr] = None): Plan = {
+      val comps = scala.collection.mutable.ArrayBuffer.empty[Comp]
+      def rw(e: Expr): Expr = e match {
+        case Call(None, n, args0) if aggNames(n.toLowerCase) =>
+          val c = Comp(s"__c${comps.length}", n.toLowerCase,
+            args0.headOption)
+          if (c.kind != "count" && c.arg.isEmpty)
+            fail(s"${c.kind}(...) needs an argument")
+          comps += c
+          rewrite(c.kind, c.base)
+        case Call(ns2, n, as2) => Call(ns2, n, as2.map(rw))
+        case Bin(op, l, r) => Bin(op, rw(l), rw(r))
+        case Not(x) => Not(rw(x))
+        case Neg(x) => Neg(rw(x))
+        case other => other
+      }
+      val finals = items.map { case (it, a, isAgg) =>
+        a -> (if (isAgg) rw(it.e) else keyFinal(it, a)) }
+      Plan(keys, comps.toList, finals, having)
+    }
+
+    /** Fold keys that must be exactly the aliases of the non-aggregate
+      * select items (`what` names the surface); [[NoKey]] when there
+      * are none. */
+    def groupKeys(what: String, groupBy: List[String],
+        items: Seq[(SelItem, String, Boolean)]): Seq[String] = {
+      val keyAliases = items.filter(!_._3).map(_._2)
+      if (groupBy.sorted != keyAliases.sorted.toList)
+        fail(s"$what (v1) groups by exactly the aliases of its " +
+          s"non-aggregate select items (non-aggregate " +
+          s"[${keyAliases.mkString(", ")}], group by " +
+          s"[${groupBy.mkString(", ")}])")
+      if (keyAliases.isEmpty) NoKey else keyAliases
+    }
+
+    /** The one keyed state merge: accumulated (`t`) and batch (`u`)
+      * partials full-outer joined on `<=>` keys — so a null group key
+      * merges with itself across triggers — keys coalesced, then the
+      * `merged` component columns. */
+    def keyedMerge(acc: DataFrame, u: DataFrame, keys: Seq[String],
+        merged: Seq[Column]): DataFrame =
+      acc.as("t").join(u.as("u"),
+          keys.map(k => col(s"t.$k") <=> col(s"u.$k")).reduce(_ && _),
+          "full_outer")
+        .select(keys.map(k =>
+          coalesce(col(s"u.$k"), col(s"t.$k")).as(k)) ++ merged: _*)
+
     /** Final-stage Expr over the merged partial columns of `base`. */
-    def rewrite(kind: String, base: String): Expr = kind match {
+    private def rewrite(kind: String, base: String): Expr = kind match {
       case "count" | "sum" | "min" | "max" => Ref(List(base))
       case "avg" => Bin("/", Ref(List(base + "s")), Ref(List(base + "n")))
       case "stddev" => Call(Some("math"), "sqrt",
@@ -3870,7 +3939,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
     }
     /** One micro-batch's partial agg columns; `x` is the argument
       * column (absent only for bare count()). */
-    def partialCols(kind: String, base: String,
+    private def partialCols(kind: String, base: String,
         x: Option[Column]): Seq[Column] = kind match {
       case "count" => Seq(x.fold(count(lit(1)))(count).as(base))
       case "sum" => Seq(sum(x.get).as(base))
@@ -4078,23 +4147,23 @@ private[api] trait SiddhiQlCompiler extends Serializable {
               combines += max(col(s"__p_$a")).as(a)
               finals += a -> col(a)
             case "avg" => // stored as sum+count, finalized at read grain
-              partials += expr(s"sum($argSql)").as(s"__ps_$a")
-              partials += expr(s"count($argSql)").as(s"__pc_$a")
-              combines += sum(col(s"__ps_$a")).as(s"__s_$a")
-              combines += sum(col(s"__pc_$a")).as(s"__c_$a")
+              partials += expr(s"sum($argSql)").as(s"__pa_${a}s")
+              partials += expr(s"count($argSql)").as(s"__pa_${a}n")
+              combines += sum(col(s"__pa_${a}s")).as(s"__s_$a")
+              combines += sum(col(s"__pa_${a}n")).as(s"__c_$a")
               finals += a -> (col(s"__s_$a") / col(s"__c_$a")).as(a)
             case "stddev" => // Chan moments (n, mean, M2) per bucket
-              partials += expr(s"count($argSql)").as(s"__p_${a}n")
-              partials += expr(s"avg($argSql)").as(s"__p_${a}m")
+              partials += expr(s"count($argSql)").as(s"__pd_${a}n")
+              partials += expr(s"avg($argSql)").as(s"__pd_${a}m")
               partials += expr(s"var_pop($argSql) * count($argSql)")
-                .as(s"__p_${a}q")
+                .as(s"__pd_${a}q")
               // rollup across buckets via the moment-sum identity:
               // M2 = Σ(q + n·m²) − (Σ n·m)² / Σn
-              combines += sum(col(s"__p_${a}n")).as(s"__n_$a")
-              combines += sum(col(s"__p_${a}n") * col(s"__p_${a}m"))
+              combines += sum(col(s"__pd_${a}n")).as(s"__n_$a")
+              combines += sum(col(s"__pd_${a}n") * col(s"__pd_${a}m"))
                 .as(s"__s1_$a")
-              combines += sum(col(s"__p_${a}q") + col(s"__p_${a}n") *
-                col(s"__p_${a}m") * col(s"__p_${a}m")).as(s"__s2_$a")
+              combines += sum(col(s"__pd_${a}q") + col(s"__pd_${a}n") *
+                col(s"__pd_${a}m") * col(s"__pd_${a}m")).as(s"__s2_$a")
               finals += a -> when(col(s"__n_$a") === 0, lit(null))
                 .otherwise(sqrt(greatest(lit(0d), (col(s"__s2_$a") -
                   col(s"__s1_$a") * col(s"__s1_$a") / col(s"__n_$a")) /
@@ -4131,31 +4200,21 @@ private[api] trait SiddhiQlCompiler extends Serializable {
 
   /** Componentwise merge of two finest-grain partial tables aliased
     * `t` (accumulated state) and `u` (the batch's partials), for the
-    * LIVE fold: sum partials stay null iff both sides are (SQL
-    * sum-over-all-null semantics), counts add with absent-side 0,
-    * min/max take least/greatest (which skip single-side nulls). */
-  private[api] def aggMergeCols(adef: AggDef): Seq[Column] = {
-    def add(c: String) = (coalesce(col(s"t.$c"), lit(0)) +
-      coalesce(col(s"u.$c"), lit(0))).as(c)
-    def addSum(c: String) =
-      when(col(s"t.$c").isNull && col(s"u.$c").isNull, lit(null))
-        .otherwise(coalesce(col(s"t.$c"), lit(0)) +
-          coalesce(col(s"u.$c"), lit(0))).as(c)
+    * LIVE fold: the [[FoldAlg]] merge of each partial named
+    * `__p_<alias>` — avg's `__pa_<alias>s`/`n` and stdDev's
+    * `__pd_<alias>n`/`m`/`q` under their own prefixes, so no alias can
+    * make two partial names equal — plus the percentile pair-array
+    * merge. */
+  private[api] def aggMergeCols(adef: AggDef): Seq[Column] =
     adef.select.zipWithIndex.flatMap { case (it, i) =>
       val a = alias(it, i)
       it.e match {
         case Ref(k :: Nil) if adef.groupBy.contains(k) => Nil
         case Call(None, fn, _) => fn.toLowerCase match {
-          case "sum" => Seq(addSum(s"__p_$a"))
-          case "count" => Seq(add(s"__p_$a"))
-          case "min" => Seq(least(col(s"t.__p_$a"),
-            col(s"u.__p_$a")).as(s"__p_$a"))
-          case "max" => Seq(greatest(col(s"t.__p_$a"),
-            col(s"u.__p_$a")).as(s"__p_$a"))
-          case "avg" => Seq(addSum(s"__ps_$a"), add(s"__pc_$a"))
-          case "stddev" => FoldAlg.mergeCols("stddev", s"__p_$a")
-          case "distinctcount" =>
-            FoldAlg.mergeCols("distinctcount", s"__p_$a")
+          case "avg" => FoldAlg.mergeCols("avg", s"__pa_$a")
+          case "stddev" => FoldAlg.mergeCols("stddev", s"__pd_$a")
+          case k @ ("sum" | "count" | "min" | "max" | "distinctcount") =>
+            FoldAlg.mergeCols(k, s"__p_$a")
           case "percentile" =>
             // concat the two sorted pair arrays (absent side empty),
             // re-sort, collapse equal-q runs — linear, associative
@@ -4169,7 +4228,6 @@ private[api] trait SiddhiQlCompiler extends Serializable {
         case _ => Nil
       }
     }
-  }
 
   /** Finest-grain partial table of `src` (already schema-checked):
     * one row per (bucket, group keys) with the partial columns. */

@@ -649,60 +649,20 @@ private[api] trait SiddhiQlLive extends Serializable {
   private[api] def flushPiecesOf(proto: DataFrame, filter: Option[Expr],
       groupBy: List[String], items: List[(SelItem, String, Boolean)],
       tNs: Long): FlushPieces = {
-    val comps = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, Option[Expr])]
-    def rw(e: Expr): Expr = e match {
-      case Call(None, n, args0) if aggNames(n.toLowerCase) =>
-        val base = s"__p${comps.length}"
-        comps += ((base, n.toLowerCase, args0.headOption))
-        FoldAlg.rewrite(n.toLowerCase, base)
-      case Call(ns2, n, as2) => Call(ns2, n, as2.map(rw))
-      case Bin(op, l, r) => Bin(op, rw(l), rw(r))
-      case Not(x) => Not(rw(x))
-      case Neg(x) => Neg(rw(x))
-      case other => other
-    }
-    val finals: Seq[(String, Expr)] = items.map { case (it, a, isAgg) =>
-      a -> (if (isAgg) rw(it.e) else it.e)
-    }
-    comps.foreach { case (_, n, argO) =>
-      if (n != "count" && argO.isEmpty) fail(s"$n(...) needs an argument")
-    }
-    val keys = "__wb" +: groupBy
+    val fp = FoldAlg.plan(items, "__wb" +: groupBy)
     def keyedSel(df: DataFrame): DataFrame = {
       val f = filter.fold(df)(ff => df.where(expr(sqlOf(ff))))
       f.select(expr(s"ts_ns div ${tNs}L").as("__wb") +:
-        (groupBy.map(col) ++ comps.toSeq.flatMap {
-          case (base, _, argO) =>
-            argO.map(arg => expr(sqlOf(arg)).as(s"${base}_x")).toSeq
-        }): _*)
+        (groupBy.map(col) ++ fp.argCols()): _*)
     }
-    def partialOf(df: DataFrame): DataFrame = {
-      val aggs: Seq[Column] = comps.toSeq.flatMap { case (base, n, argO) =>
-        FoldAlg.partialCols(n, base, argO.map(_ => col(s"${base}_x")))
-      }
-      keyedSel(df).groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    }
-    // componentwise merge semantics live in FoldAlg (sum partials keep
-    // SQL null semantics; stdDev merges Chan moments; distinctCount
-    // unions value sets)
-    val stateSchema = partialOf(proto).schema
-    FlushPieces(stateSchema, keys, tNs, items.map(_._2),
+    def partialOf(df: DataFrame): DataFrame = fp.partial(keyedSel(df))
+    FlushPieces(partialOf(proto).schema, fp.keys, tNs, items.map(_._2),
       partialOf = partialOf,
-      merge = (acc, u) =>
-        // <=> so a null group key merges with itself across triggers
-        acc.as("t").join(u.as("u"),
-            keys.map(k => col(s"t.$k") <=> col(s"u.$k")).reduce(_ && _),
-            "full_outer")
-          .select(keys.map(k =>
-            coalesce(col(s"u.$k"), col(s"t.$k")).as(k)) ++
-            comps.toSeq.flatMap { case (b2, n, _) =>
-              FoldAlg.mergeCols(n, b2) }: _*),
+      merge = fp.merge,
       // the finalized flush relation: __wb + output attrs (group keys
       // appear among the outputs — the select-item checks enforce it)
-      flushOf = acc => acc.select(col("__wb") +:
-        finals.map { case (a, e) => expr(sqlOf(e)).as(a) }: _*),
-      probeSel = df => keyedSel(df).select(keys.map(col): _*))
+      flushOf = fp.finalized(_, Seq(col("__wb"))),
+      probeSel = df => keyedSel(df).select(fp.keyCols: _*))
   }
 
   /** The shared core of the live windowed folds ([[windowedDmlFold]],
@@ -723,6 +683,48 @@ private[api] trait SiddhiQlLive extends Serializable {
       (_, _, acc, batch) => p.merge(acc, p.partialOf(batch)),
       (sp, acc) => finish(sp, p.flushOf(acc)),
       KeyedState(p.keys, (_, _, batch) => p.probeSel(batch))), proto)
+  }
+
+  /** COUNT-based `output first|last every N events` LIVE over a feed
+    * of projected rows whose `__emit_ord` column orders their
+    * emission (a single stream's (ts_ns, event_id), an inner windowed
+    * join's pair order — trigger-monotone under the in-order replay).
+    * Chunk boundaries are GLOBAL arrival ranks (the batch twin's
+    * guarded single-sequence semantics), so each trigger ranks its
+    * batch after the prior count: `out` appends the kept rows with
+    * their rank `__rn`, and `pend` holds the pending chunk-tail row
+    * only — its `__rn` IS the running arrival count, so no separate
+    * counter row exists. `last` also emits the trailing partial
+    * chunk's tail at finish, exactly as the batch twin's max-rank
+    * pick does. */
+  private[api] def countRateFold(feed: DataFrame, mode: String,
+      nEv: Long): LiveStage = {
+    val schema = StructType(feed.drop("__emit_ord").schema.fields :+
+      StructField("__rn", LongType))
+    def countOf(pend: DataFrame): Long =
+      pend.collect().headOption.map(_.getAs[Long]("__rn")).getOrElse(0L)
+    Folded(schema, () => LiveFold(feed,
+      Seq(("out", schema, AppendState), ("pend", schema, FullState)),
+      (_, _, st, batch0) => {
+        val batch = batch0.withColumn("__rn",
+            expr("row_number() over (order by __emit_ord)") +
+              lit(countOf(st("pend").slice)))
+          .drop("__emit_ord")
+        val kept =
+          if (mode == "first") batch.filter((col("__rn") - 1) % nEv === 0)
+          else batch.filter(col("__rn") % nEv === 0)
+        Map("out" -> kept,
+          "pend" -> batch.orderBy(col("__rn").desc).limit(1)
+            .unionByName(st("pend").slice.limit(1))
+            .orderBy(col("__rn").desc).limit(1))
+      },
+      (_, st) => {
+        val fin =
+          if (mode == "last" && countOf(st("pend")) % nEv != 0)
+            st("out").unionByName(st("pend"))
+          else st("out")
+        fin.orderBy("__rn").drop("__rn")
+      }))
   }
 
   /** Batch twin of the stateless stage environment: re-derives every
@@ -805,17 +807,17 @@ private[api] trait SiddhiQlLive extends Serializable {
       if (df.columns.contains("ts"))
         df.where(expr(sqlOf(f)) || col("ts") >= Streaming.flushCutoff)
       else df.where(expr(sqlOf(f)))
-    // Epoch-aligned tumbling aggregation deployed in APPEND mode: group
-    // by the built-in `window()` over the source-watermarked event-time
-    // column, so every pane emits exactly once when the watermark
-    // passes its end and its state row is EVICTED (engine twin:
-    // Streaming.timeBatchSum). The guard drops flush sentinels right
-    // above the watermark node — the predicate references `ts`, so
-    // pushdown keeps it there. `window()` floors to epoch-aligned
-    // buckets, matching the batch compile's `(ts_ns div T) * T` for the
-    // non-negative timestamps the event-time contract requires.
-    def windowedAgg(ast: Ast, base: DataFrame, keyName: String,
-        ivNs: Long, offNs: Long = 0L): DataFrame = {
+    // Windowed aggregation deployed in APPEND mode: group by `w`, the
+    // built-in `window()` (timeBatch, cron) or `session_window()` over
+    // the source-watermarked event-time column, so every pane or
+    // session emits exactly once when the watermark passes its end and
+    // its state row is EVICTED (engine twins: Streaming.timeBatchSum,
+    // Streaming.session). The guard drops flush sentinels right above
+    // the watermark node — the predicate references `ts`, so pushdown
+    // keeps it there. `bounds` are the window's output columns (e.g.
+    // `w_start_ms`) ahead of the select items.
+    def windowedAgg(ast: Ast, base: DataFrame, w: Column,
+        bounds: Seq[Column]): DataFrame = {
       if (!base.columns.contains("ts"))
         fail("a live windowed aggregation needs the event-time column " +
           "'ts'")
@@ -832,30 +834,44 @@ private[api] trait SiddhiQlLive extends Serializable {
         }
       }
       val guarded = base.filter(col("ts") < Streaming.flushCutoff)
-      // start-time alignment (r17) rides the built-in window()'s
-      // native startTime offset — same epoch + k·T + s boundaries as
-      // the batch compile's shifted div
-      val w =
-        if (offNs == 0L) window(col("ts"), s"${ivNs / 1000} microseconds")
-        else window(col("ts"), s"${ivNs / 1000} microseconds",
-          s"${ivNs / 1000} microseconds", s"${offNs / 1000} microseconds")
       val agged = guarded.groupBy(w +: ast.groupBy.map(col): _*)
         .agg(aggCols.head, aggCols.tail: _*)
       val hav = ast.having.fold(agged)(h => agged.where(expr(sqlOf(h))))
-      hav.select(unix_millis(col("window.start")).as(keyName) +:
+      hav.select(bounds ++
         items.map { case (it, a, isAgg) =>
           if (isAgg) col(a)
           else it.e match { case Ref(parts) => col(parts.last).as(a)
                             case _ => col(a) } }: _*)
     }
-    // Per-key buffered fold (length / timeLength / expression windows):
-    // each `key` group's events arrive in (ts_ns, event_id) order inside
-    // flatMapGroupsWithState; `step(buffer, event)` returns (the buffer
-    // kept as state, the events the select items evaluate over with
-    // [[bufEval]]), so state is whatever the step retains per key.
-    def bufferFold(ast: Ast, base: DataFrame, key: String,
+    // timeBatch / cron: [[windowedAgg]] over the tumbling `window()` of
+    // `ivNs`, its start emitted as `name`. `window()` floors to
+    // epoch-aligned buckets, matching the batch compile's
+    // `(ts_ns div T) * T` for the non-negative timestamps the
+    // event-time contract requires; start-time alignment (r17,
+    // `offNs`) rides its native startTime offset — same epoch + k·T + s
+    // boundaries as the batch compile's shifted div.
+    def tumblingAgg(ast: Ast, base: DataFrame, name: String, ivNs: Long,
+        offNs: Long = 0L): DataFrame = {
+      val w =
+        if (offNs == 0L) window(col("ts"), s"${ivNs / 1000} microseconds")
+        else window(col("ts"), s"${ivNs / 1000} microseconds",
+          s"${ivNs / 1000} microseconds", s"${offNs / 1000} microseconds")
+      windowedAgg(ast, base, w, Seq(unix_millis(col("window.start")).as(name)))
+    }
+    // Per-key buffered fold (length / timeLength / expression windows,
+    // named by `wName`): each group-by key's events arrive in (ts_ns,
+    // event_id) order inside flatMapGroupsWithState; `step(buffer,
+    // event)` returns (the buffer kept as state, the events the select
+    // items evaluate over with [[bufEval]]), so state is whatever the
+    // step retains per key.
+    def bufferFold(ast: Ast, base: DataFrame, wName: String,
         step: (Vector[Cep.Ev], Cep.Ev) => (Vector[Cep.Ev], Vector[Cep.Ev]))
         : DataFrame = {
+      val key = ast.groupBy match {
+        case k :: Nil => k
+        case _ => fail(s"live $wName window (v1) needs exactly one " +
+          "group by key to partition the per-key fold")
+      }
       val items = itemsOf(ast)
       val schema2 = StructType(evOutTypes(items).map {
         case (n3, t) => StructField(n3, t) })
@@ -1135,16 +1151,10 @@ private[api] trait SiddhiQlLive extends Serializable {
             val proto = aggGrainPartial(
               emptyOf(sp0, srcTs.schema), adef, pCols)
             readProj(aggRollUp(proto, adef, perMs, lo, hi, cCols, fMap))
-            def mergeFold(acc: DataFrame, batch: DataFrame): DataFrame = {
-              val u = aggGrainPartial(batch, adef, pCols)
-              acc.as("t").join(u.as("u"),
-                  stateKeys.map(k2 => col(s"t.$k2") <=> col(s"u.$k2"))
-                    .reduce(_ && _), "full_outer")
-                .select(stateKeys.map(k2 => coalesce(col(s"u.$k2"),
-                    col(s"t.$k2")).as(k2)) ++ aggMergeCols(adef): _*)
-            }
             Folded(proto.schema, () => singleFold(srcTs, proto.schema,
-                (_, _, acc, batch) => mergeFold(acc, batch),
+                (_, _, acc, batch) => FoldAlg.keyedMerge(acc,
+                  aggGrainPartial(batch, adef, pCols), stateKeys,
+                  aggMergeCols(adef)),
                 (_, acc) => readProj(aggRollUp(acc, adef, perMs, lo, hi,
                   cCols, fMap)),
                 KeyedState(stateKeys, (_, _, batch) => {
@@ -1199,6 +1209,17 @@ private[api] trait SiddhiQlLive extends Serializable {
               s"reads declared streams; '${s.table}' is neither the " +
               "source nor an earlier insert-into target"))
             val base = s.filter.fold(base0)(f => liveWhere(base0, f))
+            // the one rate guard: live output rate limiting deploys over
+            // plain projections and timeBatch windows only
+            if (ast.rate.nonEmpty) (s.window match {
+              case Some(w) if !w.name.equalsIgnoreCase("timebatch") =>
+                Some(s"a ${w.name} window")
+              case None if ast.select.exists(it => containsAgg(it.e)) =>
+                Some("an aggregation")
+              case _ => None
+            }).foreach(what => fail(
+              s"live rate limiting applies to stateless stages (v1) — " +
+                s"not above $what"))
             s.window match {
               case None if ast.rate.exists(r => r.mode == "last" &&
                   r.timeNs.nonEmpty && r.count.isEmpty) &&
@@ -1294,69 +1315,24 @@ private[api] trait SiddhiQlLive extends Serializable {
                     r.count.nonEmpty &&
                       (r.mode == "first" || r.mode == "last")) =>
                 // COUNT-based `output first|last every N events` LIVE:
-                // chunk boundaries are GLOBAL arrival ranks (the batch
-                // twin's guarded single-sequence semantics), so the
-                // stage folds per micro-batch against one counter row —
-                // state = the counter + the pending chunk-tail; output
-                // is append-only (emitted rows with their rank). `last`
-                // additionally emits the trailing partial chunk's tail
-                // at finish, exactly as the batch twin's max-rank pick
-                // does.
-                if (ast.select.exists(it => containsAgg(it.e)) ||
-                    ast.groupBy.nonEmpty)
+                // the count-rate fold over the projected rows, emitted
+                // in (ts_ns, event_id) order (aggregates are refused by
+                // the rate guard above)
+                if (ast.groupBy.nonEmpty)
                   fail("output rate limiting (v1) select cannot " +
                     "aggregate")
                 if (partKey.nonEmpty)
                   fail("count-based rate limiting inside a partition " +
                     "block is not deployed (v1)")
-                val rC = ast.rate.get
-                val mR = rC.mode; val nEv = rC.count.get
-                val itemsR = itemsOf(ast)
                 Seq("ts_ns", "event_id").foreach(c =>
                   if (!base.columns.contains(c))
                     fail(s"output rate limiting needs '$c' on the " +
                       "stream to define emission order"))
-                def projR(df: DataFrame): DataFrame =
-                  df.select(itemsR.map { case (it, a2, _) =>
-                    expr(sqlOf(it.e)).as(a2) } :+ col("__rn"): _*)
-                val outSchema =
-                  projR(base.withColumn("__rn", lit(0L))).schema
-                val pendSchema = StructType(
-                  base.schema.fields :+ StructField("__rn", LongType))
-                // state = the pending chunk-tail row only: its __rn IS
-                // the running arrival count (the rank of the last
-                // filtered arrival), so no separate counter row exists
-                Folded(outSchema, () => LiveFold(base,
-                    Seq(("out", outSchema, AppendState),
-                      ("pend", pendSchema, FullState)),
-                    (_, _, st, batch0) => {
-                      val prior = st("pend").slice.collect()
-                        .headOption.map(_.getAs[Long]("__rn"))
-                        .getOrElse(0L)
-                      val batch = batch0.withColumn("__rn",
-                        expr("row_number() over (order by ts_ns, " +
-                          "event_id)") + lit(prior))
-                      val kept =
-                        if (mR == "first")
-                          batch.filter((col("__rn") - 1) % nEv === 0)
-                        else batch.filter(col("__rn") % nEv === 0)
-                      Map(
-                        "out" -> projR(kept),
-                        "pend" -> batch.orderBy(col("__rn").desc)
-                          .limit(1).unionByName(
-                            st("pend").slice.limit(1))
-                          .orderBy(col("__rn").desc).limit(1))
-                    },
-                    (_, st) => {
-                      val total = st("pend").collect()
-                        .headOption.map(_.getAs[Long]("__rn"))
-                        .getOrElse(0L)
-                      val fin =
-                        if (mR == "last" && total % nEv != 0)
-                          st("out").unionByName(projR(st("pend")))
-                        else st("out")
-                      fin.orderBy("__rn").drop("__rn")
-                    }))
+                countRateFold(base.select(itemsOf(ast).map {
+                    case (it, a2, _) => expr(sqlOf(it.e)).as(a2) } :+
+                    struct(col("ts_ns"), col("event_id")).as("__emit_ord")
+                    : _*),
+                  ast.rate.get.mode, ast.rate.get.count.get)
               case None =>
                 val agg = ast.select.exists(it => containsAgg(it.e))
                 // `output first every T` LIVE: streaming dropDuplicates
@@ -1369,8 +1345,6 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // pass-through it is.
                 val rated = ast.rate match {
                   case None => base
-                  case Some(_) if agg => fail("live rate limiting " +
-                    "applies to stateless stages (v1)")
                   case Some(Rate("all", _, _)) => base
                   case Some(Rate("first", Some(tNs), None)) =>
                     if (!base.columns.contains("ts"))
@@ -1472,7 +1446,7 @@ private[api] trait SiddhiQlLive extends Serializable {
                         itemsW.map(_._2), tNsW / 1000000L, rW))
                     Folded(protoW.schema, () => lfW)
                   case None =>
-                    Streamed(windowedAgg(ast, base, "w_start_ms", args.head,
+                    Streamed(tumblingAgg(ast, base, "w_start_ms", args.head,
                       tbOffNs(s.window.get)), LiveMode.AppendFlushed)
                 }
               case Some(WindowSpec(n2, _, sargs2))
@@ -1481,9 +1455,6 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // key (engine twin: Streaming.dedupKeys) — the first
                 // event per distinct key emits as it arrives; later
                 // duplicates are suppressed by keyed state
-                if (ast.rate.nonEmpty)
-                  fail("live rate limiting applies to stateless stages " +
-                    "(v1) — not above a unique window")
                 if (ast.select.exists(it => containsAgg(it.e)) ||
                     ast.groupBy.nonEmpty)
                   fail("live unique:first projects columns (v1)")
@@ -1505,19 +1476,11 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // predicate holds, re-evaluate select items over the
                 // retained buffer ([[bufEval]] again); buffer size is
                 // bounded by the predicate itself
-                if (ast.rate.nonEmpty)
-                  fail("live rate limiting applies to stateless stages " +
-                    "(v1) — not above an expression window")
                 val retTxt = sargs2.headOption.getOrElse(
                   fail("expression window needs a quoted retention " +
                     "expression"))
                 val ret = new P(lex(retTxt)).expr()
-                val key = ast.groupBy match {
-                  case k :: Nil => k
-                  case _ => fail("live expression window (v1) needs " +
-                    "exactly one group by key to partition the fold")
-                }
-                Streamed(bufferFold(ast, base, key, { (buf0, e) =>
+                Streamed(bufferFold(ast, base, n2, { (buf0, e) =>
                   var buf = buf0 :+ e
                   while (buf.nonEmpty &&
                       !bufEval(ret, buf, e).asInstanceOf[Boolean])
@@ -1529,12 +1492,9 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // cron live: the epoch-aligned fixed-interval Quartz
                 // forms ARE a cron-aligned timeBatch — same Append-mode
                 // watermark-evicted buckets, keyed cron_tick_ms
-                if (ast.rate.nonEmpty)
-                  fail("live rate limiting applies to stateless stages " +
-                    "(v1) — not above a cron aggregation")
                 val spec = sargs2.headOption.getOrElse(
                   fail("cron needs a quoted Quartz expression argument"))
-                Streamed(windowedAgg(ast, base, "cron_tick_ms",
+                Streamed(tumblingAgg(ast, base, "cron_tick_ms",
                   cronIntervalNs(spec)), LiveMode.AppendFlushed)
               case Some(WindowSpec(n2, args2, _))
                   if n2.equalsIgnoreCase("delay") =>
@@ -1574,17 +1534,9 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // events; select items evaluate over the subset still
                 // within T of the current event (same inclusive bound as
                 // the batch compile) — state is ≤ N events per key
-                if (ast.rate.nonEmpty)
-                  fail("live rate limiting applies to stateless stages " +
-                    "(v1) — not above a timeLength window")
                 val tNs2 = args2.head
                 val nCap = args2(1).toInt
-                val key = ast.groupBy match {
-                  case k :: Nil => k
-                  case _ => fail("live timeLength window (v1) needs " +
-                    "exactly one group by key to partition the ring")
-                }
-                Streamed(bufferFold(ast, base, key, { (ring0, e) =>
+                Streamed(bufferFold(ast, base, n2, { (ring0, e) =>
                   val ring = (ring0 :+ e).takeRight(nCap)
                   (ring, ring.filter(_.tsNs >= e.tsNs - tNs2))
                 }), LiveMode.Append)
@@ -1600,9 +1552,6 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // unique:ever retains the latest row per key forever —
                 // the identical fold. Composite keys (r17) fold on the
                 // attribute struct.
-                if (ast.rate.nonEmpty)
-                  fail("live rate limiting applies to stateless stages " +
-                    "(v1) — not above a unique window")
                 if (ast.select.exists(it => containsAgg(it.e)) ||
                     ast.groupBy.nonEmpty)
                   fail(s"live $n2 projects columns (v1)")
@@ -1642,9 +1591,6 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // across any batch split because top-N is associative.
                 // Select items (usually aggregates) evaluate over the
                 // FINAL kept set, the batch compile's semantics.
-                if (ast.rate.nonEmpty)
-                  fail("live rate limiting applies to stateless stages " +
-                    "(v1) — not above a sort window")
                 val nKeep = args2.headOption.getOrElse(
                   fail("sort needs a count argument")).toInt
                 Seq("ts_ns", "event_id").foreach(c =>
@@ -1663,14 +1609,11 @@ private[api] trait SiddhiQlLive extends Serializable {
                       windowed = false)))
               case Some(WindowSpec(n2, args2, sargs2))
                   if n2.equalsIgnoreCase("frequent") =>
-                // live frequent(N, attr): per-key ALGEBRAIC components
-                // (count/sum/min/max fold componentwise across batches;
-                // state = one component row per distinct key), with the
+                // live frequent(N, attr): the select items fold as
+                // FoldAlg components keyed on the attribute (state = one
+                // component row per distinct key), with the
                 // top-N-by-frequency retention applied at read time —
                 // the batch compile's exact-count truth, incrementally
-                if (ast.rate.nonEmpty)
-                  fail("live rate limiting applies to stateless stages " +
-                    "(v1) — not above a frequent window")
                 if (ast.having.nonEmpty)
                   fail("live frequent window (v1) has no having clause")
                 val nKeep = args2.headOption.getOrElse(
@@ -1683,64 +1626,25 @@ private[api] trait SiddhiQlLive extends Serializable {
                 if (!base.columns.contains(attr))
                   fail(s"live frequent window needs column '$attr'")
                 val items = itemsOf(ast)
-                // per select item: (component aggregate, merge of the
-                // two sides' components, output projection)
-                val comps: Seq[(String, Column, Column)] =
-                  items.zipWithIndex.flatMap {
-                    case ((it, a, false), _) => it.e match {
-                      case Ref(parts) if parts.last == attr => Nil
-                      case _ => fail("live frequent window (v1) " +
-                        s"non-aggregate item '$a' must be the attribute")
-                    }
-                    case ((it, a, true), i) =>
-                      val cn = s"__c$i"
-                      def tu(c: String) = (coalesce(col(s"t.$c"), lit(0))
-                        + coalesce(col(s"u.$c"), lit(0))).as(c)
-                      it.e match {
-                        case Call(None, "count", Nil) =>
-                          Seq((cn, count(lit(1)).as(cn), tu(cn)))
-                        case Call(None, "sum", arg :: Nil) =>
-                          Seq((cn, sum(expr(sqlOf(arg))).as(cn), tu(cn)))
-                        case Call(None, "min", arg :: Nil) =>
-                          Seq((cn, min(expr(sqlOf(arg))).as(cn),
-                            least(col(s"t.$cn"), col(s"u.$cn")).as(cn)))
-                        case Call(None, "max", arg :: Nil) =>
-                          Seq((cn, max(expr(sqlOf(arg))).as(cn),
-                            greatest(col(s"t.$cn"), col(s"u.$cn"))
-                              .as(cn)))
-                        case _ => fail("live frequent window (v1) " +
-                          "supports bare count()/sum(x)/min(x)/max(x) " +
-                          s"aggregates; got '${sqlOf(it.e)}'")
-                      }
-                  }
+                items.collect { case (it, a, false) => (it.e, a) }.foreach {
+                  case (Ref(parts), _) if parts.last == attr => ()
+                  case (_, a) => fail("live frequent window (v1) " +
+                    s"non-aggregate item '$a' must be the attribute")
+                }
+                // the retention's frequency is one more count component
+                val fp = FoldAlg.plan(items :+ ((SelItem(
+                  Call(None, "count", Nil), Some("__cnt")), "__cnt", true)),
+                  Seq(attr), (_, _) => Ref(List(attr)))
                 def partialOf(df: DataFrame): DataFrame =
-                  df.groupBy(col(attr)).agg(count(lit(1)).as("__cnt"),
-                    comps.map(_._2): _*)
+                  fp.partial(df.select(col(attr) +: fp.argCols(): _*))
                 val schemaF = partialOf(base).schema
+                val rank = row_number().over(
+                  org.apache.spark.sql.expressions.Window.orderBy(
+                    col(fp.comps.last.base).desc, col(attr)))
                 Folded(schemaF, () => singleFold(base, schemaF,
-                    (_, _, acc, batch) => {
-                      val u = partialOf(batch)
-                      acc.as("t").join(u.as("u"),
-                          col(s"t.$attr") === col(s"u.$attr"),
-                          "full_outer")
-                        .select(coalesce(col(s"u.$attr"),
-                            col(s"t.$attr")).as(attr) +:
-                          (coalesce(col("t.__cnt"), lit(0L)) +
-                            coalesce(col("u.__cnt"), lit(0L)))
-                            .as("__cnt") +:
-                          comps.map(_._3): _*)
-                    },
-                    (_, acc) => acc
-                      .withColumn("__rk", expr("row_number() over " +
-                        s"(order by __cnt desc, $attr)"))
-                      .where(col("__rk") <= nKeep)
-                      .select(items.map { case (it, a, isAgg) =>
-                        if (!isAgg) col(attr).as(a)
-                        else {
-                          val i = items.indexWhere(_._2 == a)
-                          col(s"__c$i").as(a)
-                        }
-                      }: _*),
+                    (_, _, acc, batch) => fp.merge(acc, partialOf(batch)),
+                    (_, acc) => fp.finalized(acc.withColumn("__rk", rank)
+                      .where(col("__rk") <= nKeep)).drop("__cnt"),
                     // component rows merge per attr value: only the
                     // batch's attr buckets are read and rewritten
                     KeyedState(Seq(attr), (_, _, batch) =>
@@ -1755,21 +1659,13 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // expression window folds with; engine twin:
                 // Streaming.lengthSliding). State is N events per key,
                 // forever-bounded.
-                if (ast.rate.nonEmpty)
-                  fail("live rate limiting applies to stateless stages " +
-                    "(v1) — not above a length window")
                 val nRing = args2.head.toInt
-                val key = ast.groupBy match {
-                  case k :: Nil => k
-                  case _ => fail("live length window (v1) needs exactly " +
-                    "one group by key to partition the per-key ring")
-                }
                 val need2 = Seq("event_id", "ts_ns", "user_id",
                   "event_type", "value")
                 need2.foreach(c => if (!base.columns.contains(c))
                   fail(s"live length window reads event streams; " +
                     s"'${s.table}' lacks '$c'"))
-                Streamed(bufferFold(ast, base, key, { (ring0, e) =>
+                Streamed(bufferFold(ast, base, n2, { (ring0, e) =>
                   val ring = (ring0 :+ e).takeRight(nRing)
                   (ring, ring)
                 }), LiveMode.Append)
@@ -1780,34 +1676,12 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // session emits (merged, final) once the watermark
                 // passes its close, then its state is dropped; output
                 // columns mirror the batch text compile exactly
-                if (ast.rate.nonEmpty)
-                  fail("live rate limiting applies to stateless stages " +
-                    "(v1) — not above a session aggregation")
-                val items = itemsOf(ast)
-                val aggCols = items.collect { case (it, a2, true) =>
-                  expr(sqlOf(it.e)).as(a2) }
-                if (aggCols.isEmpty) fail("session window needs an " +
-                  "aggregate")
-                items.collect { case (it, _, false) => it }.foreach {
-                  it => it.e match {
-                    case Ref(c :: Nil) if ast.groupBy.contains(c) => ()
-                    case _ => fail("non-aggregate select item must be " +
-                      "grouped")
-                  }
-                }
-                val sw = session_window(col("ts"),
-                  s"${args2.head / 1000000} milliseconds")
-                val agged = base
-                  .filter(col("ts") < Streaming.flushCutoff)
-                  .groupBy(sw +: ast.groupBy.map(col): _*)
-                  .agg(aggCols.head, aggCols.tail: _*)
-                val hav = ast.having.fold(agged)(h =>
-                  agged.where(expr(sqlOf(h))))
-                Streamed(hav.select(
-                  unix_millis(col("session_window.start"))
-                    .as("w_start_ms") +:
-                  unix_millis(col("session_window.end")).as("w_end_ms") +:
-                  items.map { case (_, a2, _) => col(a2) }: _*),
+                Streamed(windowedAgg(ast, base,
+                  session_window(col("ts"),
+                    s"${args2.head / 1000000} milliseconds"),
+                  Seq(unix_millis(col("session_window.start"))
+                      .as("w_start_ms"),
+                    unix_millis(col("session_window.end")).as("w_end_ms"))),
                   LiveMode.AppendFlushed)
               case Some(w) => fail("live deployment (v1) supports " +
                 "stateless stages, timeBatch/session aggregation, and " +
@@ -2038,10 +1912,10 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // cross-trigger merges commute NO MATTER WHICH trigger
                 // materializes it — which is what makes outer rows,
                 // materialized only at watermark expiry, safe here);
-                // count modes over an INNER join ride the running
-                // pair counter (the single-stream count-rate fold
-                // shape — pair emission is trigger-monotone under the
-                // in-order replay). Count modes over an OUTER join
+                // count modes over an INNER join ride the single
+                // stream's running counter ([[countRateFold]] — pair
+                // emission is trigger-monotone under the in-order
+                // replay). Count modes over an OUTER join
                 // (r12) cannot: a null-pad materializes at watermark
                 // expiry, AFTER later-emission pairs were already
                 // counted. The emission ORDER itself is still total
@@ -2117,40 +1991,7 @@ private[api] trait SiddhiQlLive extends Serializable {
                             .select(outColsJ.map(col): _*)
                         }, needsFlush = true))
                   case (m @ ("first" | "last"), None, Some(nEv)) =>
-                    val rankedSchema = StructType(feedJ
-                      .drop("__emit_ts", "__emit_ord").schema.fields :+
-                      StructField("__rn", LongType))
-                    Folded(rankedSchema, () => LiveFold(feedJ,
-                        Seq(("out", rankedSchema, AppendState),
-                          ("pend", rankedSchema, FullState)),
-                        (_, _, st, batch0) => {
-                          val prior = st("pend").slice.collect()
-                            .headOption.map(_.getAs[Long]("__rn"))
-                            .getOrElse(0L)
-                          val batch = batch0.withColumn("__rn",
-                            expr("row_number() over (order by " +
-                              "__emit_ord)") + lit(prior))
-                            .drop("__emit_ts", "__emit_ord")
-                          val kept =
-                            if (m == "first")
-                              batch.filter((col("__rn") - 1) % nEv === 0)
-                            else batch.filter(col("__rn") % nEv === 0)
-                          Map("out" -> kept,
-                            "pend" -> batch.orderBy(col("__rn").desc)
-                              .limit(1).unionByName(
-                                st("pend").slice.limit(1))
-                              .orderBy(col("__rn").desc).limit(1))
-                        },
-                        (_, st) => {
-                          val total = st("pend").collect()
-                            .headOption.map(_.getAs[Long]("__rn"))
-                            .getOrElse(0L)
-                          val fin =
-                            if (m == "last" && total % nEv != 0)
-                              st("out").unionByName(st("pend"))
-                            else st("out")
-                          fin.orderBy("__rn").drop("__rn")
-                        }))
+                    countRateFold(feedJ.drop("__emit_ts"), m, nEv)
                   case ("snapshot", _, _) =>
                     fail("output snapshot over a join (v1): insert the " +
                       "join into a stream and snapshot that stream — a " +
@@ -2184,90 +2025,28 @@ private[api] trait SiddhiQlLive extends Serializable {
                 // group whenever its trigger carries it — the runner's
                 // flush-sentinel batches (needsFlush) make the tail's
                 // pads materialize before finish, and null group keys
-                // merge via the null-safe key equality below
+                // merge via FoldAlg's null-safe keyed merge
                 // having applies ONCE at finish over the finalized
                 // groups (alias refs, like the batch compile); order,
                 // offset and limit follow in [[deployApp]]
                 val items = itemsOf(ast)
                 val keyItems = items.filter(!_._3)
-                val keyAliases = keyItems.map(_._2)
-                if (ast.groupBy.sorted != keyAliases.sorted.toList)
-                  fail("live join aggregation (v1) groups by exactly " +
-                    "the aliases of its non-aggregate select items " +
-                    s"(non-aggregate [${keyAliases.mkString(", ")}], " +
-                    s"group by [${ast.groupBy.mkString(", ")}])")
-                // (component name, agg fn, argument) per aggregate
-                // sub-call; the select item's scalar wrapper is
-                // re-evaluated at finish over the merged components
-                val comps = scala.collection.mutable.Buffer
-                  .empty[(String, String, Option[Expr])]
-                def rw(e: Expr): Expr = e match {
-                  case Call(None, n, args0)
-                      if aggNames(n.toLowerCase) =>
-                    val base = s"__g${comps.length}"
-                    comps += ((base, n.toLowerCase, args0.headOption))
-                    FoldAlg.rewrite(n.toLowerCase, base)
-                  case Call(ns2, n, as2) => Call(ns2, n, as2.map(rw))
-                  case Bin(op, l2, r2) => Bin(op, rw(l2), rw(r2))
-                  case Not(x) => Not(rw(x))
-                  case Neg(x) => Neg(rw(x))
-                  case other2 => other2
-                }
-                val finals: Seq[(String, Expr)] = items.map {
-                  case (it, a2, isAgg) =>
-                    a2 -> (if (isAgg) rw(it.e) else Ref(List(a2)))
-                }
-                comps.foreach { case (_, n, argO) =>
-                  if (n != "count" && argO.isEmpty)
-                    fail(s"$n(...) needs an argument")
-                }
-                // a group-by-less aggregate folds under one constant
-                // key (single component row of state)
-                val keys =
-                  if (keyAliases.isEmpty) Seq("__k") else keyAliases
-                val feed0 = joined.select(keyItems.map {
-                  case (it, a2, _) =>
-                    expr(sqlOfWith(it.e, qual)).as(a2) } ++
-                  comps.toSeq.flatMap { case (base, _, argO) =>
-                    argO.map(arg => expr(sqlOfWith(arg, qual))
-                      .as(s"${base}_x")).toSeq }: _*)
-                val feed = if (keyAliases.isEmpty)
-                  feed0.withColumn("__k", lit(0L)) else feed0
-                def partialOf(df: DataFrame): DataFrame = {
-                  val aggs: Seq[Column] = comps.toSeq.flatMap {
-                    case (base, n, argO) =>
-                      FoldAlg.partialCols(n, base,
-                        argO.map(_ => col(s"${base}_x")))
-                  }
-                  df.groupBy(keys.map(col): _*)
-                    .agg(aggs.head, aggs.tail: _*)
-                }
-                def mergeComp(base: String, n: String): Seq[Column] =
-                  FoldAlg.mergeCols(n, base)
-                val schemaJ = partialOf(feed).schema
+                // the select item's scalar wrapper is re-evaluated at
+                // finish over the merged components
+                val fp = FoldAlg.plan(items,
+                  FoldAlg.groupKeys("live join aggregation", ast.groupBy,
+                    items), (_, a2) => Ref(List(a2)), ast.having)
+                val feed = joined.select(
+                  (if (keyItems.isEmpty) fp.keyCols else keyItems.map {
+                    case (it, a2, _) =>
+                      expr(sqlOfWith(it.e, qual)).as(a2) }) ++
+                  fp.argCols(sqlOfWith(_, qual)): _*)
+                val schemaJ = fp.partial(feed).schema
                 Folded(schemaJ, () => singleFold(feed, schemaJ,
-                    (_, _, acc, batch) => {
-                      val u = partialOf(batch)
-                      // <=> so a null group key merges with itself
-                      // across triggers instead of spawning a fresh
-                      // null-key group per batch
-                      acc.as("t").join(u.as("u"),
-                          keys.map(k =>
-                            col(s"t.$k") <=> col(s"u.$k"))
-                            .reduce(_ && _), "full_outer")
-                        .select(keys.map(k => coalesce(col(s"u.$k"),
-                            col(s"t.$k")).as(k)) ++
-                          comps.toSeq.flatMap { case (b2, n, _) =>
-                            mergeComp(b2, n) }: _*)
-                    },
-                    (_, acc) => {
-                      val fin = acc.select(finals.map {
-                        case (a2, e2) => expr(sqlOf(e2)).as(a2) }: _*)
-                      ast.having.fold(fin)(h =>
-                        fin.where(expr(sqlOf(h))))
-                    },
-                    KeyedState(keys, (_, _, batch) =>
-                      batch.select(keys.map(col): _*)))
+                    (_, _, acc, batch) => fp.merge(acc, fp.partial(batch)),
+                    (_, acc) => fp.finalized(acc),
+                    KeyedState(fp.keys, (_, _, batch) =>
+                      batch.select(fp.keyCols: _*)))
                     .copy(needsFlush = jType != "inner"))
               } else {
               // carry the non-nullable side's watermarked event-time

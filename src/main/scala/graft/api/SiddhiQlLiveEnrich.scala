@@ -370,32 +370,10 @@ private[api] trait SiddhiQlLiveEnrich extends Serializable {
     private def aggTail(stName: String): EnrichTail = {
       val items = itemsOf(ast)
       val keyItems = items.filter(!_._3)
-      val keyAliases = keyItems.map(_._2)
-      if (ast.groupBy.sorted != keyAliases.sorted.toList)
-        fail("live enrichment aggregation (v1) groups by " +
-          "exactly the aliases of its non-aggregate select " +
-          s"items (non-aggregate [${keyAliases.mkString(", ")}" +
-          s"], group by [${ast.groupBy.mkString(", ")}])")
-      val comps = scala.collection.mutable.Buffer
-        .empty[(String, String, Option[Expr])]
-      def rw(e: Expr): Expr = e match {
-        case Call(None, n, args0) if aggNames(n.toLowerCase) =>
-          val base = s"__g${comps.length}"
-          comps += ((base, n.toLowerCase, args0.headOption))
-          FoldAlg.rewrite(n.toLowerCase, base)
-        case Call(ns2, n, as2) => Call(ns2, n, as2.map(rw))
-        case Bin(op, l2, r2) => Bin(op, rw(l2), rw(r2))
-        case Not(x) => Not(rw(x))
-        case Neg(x) => Neg(rw(x))
-        case other2 => other2
-      }
-      val finals: Seq[(String, Expr)] = items.map { case (it, a2, isAgg) =>
-        a2 -> (if (isAgg) rw(it.e) else Ref(List(a2)))
-      }
-      comps.foreach { case (_, n, argO) =>
-        if (n != "count" && argO.isEmpty) fail(s"$n(...) needs an argument")
-      }
-      if (comps.isEmpty)
+      val fp = FoldAlg.plan(items,
+        FoldAlg.groupKeys("live enrichment aggregation", ast.groupBy, items),
+        (_, a2) => Ref(List(a2)), ast.having)
+      if (fp.comps.isEmpty)
         fail("live enrichment aggregation selects at least one aggregate")
       // group keys are STREAM-side expressions (v1): the touched-bucket
       // probe evaluates them on the raw batch, before any state is read
@@ -418,46 +396,22 @@ private[api] trait SiddhiQlLiveEnrich extends Serializable {
       // per-event rows: group-key exprs + aggregate arguments
       val rowsSel = keyItems.map { case (it, a2, _) =>
         SelItem(it.e, Some(a2)) } ++
-        comps.toList.flatMap { case (base, _, argO) =>
-          argO.map(a0 => SelItem(a0, Some(s"${base}_x"))).toList }
+        fp.args.map { case (c, a0) => SelItem(a0, Some(c)) }
       val astRows: Ast = ast.copy(select = rowsSel, groupBy = Nil,
         having = None, orderBy = Nil, limit = None, offset = None)
-      val keys = if (keyAliases.isEmpty) Seq("__k") else keyAliases
-      def partialOf(df: DataFrame): DataFrame = {
-        val withK =
-          if (keyAliases.isEmpty) df.withColumn("__k", lit(0L)) else df
-        val aggs: Seq[Column] = comps.toSeq.flatMap { case (base, n, argO) =>
-          FoldAlg.partialCols(n, base, argO.map(_ => col(s"${base}_x")))
-        }
-        withK.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-      }
-      def finalized(acc: DataFrame): DataFrame =
-        acc.select(finals.map { case (a2, e2) => expr(sqlOf(e2)).as(a2) }: _*)
       // deploy-time prototypes: fail fast + schemas (routes astRows
       // through the channel-shared batch validations)
-      val schemaA = partialOf(enrichCompile(sp0, "", astRows, j, writers,
+      val schemaA = fp.partial(enrichCompile(sp0, "", astRows, j, writers,
         emptyOf(sp0, dSchema), protoEnv)).schema
-      EnrichTail(astRows, finalized(emptyOf(sp0, schemaA)),
-        (stName, schemaA, KeyedState(keys, (sp, d2, batch) =>
-          if (keyAliases.isEmpty) batch.select(lit(0L).as("__k"))
+      EnrichTail(astRows, fp.finalized(emptyOf(sp0, schemaA)),
+        (stName, schemaA, KeyedState(fp.keys, (sp, d2, batch) =>
+          if (keyItems.isEmpty) batch.select(fp.keyCols: _*)
           else streamRows(sp, d2, batch, benvOf(sp, d2, batch))
             .select(keySqls.map { case (sq, a2) => expr(sq).as(a2) }: _*))),
         // merge this trigger's per-pair rows into the accumulated keyed
         // partials (componentwise FoldAlg)
-        (st, enriched) => {
-          val u = partialOf(enriched)
-          st.slice.as("t").join(u.as("u"),
-              keys.map(k2 => col(s"t.$k2") <=> col(s"u.$k2")).reduce(_ && _),
-              "full_outer")
-            .select(keys.map(k2 =>
-                coalesce(col(s"u.$k2"), col(s"t.$k2")).as(k2)) ++
-              comps.toSeq.flatMap { case (b2, n, _) =>
-                FoldAlg.mergeCols(n, b2) }: _*)
-        },
-        acc => {
-          val fin = finalized(acc)
-          ast.having.fold(fin)(h => fin.where(expr(sqlOf(h))))
-        })
+        (st, enriched) => fp.merge(st.slice, fp.partial(enriched)),
+        acc => fp.finalized(acc))
     }
 
     /** The channel's one [[LiveFold]] over the source: its `states`

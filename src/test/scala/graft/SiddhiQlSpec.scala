@@ -342,6 +342,20 @@ class SiddhiQlSpec extends AnyFunSuite {
       assert(math.abs(g.getDouble(2) - d.getDouble(2)) < 1e-9)
       assert(g.getLong(3) == d.getLong(3))
     }
+    // avg's and stdDev's partials sit under their own prefixes, so an
+    // alias that is another alias plus a component suffix (`sdn`) can
+    // not collide with them, in batch or in the live merge
+    val app2 = app.replace("avg(value) as avg_v, count() as cnt",
+        "avg(value) as v, stdDev(value) as sd, count() as vn, " +
+          "count() as sdn")
+      .replace("select user_id, avg_v, cnt", "select user_id, v, sdn")
+    val batch2 = SiddhiQL.compileApp(spark, sf, app2)("read").collect()
+    val live2 = SiddhiQL.deployApp(spark, sf, app2, "read", chunks = 2)
+      .collect()
+    def keyed(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getLong(1), r.getLong(3))
+    assert(batch2.map(_.getLong(3)).toSeq == direct.map(_.getLong(3)).toSeq)
+    assert(live2.map(keyed).toSeq == batch2.map(keyed).toSeq)
   }
 
   test("indexed pattern select: e1[0]/e1[last] extract distinct events " +
@@ -2047,6 +2061,39 @@ class SiddhiQlSpec extends AnyFunSuite {
       "partitioned stream"))
   }
 
+  test("live frequent window folds through the shared FoldAlg algebra: " +
+       "deployApp at 2 and 7 chunks == compileApp") {
+    // list:get renders as try_element_at, so z sums an all-null
+    // argument: null on both surfaces (SQL null semantics), never 0.
+    // The second app adds avg, the surface the shared algebra opens
+    // beyond count/sum/min/max.
+    val items = "count() as n, sum(value) as s, min(value) as lo, " +
+      "max(value) as hi, sum(list:get(list:create(value), 1)) as z"
+    for (sel <- Seq(items, items + ", avg(value) as a")) {
+      val app = "@info(name='q') from events#window.frequent(3, " +
+        s"event_type) select event_type, $sel group by event_type " +
+        "insert into O"
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+        df.orderBy("event_type").collect().map(_.toSeq).toSeq
+      val batch = rows(SiddhiQL.compileApp(spark, sf, app)("q"))
+      assert(batch.length == 3 && batch.forall(_(5) == null))
+      for (c <- Seq(2, 7)) {
+        val live = rows(SiddhiQL.deployApp(spark, sf, app, "q",
+          chunks = c))
+        // sums of doubles re-associate across chunks
+        val same = live.length == batch.length &&
+          live.zip(batch).forall { case (l, b) =>
+            l.length == b.length && l.zip(b).forall {
+              case (x: Double, y: Double) =>
+                math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(y))
+              case (x, y) => x == y
+            }
+          }
+        assert(same, s"frequent live($c) $live != batch $batch")
+      }
+    }
+  }
+
   test("live deployment diagnostics name each v1 bound") {
     def msg(app: String, out: String = "q"): String =
       intercept[IllegalArgumentException](
@@ -2062,6 +2109,12 @@ class SiddhiQlSpec extends AnyFunSuite {
       "select user_id, count() as n group by user_id " +
       "output first every 1 min insert into O")
       .contains("stateless stages"))
+    // rate above a delay window: refused by name, as compileApp's
+    // rate-over-window path refuses it (it once returned every row,
+    // un-rated)
+    assert(msg("@info(name='q') from events#window.delay(1 min) " +
+      "select event_id, value output first every 1 min insert into O")
+      .contains("not above a delay window"))
     // non-time join windows live
     assert(msg("@info(name='q') from events as a#window.length(5) " +
       "join events as b#window.time(1 min) on a.user_id == b.user_id " +
