@@ -55,6 +55,14 @@ import graft.engine.{Cep, Tables}
   * ([[Patterns.PatternBuilder.selectPlan]]). [[deployApp]] runs the
   * same app text as a LIVE Structured Streaming topology.
   *
+  * Five traits mix in below: [[SiddhiQlFrontend]] (lexer, parser and
+  * the front-end both surfaces share), [[SiddhiQlCompiler]] (batch),
+  * [[SiddhiQlLive]] (live stages and the fold runner),
+  * [[SiddhiQlLiveEnrich]] (the live enrichment join) and
+  * [[SiddhiQlRate]] (output rate limiting for both surfaces: every
+  * rated shape lowers to emission-ordered rows, one selection picks
+  * them).
+  *
   * Scale notes: everything lowers to the same declarative plans the rest
   * of the engine emits (Catalyst sees groupBy/window/join/pattern
   * operators, never an interpreter); the only interpreted code is the
@@ -65,4 +73,5 @@ import graft.engine.{Cep, Tables}
   * anywhere (the r9 guardGlobalWindow fail-fast family is retired).
   */
 object SiddhiQL extends SiddhiQlFrontend with SiddhiQlCompiler
-  with SiddhiQlLive with SiddhiQlLiveEnrich with Serializable
+  with SiddhiQlLive with SiddhiQlLiveEnrich with SiddhiQlRate
+  with Serializable

@@ -8,12 +8,13 @@ import org.apache.spark.sql.types._
 import graft.engine.{Cep, Tables}
 
 /** [[SiddhiQL]]'s batch compiler: single queries, joins, patterns,
-  * windows (including the distributed band-join sliding frames), rate
-  * limiting, table DML replay, incremental aggregation (the grain
-  * cascade), and the [[FoldAlg]] mergeable-aggregate algebra shared
-  * with the live channels. Mixed into `object SiddhiQL`. */
+  * windows (including the distributed band-join sliding frames), table
+  * DML replay, incremental aggregation (the grain cascade), and the
+  * [[FoldAlg]] mergeable-aggregate algebra shared with the live
+  * channels; rate limiting lowers in [[SiddhiQlRate]]. Mixed into
+  * `object SiddhiQL`. */
 private[api] trait SiddhiQlCompiler extends Serializable {
-  self: SiddhiQlFrontend =>
+  self: SiddhiQlFrontend with SiddhiQlRate =>
   // ---------- compiler ----------
   def compile(spark: SparkSession, dir: String, query: String): DataFrame = {
     scriptFns = Map.empty // single queries can't define functions
@@ -2554,17 +2555,11 @@ private[api] trait SiddhiQlCompiler extends Serializable {
       case a => fail(s"table DML targeting '${a.target}' needs an app " +
         "context: use compileApp with a `define table` declaration")
     }
-    // partition-block guard (r13): rate limiting inside `partition
-    // with` is PER-KEY-INSTANCE semantics that this path would
-    // silently compile as GLOBAL (the partition key reaches only
-    // window/groupBy compilation) — a miscompile, so fail loudly
-    // like the live surface does (aggregation reads already fail at
-    // the partition branch: they don't read the partitioned stream)
-    if (partKey.nonEmpty && ast.rate.nonEmpty)
-      fail("output rate limiting inside a partition block is " +
-        "per-key-instance semantics — not compiled (v1); rate the " +
-        "stream at top level (global) or aggregate per key " +
-        "explicitly")
+    // partition-block guard (r13): the partition key reaches only
+    // window/groupBy compilation, so a rate here would compile as
+    // GLOBAL (aggregation reads already fail at the partition branch:
+    // they don't read the partitioned stream)
+    requireUnpartitionedRate(ast, partKey)
     val selected = (ast.rate, ast.stream) match {
       case (Some(r), s: SingleStream) =>
         compileRateLimited(spark, dir, ast, s, r, env)
@@ -3288,68 +3283,6 @@ private[api] trait SiddhiQlCompiler extends Serializable {
     rate match {
       case None => selectOrAggregate(astG, joined, Nil, windowed = false)
       case Some(r) => rateOverJoin(astG, joined, j, r)
-    }
-  }
-
-  /** Output rate limiting over a JOIN: the rated events are the join's
-    * OUTPUT pairs, each emitted at the instant its LATER side arrived
-    * (an outer join's unmatched row emits at its own arrival —
-    * `greatest` skips the null side). Both sides must be aliased event
-    * streams so the emission order (`emit ts`, left id, right id) is
-    * total. first/last per rate interval partition by the emission
-    * interval — fully parallel; count-based rates need the global
-    * emission rank and ride the guarded single-task window. */
-  private[api] def rateOverJoin(ast: Ast, joined: DataFrame,
-      j: JoinStream, rate: Rate): DataFrame = {
-    if (ast.groupBy.nonEmpty || ast.select.exists(it => containsAgg(it.e)))
-      fail("output rate limiting over a join rates the join's OUTPUT " +
-        "events (v1) — no group by / aggregates (aggregate in a " +
-        "downstream stage)")
-    val (laS, raS) = (j.leftAlias, j.rightAlias) match {
-      case (Some(a), Some(b)) => (a, b)
-      case _ => fail("output rate limiting over a join needs ALIASED " +
-        "stream sides (v1) to define the pair emission order")
-    }
-    Seq(laS, raS).foreach { a =>
-      Seq("ts_ns", "event_id").foreach { c =>
-        if (scala.util.Try(joined(s"$a.$c")).isFailure)
-          fail(s"output rate limiting over a join needs '$c' on side " +
-            s"'$a' — pair emission order is (later ts, left id, " +
-            "right id)")
-      }
-    }
-    val emitTs = greatest(col(s"$laS.ts_ns"), col(s"$raS.ts_ns"))
-    val df = joined
-      .withColumn("__emit_ts", emitTs)
-      .withColumn("__emit_ord", struct(emitTs.as("t"),
-        coalesce(col(s"$laS.event_id"), lit(-1L)).as("il"),
-        coalesce(col(s"$raS.event_id"), lit(-1L)).as("ir")))
-    def proj(kept: DataFrame): DataFrame =
-      selectOrAggregate(ast, kept.drop("__emit_ts", "__emit_ord"), Nil,
-        windowed = false)
-    import org.apache.spark.sql.expressions.Window
-    (rate.mode, rate.timeNs, rate.count) match {
-      case ("all", _, _) => proj(df) // replayed batches ≡ the output
-      case (m @ ("first" | "last"), Some(t), None) =>
-        val w = Window.partitionBy(expr(s"__emit_ts div ${t}L"))
-          .orderBy(if (m == "first") col("__emit_ord").asc
-            else col("__emit_ord").desc)
-        proj(df.withColumn("__rn", row_number().over(w))
-          .where(col("__rn") === 1))
-      case (m @ ("first" | "last"), None, Some(n)) =>
-        // emission ranks from the distributed prefix sum over the
-        // total emission order (struct sorts lexicographically), then
-        // a chunk-partitioned pick — no global single-task window
-        val pick = if (m == "first") "min" else "max"
-        proj(globalRank(df, Seq(col("__emit_ord")), "__rn")
-          .withColumn("__keep", expr(s"$pick(__rn) over (partition by " +
-            s"(__rn - 1) div ${n}L)"))
-          .where(col("__rn") === col("__keep")))
-      case ("snapshot", _, _) =>
-        fail("output snapshot over a join (v1): insert the join into a " +
-          "stream and snapshot that stream — a snapshot of pair state " +
-          "has no single emission row")
-      case _ => fail("unreachable: rate clause validated at parse")
     }
   }
 
@@ -4310,153 +4243,6 @@ private[api] trait SiddhiQlCompiler extends Serializable {
     }: _*)
   }
 
-  /** Output rate limiting under batch replay (SURVEY §2.7; engine twins:
-    * graft.engine.Ops.rateLimit / rateLimitEvents / rateLimitSnapshot).
-    *
-    *   - `output first|last every T`   → per time-interval first/last row
-    *     (row_number over the interval, pruned to 1 — one shuffle on the
-    *     interval id, fully parallel across intervals);
-    *   - `output first|last every N events` → per-chunk-of-N first/last
-    *     in global arrival order (inherently sequential, same caveat as
-    *     `lengthBatch` — the reference's single-threaded emission order);
-    *   - `output all every ...`        → identity under batch replay (the
-    *     buffered batches concatenate to exactly the input);
-    *   - `output snapshot every T`     → the latest row as of every
-    *     interval end across the stream's span, gaps carrying the prior
-    *     snapshot forward (emitted with a leading `w_end_ms`, the same
-    *     implicit-column convention as timeBatch's `w_start_ms`).
-    *
-    * v1: plain filtered projections only — windows/aggregations combine
-    * with rate limiting in ways batch replay can't reproduce faithfully,
-    * so they fail fast rather than mis-compile. */
-  private[api] def compileRateLimited(spark: SparkSession, dir: String, ast: Ast,
-      s: SingleStream, rate: Rate,
-      env: Map[String, DataFrame]): DataFrame = {
-    if (ast.having.nonEmpty)
-      fail("output rate limiting (v1) has no having clause")
-    s.window match {
-      case Some(w) =>
-        return compileRateWindowed(spark, dir, ast, s, w, rate, env)
-      case None => ()
-    }
-    if (ast.groupBy.nonEmpty)
-      fail("output rate limiting (v1) applies to plain `from S[filter] " +
-        "select ...` queries, or to an UNGROUPED windowed aggregation " +
-        "(add #window.timeBatch(T)); grouped rates are not defined")
-    val items = itemsOf(ast)
-    items.foreach { case (_, a, isAgg) =>
-      if (isAgg) fail(s"output rate limiting over an aggregate ('$a') " +
-        "needs a batch window (#window.timeBatch(T)) to define flush " +
-        "emissions")
-    }
-    val base0 = loadTable(spark, dir, s.table, env)
-    if (!base0.columns.contains("ts_ns") ||
-        !base0.columns.contains("event_id"))
-      fail(s"output rate limiting needs 'ts_ns' and 'event_id' on " +
-        s"'${s.table}' to define emission order")
-    val base = s.filter.fold(base0)(f => base0.where(expr(sqlOf(f))))
-    val outCols = items.map(_._2)
-    def proj(df: DataFrame): DataFrame =
-      df.select(items.map { case (it, a, _) =>
-        expr(sqlOf(it.e)).as(a)
-      }: _*)
-    val ordAsc = "ts_ns, event_id"
-    val ordDesc = "ts_ns desc, event_id desc"
-    (rate.mode, rate.timeNs, rate.count) match {
-      case ("all", _, _) => proj(base) // replayed batches ≡ the input
-      case (m @ ("first" | "last"), Some(t), None) =>
-        val ord = if (m == "first") ordAsc else ordDesc
-        proj(base
-          .withColumn("__rn", expr(s"row_number() over (partition by " +
-            s"ts_ns div ${t}L order by $ord)"))
-          .where(col("__rn") === 1))
-      case (m @ ("first" | "last"), None, Some(n)) =>
-        // arrival ranks ride the DISTRIBUTED prefix sum; the chunk
-        // pick is a chunk-PARTITIONED window — no data-sized global
-        // single-task stage (the r9 guardGlobalWindow refusal is gone)
-        val pick = if (m == "first") "min" else "max"
-        proj(globalRank(base, Seq(col("ts_ns"), col("event_id")), "__rn")
-          .withColumn("__keep", expr(s"$pick(__rn) over (partition by " +
-            s"(__rn - 1) div ${n}L)"))
-          .where(col("__rn") === col("__keep")))
-      case ("snapshot", Some(t), None) =>
-        val ivMs = t / 1000000L
-        val rows = base.select(items.map { case (it, a, _) =>
-          expr(sqlOf(it.e)).as(a)
-        } :+ expr(s"ts_ns div ${t}L").as("__iv")
-          :+ struct(col("ts_ns"), col("event_id")).as("__ord"): _*)
-        val lastPer = rows.groupBy("__iv")
-          .agg(max_by(struct(outCols.map(col): _*), col("__ord"))
-            .as("__row"))
-        val ticks = lastPer
-          .agg(min("__iv").as("__lo"), max("__iv").as("__hi"))
-          .select(explode(sequence(col("__lo"), col("__hi"))).as("__iv"))
-        val w = org.apache.spark.sql.expressions.Window
-          .orderBy("__iv")
-          .rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding, 0)
-        // gap intervals carry the previous snapshot forward; snapshot
-        // cardinality is one row per interval, so the single-task global
-        // window is O(span/T), not O(events)
-        val filled = ticks.join(lastPer, Seq("__iv"), "left_outer")
-          .select(col("__iv") +: outCols.map(c =>
-            last(col(s"__row.$c"), ignoreNulls = true).over(w).as(c)): _*)
-        filled.select(
-          ((col("__iv") + 1) * ivMs).as("w_end_ms") +:
-            outCols.map(col): _*)
-      case _ => fail("unreachable: rate clause validated at parse")
-    }
-  }
-
-  /** Output rate limiting OVER a windowed aggregation: the rated
-    * "events" are the window's FLUSH rows (one per timeBatch bucket —
-    * ungrouped, v1), emitted at the bucket's end (`w_end_ms`).
-    * `first/last every T` keeps one flush row per rate interval
-    * (interval = w_end_ms div T), `every N events` chunks flush rows
-    * by arrival, `snapshot` carries the latest flush across empty
-    * intervals. Flush cardinality is span/Tw, so every rank window
-    * here is O(flushes), never O(events). */
-  private[api] def compileRateWindowed(spark: SparkSession, dir: String,
-      ast: Ast, s: SingleStream, w: WindowSpec, rate: Rate,
-      env: Map[String, DataFrame]): DataFrame = {
-    val twNs = w.name.toLowerCase match {
-      case "timebatch" =>
-        requireEpochTb(w, "output rate limiting over a window")
-        w.args.head
-      case other => fail("output rate limiting over a window (v1) " +
-        s"supports #window.timeBatch(T); '#window.$other' emissions " +
-        "are per-event or unordered")
-    }
-    if (ast.groupBy.nonEmpty)
-      fail("output rate limiting over a windowed aggregation (v1) is " +
-        "ungrouped — one flush row per window (shard per-key streams " +
-        "with `partition with`)")
-    val items = itemsOf(ast)
-    items.foreach { case (it, a, isAgg) =>
-      if (!isAgg && refsAttr(it.e))
-        fail(s"rate-limited windowed select item '$a' must aggregate " +
-          "(or be a constant) — the flush row is the emission")
-    }
-    val aggCols = items.collect { case (it, a, true) =>
-      expr(sqlOf(it.e)).as(a) }
-    if (aggCols.isEmpty)
-      fail("a rate-limited windowed query needs an aggregate select " +
-        "item (drop the window to rate-limit raw events)")
-    val base0 = loadTable(spark, dir, s.table, env)
-    if (!base0.columns.contains("ts_ns"))
-      fail(s"windowed rate limiting needs 'ts_ns' on '${s.table}'")
-    val base =
-      s.filter.fold(base0)(f => applyFilter(spark, dir, base0, f, env))
-    val outCols = items.map(_._2)
-    val flush = base
-      .groupBy(expr(s"ts_ns div ${twNs}L").as("__wb"))
-      .agg(aggCols.head, aggCols.tail: _*)
-      .select(col("__wb") +:
-        items.map { case (it, a, isAgg) =>
-          (if (isAgg) col(a) else expr(sqlOf(it.e))).as(a) }: _*)
-    rateOverFlushes(flush, outCols, twNs / 1000000L, rate)
-  }
-
   /** Pattern clause → (builder, select extractors, output schema) —
     * shared by the batch plan path ([[compilePattern]] → selectPlan) and
     * the live deployment path ([[deployAppOn]] → selectStream). */
@@ -4581,109 +4367,17 @@ private[api] trait SiddhiQlCompiler extends Serializable {
         }
       case Some(r) =>
         // rate limiting over a PATTERN: the rated events are the
-        // MATCHES, each emitted at its closing (max-ts) bound event;
-        // matches closed by the same event (one e2 completing several
-        // `every` runs at once) tie-break by SPAWN order — the first
-        // bound event — Siddhi's in-chunk emission order.
-        val out2 = out ++ Seq(("__emit_ns", LongType),
-          ("__sp_ts", LongType), ("__sp_id", LongType))
-        val df = b.selectPlan(spark, dir, out2) { bnd =>
-          val evs = bnd.valuesIterator.flatten.toSeq
-          val sp = evs.minBy(e => (e.tsNs, e.eventId))
+        // MATCHES, carrying their emission columns
+        val df = b.selectPlan(spark, dir, out ++ patternEmitCols) { bnd =>
           sel.map { case (_, _, _, extract) => extract(bnd) } ++
-            Seq(evs.map(_.tsNs).max, sp.tsNs, sp.eventId)
+            patternEmit(bnd)
         }
-        rateOverMatches(df, out.map(_._1), r)
+        val outCols = out.map(_._1)
+        rateSelect(patternRows(df, outCols, r), outCols, r)
     }
   }
-
-  /** Rate-mode selection over PATTERN matches carrying their emission
-    * order (`__emit_ns` = the closing bound event's ts, tie-broken by
-    * spawn `__sp_ts`/`__sp_id`) — the tail of [[compilePattern]]'s
-    * rate arm, shared with the live pattern fold's finish so live
-    * rate-over-pattern semantics ARE the batch code. */
-  private[api] def rateOverMatches(df: DataFrame, outCols: Seq[String],
-      r: Rate): DataFrame = {
-    def proj(kept: DataFrame): DataFrame =
-      kept.select(outCols.map(col): _*)
-    import org.apache.spark.sql.expressions.Window
-    val ordAsc = Seq(col("__emit_ns").asc, col("__sp_ts").asc,
-      col("__sp_id").asc)
-    val ordDesc = Seq(col("__emit_ns").desc, col("__sp_ts").desc,
-      col("__sp_id").desc)
-    (r.mode, r.timeNs, r.count) match {
-      case ("all", _, _) => proj(df) // emission batching only
-      case (m @ ("first" | "last"), Some(t), None) =>
-        val w = Window.partitionBy(expr(s"__emit_ns div ${t}L"))
-          .orderBy((if (m == "first") ordAsc else ordDesc): _*)
-        proj(df.withColumn("__rn", row_number().over(w))
-          .where(col("__rn") === 1))
-      case (m @ ("first" | "last"), None, Some(n)) =>
-        // match-emission ranks from the distributed prefix sum;
-        // chunk-partitioned pick — no global single-task window
-        val pick = if (m == "first") "min" else "max"
-        proj(globalRank(df, Seq(col("__emit_ns"), col("__sp_ts"),
-            col("__sp_id")), "__rn")
-          .withColumn("__keep", expr(s"$pick(__rn) over (partition " +
-            s"by (__rn - 1) div ${n}L)"))
-          .where(col("__rn") === col("__keep")))
-      case ("snapshot", _, _) =>
-        fail("output snapshot over a pattern (v1): insert the " +
-          "matches into a stream and snapshot that stream")
-      case _ => fail("unreachable: rate clause validated at parse")
-    }
-  }
-
 
   private[api] def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-
-  /** Rate-mode selection over FLUSH rows (`__wb` bucket + output
-    * attrs) — the tail of [[compileRateWindowed]], shared with the
-    * live flush-fold's finish so live rate-over-window semantics are
-    * the batch code itself. */
-  private[api] def rateOverFlushes(flush0: DataFrame, outCols: Seq[String],
-      twMs: Long, rate: Rate): DataFrame = {
-    val flush = flush0
-      .withColumn("w_end_ms", (col("__wb") + 1) * lit(twMs))
-    val sel = col("w_end_ms") +: outCols.map(col)
-    (rate.mode, rate.timeNs, rate.count) match {
-      case ("all", _, _) => flush.select(sel: _*)
-      case (m @ ("first" | "last"), Some(t), None) =>
-        val trMs = t / 1000000L
-        val ord = if (m == "first") "__wb" else "__wb desc"
-        flush.withColumn("__rn", expr("row_number() over (partition " +
-            s"by w_end_ms div ${trMs}L order by $ord)"))
-          .where(col("__rn") === 1).select(sel: _*)
-      case (m @ ("first" | "last"), None, Some(n)) =>
-        val pick = if (m == "first") "min" else "max"
-        flush.withColumn("__rn",
-            expr("row_number() over (order by __wb)"))
-          .withColumn("__keep", expr(s"$pick(__rn) over (partition by " +
-            s"(__rn - 1) div ${n}L)"))
-          .where(col("__rn") === col("__keep")).select(sel: _*)
-      case ("snapshot", Some(t), None) =>
-        val trMs = t / 1000000L
-        val lastPer = flush
-          .withColumn("__iv", expr(s"w_end_ms div ${trMs}L"))
-          .groupBy("__iv")
-          .agg(max_by(struct(outCols.map(col): _*), col("__wb"))
-            .as("__row"))
-        val ticks = lastPer
-          .agg(min("__iv").as("__lo"), max("__iv").as("__hi"))
-          .select(explode(sequence(col("__lo"), col("__hi"))).as("__iv"))
-        val wn = org.apache.spark.sql.expressions.Window.orderBy("__iv")
-          .rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding, 0)
-        // gap intervals carry the previous snapshot forward; snapshot
-        // cardinality is one row per interval — O(span/T)
-        ticks.join(lastPer, Seq("__iv"), "left_outer")
-          .select(((col("__iv") + 1) * trMs).as("w_end_ms") +:
-            outCols.map(c =>
-              last(col(s"__row.$c"), ignoreNulls = true).over(wn).as(c))
-            : _*)
-      case _ => fail("unreachable: rate clause validated at parse")
-    }
-  }
 }

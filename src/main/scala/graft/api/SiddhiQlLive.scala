@@ -9,11 +9,13 @@ import graft.engine.{Cep, Tables}
 
 /** [[SiddhiQL]]'s live deployment: the Structured Streaming topology
   * builder (deployApp), the LiveFold channel (keyed/bucketed state,
-  * windowed flush folds, rate folds; the enrichment join lowers in
-  * [[SiddhiQlLiveEnrich]]), and the fold runner over in-memory state
-  * generations. Mixed into `object SiddhiQL`. */
+  * windowed flush folds; the enrichment join lowers in
+  * [[SiddhiQlLiveEnrich]], output rate limiting in [[SiddhiQlRate]]),
+  * and the fold runner over in-memory state generations. Mixed into
+  * `object SiddhiQL`. */
 private[api] trait SiddhiQlLive extends Serializable {
-  self: SiddhiQlFrontend with SiddhiQlCompiler with SiddhiQlLiveEnrich =>
+  self: SiddhiQlFrontend with SiddhiQlCompiler with SiddhiQlLiveEnrich
+    with SiddhiQlRate =>
   // ---------- live deployment ----------
   /** The single source watermark bound: every deployed topology
     * declares `withWatermark("ts", <delay>)` at the source, and the
@@ -685,48 +687,6 @@ private[api] trait SiddhiQlLive extends Serializable {
       KeyedState(p.keys, (_, _, batch) => p.probeSel(batch))), proto)
   }
 
-  /** COUNT-based `output first|last every N events` LIVE over a feed
-    * of projected rows whose `__emit_ord` column orders their
-    * emission (a single stream's (ts_ns, event_id), an inner windowed
-    * join's pair order — trigger-monotone under the in-order replay).
-    * Chunk boundaries are GLOBAL arrival ranks (the batch twin's
-    * guarded single-sequence semantics), so each trigger ranks its
-    * batch after the prior count: `out` appends the kept rows with
-    * their rank `__rn`, and `pend` holds the pending chunk-tail row
-    * only — its `__rn` IS the running arrival count, so no separate
-    * counter row exists. `last` also emits the trailing partial
-    * chunk's tail at finish, exactly as the batch twin's max-rank
-    * pick does. */
-  private[api] def countRateFold(feed: DataFrame, mode: String,
-      nEv: Long): LiveStage = {
-    val schema = StructType(feed.drop("__emit_ord").schema.fields :+
-      StructField("__rn", LongType))
-    def countOf(pend: DataFrame): Long =
-      pend.collect().headOption.map(_.getAs[Long]("__rn")).getOrElse(0L)
-    Folded(schema, () => LiveFold(feed,
-      Seq(("out", schema, AppendState), ("pend", schema, FullState)),
-      (_, _, st, batch0) => {
-        val batch = batch0.withColumn("__rn",
-            expr("row_number() over (order by __emit_ord)") +
-              lit(countOf(st("pend").slice)))
-          .drop("__emit_ord")
-        val kept =
-          if (mode == "first") batch.filter((col("__rn") - 1) % nEv === 0)
-          else batch.filter(col("__rn") % nEv === 0)
-        Map("out" -> kept,
-          "pend" -> batch.orderBy(col("__rn").desc).limit(1)
-            .unionByName(st("pend").slice.limit(1))
-            .orderBy(col("__rn").desc).limit(1))
-      },
-      (_, st) => {
-        val fin =
-          if (mode == "last" && countOf(st("pend")) % nEv != 0)
-            st("out").unionByName(st("pend"))
-          else st("out")
-        fin.orderBy("__rn").drop("__rn")
-      }))
-  }
-
   /** Batch twin of the stateless stage environment: re-derives every
     * stateless derived stream (`defs`, in textual order) from one
     * micro-batch of the SOURCE via the batch compiler (stateless plans
@@ -750,6 +710,41 @@ private[api] trait SiddhiQlLive extends Serializable {
     LiveFold(feed, Seq(("state", schema, mode)),
       (sp, d, st, b) => Map("state" -> fold(sp, d, st("state").slice, b)),
       (sp, st) => finish(sp, st("state")))
+
+  /** An unwindowed live stage over `df` (the stage's filtered input, or
+    * the rate-limited stream of [[liveStreamRate]]): a projection, or a
+    * global aggregation. */
+  private[api] def plainStage(ast: Ast, df: DataFrame): LiveStage = {
+    val agg = ast.select.exists(it => containsAgg(it.e))
+    // carry the watermarked event-time columns through the projection
+    // (dropped again if this stage is the sink) so a downstream window
+    // can bucket and evict by them
+    val carryCols =
+      if (agg) Nil
+      else {
+        val aliases = itemsOf(ast).map(_._2).toSet
+        Seq("ts", "ts_ns").filter(c =>
+          df.columns.contains(c) && !aliases.contains(c))
+      }
+    val outDf = selectOrAggregate(ast, df, Nil, windowed = false,
+      carry = carryCols.map(col))
+    if (!agg) Streamed(outDf, LiveMode.Append, carryCols)
+    // live global (unwindowed) aggregation runs UPDATE mode: each
+    // trigger emits only the groups the batch changed — sink volume
+    // O(batch keys) per trigger, not O(all groups) as Complete-mode
+    // re-emission would be. The runner collapses the emissions into a
+    // keyed upsert (last write per group wins), the scale-safe shape of
+    // the reference's ever-updating aggregate. `__ukey` carries the
+    // group identity to the collapse and is dropped at the sink; when
+    // the group key is not projected there is no upsert identity, so
+    // the stage keeps bounded-state Complete re-emission.
+    else if (ast.groupBy.isEmpty)
+      Streamed(outDf.withColumn("__ukey", lit(0L)), LiveMode.Update)
+    else if (ast.groupBy.forall(outDf.columns.contains))
+      Streamed(outDf.withColumn("__ukey",
+        struct(ast.groupBy.map(col): _*)), LiveMode.Update)
+    else Streamed(outDf, LiveMode.Complete)
+  }
 
   /** Stage compiler shared by [[deployAppOn]] and [[deployApp]]:
     * returns the `out` query's AST (its order by, offset and limit
@@ -911,13 +906,7 @@ private[api] trait SiddhiQlLive extends Serializable {
         // a defined window reads as fed-stream#spec, exactly like the
         // batch replay — reading W as a plain stream would miscompile
         val ast = readNamedWindows(ast0L, liveWindowDefs, env.contains)
-        // rate over pattern matches deploys through the fold channel
-        // (see the PatternStream case); snapshot keeps the batch
-        // compiler's refusal, named identically on both surfaces
-        if (ast.rate.exists(_.mode == "snapshot") &&
-            ast.stream.isInstanceOf[PatternStream])
-          fail("output snapshot over a pattern (v1): insert the " +
-            "matches into a stream and snapshot that stream")
+        requireUnpartitionedRate(ast, partKey)
         val dmlAct = ast.action.filter {
           case InsertInto(t) => tableDefs.contains(t)
           case _             => true
@@ -1058,17 +1047,6 @@ private[api] trait SiddhiQlLive extends Serializable {
             :+ ((ast, act, schema, srcName)))
           Folded(schema, () => tableFoldFor(act.target))
         } else {
-        // rate over pattern matches: register the accumulate-then-rank
-        // fold (AppendState match log; finish = the BATCH selection,
-        // rateOverMatches, so both surfaces share one code path)
-        def patternRateFold(matches: DataFrame, r: Rate,
-            outCols: Seq[String], schemaR: StructType,
-            needsFl: Boolean): LiveStage =
-          Folded(schemaR, () => LiveFold(matches,
-            Seq(("m", schemaR, AppendState)),
-            (_, _, _, batch) => Map("m" -> batch),
-            (_, st) => rateOverMatches(st("m"), outCols, r),
-            needsFlush = needsFl))
         ast.stream match {
           // `from AggName within ... per '...'` reading a LIVE
           // `define aggregation`: the grain cascade compiles onto the
@@ -1209,246 +1187,13 @@ private[api] trait SiddhiQlLive extends Serializable {
               s"reads declared streams; '${s.table}' is neither the " +
               "source nor an earlier insert-into target"))
             val base = s.filter.fold(base0)(f => liveWhere(base0, f))
-            // the one rate guard: live output rate limiting deploys over
-            // plain projections and timeBatch windows only
-            if (ast.rate.nonEmpty) (s.window match {
-              case Some(w) if !w.name.equalsIgnoreCase("timebatch") =>
-                Some(s"a ${w.name} window")
-              case None if ast.select.exists(it => containsAgg(it.e)) =>
-                Some("an aggregation")
-              case _ => None
-            }).foreach(what => fail(
-              s"live rate limiting applies to stateless stages (v1) — " +
-                s"not above $what"))
-            s.window match {
-              case None if ast.rate.exists(r => r.mode == "last" &&
-                  r.timeNs.nonEmpty && r.count.isEmpty) &&
-                  !ast.select.exists(it => containsAgg(it.e)) =>
-                // `output last every T` LIVE: an interval's LAST event
-                // is only known when the interval closes — an
-                // Append-mode time-window aggregation:
-                // max_by(projected row, (ts_ns, event_id)) per
-                // window(ts, T); the watermark emits and EVICTS each
-                // interval once it has passed (bounded state; batch
-                // twin: compileRateLimited's first|last arm, engine
-                // twin: Ops.rateLimit's last_id)
-                if (ast.groupBy.nonEmpty || ast.having.nonEmpty)
-                  fail("output rate limiting (v1) applies to plain " +
-                    "`from S[filter] select ...` (no group by / having)")
-                Seq("ts", "ts_ns", "event_id").foreach(c =>
-                  if (!base.columns.contains(c))
-                    fail(s"live rate limiting needs column '$c'"))
-                val tNs = ast.rate.get.timeNs.get
-                val items = itemsOf(ast)
-                val rowC = struct(items.map { case (it, a, _) =>
-                  expr(sqlOf(it.e)).as(a) }: _*)
-                val lastDf = base
-                  .filter(col("ts") < Streaming.flushCutoff)
-                  .groupBy(window(col("ts"),
-                    s"${tNs / 1000} microseconds"))
-                  .agg(max_by(rowC,
-                    struct(col("ts_ns"), col("event_id"))).as("__row"))
-                  .select(col("__row.*"))
-                Streamed(lastDf, LiveMode.AppendFlushed)
-              case None if ast.rate.exists(r => r.mode == "snapshot" &&
-                  r.timeNs.nonEmpty && r.count.isEmpty) &&
-                  !ast.select.exists(it => containsAgg(it.e)) =>
-                // `output snapshot every T` LIVE: the latest projected
-                // row as of each interval end, gap intervals carrying
-                // the previous snapshot forward (batch twin:
-                // compileRateLimited's snapshot arm; engine twin:
-                // Ops.rateLimitSnapshot). The per-interval keep-latest
-                // is a keyed fold on the interval id — bucketed
-                // generations rewrite only the intervals the batch
-                // touches — and the gap fill runs once at finish over
-                // the O(span/T) snapshot rows.
-                if (ast.groupBy.nonEmpty || ast.having.nonEmpty)
-                  fail("output rate limiting (v1) applies to plain " +
-                    "`from S[filter] select ...` (no group by / having)")
-                Seq("ts_ns", "event_id").foreach(c =>
-                  if (!base.columns.contains(c))
-                    fail(s"live rate limiting needs column '$c'"))
-                val tNs = ast.rate.get.timeNs.get
-                val ivMs = tNs / 1000000L
-                val items = itemsOf(ast)
-                val outCols = items.map(_._2)
-                def partialSnap(df: DataFrame): DataFrame =
-                  df.select(items.map { case (it, a, _) =>
-                      expr(sqlOf(it.e)).as(a) } :+
-                      expr(s"ts_ns div ${tNs}L").as("__iv") :+
-                      struct(col("ts_ns"), col("event_id")).as("__ord")
-                      : _*)
-                    .groupBy("__iv")
-                    .agg(max_by(struct(outCols.map(col): _*),
-                      col("__ord")).as("__row"),
-                      max(col("__ord")).as("__ord"))
-                val schemaS = partialSnap(base).schema
-                Folded(schemaS, () => singleFold(base, schemaS,
-                    (_, _, acc, batch) =>
-                      acc.unionByName(partialSnap(batch))
-                        .groupBy("__iv")
-                        .agg(max_by(col("__row"), col("__ord"))
-                          .as("__row"), max(col("__ord")).as("__ord")),
-                    (_, acc) => {
-                      val ticks = acc
-                        .agg(min("__iv").as("__lo"),
-                          max("__iv").as("__hi"))
-                        .where(col("__lo").isNotNull)
-                        .select(explode(sequence(col("__lo"),
-                          col("__hi"))).as("__iv"))
-                      val w = org.apache.spark.sql.expressions.Window
-                        .orderBy("__iv")
-                        .rowsBetween(org.apache.spark.sql.expressions
-                          .Window.unboundedPreceding, 0)
-                      ticks.join(acc, Seq("__iv"), "left_outer")
-                        .select(col("__iv") +: outCols.map(c =>
-                          last(col(s"__row.$c"), ignoreNulls = true)
-                            .over(w).as(c)): _*)
-                        .select(((col("__iv") + 1) * ivMs)
-                          .as("w_end_ms") +: outCols.map(col): _*)
-                    },
-                    KeyedState(Seq("__iv"), (_, _, batch) =>
-                      batch.select(expr(s"ts_ns div ${tNs}L")
-                        .as("__iv")))))
-              case None
-                  if ast.rate.exists(r =>
-                    r.count.nonEmpty &&
-                      (r.mode == "first" || r.mode == "last")) =>
-                // COUNT-based `output first|last every N events` LIVE:
-                // the count-rate fold over the projected rows, emitted
-                // in (ts_ns, event_id) order (aggregates are refused by
-                // the rate guard above)
-                if (ast.groupBy.nonEmpty)
-                  fail("output rate limiting (v1) select cannot " +
-                    "aggregate")
-                if (partKey.nonEmpty)
-                  fail("count-based rate limiting inside a partition " +
-                    "block is not deployed (v1)")
-                Seq("ts_ns", "event_id").foreach(c =>
-                  if (!base.columns.contains(c))
-                    fail(s"output rate limiting needs '$c' on the " +
-                      "stream to define emission order"))
-                countRateFold(base.select(itemsOf(ast).map {
-                    case (it, a2, _) => expr(sqlOf(it.e)).as(a2) } :+
-                    struct(col("ts_ns"), col("event_id")).as("__emit_ord")
-                    : _*),
-                  ast.rate.get.mode, ast.rate.get.count.get)
-              case None =>
-                val agg = ast.select.exists(it => containsAgg(it.e))
-                // `output first every T` LIVE: streaming dropDuplicates
-                // on the interval id — the first event of each interval
-                // emits AS IT ARRIVES; the watermark evicts interval
-                // state once the interval has passed (bounded state at
-                // any runtime length; engine twin:
-                // Streaming.rateLimitFirst). `output all every T` only
-                // batches EMISSION, never content — deployed as the
-                // pass-through it is.
-                val rated = ast.rate match {
-                  case None => base
-                  case Some(Rate("all", _, _)) => base
-                  case Some(Rate("first", Some(tNs), None)) =>
-                    if (!base.columns.contains("ts"))
-                      fail("live rate limiting needs the event-time " +
-                        "column 'ts'")
-                    // the interval id is a TIMESTAMP event-time column
-                    // carrying the watermark tag AND serving as the
-                    // dedup key: Spark only evicts streaming-dedup state
-                    // when a watermarked column is among the keys, so a
-                    // derived LONG id would accumulate state forever
-                    // (engine twin: Streaming.rateLimitFirst). The tag
-                    // is attached as metadata — a second withWatermark
-                    // NODE below the source one would be a disallowed
-                    // redefinition; the watermark VALUE still comes from
-                    // the source node, and __w <= ts so eviction is
-                    // sound (an interval's state drops once the
-                    // watermark passes its start).
-                    val mdw = new MetadataBuilder()
-                      .putLong("spark.watermarkDelayMs", wmNs / 1000000L)
-                      .build()
-                    base.select(col("*"),
-                        timestamp_millis(
-                          expr(s"(ts_ns div ${tNs}L) * ${tNs / 1000000}L"))
-                          .as("__w", mdw))
-                      .dropDuplicates("__w")
-                      .drop("__w")
-                  case Some(r) => fail("live deployment (v1) supports " +
-                    "time-based `output first|last|all|snapshot every " +
-                    s"<time>`; got mode '${r.mode}'" +
-                    r.count.fold("")(_ => " with an event count"))
-                }
-                // carry the watermarked event-time columns through the
-                // projection (dropped again if this stage is the sink)
-                // so a downstream window can bucket and evict by them
-                val carryCols =
-                  if (agg) Nil
-                  else {
-                    val aliases = itemsOf(ast).map(_._2).toSet
-                    Seq("ts", "ts_ns").filter(c =>
-                      rated.columns.contains(c) && !aliases.contains(c))
-                  }
-                val outDf = selectOrAggregate(ast, rated, Nil,
-                  windowed = false, carry = carryCols.map(col))
-                if (!agg) Streamed(outDf, LiveMode.Append, carryCols)
-                else {
-                  // live global (unwindowed) aggregation runs UPDATE
-                  // mode: each trigger emits only the groups the batch
-                  // changed — sink volume O(batch keys) per trigger,
-                  // not O(all groups) as Complete-mode re-emission
-                  // would be. The runner collapses the emissions into
-                  // a keyed upsert (last write per group wins), the
-                  // scale-safe shape of the reference's ever-updating
-                  // aggregate. `__ukey` carries the group identity to
-                  // the collapse and is dropped at the sink; when the
-                  // group key is not projected there is no upsert
-                  // identity, so the stage keeps bounded-state
-                  // Complete re-emission.
-                  if (ast.groupBy.isEmpty)
-                    Streamed(outDf.withColumn("__ukey", lit(0L)),
-                      LiveMode.Update)
-                  else if (ast.groupBy.forall(outDf.columns.contains))
-                    Streamed(outDf.withColumn("__ukey",
-                      struct(ast.groupBy.map(col): _*)), LiveMode.Update)
-                  else Streamed(outDf, LiveMode.Complete)
-                }
+            if (ast.rate.nonEmpty) liveStreamRate(ast, s, base, wmNs)
+            else s.window match {
+              case None => plainStage(ast, base)
               case Some(WindowSpec(n, args, _))
                   if n.equalsIgnoreCase("timebatch") =>
-                ast.rate match {
-                  case Some(rW) =>
-                    // rate OVER the windowed aggregation LIVE: the
-                    // same fold channel as the store pattern — state
-                    // = per-bucket algebraic flush partials (a bucket
-                    // straddling triggers merges componentwise), and
-                    // finish runs the BATCH rate selection over the
-                    // finalized flushes, so live ≡ batch by
-                    // construction (incl. interval boundaries)
-                    if (partKey.nonEmpty)
-                      fail("windowed rate limiting inside a partition " +
-                        "block is not deployed (v1)")
-                    if (ast.groupBy.nonEmpty)
-                      fail("output rate limiting over a windowed " +
-                        "aggregation (v1) is ungrouped — one flush row " +
-                        "per window")
-                    val itemsW = itemsOf(ast)
-                    itemsW.foreach { case (it, a2, isAgg) =>
-                      if (!isAgg && refsAttr(it.e))
-                        fail(s"rate-limited windowed select item '$a2' " +
-                          "must aggregate (or be a constant)")
-                    }
-                    if (!itemsW.exists(_._3))
-                      fail("a rate-limited windowed query needs an " +
-                        "aggregate select item")
-                    requireEpochTb(s.window.get,
-                      "rate limiting over a windowed aggregation")
-                    val tNsW = args.head
-                    val (lfW, protoW) = flushPartialFold(base, None,
-                      Nil, itemsW, tNsW,
-                      (_, flush) => rateOverFlushes(flush,
-                        itemsW.map(_._2), tNsW / 1000000L, rW))
-                    Folded(protoW.schema, () => lfW)
-                  case None =>
-                    Streamed(tumblingAgg(ast, base, "w_start_ms", args.head,
-                      tbOffNs(s.window.get)), LiveMode.AppendFlushed)
-                }
+                Streamed(tumblingAgg(ast, base, "w_start_ms", args.head,
+                  tbOffNs(s.window.get)), LiveMode.AppendFlushed)
               case Some(WindowSpec(n2, _, sargs2))
                   if n2.equalsIgnoreCase("unique:first") =>
                 // live unique:first = streaming dropDuplicates on the
@@ -1689,76 +1434,49 @@ private[api] trait SiddhiQlLive extends Serializable {
             }
           case pt: PatternStream =>
             val (b, sel, outSchema) = patternParts(ast, pt)
-            // rate over pattern matches LIVE (r14): matches accumulate
-            // in an append-only fold carrying their emission order
-            // (closing bound event's ts, spawn tie-break), and finish
-            // runs the BATCH selection (rateOverMatches) — live ≡
-            // batch by construction, the same accumulate-then-rank
-            // trade the r12 count-mode outer joins made (rate is a
-            // globally-ordered pick, inherently total-order; the
-            // accumulated state is O(matches), distributed in
-            // executor-held generations, never driver-resident).
-            val rateP = ast.rate
-            val outSchemaR =
-              if (rateP.isEmpty) outSchema
-              else outSchema ++ Seq(("__emit_ns", LongType),
-                ("__sp_ts", LongType), ("__sp_id", LongType))
-            val schema = StructType(outSchemaR.map { case (n, t) =>
-              StructField(n, t) })
+            // a rated pattern's matches carry their emission columns
+            // into [[rateLogFold]]
+            val rated = ast.rate.nonEmpty
+            val schema = StructType((outSchema ++
+              (if (rated) patternEmitCols else Nil)).map { case (n, t) =>
+                StructField(n, t) })
             implicit val enc: org.apache.spark.sql.Encoder[
               org.apache.spark.sql.Row] =
               org.apache.spark.sql.Encoders.row(schema)
-            val proj = (bnd: Cep.Bindings) => {
-              val base = sel.map { case (_, _, _, extract) =>
-                extract(bnd) }
+            val proj = (bnd: Cep.Bindings) =>
               org.apache.spark.sql.Row.fromSeq(
-                if (rateP.isEmpty) base
-                else {
-                  // the batch rate arm's exact order columns
-                  // (compilePattern): emit at the max-ts bound event,
-                  // tie-break by the spawning (first) bound event
-                  val evs = bnd.valuesIterator.flatten.toSeq
-                  val sp2 = evs.minBy(e => (e.tsNs, e.eventId))
-                  base ++ Seq(evs.map(_.tsNs).max, sp2.tsNs, sp2.eventId)
-                })
-            }
-            if (b.steps.exists(_.isInstanceOf[Cep.Absent])) {
-              // ABSENCE-bearing pattern (`not X for T`) deployed LIVE:
-              // the timed re-fold — absence deadlines register
-              // event-time timers against the source watermark, so a
-              // "nothing arrived" match emits when the watermark
-              // passes its deadline, not at a next event that may
-              // never come (engine twins: Streaming.cepAbsence /
-              // cepAbsenceTws). Reads the WATERMARKED declared view
-              // (clean under @OnError); flush sentinels drop here,
-              // above the source watermark node, and AppendFlushed makes
-              // the finite-replay harness feed them so the last
-              // deadlines resolve.
-              val evT = envLookup(view, "events").getOrElse(
-                fail("a live absence pattern reads the watermarked " +
-                  "'events' stream"))
-                .filter(col("ts") < Streaming.flushCutoff)
-                .select(col("event_id").as("eventId"),
-                  col("ts_ns").as("tsNs"), col("user_id").as("userId"),
-                  col("event_type").as("eventType"), col("value"),
-                  col("ts"))
-                .as[Streaming.EvT]
-              rateP match {
-                case None => Streamed(b.selectStreamTimed(evT)(proj).toDF(),
-                  LiveMode.AppendFlushed)
-                case Some(r) =>
-                  // absence deadlines resolve off the watermark, so
-                  // the fold needs the flush-sentinel batches
-                  patternRateFold(
-                    b.selectStreamTimed(evT)(proj).toDF(), r,
-                    outSchema.map(_._1), schema, needsFl = true)
-              }
-            } else rateP match {
-              case None =>
-                Streamed(b.selectStream(evDs)(proj).toDF(), LiveMode.Append)
+                sel.map { case (_, _, _, extract) => extract(bnd) } ++
+                  (if (rated) patternEmit(bnd) else Nil))
+            val (matches, mode) =
+              if (b.steps.exists(_.isInstanceOf[Cep.Absent])) {
+                // ABSENCE-bearing pattern (`not X for T`) deployed LIVE:
+                // the timed re-fold — absence deadlines register
+                // event-time timers against the source watermark, so a
+                // "nothing arrived" match emits when the watermark
+                // passes its deadline, not at a next event that may
+                // never come (engine twins: Streaming.cepAbsence /
+                // cepAbsenceTws). Reads the WATERMARKED declared view
+                // (clean under @OnError); flush sentinels drop here,
+                // above the source watermark node, and AppendFlushed
+                // makes the finite-replay harness feed them so the last
+                // deadlines resolve (a rate fold needs them too).
+                val evT = envLookup(view, "events").getOrElse(
+                  fail("a live absence pattern reads the watermarked " +
+                    "'events' stream"))
+                  .filter(col("ts") < Streaming.flushCutoff)
+                  .select(col("event_id").as("eventId"),
+                    col("ts_ns").as("tsNs"), col("user_id").as("userId"),
+                    col("event_type").as("eventType"), col("value"),
+                    col("ts"))
+                  .as[Streaming.EvT]
+                (b.selectStreamTimed(evT)(proj).toDF(), LiveMode.AppendFlushed)
+              } else (b.selectStream(evDs)(proj).toDF(), LiveMode.Append)
+            ast.rate match {
+              case None => Streamed(matches, mode)
               case Some(r) =>
-                patternRateFold(b.selectStream(evDs)(proj).toDF(), r,
-                  outSchema.map(_._1), schema, needsFl = false)
+                val outCols = outSchema.map(_._1)
+                rateLogFold(patternRows(matches, outCols, r), outCols, r,
+                  needsFlush = mode == LiveMode.AppendFlushed)
             }
           case jx: JoinStream
               if dmlInfos.contains(jx.left.table) ||
@@ -1898,108 +1616,10 @@ private[api] trait SiddhiQlLive extends Serializable {
                 }
               val joined = aSide
                 .join(bSide, expr(s"($cond) and ($band)$resid"), jType)
-              if (ast.rate.nonEmpty && !joinAgg) {
-                // output rate limiting OVER the live windowed join: the
-                // rated events are the pair EMISSIONS — emission
-                // instant greatest(l.ts, r.ts), tie-broken by the side
-                // event ids (the batch rateOverJoin's exact order; an
-                // OUTER join's null-padded row emits at its preserved
-                // side's own arrival instant — greatest skips the null
-                // side, ids coalesce to -1, the batch's exact rule).
-                // Time modes fold per-interval extreme picks
-                // (KeyedState on the interval — chunking-invariant: a
-                // row's interval is a function of its own emit ts, so
-                // cross-trigger merges commute NO MATTER WHICH trigger
-                // materializes it — which is what makes outer rows,
-                // materialized only at watermark expiry, safe here);
-                // count modes over an INNER join ride the single
-                // stream's running counter ([[countRateFold]] — pair
-                // emission is trigger-monotone under the in-order
-                // replay). Count modes over an OUTER join
-                // (r12) cannot: a null-pad materializes at watermark
-                // expiry, AFTER later-emission pairs were already
-                // counted. The emission ORDER itself is still total
-                // (emit ts + side ids), so the outer form accumulates
-                // emissions with their order key — sink-like append,
-                // the same state class as the enrichment __out
-                // channel — and applies the every-Nth pick ONCE at
-                // finish over the ordered emissions, the batch
-                // rateOverJoin's exact rank-and-pick
-                // (chunking-invariant by construction).
-                val rJ = ast.rate.get
-                val itemsJ = itemsOf(ast)
-                Seq(la, ra).foreach { al =>
-                  Seq("ts_ns", "event_id").foreach(c =>
-                    if (!joined.columns.contains(s"${al}_$c"))
-                      fail(s"rate over a join needs '$al.$c' to " +
-                        "define pair emission order"))
-                }
-                val emitTs = greatest(col(s"${la}_ts_ns"),
-                  col(s"${ra}_ts_ns"))
-                val ordJ = struct(emitTs.as("t"),
-                  coalesce(col(s"${la}_event_id"), lit(-1L)).as("il"),
-                  coalesce(col(s"${ra}_event_id"), lit(-1L)).as("ir"))
-                val outColsJ = itemsJ.map(_._2)
-                val feedJ = joined.select(itemsJ.map { case (it, a2, _) =>
-                  expr(sqlOfWith(it.e, qual)).as(a2) } :+
-                  emitTs.as("__emit_ts") :+ ordJ.as("__emit_ord"): _*)
-                (rJ.mode, rJ.timeNs, rJ.count) match {
-                  case ("all", _, _) => // emission batching only; an
-                    // outer join still needs the sentinel Append
-                    // channel for its tail null-pads
-                    Streamed(feedJ.drop("__emit_ts", "__emit_ord"),
-                      if (jType == "inner") LiveMode.Append
-                      else LiveMode.AppendFlushed)
-                  case (m @ ("first" | "last"), Some(t), None) =>
-                    val withIv = feedJ.withColumn("__iv",
-                      expr(s"__emit_ts div ${t}L")).drop("__emit_ts")
-                    val schemaR = withIv.schema
-                    def pickRow(df2: DataFrame): DataFrame = {
-                      val rowS = struct(withIv.columns.map(col): _*)
-                      val pick =
-                        if (m == "first") min_by(rowS, col("__emit_ord"))
-                        else max_by(rowS, col("__emit_ord"))
-                      df2.groupBy("__iv").agg(pick.as("__row"))
-                        .select(withIv.columns.map(c =>
-                          col(s"__row.$c").as(c)): _*)
-                    }
-                    Folded(schemaR, () => singleFold(withIv, schemaR,
-                        (_, _, acc, batch) =>
-                          pickRow(acc.unionByName(batch)),
-                        (_, acc) => acc.select(outColsJ.map(col): _*),
-                        KeyedState(Seq("__iv"), (_, _, batch) =>
-                          batch.select(col("__iv"))))
-                        .copy(needsFlush = jType != "inner"))
-                  case (m @ ("first" | "last"), None, Some(nEv))
-                      if jType != "inner" =>
-                    // OUTER count mode: rank-and-pick at finish (see
-                    // the channel comment above)
-                    val schemaC = feedJ.drop("__emit_ts").schema
-                    val protoC = feedJ.drop("__emit_ts", "__emit_ord")
-                    Folded(protoC.schema, () => LiveFold(feedJ,
-                        Seq(("out", schemaC, AppendState)),
-                        (_, _, _, batch) =>
-                          Map("out" -> batch.drop("__emit_ts")),
-                        (_, st) => {
-                          val ranked = globalRank(st("out"),
-                            Seq(col("__emit_ord")), "__rn")
-                          val kept =
-                            if (m == "first")
-                              ranked.filter((col("__rn") - 1) % nEv === 0)
-                            else ranked.filter(col("__rn") % nEv === 0)
-                          kept.orderBy("__rn")
-                            .select(outColsJ.map(col): _*)
-                        }, needsFlush = true))
-                  case (m @ ("first" | "last"), None, Some(nEv)) =>
-                    countRateFold(feedJ.drop("__emit_ts"), m, nEv)
-                  case ("snapshot", _, _) =>
-                    fail("output snapshot over a join (v1): insert the " +
-                      "join into a stream and snapshot that stream — a " +
-                      "snapshot of pair state has no single emission row")
-                  case _ =>
-                    fail("unreachable: rate clause validated at parse")
-                }
-              } else if (joinAgg) {
+              if (ast.rate.nonEmpty && !joinAgg)
+                liveJoinRate(ast, joined, la, ra, sqlOfWith(_, qual),
+                  inner = jType == "inner")
+              else if (joinAgg) {
                 if (ast.rate.nonEmpty)
                   fail("live rate limiting above a join aggregation is " +
                     "not deployed (v1) — rate the join, aggregate in a " +

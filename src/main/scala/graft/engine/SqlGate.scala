@@ -640,7 +640,7 @@ object SqlGate {
         |order by start_id, next_id
         |insert into alerts""".stripMargin),
     // the same app deployed LIVE: matches accumulate in an append-only
-    // fold, finish runs the BATCH selection (rateOverMatches) — live ≡
+    // fold, finish runs the BATCH selection (rateSelect) — live ≡
     // batch by construction
     "sql_app_rate_pattern_live" -> ((s, d) => SiddhiQL.deployApp(s, d,
       """@info(name = 'alerts')

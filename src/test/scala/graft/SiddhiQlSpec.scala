@@ -1099,13 +1099,15 @@ class SiddhiQlSpec extends AnyFunSuite {
 
   test("live rate modes last/all/snapshot equal batch replay " +
        "(VERDICT r7 #3)") {
-    def both(q: String, name: String, ord: String): Unit = {
-      val live = SiddhiQL.deployApp(spark, sf, q, name)
+    def both(q: String, name: String, ord: String, chunks: Int = 4)
+        : Unit = {
+      val live = SiddhiQL.deployApp(spark, sf, q, name, chunks)
         .orderBy(ord).collect().map(_.toSeq)
       val batch = SiddhiQL.compileApp(spark, sf, q)(name)
         .orderBy(ord).collect().map(_.toSeq)
       assert(live.nonEmpty, s"$name returned 0 rows — vacuous")
-      assert(live sameElements batch, s"$name: live != batch replay")
+      assert(live sameElements batch,
+        s"$name: live($chunks) != batch replay")
     }
     // last: Append-mode window max_by, emitted at watermark close
     both("""@info(name = 'l') from events[value > 100.0]
@@ -1117,10 +1119,12 @@ class SiddhiQlSpec extends AnyFunSuite {
       |select event_id, user_id, value
       |output all every 1 min insert into Out""".stripMargin,
       "a", "event_id")
-    // snapshot: keyed per-interval fold + gap fill at finish
-    both("""@info(name = 's') from events select value as v
-      |output snapshot every 10 min insert into Out""".stripMargin,
-      "s", "w_end_ms")
+    // snapshot: keyed per-interval fold + gap fill at finish; an
+    // interval's pick re-merges across triggers, so any chunking
+    for (c <- Seq(4, 2, 7))
+      both("""@info(name = 's') from events select value as v
+        |output snapshot every 10 min insert into Out""".stripMargin,
+        "s", "w_end_ms", c)
   }
 
   /** Per-trigger state scratch dirs under the scratch root — the fold
@@ -1909,7 +1913,7 @@ class SiddhiQlSpec extends AnyFunSuite {
       "replay (incl. absence patterns; r14)") {
     // followed-by pattern, count + time rate modes: the live
     // accumulate-then-rank fold's finish IS the batch selection
-    // (rateOverMatches), so equality pins the fold plumbing
+    // (rateSelect), so equality pins the fold plumbing
     def app(rate: String): String =
       "@info(name='q') from every e1=events[event_type == 'error'] " +
         "-> e2=events[event_type == 'purchase'] within 120 min " +
@@ -2115,6 +2119,12 @@ class SiddhiQlSpec extends AnyFunSuite {
     assert(msg("@info(name='q') from events#window.delay(1 min) " +
       "select event_id, value output first every 1 min insert into O")
       .contains("not above a delay window"))
+    // rate inside a partition block: refused by name, as compileApp
+    // refuses it (it once deployed as one global first-per-minute)
+    assert(msg("partition with (user_id of events) begin " +
+      "@info(name='q') from events[value > 100] select event_id, value " +
+      "output first every 1 min insert into O; end")
+      .contains("rate limiting inside a partition block"))
     // non-time join windows live
     assert(msg("@info(name='q') from events as a#window.length(5) " +
       "join events as b#window.time(1 min) on a.user_id == b.user_id " +
@@ -2718,16 +2728,36 @@ class SiddhiQlSpec extends AnyFunSuite {
          |order by event_id
          |output $mode every 5 events
          |insert into Out""".stripMargin
-    for (m <- Seq("first", "last")) {
-      val batch = SiddhiQL.compileApp(spark, sf, app(m))("q")
+    // the outer-join form (sql_rate_join_outer_count): null-pads
+    // materialize at watermark expiry, after later pairs, so the live
+    // fold accumulates the emissions and selects once at finish —
+    // `last` keeps the partial tail, as the batch max-rank pick does
+    def outer(rate: String) =
+      s"""@info(name = 'q')
+         |from events as a[event_type == 'error']#window.time(10 min)
+         |  left outer join
+         |  events as b[event_type == 'purchase']#window.time(10 min)
+         |  on a.user_id == b.user_id
+         |select a.event_id as err_id,
+         |  coalesce(b.event_id, convert(-1, 'long')) as buy_id,
+         |  a.user_id as user_id
+         |output $rate
+         |order by err_id, buy_id
+         |insert into Out""".stripMargin
+    val pairs = SiddhiQL.compileApp(spark, sf,
+      outer("all every 1 min"))("q").count()
+    assert(pairs % 7 != 0, s"$pairs pairs leave no partial tail of 7")
+    for (q <- Seq(app("first"), app("last"),
+        outer("first every 7 events"), outer("last every 7 events"))) {
+      val batch = SiddhiQL.compileApp(spark, sf, q)("q")
         .collect().map(_.toSeq)
-      val live4 = SiddhiQL.deployApp(spark, sf, app(m), "q")
+      val live4 = SiddhiQL.deployApp(spark, sf, q, "q")
         .collect().map(_.toSeq)
-      val live7 = SiddhiQL.deployApp(spark, sf, app(m), "q", chunks = 7)
+      val live7 = SiddhiQL.deployApp(spark, sf, q, "q", chunks = 7)
         .collect().map(_.toSeq)
       assert(batch.nonEmpty)
-      assert(live4 sameElements batch, s"$m: live(4) != batch")
-      assert(live7 sameElements batch, s"$m: live(7) != batch")
+      assert(live4 sameElements batch, s"$q\nlive(4) != batch")
+      assert(live7 sameElements batch, s"$q\nlive(7) != batch")
     }
   }
 
