@@ -55,10 +55,12 @@ import graft.engine.{Cep, Tables}
   * ([[Patterns.PatternBuilder.selectPlan]]). [[deployApp]] runs the
   * same app text as a LIVE Structured Streaming topology.
   *
-  * Five traits mix in below: [[SiddhiQlFrontend]] (lexer, parser and
+  * Six traits mix in below: [[SiddhiQlFrontend]] (lexer, parser and
   * the front-end both surfaces share), [[SiddhiQlCompiler]] (batch),
-  * [[SiddhiQlLive]] (live stages and the fold runner),
-  * [[SiddhiQlLiveEnrich]] (the live enrichment join) and
+  * [[SiddhiQlLive]] (live deployment and the fold runner),
+  * [[SiddhiQlLiveStages]] (the live statement loop and one lowering
+  * per input shape), [[SiddhiQlLiveEnrich]] (the live enrichment
+  * join) and
   * [[SiddhiQlRate]] (output rate limiting for both surfaces: every
   * rated shape lowers to emission-ordered rows, one selection picks
   * them).
@@ -73,5 +75,5 @@ import graft.engine.{Cep, Tables}
   * anywhere (the r9 guardGlobalWindow fail-fast family is retired).
   */
 object SiddhiQL extends SiddhiQlFrontend with SiddhiQlCompiler
-  with SiddhiQlLive with SiddhiQlLiveEnrich with SiddhiQlRate
-  with Serializable
+  with SiddhiQlLive with SiddhiQlLiveStages with SiddhiQlLiveEnrich
+  with SiddhiQlRate with Serializable

@@ -1,6 +1,7 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
@@ -57,8 +58,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
     var results = Map.empty[String, DataFrame]
     // DML writers per table, for the per-event enrichment-join route —
     // the batch twin of the live fold's dmlInfos
-    var dmlWriters = Map.empty[String, List[(Ast, Action, StructType,
-      String)]]
+    var dmlWriters = Map.empty[String, List[DmlWriter]]
     // tables mutated by an ON-DEMAND DML statement (r16): the
     // mutation is point-in-time, so it composes with STORE reads
     // (which see env's post-mutation state) but not with constructs
@@ -186,11 +186,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
         }
       } else if (head.equalsIgnoreCase("from")) {
         val ast = new P(lex(body)).query()
-        val dml = ast.action.filter {
-          case InsertInto(t) => tableDefs.contains(t)
-          case _             => true
-        }
-        dml match {
+        ast.dml(tableDefs.contains) match {
           case Some(act) => runDmlStage(name, ast, act)
           case None =>
             val ast1 = readNamedWindows(ast, windowDefs, env.contains)
@@ -559,6 +555,9 @@ private[api] trait SiddhiQlCompiler extends Serializable {
             case ss: SingleStream if ss.table.equalsIgnoreCase(src) => ss
             case _: SingleStream => fail("partitioned queries read the " +
               s"partitioned stream '$src' (v1)")
+            case j: JoinStream => fail("partition blocks hold " +
+              "single-stream queries (v1; joins/patterns stay outside): " +
+              s"'${j.left.table}' joins '${j.right.table}'")
             case _ => fail("partition blocks hold single-stream queries " +
               "(v1; joins/patterns stay outside)")
           }
@@ -567,10 +566,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
             if (need && !ast0.groupBy.contains(key))
               ast0.copy(groupBy = key :: ast0.groupBy)
             else ast0
-          val dml = ast0.action.filter {
-            case InsertInto(t) => isTable(t)
-            case _             => true
-          }
+          val dml = ast0.dml(isTable)
           if (dml.isEmpty)
             List(PartQuery(qName, keyed(ss0.window.nonEmpty || hasAgg), None))
           else {
@@ -787,7 +783,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
   }
 
   private[api] def enrichCompile(sp: SparkSession, dir: String, ast: Ast,
-      j: JoinStream, winfos: List[(Ast, Action, StructType, String)],
+      j: JoinStream, winfos: List[DmlWriter],
       accTable: DataFrame, env: Map[String, DataFrame],
       winFlush: Map[Int, DataFrame] = Map.empty,
       // per-writer PRE-BUILT update relation (select outputs +
@@ -1304,7 +1300,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
     * to maintain the log itself, which is why the batch replay is
     * the live gate's truth. */
   private def enrichLogCompile(sp: SparkSession, dir: String, ast: Ast,
-      j: JoinStream, winfos: List[(Ast, Action, StructType, String)],
+      j: JoinStream, winfos: List[DmlWriter],
       accTable: DataFrame, env: Map[String, DataFrame],
       emisOverride: Map[Int, DataFrame] = Map.empty): DataFrame = {
     val dSchema = winfos.head._3
@@ -1826,8 +1822,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
   /** Shape classification of one table's writer group: "insert" /
     * "upsert" (implicit set) / "fold" (all-accumulator set) /
     * "upsert-expr" / "update" / "delete", distinct. */
-  private[api] def dmlKinds(
-      writers: List[(Ast, Action, StructType, String)]): List[String] = {
+  private[api] def dmlKinds(writers: List[DmlWriter]): List[String] = {
     val t = writers.head._2.target
     writers.map(_._2).map {
       case _: InsertInto => "insert"
@@ -1874,8 +1869,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
     *     each row's column values AT the other writer's emission
     *     time, a row-level temporal replay) — those keep the batch
     *     statement-sequential replay and refuse live. */
-  private[api] def dmlComposable(
-      writers: List[(Ast, Action, StructType, String)]): Boolean = {
+  private[api] def dmlComposable(writers: List[DmlWriter]): Boolean = {
     val t = writers.head._2.target
     val (delW, updW) =
       writers.partition(_._2.isInstanceOf[DeleteTable])
@@ -1904,8 +1898,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
   }
 
   private[api] def applyDmlMulti(spark: SparkSession, dir: String,
-      writers: List[(Ast, Action, StructType, String)],
-      schema: StructType, table: DataFrame,
+      writers: List[DmlWriter], schema: StructType, table: DataFrame,
       env: Map[String, DataFrame]): DataFrame = {
     if (writers.length == 1) {
       val (ast, act, _, _) = writers.head
@@ -1941,8 +1934,7 @@ private[api] trait SiddhiQlCompiler extends Serializable {
     * attributes + a 3-field `__g_ord` (ts_ns, event_id, statement
     * index w), output column names, the writer's action); `writers`
     * supplies the actions/keys in statement order. */
-  private[api] def mergeEmissions(
-      writers: List[(Ast, Action, StructType, String)],
+  private[api] def mergeEmissions(writers: List[DmlWriter],
       schema: StructType, table: DataFrame,
       emissions: List[(DataFrame, Seq[String], Action)]): DataFrame = {
     val t = writers.head._2.target
@@ -2595,6 +2587,13 @@ private[api] trait SiddhiQlCompiler extends Serializable {
     ast.limit.fold(off)(n => off.limit(n.toInt))
   }
 
+  /** `df`'s event columns as [[Cep.Ev]] rows, the per-key buffered
+    * folds' and the pattern NFA's input. */
+  private[api] def evsOf(df: DataFrame): Dataset[Cep.Ev] =
+    df.select(col("event_id").as("eventId"), col("ts_ns").as("tsNs"),
+      col("user_id").as("userId"), col("event_type").as("eventType"),
+      col("value")).as[Cep.Ev](Encoders.product[Cep.Ev])
+
   /** Evaluate a select/retention expression over a buffered window of
     * events: aggregates fold over `buf`, plain refs read the CURRENT
     * event. Shared by the batch expression window and the live length
@@ -2640,11 +2639,11 @@ private[api] trait SiddhiQlCompiler extends Serializable {
       other2.getClass.getSimpleName)
   }
 
-  /** Output schema of a buffered-fold select list (what [[bufEval]]
+  /** Row encoder of a buffered-fold select list (the types [[bufEval]]
     * actually returns per item). */
-  private[api] def evOutTypes(items: Seq[(SelItem, String, Boolean)])
-      : Seq[(String, DataType)] = items.map { case (it, a, isAgg) =>
-    val t: DataType = it.e match {
+  private[api] def evRows(items: Seq[(SelItem, String, Boolean)])
+      : Encoder[Row] = Encoders.row(StructType(items.map {
+    case (it, a, isAgg) => StructField(a, it.e match {
       case Call(None, "count", Nil) => LongType
       case _ if isAgg => DoubleType
       case Ref(f :: Nil) => f match {
@@ -2653,9 +2652,8 @@ private[api] trait SiddhiQlCompiler extends Serializable {
         case _ => LongType
       }
       case _ => DoubleType
-    }
-    (a, t)
-  }
+    })
+  }))
 
   /** An AND-chain contains at least one equality — the key a windowed
     * band join shards on (a pure time-band join would be a nested loop
@@ -3617,19 +3615,10 @@ private[api] trait SiddhiQlCompiler extends Serializable {
           need.foreach(c => if (!base.columns.contains(c))
             fail(s"expression window reads event streams; '${s.table}' " +
               s"lacks '$c'"))
-          val outTypes: Seq[(String, DataType)] = evOutTypes(items)
           if (ast.having.nonEmpty) fail("having needs a tumbling window")
-          val schema2 = StructType(outTypes.map { case (n2, t) =>
-            StructField(n2, t) })
-          implicit val enc: org.apache.spark.sql.Encoder[
-            org.apache.spark.sql.Row] =
-            org.apache.spark.sql.Encoders.row(schema2)
-          import org.apache.spark.sql.Encoders
+          implicit val enc: Encoder[Row] = evRows(items)
           val selItems2 = items
-          base.select(col("event_id").as("eventId"),
-              col("ts_ns").as("tsNs"), col("user_id").as("userId"),
-              col("event_type").as("eventType"), col("value"))
-            .as[Cep.Ev](org.apache.spark.sql.Encoders.product[Cep.Ev])
+          evsOf(base)
             .groupByKey(e => String.valueOf(field(e, key)))(Encoders.STRING)
             .flatMapGroups { (_, it2) =>
               val buf = scala.collection.mutable.Queue.empty[Cep.Ev]

@@ -75,6 +75,8 @@ private[api] trait SiddhiQlFrontend extends Serializable {
       set: List[(String, Expr)], on: Expr) extends Action
   private[api] final case class DeleteTable(target: String, on: Expr)
       extends Action
+  /** A table's DML writer: (ast, action, table schema, feeding stream). */
+  private[api] type DmlWriter = (Ast, Action, StructType, String)
 
   /** `output first|last|all every <T>` / `every <N> events` /
     * `output snapshot every <T>` — exactly one of timeNs/count is set
@@ -85,7 +87,14 @@ private[api] trait SiddhiQlFrontend extends Serializable {
   private[api] final case class Ast(stream: StreamClause, select: List[SelItem],
       groupBy: List[String], having: Option[Expr],
       orderBy: List[(String, Boolean)], limit: Option[Long],
-      offset: Option[Long], rate: Option[Rate], action: Option[Action])
+      offset: Option[Long], rate: Option[Rate], action: Option[Action]) {
+    /** The table-DML action: any action but an `insert into` a stream
+      * (`isTable` names the defined tables). */
+    def dml(isTable: String => Boolean): Option[Action] = action.filter {
+      case InsertInto(t) => isTable(t)
+      case _             => true
+    }
+  }
 
   private[api] def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"SiddhiQL: $msg")

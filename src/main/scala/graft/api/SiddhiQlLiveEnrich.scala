@@ -12,7 +12,8 @@ import org.apache.spark.sql.types._
   * [[EnrichJoin]] and ends in one [[EnrichTail]] (projection or
   * aggregation). Mixed into `object SiddhiQL`. */
 private[api] trait SiddhiQlLiveEnrich extends Serializable {
-  self: SiddhiQlFrontend with SiddhiQlCompiler with SiddhiQlLive =>
+  self: SiddhiQlFrontend with SiddhiQlCompiler with SiddhiQlLive
+    with SiddhiQlLiveStages =>
 
   /** ENRICHMENT JOIN deployed LIVE: a query joins the table a sibling
     * DML stage maintains — the reference's canonical enrichment loop
@@ -30,19 +31,12 @@ private[api] trait SiddhiQlLiveEnrich extends Serializable {
     * (state and events co-partition; no per-event lookups, no
     * broadcast of unbounded state).
     *
-    * `dmlInfos` holds each table's DML writers so far, `statelessAsts`
-    * the stateless stages every feed re-derives through per batch,
-    * `statefulStreams` the stages that cannot feed a join; `srcTs` is
-    * the source with its event-time column and `wmNs` the deployment's
+    * `ctx` holds each table's DML writers so far, the stateless stages
+    * every feed re-derives through per batch, the source and the
     * watermark bound. */
-  private[api] def enrichStage(ast: Ast, jx: JoinStream,
-      dmlInfos: Map[String, List[(Ast, Action, StructType, String)]],
-      statelessAsts: List[(String, Ast)], statefulStreams: Set[String],
-      partKey: Option[String], srcTs: DataFrame, wmNs: Long): LiveStage = {
-    if (partKey.nonEmpty)
-      fail("enrichment joins inside a partition block are not " +
-        "deployed (v1)")
-    val j = enrichmentSides(jx, dmlInfos.contains)
+  private[api] def enrichStage(ctx: LiveCtx, ast: Ast, jx: JoinStream)
+      : LiveStage = {
+    val j = enrichmentSides(jx, ctx.dmlInfos.contains)
     if (j.unidirectional)
       fail("live enrichment joins are already one-directional " +
         "(events trigger, the table holds state) — drop " +
@@ -54,20 +48,18 @@ private[api] trait SiddhiQlLiveEnrich extends Serializable {
     if (j.left.window.nonEmpty)
       fail("live enrichment joins are per-event lookups (v1) — " +
         "no window on the stream side")
-    val writers = dmlInfos(tName)
+    val writers = ctx.dmlInfos(tName)
     val sName = j.left.table
-    if (statefulStreams.contains(sName))
-      fail(s"live deployment (v1): '$sName' is an aggregation " +
-        "output — it cannot feed an enrichment join")
-    val derivable = Set("events") ++ statelessAsts.map(_._1)
+    ctx.feed(sName, "an enrichment join")
     (sName +: writers.map(_._4)).foreach { n2 =>
-      if (!derivable.contains(n2))
+      if (!ctx.derivable.contains(n2))
         fail(s"live enrichment joins derive their feeds from " +
           s"the source through stateless stages; '$n2' is not " +
           "(windowed/rate-limited/joined stages cannot be " +
           "re-derived per batch)")
     }
-    val e = new EnrichJoin(ast, j, writers, statelessAsts, srcTs, wmNs)
+    val e = new EnrichJoin(ast, j, writers, ctx.statelessAsts, ctx.srcTs,
+      ctx.wmNs)
     val winWriterTNs: Option[Long] = e.dAst.stream match {
       case ss2: SingleStream =>
         if (ss2.window.nonEmpty && ss2.window.get.args.isEmpty)
@@ -139,7 +131,7 @@ private[api] trait SiddhiQlLiveEnrich extends Serializable {
     * stores hash on, the flush-partial reads and compaction split, and
     * the output tail. */
   private[api] final class EnrichJoin(val ast: Ast, val j: JoinStream,
-      val writers: List[(Ast, Action, StructType, String)],
+      val writers: List[DmlWriter],
       statelessSnap: List[(String, Ast)], val srcTs: DataFrame,
       wmNs: Long) {
     val sSide: SingleStream = j.left

@@ -27,7 +27,8 @@ import graft.engine.{Cep, Streaming}
   * folded rows), [[rateLogFold]] (accumulate, then [[rateSelect]]) and
   * [[countRateFold]]. Mixed into `object SiddhiQL`. */
 private[api] trait SiddhiQlRate extends Serializable {
-  self: SiddhiQlFrontend with SiddhiQlCompiler with SiddhiQlLive =>
+  self: SiddhiQlFrontend with SiddhiQlCompiler with SiddhiQlLive
+    with SiddhiQlLiveStages =>
 
   // ---------- the selection ----------
 
@@ -155,8 +156,7 @@ private[api] trait SiddhiQlRate extends Serializable {
     requireEpochTb(w, "output rate limiting over a window")
     if (ast.groupBy.nonEmpty)
       fail("output rate limiting over a windowed aggregation (v1) is " +
-        "ungrouped — one flush row per window (shard per-key streams " +
-        "with `partition with`)")
+        "ungrouped — one flush row per window; drop the group by")
     val items = itemsOf(ast)
     items.foreach { case (it, a, isAgg) =>
       if (!isAgg && refsAttr(it.e))

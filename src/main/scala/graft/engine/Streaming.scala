@@ -198,11 +198,15 @@ object Streaming {
   /** Start a streaming query with [[FsCheckpoints]] and `conf` set on
     * `spark` around `start` only. A query clones its session when it is
     * constructed, inside `start()`; its shuffle width, no-data batch
-    * flag, checkpoint manager (via the clone's Hadoop conf, executors
-    * included) and `foreachBatch` batch session all read that clone, so
-    * the scoped values need not outlive the start. Each key then gets
-    * its old value back, or is unset if it had none. Replays start on
-    * the caller's own session, not a new one: only its
+    * flag, the checkpoint managers built from the clone's Hadoop conf
+    * (executors included) and its `foreachBatch` batch session all read
+    * that clone. Not every read does: on the stream thread, after
+    * `start()` returns, `MicroBatchExecution.verifyNewCheckpointDirectory`
+    * builds one more checkpoint manager from `spark`'s OWN setting, so a
+    * scoped value that a stream-thread read of `spark` depends on is not
+    * seen there (today that manager only lists the directory). Each key
+    * then gets its old value back, or is unset if it had none. Replays
+    * start on the caller's own session, not a new one: only its
     * `StreamingQueryListener`s see the queries it starts, and
     * memory-sink views must land where the caller reads them. */
   def startScoped(spark: SparkSession, conf: (String, String)*)

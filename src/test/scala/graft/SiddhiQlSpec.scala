@@ -2810,7 +2810,9 @@ class SiddhiQlSpec extends AnyFunSuite {
         |select user_id, sum(value) as s
         |group by user_id
         |output last every 10 min""".stripMargin)).getMessage
-    assert(m2.contains("ungrouped"))
+    // names only the ungrouped bound: a rated query inside a partition
+    // block is refused too, so `partition with` is no way out
+    assert(m2.contains("ungrouped") && !m2.contains("partition with"))
     val m3 = intercept[IllegalArgumentException](compile(
       """from events as a#window.time(10 min)
         |  join events as b#window.time(10 min)
@@ -3301,5 +3303,74 @@ class SiddhiQlSpec extends AnyFunSuite {
     assert(tail.count() > 0 && tail.filter(col("v").isNull).count()
         == tail.count(),
       "delete must keep exactly the NULL-condition rows")
+  }
+
+  test("live deployment refuses each unreadable feed at deploy time, " +
+       "naming the stream and its use") {
+    val agg = "@info(name='a') from events#window.timeBatch(1 min) " +
+      "select user_id, count() as n group by user_id insert into A;\n"
+    val table = "define table U (user_id long, v double);\n" +
+      "@info(name='t') from events select user_id, value as v " +
+      "update or insert into U on U.user_id == user_id;\n"
+    def part(src: String, q: String): String =
+      s"partition with (user_id of $src) begin @info(name='q') $q end"
+    // (app, fragments the refusal must name)
+    val cases = Seq(
+      "@info(name='q') from Nope select event_id insert into O" ->
+        Seq("'Nope'", "a further stage", "neither the source"),
+      agg + "@info(name='q') from A select user_id insert into O" ->
+        Seq("'A'", "aggregation output", "a further stage"),
+      table + agg + "@info(name='q') from A select user_id, " +
+        "convert(n, 'double') as v insert into U" ->
+        Seq("'A'", "aggregation output", "table DML"),
+      agg + "@info(name='q') from events as e#window.time(1 min) " +
+        "join A as x#window.time(1 min) on e.user_id == x.user_id " +
+        "select e.event_id as id insert into O" ->
+        Seq("'A'", "aggregation output", "a join"),
+      agg + part("A", "from A select user_id insert into O") ->
+        Seq("'A'", "aggregation output", "a partition block"),
+      table + agg + "@info(name='q') from A as s join U " +
+        "on U.user_id == s.user_id select s.user_id as u, U.v as v " +
+        "insert into O" ->
+        Seq("'A'", "aggregation output", "an enrichment join"),
+      // stored reads inside a partition block: a trigger or an
+      // aggregation is no declared stream, a table is no stream at
+      // all, and a block holds no join
+      "define trigger T at every 10 min;\n" +
+        part("T", "from T select tick_ms insert into O") ->
+        Seq("'T'", "a partition block", "neither the source"),
+      "define aggregation G from events select sum(value) as total " +
+        "group by user_id aggregate by ts_ns every sec ... min;\n" +
+        part("G", "from G within 0, 4102444800000 per 'min' select " +
+          "user_id, total insert into O") ->
+        Seq("'G'", "a partition block", "neither the source"),
+      table + part("U", "from U select user_id, v insert into O") ->
+        Seq("'U'", "a partition block"),
+      table + part("events", "from events as e join U on U.user_id " +
+        "== e.user_id select e.user_id as u, U.v as v insert into O") ->
+        Seq("'events' joins 'U'", "partition blocks hold single-stream"),
+      // the one partition check: a trigger that shares a stream's name
+      "define trigger S at every 10 min;\n@info(name='s') from events " +
+        "select event_id, ts_ns, user_id, event_type, value " +
+        "insert into S;\n" + part("S", "from S select user_id " +
+          "insert into O") ->
+        Seq("a trigger read of 'S' inside a partition block is not " +
+          "deployed"))
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.streaming
+        .StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try cases.foreach { case (app, frags) =>
+      val m = intercept[IllegalArgumentException](
+        SiddhiQL.deployApp(spark, sf, app, "q")).getMessage
+      frags.foreach(f => assert(m.contains(f), s"'$f' not in: $m"))
+    } finally spark.streams.removeListener(listener)
+    assert(started.get == 0, "a refused app started a streaming query")
   }
 }
