@@ -42,8 +42,47 @@ private[api] trait SiddhiQlFrontend extends Serializable {
   private[api] final case class InTable(e: Expr, table: String) extends Expr
 
   private[api] final case class SelItem(e: Expr, alias: Option[String])
-  private[api] final case class WindowSpec(name: String, args: List[Long],
-      sargs: List[String] = Nil)
+  /** A parsed `#window.<name>(args)`. [[P.windowNameArgs]] builds one
+    * case per window kind and runs every argument check there (counts
+    * and durations are positive), so each consumer matches on the type;
+    * `name` is the window's written name, kept for messages. */
+  private[api] sealed trait WindowSpec { def name: String }
+  /** `timeBatch(t[, s])`: `off` is the start-time alignment s (r17)
+    * normalized into [0, t); 0 is epoch-aligned. */
+  private[api] final case class TimeBatch(t: Long, off: Long)(
+      val name: String) extends WindowSpec
+  private[api] final case class LengthBatch(n: Long)(val name: String)
+      extends WindowSpec
+  private[api] final case class Time(t: Long)(val name: String)
+      extends WindowSpec
+  private[api] final case class Length(n: Long)(val name: String)
+      extends WindowSpec
+  private[api] final case class ExternalTime(attr: String, t: Long)(
+      val name: String) extends WindowSpec
+  private[api] final case class ExternalTimeBatch(attr: String, t: Long)(
+      val name: String) extends WindowSpec
+  private[api] final case class Session(gap: Long)(val name: String)
+      extends WindowSpec
+  private[api] final case class TimeLength(t: Long, n: Long)(
+      val name: String) extends WindowSpec
+  /** `sort(n, a[, 'asc'|'desc'], …)`: each attribute with its
+    * direction (ascending unless 'desc'). */
+  private[api] final case class Sort(n: Long, attrs: List[(String, Boolean)])(
+      val name: String) extends WindowSpec
+  /** `unique:<kind>(keys…)`, kind first, last or ever. */
+  private[api] final case class Unique(kind: String, keys: List[String])(
+      val name: String) extends WindowSpec
+  private[api] final case class Frequent(n: Long, attr: String)(
+      val name: String) extends WindowSpec
+  private[api] final case class Delay(t: Long)(val name: String)
+      extends WindowSpec
+  /** `cron('spec')`: `iv` is the spec's fixed tick interval
+    * ([[cronIntervalNs]]). */
+  private[api] final case class Cron(spec: String, iv: Long)(
+      val name: String) extends WindowSpec
+  /** `expression('predicate')`: the parsed retain-while predicate. */
+  private[api] final case class Expression(ret: Expr)(val name: String)
+      extends WindowSpec
   private[api] sealed trait StreamClause
   private[api] final case class SingleStream(table: String, filter: Option[Expr],
       window: Option[WindowSpec], aggWithin: Option[(Expr, Expr)] = None,
@@ -101,26 +140,52 @@ private[api] trait SiddhiQlFrontend extends Serializable {
 
   /** `timeBatch(T, s)` start-time alignment (r17, VERDICT r16 #2):
     * the optional second duration shifts bucket boundaries to
-    * epoch + k·T + s (normalized into [0, T)). Supported where the
-    * bucket arithmetic threads the offset — the plain windowed
-    * aggregation compile, batch AND live (Spark's
-    * `window(col, dur, dur, startTime)` takes it natively). Every
-    * OTHER timeBatch consumer (DML writer windows, join sides,
-    * rate-over-window, enrichment flush recomputes) guards with
-    * [[requireEpochTb]], so an aligned window can never be silently
-    * mis-bucketed — the r16 breadth-audit failure class. */
-  private[api] def tbOffNs(w: WindowSpec): Long =
-    if (!w.name.equalsIgnoreCase("timebatch") || w.args.length < 2) 0L
-    else {
-      val t = w.args.head
-      ((w.args(1) % t) + t) % t
-    }
-  private[api] def requireEpochTb(w: WindowSpec, where: String): Unit =
-    if (tbOffNs(w) != 0L)
+    * epoch + k·T + s ([[TimeBatch.off]]). Supported where the bucket
+    * arithmetic threads the offset — the plain windowed aggregation
+    * compile, batch AND live (Spark's `window(col, dur, dur,
+    * startTime)` takes it natively). Every OTHER timeBatch consumer
+    * (DML writer windows, join sides, rate-over-window, enrichment
+    * flush recomputes) guards with this check, so an aligned window
+    * can never be silently mis-bucketed — the r16 breadth-audit
+    * failure class. */
+  private[api] def requireEpochTb(w: TimeBatch, where: String): Unit =
+    if (w.off != 0L)
       fail("start-time aligned timeBatch (v1) is supported on the " +
         s"plain windowed aggregation (batch + live); $where takes " +
         "epoch-aligned timeBatch(T) — pre-shift ts_ns in an upstream " +
         "stage to emulate alignment there")
+
+  /** Quartz cron → a fixed tick interval, for the forms whose marks ARE
+    * epoch-aligned fixed intervals: `0 0/M * * * ?` with M dividing 60
+    * (Quartz resets the 0/M sequence each hour, so M ∤ 60 would drift
+    * from epoch alignment), `0 0 0/H * * ?` with H dividing 24, and
+    * `0 0 * * * ?` (hourly). Sparse calendar fields (day-of-week, month
+    * lists) have no fixed-interval batch-replay equivalent — fail fast. */
+  private[api] def cronIntervalNs(spec: String): Long = {
+    val f = spec.trim.split("\\s+")
+    def every(field: String): Option[Long] =
+      if (field.startsWith("0/") || field.startsWith("*/"))
+        Some(field.drop(2).toLong) else None
+    val ns: Option[Long] =
+      if (f.length == 6 && f(0) == "0" && f(3) == "*" && f(4) == "*")
+        every(f(1)) match {
+          case Some(m) if f(2) == "*" && m > 0 && 60 % m == 0 =>
+            Some(m * 60L * 1000000000L)
+          case None if f(1) == "0" =>
+            every(f(2)) match {
+              case Some(h) if h > 0 && 24 % h == 0 =>
+                Some(h * 3600L * 1000000000L)
+              case None if f(2) == "*" => Some(3600L * 1000000000L)
+              case _ => None
+            }
+          case _ => None
+        }
+      else None
+    ns.getOrElse(fail(s"unsupported cron expression '$spec' — supported" +
+      " forms: '0 0/M * * * ?' (M | 60), '0 0 0/H * * ?' (H | 24), " +
+      "'0 0 * * * ?' (hourly); sparse calendar schedules have no " +
+      "fixed-interval batch-replay equivalent"))
+  }
 
   /** Distributed running total of `value` in GLOBAL `sortCols` order —
     * the scale-safe form of `sum(value) over (order by … rows
@@ -356,7 +421,9 @@ private[api] trait SiddhiQlFrontend extends Serializable {
     }
 
     /** `<name>(args)` with optional `ns:name` — shared by `#window.`
-      * clauses and `define window` declarations. */
+      * clauses and `define window` declarations. Builds the typed
+      * [[WindowSpec]] and runs every argument check, so a window fails
+      * here, by name, on both surfaces. */
     def windowNameArgs(): WindowSpec = {
       val name0 = ident()
       val name = // namespaced windows: unique:first, unique:last
@@ -377,39 +444,87 @@ private[api] trait SiddhiQlFrontend extends Serializable {
         while (trySym(",")) arg()
         eatSym(")")
       }
-      val spec = WindowSpec(name, args.result(), sargs.result())
+      val (nums, strs) = (args.result(), sargs.result())
       // arg-count guards (r16 breadth audit): these windows' compile
       // paths consume exactly the supported arguments, so an EXTRA
       // reference argument (timeBatch's start-time alignment,
       // externalTimeBatch's start/timeout) would otherwise be IGNORED
       // silently — and a silently mis-aligned bucket is the worst
       // failure class. Fail fast, naming the unsupported extra.
-      val (nNum, nStr) = (spec.args.length, spec.sargs.length)
-      name.toLowerCase match {
+      def counts = s"got ${nums.length} numeric + ${strs.length} named"
+      def exactlyOne(): Unit =
+        if (nums.length != 1 || strs.nonEmpty)
+          fail(s"#window.$name takes exactly one argument (v1) — " +
+            "start-time alignment / eviction extras are not " +
+            s"supported; $counts")
+      // a zero count or duration keeps nothing (or divides by zero)
+      def num(i: Int, what: String): Long = nums.lift(i) match {
+        case Some(v) if v > 0 => v
+        case Some(v) => fail(s"#window.$name needs a positive $what; got $v")
+        case None => fail(s"$name needs a $what argument")
+      }
+      def str(what: String): String =
+        strs.headOption.getOrElse(fail(s"$name needs $what argument"))
+      val lower = name.toLowerCase
+      lower match {
         case "timebatch" =>
           // (r17) timeBatch accepts the optional start-time second
           // duration; compile paths that cannot thread the offset
           // fail by name via requireEpochTb
-          if (nNum < 1 || nNum > 2 || nStr != 0)
+          if (nums.isEmpty || nums.length > 2 || strs.nonEmpty)
             fail(s"#window.$name takes (period[, start-time offset]); " +
-              s"got $nNum numeric + $nStr named")
-        case "time" | "length" | "lengthbatch" | "delay" =>
-          if (nNum != 1 || nStr != 0)
-            fail(s"#window.$name takes exactly one argument (v1) — " +
-              "start-time alignment / eviction extras are not " +
-              s"supported; got $nNum numeric + $nStr named")
+              counts)
+          val t = num(0, "period")
+          TimeBatch(t, nums.lift(1).fold(0L)(s => ((s % t) + t) % t))(name)
+        case "lengthbatch" => exactlyOne(); LengthBatch(num(0, "count"))(name)
+        case "time" => exactlyOne(); Time(num(0, "duration"))(name)
+        case "length" => exactlyOne(); Length(num(0, "count"))(name)
+        case "delay" => exactlyOne(); Delay(num(0, "duration"))(name)
         case "timelength" =>
-          if (nNum != 2 || nStr != 0)
-            fail(s"#window.$name takes exactly (duration, count); " +
-              s"got $nNum numeric + $nStr named")
+          if (nums.length != 2 || strs.nonEmpty)
+            fail(s"#window.$name takes exactly (duration, count); $counts")
+          TimeLength(num(0, "duration"), num(1, "count"))(name)
+        case "externaltime" => ExternalTime(
+          str("a timestamp attribute"), num(0, "duration"))(name)
         case "externaltimebatch" =>
-          if (nNum != 1 || nStr != 1)
+          if (nums.length != 1 || strs.length != 1)
             fail(s"#window.$name takes exactly (tsAttr, duration) " +
               "(v1) — start-time / timeout extras are not " +
-              s"supported; got $nNum numeric + $nStr named")
-        case _ => ()
+              s"supported; $counts")
+          ExternalTimeBatch(strs.head, num(0, "duration"))(name)
+        case "session" => Session(num(0, "gap"))(name)
+        case "sort" =>
+          // sort(N, attr[, 'asc'|'desc'] ...): a direction binds to
+          // the attribute before it (r17: every attribute counts)
+          val n = num(0, "count")
+          def isDir(s2: String) =
+            s2.equalsIgnoreCase("asc") || s2.equalsIgnoreCase("desc")
+          def attrs(rest: List[String]): List[(String, Boolean)] =
+            rest match {
+              case Nil => Nil
+              case d :: _ if isDir(d) =>
+                fail(s"sort: direction '$d' must follow an attribute")
+              case a :: d :: more if isDir(d) =>
+                (a, d.equalsIgnoreCase("asc")) :: attrs(more)
+              case a :: more => (a, true) :: attrs(more)
+            }
+          str("an attribute")
+          Sort(n, attrs(strs))(name)
+        case "unique:first" | "unique:last" | "unique:ever" =>
+          str("an attribute")
+          Unique(lower.stripPrefix("unique:"), strs)(name)
+        case "frequent" =>
+          Frequent(num(0, "count"), str("an attribute"))(name)
+        case "cron" =>
+          val spec = str("a quoted Quartz expression")
+          Cron(spec, cronIntervalNs(spec))(name)
+        case "expression" => Expression(new P(lex(str(
+          "a quoted retention expression"))).expr())(name)
+        case other => fail(s"unsupported window '$other' (supported: " +
+          "timeBatch, lengthBatch, session, length, time, externalTime, " +
+          "externalTimeBatch, sort, unique:first, unique:last, " +
+          "unique:ever, frequent, delay, cron, timeLength, expression)")
       }
-      spec
     }
 
     def streamClause(): StreamClause = {

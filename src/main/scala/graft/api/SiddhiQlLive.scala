@@ -576,8 +576,7 @@ private[api] trait SiddhiQlLive extends Serializable {
       writers.map { case (wAst, act2, _, wSrc) =>
         val ss = wAst.stream.asInstanceOf[SingleStream]
         ss.window match {
-          case Some(wtb @ WindowSpec(n, tn :: _, _))
-              if n.equalsIgnoreCase("timebatch") =>
+          case Some(wtb @ TimeBatch(tn, _)) =>
             requireEpochTb(wtb, "live multi-writer windowed DML")
             Left(flushPiecesOf(loadTable(sp0, "", wSrc, protoEnv),
               ss.filter, wAst.groupBy, itemsOf(wAst), tn))

@@ -60,21 +60,10 @@ private[api] trait SiddhiQlLiveEnrich extends Serializable {
     }
     val e = new EnrichJoin(ast, j, writers, ctx.statelessAsts, ctx.srcTs,
       ctx.wmNs)
-    val winWriterTNs: Option[Long] = e.dAst.stream match {
-      case ss2: SingleStream =>
-        if (ss2.window.nonEmpty && ss2.window.get.args.isEmpty)
-          fail(s"windowed DML writer on '$tName' has a " +
-            "window with no duration")
-        ss2.window.foreach(
-          requireEpochTb(_, "enrichment-read writer windows"))
-        ss2.window.map(_.args.head)
-      case _ => None
-    }
     val winTNsPer: List[Option[Long]] = writers.map {
       case (wAst2, _, _, _) => wAst2.stream match {
         case ss2: SingleStream => ss2.window match {
-          case Some(w2 @ WindowSpec(n2, t2 :: _, _))
-              if n2.equalsIgnoreCase("timebatch") =>
+          case Some(w2 @ TimeBatch(t2, _)) =>
             requireEpochTb(w2, "enrichment-read writer windows")
             Some(t2)
           case Some(w2) => fail("windowed-writer enrichment " +
@@ -91,7 +80,8 @@ private[api] trait SiddhiQlLiveEnrich extends Serializable {
       eventLogChannel(e, winTNsPer)
     else if (writers.length > 1 && winTNsPer.exists(_.nonEmpty))
       mixedChannel(e, winTNsPer)
-    else winWriterTNs.fold(plainChannel(e))(windowedChannel(e, _))
+    // the first writer's window (e's dAst) picks the single-writer channel
+    else winTNsPer.head.fold(plainChannel(e))(windowedChannel(e, _))
   }
 
   /** Picked join-key items: (table key column, writer alias, expr). */

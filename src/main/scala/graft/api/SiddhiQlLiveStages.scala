@@ -394,8 +394,7 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
       val (wAst, wAct, _, wSrc) = allWriters.head
       val feed = ctx.feed(wSrc, "table DML")
       wAst.stream match {
-        case SingleStream(_, _, Some(wtb @ WindowSpec(_, tNs :: _, _)),
-            _, _) =>
+        case SingleStream(_, _, Some(wtb @ TimeBatch(tNs, _)), _, _) =>
           // windowed-aggregate DML (the Siddhi store pattern) LIVE: a
           // per-batch applyDml would double-apply a window bucket that
           // spans two triggers, so the fold keeps per-(bucket ∪ group
@@ -580,57 +579,45 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
   }
 
   /** The single-stream window dispatch over `base`, the filtered feed
-    * of stream `table`. */
+    * of stream `table`: one lowering per deployable window type —
+    * timeBatch, cron and session as Append-mode windowed aggregations,
+    * unique:first as a streaming dedup, delay as a stateless shift,
+    * expression, timeLength and length as per-key [[bufferFold]]s,
+    * unique:last/ever, sort and frequent as folds. `time`,
+    * `lengthBatch`, `externalTime` and `externalTimeBatch` are refused
+    * by name. */
   private[api] def windowStage(ctx: LiveCtx, ast: Ast, table: String,
       base: DataFrame, w: WindowSpec): LiveStage = {
-    val WindowSpec(n2, args2, sargs2) = w
-    if (n2.toLowerCase.startsWith("unique:")) {
-      if (ast.select.exists(it => containsAgg(it.e)) || ast.groupBy.nonEmpty)
-        fail(s"live $n2 projects columns (v1)")
-      if (sargs2.isEmpty) fail(s"$n2 needs an attribute argument")
-    }
-    n2.toLowerCase match {
-      case "timebatch" => Streamed(tumblingAgg(ast, base, "w_start_ms",
-        args2.head, tbOffNs(w)), LiveMode.AppendFlushed)
-      case "unique:first" =>
+    if (w.isInstanceOf[Unique] &&
+        (ast.select.exists(it => containsAgg(it.e)) || ast.groupBy.nonEmpty))
+      fail(s"live ${w.name} projects columns (v1)")
+    w match {
+      case TimeBatch(t, off) => Streamed(tumblingAgg(ast, base, "w_start_ms",
+        t, off), LiveMode.AppendFlushed)
+      case u @ Unique("first", keys) =>
         // live unique:first = streaming dropDuplicates on the key
         // (engine twin: Streaming.dedupKeys) — the first event per
         // distinct key emits as it arrives; later duplicates are
         // suppressed by keyed state
-        sargs2.foreach(a2 => if (!base.columns.contains(a2))
-          fail(s"unique:first key '$a2' is not a column"))
+        windowKeys(u, keys, base.columns)
         // keyed dedup state is held forever BY CONTRACT — unique:first
         // must remember every key it has seen, so state is bounded by
         // the key domain, not the watermark
         Streamed(selectOrAggregate(ast,
-          base.dropDuplicates(sargs2.head, sargs2.tail: _*),
+          base.dropDuplicates(keys.head, keys.tail: _*),
           Nil, windowed = false), LiveMode.Append)
-      case "expression" =>
-        // live retain-while window: the batch fold's eviction rule
-        // running inside flatMapGroupsWithState — on each arrival evict
-        // from the FRONT until the retention predicate holds,
-        // re-evaluate select items over the retained buffer
-        // ([[bufEval]] again); buffer size is bounded by the predicate
-        // itself
-        val retTxt = sargs2.headOption.getOrElse(
-          fail("expression window needs a quoted retention expression"))
-        val ret = new P(lex(retTxt)).expr()
-        bufferFold(ast, base, n2, { (buf0, e) =>
-          var buf = buf0 :+ e
-          while (buf.nonEmpty &&
-              !bufEval(ret, buf, e).asInstanceOf[Boolean])
-            buf = buf.tail
-          (buf, buf)
-        })
-      case "cron" =>
+      case Expression(ret) =>
+        // live retain-while window: the batch fold's [[retainWhile]]
+        // step inside flatMapGroupsWithState; buffer size is bounded by
+        // the predicate itself
+        bufferFold(ast, base, table, w.name, retainWhile(ret))
+      case Cron(_, iv) =>
         // cron live: the epoch-aligned fixed-interval Quartz forms ARE
         // a cron-aligned timeBatch — same Append-mode watermark-evicted
         // buckets, keyed cron_tick_ms
-        val spec = sargs2.headOption.getOrElse(
-          fail("cron needs a quoted Quartz expression argument"))
-        Streamed(tumblingAgg(ast, base, "cron_tick_ms",
-          cronIntervalNs(spec), 0L), LiveMode.AppendFlushed)
-      case "delay" =>
+        Streamed(tumblingAgg(ast, base, "cron_tick_ms", iv, 0L),
+          LiveMode.AppendFlushed)
+      case Delay(tNs2) =>
         // delay(T) live: the same stateless re-timestamp the batch
         // compile uses — downstream stages (incl. further live windows)
         // bucket by the delayed time. The shifted `ts` is a NEW
@@ -640,8 +627,6 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
         // (the watermark VALUE keeps coming from the source node —
         // shifted windows simply close `T` later, which is the point of
         // a delay).
-        val tNs2 = args2.headOption.getOrElse(
-          fail("delay needs a duration argument"))
         val md = new MetadataBuilder()
           .putLong("spark.watermarkDelayMs", ctx.wmNs / 1000000L).build()
         val others = base.columns
@@ -655,18 +640,17 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
           windowed = false, carry = carry2.map(col)),
           if (ast.select.exists(it => containsAgg(it.e))) LiveMode.Complete
           else LiveMode.Append, carry2)
-      case "timelength" =>
+      case TimeLength(tNs2, n) =>
         // live timeLength(T, N): per-key ring of the last N events;
         // select items evaluate over the subset still within T of the
         // current event (same inclusive bound as the batch compile) —
         // state is ≤ N events per key
-        val tNs2 = args2.head
-        val nCap = args2(1).toInt
-        bufferFold(ast, base, n2, { (ring0, e) =>
+        val nCap = n.toInt
+        bufferFold(ast, base, table, w.name, { (ring0, e) =>
           val ring = (ring0 :+ e).takeRight(nCap)
           (ring, ring.filter(_.tsNs >= e.tsNs - tNs2))
         })
-      case "unique:last" | "unique:ever" =>
+      case u @ Unique(_, keys) =>
         // live unique:last: keep-LAST per key — the emitted-row
         // retraction (Update-mode semantics) Spark sinks can't express
         // becomes a per-micro-batch keyed fold: each batch's rows merge
@@ -675,14 +659,12 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
         // unique:first's dedup state). unique:ever retains the latest
         // row per key forever — the identical fold. Composite keys
         // (r17) fold on the attribute struct.
-        (sargs2 ++ Seq("ts_ns", "event_id")).foreach(c =>
-          if (!base.columns.contains(c))
-            fail(s"live $n2 needs column '$c'"))
+        windowKeys(u, keys ++ Seq("ts_ns", "event_id"), base.columns)
         val items = itemsOf(ast)
         def selLast(df: DataFrame): DataFrame =
           df.select(items.map { case (it, a, _) =>
             expr(sqlOf(it.e)).as(a) } ++ Seq(
-            struct(sargs2.map(col): _*).as("__ukey"),
+            struct(keys.map(col): _*).as("__ukey"),
             col("ts_ns").as("__uord_ts"),
             col("event_id").as("__uord_id")): _*)
         val schemaU = selLast(base).schema
@@ -698,30 +680,23 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
           // keep-last is a per-__ukey merge: only buckets the batch's
           // keys hash into are read and rewritten
           KeyedState(Seq("__ukey"), (_, _, batch) =>
-            batch.select(struct(sargs2.map(col): _*)
+            batch.select(struct(keys.map(col): _*)
               .cast(schemaU("__ukey").dataType).as("__ukey")))))
-      case "sort" =>
+      case srt: Sort =>
         // live sort(N, attr, dir): running top-N retention — per
         // micro-batch the kept set folds as topN(kept ∪ batch); N full
         // rows of state, composable across any batch split because
         // top-N is associative. Select items (usually aggregates)
         // evaluate over the FINAL kept set, the batch compile's
-        // semantics.
-        val nKeep = args2.headOption.getOrElse(
-          fail("sort needs a count argument")).toInt
-        Seq("ts_ns", "event_id").foreach(c =>
-          if (!base.columns.contains(c))
-            fail(s"live sort window needs column '$c'"))
-        // multi-attribute comparator (r17) — the batch compile's shared
-        // sortComparator, so live ≡ batch
-        val ordS = sortComparator(sargs2, base.columns) ++
-          Seq(col("ts_ns").asc, col("event_id").asc)
+        // semantics; the batch compile's [[sortOrder]], so live ≡ batch
+        val ordS = sortOrder(srt, base.columns)
+        val nKeep = srt.n.toInt
         Folded(base.schema, () => singleFold(base, base.schema,
           (_, _, acc, batch) =>
             acc.unionByName(batch.select(acc.columns.map(col): _*))
               .orderBy(ordS: _*).limit(nKeep),
           (_, acc) => selectOrAggregate(ast, acc, Nil, windowed = false)))
-      case "frequent" =>
+      case Frequent(n, attr) =>
         // live frequent(N, attr): the select items fold as FoldAlg
         // components keyed on the attribute (state = one component row
         // per distinct key), with the top-N-by-frequency retention
@@ -729,10 +704,7 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
         // truth, incrementally
         if (ast.having.nonEmpty)
           fail("live frequent window (v1) has no having clause")
-        val nKeep = args2.headOption.getOrElse(
-          fail("frequent needs a count argument")).toInt
-        val attr = sargs2.headOption.getOrElse(
-          fail("frequent needs an attribute argument"))
+        val nKeep = n.toInt
         if (ast.groupBy != List(attr))
           fail("live frequent window (v1) groups by its attribute " +
             s"('group by $attr')")
@@ -763,36 +735,33 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
           KeyedState(Seq(attr), (_, _, batch) =>
             batch.select(col(attr)
               .cast(schemaF(attr).dataType).as(attr)))))
-      case "length" =>
+      case Length(n) =>
         // live per-key sliding length window: a flatMapGroupsWithState
         // ring of the last N events per key, select items re-evaluated
         // over the ring on every arrival ([[bufEval]] — the same
         // interpreter the batch expression window folds with; engine
         // twin: Streaming.lengthSliding). State is N events per key,
         // forever-bounded.
-        val nRing = args2.head.toInt
-        Seq("event_id", "ts_ns", "user_id", "event_type", "value")
-          .foreach(c => if (!base.columns.contains(c))
-            fail(s"live length window reads event streams; '$table' " +
-              s"lacks '$c'"))
-        bufferFold(ast, base, n2, { (ring0, e) =>
+        val nRing = n.toInt
+        bufferFold(ast, base, table, w.name, { (ring0, e) =>
           val ring = (ring0 :+ e).takeRight(nRing)
           (ring, ring)
         })
-      case "session" =>
+      case Session(gap) =>
         // live session aggregation: built-in session_window in APPEND
         // mode (engine twin: Streaming.session) — a session emits
         // (merged, final) once the watermark passes its close, then its
-        // state is dropped; output columns mirror the batch text
-        // compile exactly
-        Streamed(windowedAgg(ast, base, "session_window",
-          session_window(col("ts"), s"${args2.head / 1000000} milliseconds"),
-          Seq(unix_millis(col("session_window.start")).as("w_start_ms"),
-            unix_millis(col("session_window.end")).as("w_end_ms"))),
+        // state is dropped; output columns mirror the batch compile's
+        // [[sessionAgg]] exactly
+        Streamed(sessionAgg(ast, flushGuarded(base), gap),
           LiveMode.AppendFlushed)
-      case _ => fail("live deployment (v1) supports stateless stages, " +
-        "timeBatch/session aggregation, and patterns; got window " +
-        s"'${w.name}'")
+      case _: Time | _: LengthBatch | _: ExternalTime |
+           _: ExternalTimeBatch =>
+        fail("live deployment (v1) deploys the windows timeBatch, cron, " +
+          "session, length, timeLength, expression, delay, sort, " +
+          "frequent and unique:first/last/ever; " +
+          s"'#window.${w.name}' is a batch-replay window (compile/" +
+          "compileApp)")
     }
   }
 
@@ -834,7 +803,8 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
             Encoders.product[graft.engine.Streaming.EvT])
         (b.selectStreamTimed(evT)(proj).toDF(), LiveMode.AppendFlushed)
       } else {
-        (b.selectStream(evsOf(ctx.srcTs))(proj).toDF(), LiveMode.Append)
+        (b.selectStream(evsOf(ctx.srcTs, "events"))(proj).toDF(),
+          LiveMode.Append)
       }
     ast.rate match {
       case None => Streamed(matches, mode)
@@ -845,33 +815,31 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
     }
   }
 
-  /** A windowed stream-stream join deployed LIVE: Spark's watermarked
-    * interval join — the band [-Tl, Tr] becomes the event-time range
-    * condition Structured Streaming uses to size and EVICT both sides'
-    * join state (the engine twin Streaming.streamStreamJoin's exact
-    * machinery). Its output is a projection, a rate
-    * ([[liveJoinRate]]) or a one-stage aggregation fold. */
+  /** A windowed stream-stream join deployed LIVE over time or
+    * timeBatch sides: Spark's watermarked interval join — the
+    * [[timeHull]] band becomes the event-time range condition
+    * Structured Streaming uses to size and EVICT both sides' join state
+    * (the engine twin Streaming.streamStreamJoin's exact machinery),
+    * and a timeBatch side adds [[joinBand]]'s per-direction residual,
+    * the batch compile's rule over `alias_column` names. Its output is
+    * a projection, a rate ([[liveJoinRate]]) or a one-stage
+    * aggregation fold. */
   private[api] def joinStage(ctx: LiveCtx, ast: Ast, j: JoinStream)
       : LiveStage = {
     val (lw2, rw2) = (j.left.window, j.right.window) match {
-      case (Some(l), Some(r)) if Seq(l.name, r.name).forall(n2 =>
-          n2.equalsIgnoreCase("time") ||
-            n2.equalsIgnoreCase("timebatch")) => (l, r)
+      case (Some(l @ (_: Time | _: TimeBatch)),
+            Some(r @ (_: Time | _: TimeBatch))) => (l, r)
       case _ => fail("live deployment joins need #window.time(T) " +
         "or #window.timeBatch(T) on both sides (the watermarked " +
         "stream-stream join); count-window join sides need the " +
         "global arrival rank and are batch-replay surfaces (v1)")
     }
-    val WindowSpec(ln, largs, _) = lw2
-    val WindowSpec(rn, rargs, _) = rw2
-    Seq(lw2, rw2).foreach(requireEpochTb(_, "stream-stream join sides"))
     // timeBatch sides ride the SAME watermarked interval join: bucket
     // co-membership implies |Δts| < T, so the [-T, T] hull is the
-    // eviction band Spark needs and the bucket rule refines it as a
-    // residual conjunct
-    if (!hasEqui(j.on))
-      fail("a windowed stream-stream join needs an equality " +
-        "conjunct in its on-clause")
+    // eviction band Spark needs and [[joinBand]]'s bucket rule refines
+    // it as a residual conjunct
+    val (la, ra, directional) =
+      joinBand(j, lw2, rw2, (s2, c) => s"${s2}_$c")
     // outer directions ride the SAME watermarked interval join: Spark
     // emits the null-padded side once the watermark passes the band
     // (state eviction doubles as the no-match proof), so outer needs
@@ -885,8 +853,6 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
     }
     val joinAgg = ast.select.exists(it => containsAgg(it.e)) ||
       ast.groupBy.nonEmpty
-    val Seq(la, ra) = Seq(j.leftAlias, j.rightAlias).map(_.getOrElse(
-      fail("windowed join sides need aliases to qualify their timestamps")))
     def sideDf(ss: SingleStream, alias: String): DataFrame = {
       val b0 = ctx.feed(ss.table, "a join")
       val b1 = ss.filter.fold(b0)(f => liveWhere(b0, f))
@@ -913,15 +879,8 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
       case other => fail(s"bad reference ${other.mkString(".")}")
     }
     val cond = sqlOfWith(j.on, qual)
-    val isTb = (n2: String) => n2.equalsIgnoreCase("timebatch")
-    val anyTb = isTb(ln) || isTb(rn)
-    val (lo, hi) =
-      if (anyTb) {
-        val h = math.max(largs.head, rargs.head)
-        if (j.unidirectional) (0L, h) else (-h, h)
-      } else if (j.unidirectional) (0L, rargs.head)
-      else (-largs.head, rargs.head)
     // tl - tr ∈ [lo, hi]  ⇔  r_ts ∈ [l_ts - hi, l_ts - lo]
+    val (lo, hi) = timeHull(j, lw2, rw2)
     def ivl(ns: Long): String =
       s"interval ${math.abs(ns / 1000000L)} milliseconds"
     val band =
@@ -929,32 +888,17 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
         s"${if (lo <= 0) "+" else "-"} ${ivl(lo)}"
     val aSide = sideDf(j.left.copy(window = None), la)
     val bSide = sideDf(j.right.copy(window = None), ra)
-    // per-direction retention residual when a side is a tumbling
-    // chunk: the EARLIER side's rule applies at the later event's
-    // arrival (arrival order = (ts_ns, event_id), so every pair
-    // belongs to one direction)
-    val resid =
-      if (!anyTb) ""
-      else {
-        Seq((la, aSide), (ra, bSide)).foreach { case (al, df2) =>
-          Seq("ts_ns", "event_id").foreach(c =>
-            if (!df2.columns.contains(s"${al}_$c"))
-              fail(s"timeBatch join sides need '$c' for " +
-                s"arrival order; side '$al' lost it"))
-        }
-        def beforeL(x: String, y: String) =
-          s"(${x}_ts_ns < ${y}_ts_ns or (${x}_ts_ns = " +
-            s"${y}_ts_ns and ${x}_event_id < ${y}_event_id))"
-        def ret(later: String, earlier: String, n2: String, t: Long) =
-          if (isTb(n2))
-            s"(${earlier}_ts_ns div ${t}L) = (${later}_ts_ns div ${t}L)"
-          else s"${later}_ts_ns - ${earlier}_ts_ns <= ${t}L"
-        val d1 = s"(${beforeL(ra, la)} and " +
-          s"${ret(la, ra, rn, rargs.head)})"
-        val d2 = s"(${beforeL(la, ra)} and " +
-          s"${ret(ra, la, ln, largs.head)})"
-        " and (" + (if (j.unidirectional) d1 else s"$d1 or $d2") + ")"
+    // the per-direction retention residual when a side is a tumbling
+    // chunk; arrival order is (ts_ns, event_id)
+    val resid = directional.fold("") { d =>
+      Seq((la, aSide), (ra, bSide)).foreach { case (al, df2) =>
+        Seq("ts_ns", "event_id").foreach(c =>
+          if (!df2.columns.contains(s"${al}_$c"))
+            fail(s"timeBatch join sides need '$c' for " +
+              s"arrival order; side '$al' lost it"))
       }
+      s" and ($d)"
+    }
     val joined = aSide
       .join(bSide, expr(s"($cond) and ($band)$resid"), jType)
     if (ast.rate.nonEmpty && !joinAgg)
@@ -1050,50 +994,44 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
       Seq("ts", "ts_ns").filter(c => has(c) && !aliases.contains(c))
     }
 
-  /** Windowed aggregation deployed in APPEND mode: group by `w`, the
-    * built-in `window()` (timeBatch, cron) or `session_window()`
-    * column named `wName`, over the source-watermarked event-time
-    * column, so every pane or session emits exactly once when the
-    * watermark passes its end and its state row is EVICTED (engine
-    * twins: Streaming.timeBatchSum, Streaming.session). The guard
-    * drops flush sentinels right above the watermark node — the
-    * predicate references `ts`, so pushdown keeps it there. `bounds`
-    * are the window's output columns (e.g. `w_start_ms`) ahead of the
-    * select items. */
-  private[api] def windowedAgg(ast: Ast, base: DataFrame, wName: String,
-      w: Column, bounds: Seq[Column]): DataFrame = {
+  /** The input of a windowed aggregation deployed in APPEND mode
+    * (timeBatch, cron, session): grouped on the built-in `window()` or
+    * `session_window()` over the source-watermarked event-time column,
+    * every pane or session emits exactly once when the watermark passes
+    * its end and its state row is EVICTED (engine twins:
+    * Streaming.timeBatchSum, Streaming.session). The guard drops flush
+    * sentinels right above the watermark node — the predicate
+    * references `ts`, so pushdown keeps it there. */
+  private[api] def flushGuarded(base: DataFrame): DataFrame = {
     if (!base.columns.contains("ts"))
       fail("a live windowed aggregation needs the event-time column " +
         "'ts'")
-    selectOrAggregate(ast, base.filter(col("ts") < flushCutoff),
-      Seq(wName -> w), windowed = true)
-      .select(bounds ++ itemsOf(ast).map(it => col(it._2)): _*)
+    base.filter(col("ts") < flushCutoff)
   }
 
-  /** timeBatch / cron: [[windowedAgg]] over the tumbling `window()` of
-    * `ivNs`, its start emitted as `name`. `window()` floors to
-    * epoch-aligned buckets, matching the batch compile's
-    * `(ts_ns div T) * T` for the non-negative timestamps the
-    * event-time contract requires; start-time alignment (r17, `offNs`)
-    * rides its native startTime offset — same epoch + k·T + s
-    * boundaries as the batch compile's shifted div. */
+  /** timeBatch / cron: [[windowedSelect]] over the tumbling `window()`
+    * of `ivNs` on the [[flushGuarded]] feed, its start emitted as
+    * `name`. `window()` floors to epoch-aligned buckets, matching the
+    * batch compile's `(ts_ns div T) * T` for the non-negative
+    * timestamps the event-time contract requires; start-time alignment
+    * (r17, `offNs`) rides its native startTime offset — same epoch +
+    * k·T + s boundaries as the batch compile's shifted div. */
   private[api] def tumblingAgg(ast: Ast, base: DataFrame, name: String,
       ivNs: Long, offNs: Long): DataFrame = {
     val w =
       if (offNs == 0L) window(col("ts"), s"${ivNs / 1000} microseconds")
       else window(col("ts"), s"${ivNs / 1000} microseconds",
         s"${ivNs / 1000} microseconds", s"${offNs / 1000} microseconds")
-    windowedAgg(ast, base, "window", w,
+    windowedSelect(ast, flushGuarded(base), "window", w,
       Seq(unix_millis(col("window.start")).as(name)))
   }
 
   /** Per-key buffered fold (length / timeLength / expression windows,
-    * named by `wName`): each group-by key's events arrive in (ts_ns,
-    * event_id) order inside flatMapGroupsWithState; `step(buffer,
-    * event)` returns (the buffer kept as state, the events the select
-    * items evaluate over with [[bufEval]]), so state is whatever the
-    * step retains per key. */
-  private[api] def bufferFold(ast: Ast, base: DataFrame, wName: String,
+    * named by `wName`, over stream `table`): each group-by key's events
+    * run through [[scanKey]] inside flatMapGroupsWithState, so state is
+    * whatever `step` retains per key. */
+  private[api] def bufferFold(ast: Ast, base: DataFrame, table: String,
+      wName: String,
       step: (Vector[Cep.Ev], Cep.Ev) => (Vector[Cep.Ev], Vector[Cep.Ev]))
       : LiveStage = {
     val key = ast.groupBy match {
@@ -1105,19 +1043,13 @@ private[api] trait SiddhiQlLiveStages extends Serializable {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import base.sparkSession.implicits._
     implicit val enc2: Encoder[Row] = evRows(items)
-    Streamed(evsOf(base)
+    Streamed(evsOf(base, table)
       .groupByKey(e => String.valueOf(field(e, key)))(Encoders.STRING)
       .flatMapGroupsWithState[Vector[Cep.Ev], Row](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_, it2, st) =>
-          var buf = st.getOption.getOrElse(Vector.empty[Cep.Ev])
-          val out = it2.toVector.sortBy(e => (e.tsNs, e.eventId)).map {
-            e =>
-              val (kept, win) = step(buf, e)
-              buf = kept
-              Row.fromSeq(items.map { case (it3, _, _) =>
-                bufEval(it3.e, win, e) })
-          }
+        (_, evs, st) =>
+          val (buf, out) = scanKey(evs,
+            st.getOption.getOrElse(Vector.empty[Cep.Ev]), items, step)
           st.update(buf)
           out.iterator
       }.toDF(), LiveMode.Append)

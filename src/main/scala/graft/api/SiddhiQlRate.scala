@@ -149,11 +149,13 @@ private[api] trait SiddhiQlRate extends Serializable {
       base: DataFrame, table: String): Long = {
     if (ast.having.nonEmpty)
       fail("output rate limiting (v1) has no having clause")
-    if (!w.name.equalsIgnoreCase("timebatch"))
-      fail("output rate limiting over a window (v1) supports " +
+    val tb = w match {
+      case tb: TimeBatch => tb
+      case _ => fail("output rate limiting over a window (v1) supports " +
         s"#window.timeBatch(T); '#window.${w.name.toLowerCase}' " +
         "emissions are per-event or unordered")
-    requireEpochTb(w, "output rate limiting over a window")
+    }
+    requireEpochTb(tb, "output rate limiting over a window")
     if (ast.groupBy.nonEmpty)
       fail("output rate limiting over a windowed aggregation (v1) is " +
         "ungrouped — one flush row per window; drop the group by")
@@ -168,7 +170,7 @@ private[api] trait SiddhiQlRate extends Serializable {
         "item (drop the window to rate-limit raw events)")
     if (!base.columns.contains("ts_ns"))
       fail(s"windowed rate limiting needs 'ts_ns' on '$table'")
-    w.args.head
+    tb.t
   }
 
   /** Output rate limiting over a timeBatch's FLUSH rows (`flush`: the
@@ -321,7 +323,7 @@ private[api] trait SiddhiQlRate extends Serializable {
       base: DataFrame, wmNs: Long): LiveStage = {
     val rate = ast.rate.get
     s.window match {
-      case Some(w) if w.name.equalsIgnoreCase("timebatch") =>
+      case Some(w: TimeBatch) =>
         val twNs = windowRateChecks(ast, w, base, s.table)
         val items = itemsOf(ast)
         val (lf, proto) = flushPartialFold(base, None, Nil, items, twNs,

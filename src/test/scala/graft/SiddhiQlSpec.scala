@@ -118,6 +118,89 @@ class SiddhiQlSpec extends AnyFunSuite {
       "select e3.value as v").contains("unknown binding 'e3'"))
     assert(msg("from events select event_id having event_id > 1")
       .contains("having needs an aggregation"))
+    // the fallbacks name what each surface supports: batch join sides
+    // (timeBatch and lengthBatch included) and the live windows
+    assert(msg("from events as a#window.session(2 min) join events as " +
+      "b#window.time(1 min) on a.user_id == b.user_id " +
+      "select a.event_id as x")
+      .contains("length(N), timeBatch(T) or lengthBatch(N) on BOTH sides"))
+    val live = intercept[IllegalArgumentException](SiddhiQL.deployApp(
+      spark, sf, "@info(name='q') from events#window.time(1 min) " +
+        "select event_id, count() as n group by user_id insert into O",
+      "q")).getMessage
+    assert(live.contains("deploys the windows timeBatch, cron, session") &&
+      live.contains("'#window.time' is a batch-replay window"), live)
+  }
+
+  test("window-argument refusals fail at compile and deploy, by name") {
+    // (window, select tail, expected message, deploys live); the
+    // refusals run in the parser or in the window's lowering, so
+    // both surfaces fail before any job runs
+    val cases = Seq(
+      ("sort(user_id)", "select event_id", "sort needs a count argument",
+        true),
+      ("frequent(5)", "select user_id, count() as n group by user_id",
+        "frequent needs an attribute argument", true),
+      ("cron()", "select count() as n",
+        "cron needs a quoted Quartz expression argument", true),
+      ("expression()", "select event_id, count() as n group by user_id",
+        "expression needs a quoted retention expression argument", true),
+      ("unique:first()", "select event_id",
+        "unique:first needs an attribute argument", true),
+      ("sort(5, nosuch)", "select event_id",
+        "sort key 'nosuch' is not a column", true),
+      ("unique:first(nosuch)", "select event_id",
+        "unique:first key 'nosuch' is not a column", true),
+      ("unique:last(nosuch)", "select event_id",
+        "unique:last key 'nosuch' is not a column", true),
+      ("hopping(3)", "select count() as n", "unsupported window 'hopping'",
+        true),
+      // a zero count or duration keeps nothing or divides by zero
+      ("timeBatch(0 sec)", "select count() as n",
+        "#window.timeBatch needs a positive period", true),
+      ("length(0)", "select event_id, count() as n group by user_id",
+        "#window.length needs a positive count", true),
+      ("sort(0, value)", "select event_id",
+        "#window.sort needs a positive count", true),
+      ("frequent(0, user_id)", "select user_id, count() as n " +
+        "group by user_id", "#window.frequent needs a positive count", true),
+      ("timeLength(1 min, 0)", "select event_id, count() as n " +
+        "group by user_id", "#window.timeLength needs a positive count",
+        true),
+      ("session(0 sec)", "select user_id, count() as n group by user_id",
+        "#window.session needs a positive gap", true),
+      ("delay(0 sec)", "select event_id",
+        "#window.delay needs a positive duration", true),
+      ("lengthBatch(0)", "select count() as n",
+        "#window.lengthBatch needs a positive count", false),
+      ("time(0 sec)", "select event_id, count() as n group by user_id",
+        "#window.time needs a positive duration", false))
+    cases.foreach { case (w, sel, want, live) =>
+      val q = s"from events#window.$w $sel insert into O"
+      val m = intercept[IllegalArgumentException](compile(q)).getMessage
+      assert(m.contains(want), s"compile $w: $m")
+      if (live) {
+        val ml = intercept[IllegalArgumentException](SiddhiQL.deployApp(
+          spark, sf, s"@info(name='q') $q", "q")).getMessage
+        assert(ml.contains(want), s"deploy $w: $ml")
+      }
+    }
+    // a live length-window join side needs the global arrival rank
+    val mj = intercept[IllegalArgumentException](SiddhiQL.deployApp(
+      spark, sf, "@info(name='q') from events as a#window.length(5) " +
+        "join events as b#window.length(5) on a.user_id == b.user_id " +
+        "select a.event_id as x insert into O", "q")).getMessage
+    assert(mj.contains("live deployment joins need #window.time(T)"), mj)
+    // a live buffered window over a stream that dropped an event
+    // column names the stream and the column
+    val mv = intercept[IllegalArgumentException](SiddhiQL.deployApp(
+      spark, sf,
+      """@info(name='p') from events
+        |select event_id, ts_ns, user_id, event_type insert into P;
+        |@info(name='q') from P#window.timeLength(1 min, 5)
+        |select event_id, count() as n group by user_id
+        |insert into O""".stripMargin, "q")).getMessage
+    assert(mv.contains("'P' lacks 'value'"), mv)
   }
 
   test("join clause: left outer join keeps unmatched left rows") {

@@ -18,7 +18,13 @@ import org.apache.spark.sql.types.StructType
   * and the optimized plans of the built fold's feed, its batch-key
   * probes over the feed, one fold step over empty states and its
   * finish over empty states. Expression ids and lambda instances are
-  * masked; a piece that fails to build prints its error instead. */
+  * masked; a piece that fails to build prints its error instead.
+  *
+  * A batch section follows: for one app per window kind and per
+  * windowed-join shape, the masked optimized plan of the query
+  * [[SiddhiQL.compileApp]] builds over `sfDir`, then the number of
+  * `Exchange` nodes (shuffles, broadcasts and reused exchanges) in
+  * its physical plan. */
 object LivePlanDump {
   private val apps: Seq[(String, (String, String))] = Seq(
     "dml_single" -> (
@@ -462,6 +468,84 @@ object LivePlanDump {
         "faults")
   )
 
+  /** `from events#window.<w> select … insert into Out` as app `q`. */
+  private def single(w: String, sel: String): String =
+    s"@info(name = 'q')\nfrom events#window.$w\n$sel\ninsert into Out"
+
+  /** An error ⋈ purchase windowed self-join as app `q`; `mark` is
+    * `unidirectional` or empty, `how` the join keyword(s). */
+  private def joined(lw: String, rw: String, mark: String = "",
+      how: String = "join"): String =
+    s"""@info(name = 'q')
+       |from events as a[event_type == 'error']#window.$lw $mark
+       |  $how events as b[event_type == 'purchase']#window.$rw
+       |  on a.user_id == b.user_id
+       |select a.event_id as err_id, b.event_id as buy_id
+       |order by err_id, buy_id
+       |insert into Out""".stripMargin
+
+  private val agg = "select user_id, count() as n, " +
+    "math:round(sum(value), 2) as total group by user_id"
+  private val proj = "select event_id, user_id, value order by event_id"
+  private val batchApps: Seq[(String, String)] = Seq(
+    "timebatch" -> single("timeBatch(10 min)", agg),
+    "timebatch_aligned" -> single("timeBatch(10 min, 3 min)", agg),
+    "lengthbatch" -> single("lengthBatch(50)",
+      "select count() as n, math:round(sum(value), 2) as total"),
+    "session" -> single("session(2 min)", agg),
+    "length_global" -> single("length(20)",
+      "select event_id, math:round(sum(value), 2) as total " +
+        "order by event_id"),
+    "length_grouped" -> single("length(20)",
+      "select event_id, user_id, math:round(sum(value), 2) as total " +
+        "group by user_id order by event_id"),
+    "time_global" -> single("time(5 min)",
+      "select event_id, count() as n order by event_id"),
+    "time_grouped" -> single("time(5 min)",
+      "select event_id, user_id, count() as n group by user_id " +
+        "order by event_id"),
+    "external_time" -> single("externalTime(ts_ns, 5 min)",
+      "select event_id, count() as n order by event_id"),
+    "external_timebatch" -> single("externalTimeBatch(ts_ns, 10 min)",
+      "select count() as n"),
+    "sort" -> single("sort(40, user_id, 'asc', value, 'desc')", proj),
+    "unique_first" -> single("unique:first(user_id, event_type)", proj),
+    "unique_last" -> single("unique:last(user_id)", proj),
+    "unique_ever" -> single("unique:ever(user_id)", proj),
+    "frequent" -> single("frequent(5, user_id)",
+      "select user_id, count() as n group by user_id"),
+    "delay" -> single("delay(90 sec)", "select min(ts_ns) as lo"),
+    "cron" -> single("cron('0 0/15 * * * ?')", "select count() as n"),
+    "timelength_global" -> single("timeLength(2 min, 10)",
+      "select event_id, count() as n order by event_id"),
+    "timelength_grouped" -> single("timeLength(2 min, 10)",
+      "select event_id, count() as occ group by user_id " +
+        "order by event_id"),
+    "expression" -> single("expression('sum(value) < 500')",
+      "select event_id, count() as n group by user_id " +
+        "order by event_id"),
+    "join_time" -> joined("time(10 min)", "time(5 min)"),
+    "join_time_unidirectional" ->
+      joined("time(10 min)", "time(5 min)", "unidirectional"),
+    "join_time_outer" ->
+      joined("time(10 min)", "time(5 min)", how = "left outer join"),
+    "join_length" -> joined("length(50)", "length(80)"),
+    "join_length_unidirectional" ->
+      joined("length(50)", "length(80)", "unidirectional"),
+    "join_length_outer" ->
+      joined("length(50)", "length(80)", how = "full outer join"),
+    "join_mixed" -> joined("time(10 min)", "length(80)"),
+    "join_mixed_length_left" -> joined("length(50)", "timeBatch(10 min)"),
+    "join_timebatch" -> joined("timeBatch(10 min)", "timeBatch(10 min)"),
+    "join_timebatch_time" -> joined("timeBatch(10 min)", "time(5 min)"),
+    "join_lengthbatch" -> joined("time(10 min)", "lengthBatch(40)"),
+    "join_lengthbatch_both" -> joined("lengthBatch(30)", "lengthBatch(40)"),
+    "join_lengthbatch_unidirectional" ->
+      joined("lengthBatch(30)", "length(80)", "unidirectional"),
+    "join_lengthbatch_outer" ->
+      joined("lengthBatch(30)", "time(5 min)", how = "right outer join")
+  )
+
   // expression ids and lambda instances differ from run to run
   private def norm(s: String): String = s.replaceAll("#\\d+L?", "#")
     .replaceAll("[\\w.$]+\\$\\$Lambda[^,\\s]*", "<fn>")
@@ -519,6 +603,15 @@ object LivePlanDump {
         }
       }
       println(s"PLAN[$label]\n$text" + "ENDPLAN")
+    }
+    for ((label, app) <- batchApps) {
+      val text = tried("COMPILE") {
+        val df = SiddhiQL.compileApp(spark, args(0), app)("q")
+        val exchanges = df.queryExecution.executedPlan.toString
+          .linesIterator.count(_.contains("Exchange"))
+        plan(df) + s"EXCHANGES $exchanges\n"
+      }
+      println(s"BATCH[$label]\n$text" + "ENDPLAN")
     }
     spark.stop()
   }
